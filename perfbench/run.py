@@ -183,6 +183,11 @@ def main(argv=None) -> int:
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(os.path.join(tmp, "local"))
     os.environ["TMPDIR"] = tmp
+    # every JVM Spark starts (launcher and driver): temp files in the
+    # run directory and no hsperfdata file under /tmp
+    os.environ["JAVA_TOOL_OPTIONS"] = (
+        f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
+    )
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(tmp, "local")
     # the session defaults to local[32]; never more threads than cores
     cpus = min(4, os.cpu_count() or 1)
@@ -196,7 +201,6 @@ def main(argv=None) -> int:
 
     conf = {
         "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
         "spark.ui.showConsoleProgress": "false",
     }
     events = os.path.join(tmp, "events")
