@@ -227,3 +227,43 @@ def write_parquet(df: pd.DataFrame, path: str) -> int:
     pq.write_table(pa.Table.from_pandas(df, preserve_index=False), tmp)
     os.replace(tmp, path)
     return os.path.getsize(path)
+
+
+# -- ingest files ------------------------------------------------------
+
+
+def ingest_files(seed: int, n_files: int, n_fresh: int, dup_share: float = 0.1):
+    """``n_files`` document files for the streaming ingest, in arrival
+    order. File ``i`` holds ``n_fresh`` new documents, near copies of
+    ``dup_share`` of them (planted within-file duplicates) and, from
+    the second file on, near copies of as many documents of earlier
+    files (planted near-duplicates of accepted docs). A copy always
+    has a higher ``doc_id`` than its original. Returns the frames and
+    ``{"within": [ids], "cross": [ids]}``."""
+    rng = np.random.default_rng([seed, 3])
+    vocab = _vocab(rng)
+    files, planted = [], {"within": [], "cross": []}
+    earlier: list[tuple[str, str, str]] = []
+    next_id = 0
+    for i in range(n_files):
+        fresh = []
+        for _ in range(n_fresh):
+            text = _doc_text(rng, vocab, int(rng.integers(50, 110)))
+            lang = str(rng.choice(LANGS, p=LANG_P))
+            fresh.append((text, lang, f"src{int(rng.integers(0, N_SOURCES))}"))
+        n_dup = max(1, int(n_fresh * dup_share))
+        rows = [(next_id + k, *d) for k, d in enumerate(fresh)]
+        next_id += n_fresh
+        for kind, pool in (("within", fresh), ("cross", earlier)):
+            if not pool:
+                continue
+            for j in rng.choice(len(pool), min(n_dup, len(pool)), replace=False):
+                text, lang, src = pool[int(j)]
+                rows.append((next_id, near_copy(rng, vocab, text), lang, src))
+                planted[kind].append(next_id)
+                next_id += 1
+        earlier += fresh
+        ids, texts, langs, sources = zip(*rows)
+        df = _frame(ids, list(texts), np.array(langs), np.array(sources))
+        files.append(df.iloc[rng.permutation(len(df))].reset_index(drop=True))
+    return files, planted

@@ -1,9 +1,9 @@
 #!/usr/bin/env python3
-"""The repository benchmark: one command, two workloads, output checks.
+"""The repository benchmark: one command, three workloads, output checks.
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload cdc_steady --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload cdc_steady --seed 1 --seconds 5 --trace 0
 
 The last line of standard output is one JSON object with ``correct``,
 ``attempted``, ``failed`` and ``metrics``. With ``--trace 0`` the
@@ -19,12 +19,14 @@ from __future__ import annotations
 
 import argparse
 import json
+import multiprocessing as mp
 import os
 import shutil
 import statistics
 import sys
 import threading
 import time
+from concurrent.futures import ProcessPoolExecutor
 
 import proc
 
@@ -33,17 +35,18 @@ ROOT = os.getcwd()
 WATCHDOG_S = 175.0
 DRIVER_MEMORY = "4g"
 
-# Timings are CPU seconds of the whole process tree (driver, JVM and
-# Python workers): on a shared host the wall time of the same run
-# moves by half when other tenants take the cores (measured: steal up
-# to 19%, steady-pass wall medians 12.8-29.8 s across seeds), while
-# its CPU time stays within a few percent. Wall times are printed as
-# info lines.
-END_TO_END = {
-    "setup_s": "s",
-    "op_cpu_s": "s",
-    "bytes_ratio": "ratio",
-}
+# Timings are wall seconds rescaled to a fixed host speed: each is
+# multiplied by REF_NOMINAL_S / (median time of the run's reference
+# job, ref_job below). The shared 4-core host's speed is not
+# constant: across runs of the same code, the wall and CPU times of an
+# operation moved by up to 3x, with no steal or frequency change
+# visible in the guest. The reference job is timed before the first
+# operation and after every one, so it sees the same host. Rescaling
+# cancels most of such a slowdown, not all of it (perfbench/README.md
+# has the measurements). REF_NOMINAL_S is a constant near the
+# reference job's time on a fast host, so a rescaled time reads about
+# as seconds there.
+REF_NOMINAL_S = 0.1
 CURATION_STAGES = (
     "input", "mojibake", "gopher", "blocklist", "exact_dedup",
     "near_dup", "quality_gate", "source_cap",
@@ -61,6 +64,7 @@ LAYER_SPANS = {  # per-layer metric -> span name (seconds per op)
     "dedup.minhash_lsh_pairs_s": "dedup.minhash_lsh_pairs",
     "dedup.dup_clusters_star_s": "dedup.dup_clusters_star",
     "dedup.cluster_keep_best_s": "dedup.cluster_keep_best",
+    "stream.compaction_s": "stream.compaction",
 }
 LAYER_COUNTS = {  # per-layer metric -> tracer counter (per op)
     "updates.rows": "updates.rows",
@@ -80,7 +84,7 @@ SPARK_KEYS = (
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True,
-                   choices=["cdc_steady", "curate_neardup"])
+                   choices=["cdc_steady", "curate_neardup", "ingest_neardup"])
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -140,6 +144,13 @@ def layer_metrics(run, tracer, eventlog: str) -> dict[str, float]:
     for stage in CURATION_STAGES:
         m[f"curation.rows.{stage}"] = funnel.get(stage, 0)
     m["dedup.neardup_recall"] = run.extra.get("neardup_recall", 0.0)
+    batches = run.extra.get("batches", [])
+    m["stream.batch_s"] = median([b[1] for b in batches])
+    m["stream.batch_rows"] = median([b[0] for b in batches])
+    busy = sum(b[1] for b in batches)
+    docs = run.extra.get("docs", 0) * len(run.ops_s)
+    m["stream.docs_per_s"] = docs / busy if busy else 0.0
+    m["stream.dup_recall"] = run.extra.get("dup_recall", 0.0)
 
     spark = tracer.spark_by_top(eventlog)
     by_id = {s["id"]: s for s in tracer.spans}
@@ -151,20 +162,12 @@ def layer_metrics(run, tracer, eventlog: str) -> dict[str, float]:
     # wall time with no stage running and no throttle sleep: driver
     # work, planning and scheduling gaps
     m["spark.overhead_s"] = (wall - busy - sleep) / n
-    m["trace.op_wall_s"] = statistics.median(run.ops_s) if run.ops_s else 0.0
+    m["trace.op_wall_s"] = median(run.ops_s)
     return m
 
 
-def per_layer_units(name: str) -> str:
-    if name.endswith("_s"):
-        return "s"
-    if name.endswith("_mb"):
-        return "MB"
-    if name.endswith("_bytes") or name.endswith("bytes_written"):
-        return "bytes"
-    if name.endswith(("_ratio", "utilization", "recall")):
-        return "ratio"
-    return "count"
+def median(xs) -> float:
+    return statistics.median(xs) if xs else 0.0
 
 
 # -- main ------------------------------------------------------------------
@@ -176,9 +179,13 @@ def main(argv=None) -> int:
         print("perfbench: run from the repository root "
               "(no sslr_spark/ package here)", file=sys.stderr)
         return 2
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    units = {
+        m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]
+    }
     start_watchdog()
     t_setup = time.perf_counter()
-    c_setup = proc.cpu_s()
     tmp = os.path.join(ROOT, ".perfbench_tmp", f"{args.workload}-{os.getpid()}")
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(os.path.join(tmp, "local"))
@@ -195,9 +202,21 @@ def main(argv=None) -> int:
     os.environ["SSLR_DRIVER_MEMORY"] = DRIVER_MEMORY
     sys.path[:0] = [ROOT, HERE]
 
-    from sslr_spark.session import get_spark
-
     import workloads
+
+    # The reference job: one SHA-256 chain per Spark core, all at once,
+    # in worker processes forked before Spark starts any thread. It
+    # loads every core, as a Spark stage does, so it sees a host that
+    # is slow on some cores only; a single chain in the driver spread
+    # by 15% within a run when the host was slow.
+    ref_pool = ProcessPoolExecutor(cpus, mp_context=mp.get_context("fork"))
+
+    def ref_job(rounds=workloads.REF_ROUNDS):
+        list(ref_pool.map(workloads.reference_chain, [rounds] * cpus))
+
+    ref_job(1)
+
+    from sslr_spark.session import get_spark
 
     conf = {
         "spark.sql.warehouse.dir": os.path.join(tmp, "warehouse"),
@@ -215,7 +234,6 @@ def main(argv=None) -> int:
     spark = get_spark("perfbench", extra_conf=conf)
     spark.range(1000).selectExpr("sum(id)").collect()  # warm-up
     session_s = time.perf_counter() - t_setup
-    session_cpu_s = proc.cpu_s() - c_setup
 
     tracer = None
     if args.trace:
@@ -223,32 +241,32 @@ def main(argv=None) -> int:
 
         tracer = Tracer(spark)
         tracer.install()
-    run = workloads.Run(spark, tmp, args.seed, args.seconds, args.size, tracer)
+    run = workloads.Run(
+        spark, ref_job, tmp, args.seed, args.seconds, args.size, tracer,
+        corrupt_after=args.corrupt_after,
+    )
+    run.reference()
     try:
-        if args.workload == "cdc_steady":
-            out = workloads.cdc_steady(run, corrupt_after=args.corrupt_after)
-            staged = run.extra.get("bootstrap_s", 0.0)
-            staged_cpu = run.extra.get("bootstrap_cpu_s", 0.0)
-        else:
-            out = workloads.curate_neardup(run)
-            staged = staged_cpu = 0.0
+        out = workloads.WORKLOADS[args.workload](run)
         rss = proc.peak_rss_mb()
     finally:
         if tracer:
             tracer.uninstall()
         spark.stop()
+        ref_pool.shutdown()
 
-    def median(xs):
-        return statistics.median(xs) if xs else 0.0
-
+    setup_wall = session_s + median(run.gen_s) + run.staged_s
+    scale = REF_NOMINAL_S / median(run.ref_s)
     e2e = {
-        "setup_s": (session_cpu_s + median(run.gen_cpu_s) + staged_cpu, 1),
-        "op_cpu_s": (median(run.ops_cpu_s), len(run.ops_cpu_s)),
+        "setup_s": (setup_wall * scale, 1),
+        "op_s": (median(run.ops_s) * scale, len(run.ops_s)),
         "bytes_ratio": (out["bytes_ratio"], 1),
     }
     info = {
-        "setup_wall_s": (session_s + median(run.gen_s) + staged, "s", 1),
+        "ref_s": (median(run.ref_s), "s", len(run.ref_s)),
+        "setup_wall_s": (setup_wall, "s", 1),
         "op_wall_s": (median(run.ops_s), "s", len(run.ops_s)),
+        "op_cpu_s": (median(run.ops_cpu_s), "s", len(run.ops_cpu_s)),
         "peak_rss_mb": (rss, "MB", 1),
     }
     print("inputs " + json.dumps(run.extra.get("inputs", {})))
@@ -258,7 +276,8 @@ def main(argv=None) -> int:
         log = [os.path.join(events, f) for f in os.listdir(events)]
         metrics = layer_metrics(run, tracer, log[0])
         metrics["peak_rss_mb"] = rss
-        metrics["trace.op_cpu_s"] = e2e["op_cpu_s"][0]
+        metrics["trace.op_cpu_s"] = info["op_cpu_s"][0]
+        metrics["trace.ref_s"] = info["ref_s"][0]
         os.makedirs(os.path.join(ROOT, ".perfbench_out"), exist_ok=True)
         tracer.dump(os.path.join(
             ROOT, ".perfbench_out", f"spans-{args.workload}-{args.seed}.json"
@@ -268,16 +287,10 @@ def main(argv=None) -> int:
         ):
             print(f"span {name:40s} calls={row['calls']:4d} "
                   f"total_s={row['total_s']:8.3f} self_s={row['self_s']:8.3f}")
-        result = {
-            k: {"value": v, "unit": per_layer_units(k)}
-            for k, v in sorted(metrics.items())
-        }
     else:
-        result = {
-            k: {"value": v, "unit": END_TO_END[k]} for k, (v, _) in e2e.items()
-        }
+        metrics = {k: v for k, (v, _) in e2e.items()}
     for k, (v, n) in e2e.items():
-        print(f"metric {k} = {v:.6g} {END_TO_END[k]} (samples={n})")
+        print(f"metric {k} = {v:.6g} {units[k]} (samples={n})")
     for k, (v, unit, n) in info.items():
         print(f"info {k} = {v:.6g} {unit} (samples={n})")
     shutil.rmtree(tmp, ignore_errors=True)
@@ -285,7 +298,9 @@ def main(argv=None) -> int:
         "correct": run.failed == 0,
         "attempted": max(1, run.attempted),
         "failed": run.failed,
-        "metrics": result,
+        "metrics": {
+            k: {"value": v, "unit": units[k]} for k, v in sorted(metrics.items())
+        },
     }), flush=True)
     return 0
 

@@ -11,6 +11,11 @@ event log's stage metrics can be attributed to the span that caused
 them (and from there to the top-level operation span). A span around
 a lazy DataFrame builder (``minhash_lsh_pairs``) covers planning only;
 the jobs that execute its plan run later, under the enclosing span.
+
+A streaming query runs its micro-batches on another thread. A span
+opened on a thread with no open span of its own becomes a child of
+the top-level span open at that moment, so the micro-batches of an
+ingest count under the ingest operation.
 """
 
 from __future__ import annotations
@@ -21,6 +26,8 @@ import os
 import threading
 import time
 from collections import defaultdict
+
+from workloads import data_files
 
 GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description")
 
@@ -33,6 +40,7 @@ class Tracer:
         self._ids = itertools.count(1)
         self._tls = threading.local()
         self._undo: list[tuple[object, str, object]] = []
+        self._top: int | None = None  # the open top-level span
 
     # -- spans ---------------------------------------------------------
     def _stack(self) -> list[int]:
@@ -49,9 +57,11 @@ class Tracer:
                 self.rec = {
                     "id": next(tracer._ids),
                     "name": name,
-                    "parent": stack[-1] if stack else None,
+                    "parent": stack[-1] if stack else tracer._top,
                     "start": time.perf_counter(),
                 }
+                if self.rec["parent"] is None:
+                    tracer._top = self.rec["id"]
                 self.prev = [tracer.sc.getLocalProperty(k) for k in GROUP_KEYS]
                 tag = f"span:{self.rec['id']}"
                 tracer.sc.setJobGroup(tag, tag)
@@ -61,6 +71,8 @@ class Tracer:
             def __exit__(self, *exc):
                 self.rec["end"] = time.perf_counter()
                 tracer._stack().pop()
+                if tracer._top == self.rec["id"]:
+                    tracer._top = None
                 for k, v in zip(GROUP_KEYS, self.prev):
                     tracer.sc.setLocalProperty(k, v)
                 tracer.spans.append(self.rec)
@@ -99,6 +111,7 @@ class Tracer:
         import sslr_spark.operators.updates as updates
         import sslr_spark.sources.parquet as parquet
         import sslr_spark.state as state
+        import sslr_spark.streaming.pipeline as pipeline
         import sslr_spark.throttle as throttle
 
         c = self.counts
@@ -194,6 +207,10 @@ class Tracer:
         self.wrap(dedup, "minhash_lsh_pairs", "dedup.minhash_lsh_pairs")
         self.wrap(dedup, "dup_clusters_star", "dedup.dup_clusters_star")
         self.wrap(dedup, "cluster_keep_best", "dedup.cluster_keep_best")
+        # called by the ingest's micro-batches through the module global
+        self.wrap(
+            pipeline, "compact_neardup_index_incremental", "stream.compaction"
+        )
 
     # -- summaries -------------------------------------------------------
     def top_of(self) -> dict[int, dict]:
@@ -289,18 +306,7 @@ class Tracer:
 
 
 def _files(root: str) -> dict[str, int]:
-    out = {}
-    for dirpath, dirnames, files in os.walk(root):
-        # partition directories (``__sslr_bucket=N``) hold data even
-        # though they start with an underscore
-        dirnames[:] = [
-            d for d in dirnames if "=" in d or not d.startswith((".", "_"))
-        ]
-        for f in files:
-            if not f.startswith((".", "_")):
-                p = os.path.join(dirpath, f)
-                out[p] = os.path.getsize(p)
-    return out
+    return {p: os.path.getsize(p) for p in data_files(root)}
 
 
 def _union(intervals) -> float:

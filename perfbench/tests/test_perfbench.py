@@ -81,6 +81,19 @@ def test_traced_run_prints_every_per_layer_metric():
     assert any(ln.startswith("span curation.run ") for ln in lines)
 
 
+def test_traced_ingest_measures_the_streaming_layer():
+    p, lines, result = small("ingest_neardup", 5, 1)
+    assert p.returncode == 0, p.stderr[-3000:]
+    assert_shape(result)
+    assert result["correct"], lines
+    m = {k: v["value"] for k, v in result["metrics"].items()}
+    for name in ("stream.batch_s", "stream.batch_rows", "stream.docs_per_s",
+                 "stream.compaction_s", "parquet.replace_partitions_s"):
+        assert m[name] > 0, name
+    assert 0.6 <= m["stream.dup_recall"] <= 1.0
+    assert m["curation.run_s"] == 0 and m["job.update_table_s"] == 0
+
+
 def test_corrupted_target_row_fails_the_check(clean_cdc):
     p, lines, result = small("cdc_steady", 3, 0, "--corrupt-after", "1")
     assert p.returncode == 0, p.stderr[-3000:]

@@ -7,10 +7,19 @@ starts when the previous one (and its untimed output check) is done.
   state (``Job.run``), each after a seeded change batch.
 - ``curate_neardup``: one cold ``run_curation`` over a corpus with
   planted near-duplicate families.
+- ``ingest_neardup``: one ``streaming_neardup_ingest`` run with an
+  availableNow trigger over seeded files with planted near-duplicates,
+  from a fresh target, with index compaction.
+
+Before the first operation and after every one the run times the
+reference job (``Run.reference``), a fixed CPU workload that uses no
+library code. Timings are reported relative to it, so a host that has
+become slower for every program moves both.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import statistics
@@ -26,7 +35,7 @@ import proc
 
 # steady-state change batch: share of each table's rows per pass
 CHANGE_FRAC = 0.001
-MIN_PASSES = 2
+MIN_PASSES = 1
 GEN_ROUNDS = 3
 CURATE_CHAIN = os.path.join("examples", "curate.json")
 # the LM and DSIR stages of the example chain are left out: on 4 cores
@@ -36,39 +45,67 @@ MAX_PER_SOURCE = 10
 # LSH recall on the planted families (word 3-shingle Jaccard ~0.8)
 MIN_NEARDUP_RECALL = 0.6
 
+INGEST_FILES = 3
+# compaction folds the oldest epoch once a third batch has landed
+COMPACT_EVERY = 2
+MIN_DUP_RECALL = 0.6
+REF_ROUNDS = 300_000
+REF_SAMPLES = 5  # reference samples before the first and after each operation
+
 SIZES = {
-    # lineitem rows, orders rows, documents
-    "full": (60_000, 15_000, 1_000),
-    "small": (6_000, 1_500, 300),
+    # lineitem rows, orders rows, documents, new docs per ingest file
+    "full": (60_000, 15_000, 1_000, 200),
+    "small": (6_000, 1_500, 300, 60),
 }
+
+
+def reference_chain(rounds: int) -> None:
+    """One worker's share of the reference job: a fixed chain of
+    SHA-256 rounds. It runs no library code, so no change to the
+    library moves it; only the host's speed does."""
+    h = b"\0" * 64
+    for _ in range(rounds):
+        h = hashlib.sha256(h).digest()
 
 
 class Run:
     """Per-run context: session, tracer, timings and the op tally."""
 
-    def __init__(self, spark, tmp, seed, seconds, size, tracer=None):
+    def __init__(self, spark, ref_job, tmp, seed, seconds, size,
+                 tracer=None, corrupt_after=None):
         self.spark = spark
+        self.ref_job = ref_job
         self.tmp = tmp
         self.seed = seed
         self.seconds = seconds
         self.sizes = SIZES[size]
         self.tracer = tracer
+        self.corrupt_after = corrupt_after
         self.attempted = 0
         self.failed = 0
         self.problems: list[str] = []
         self.gen_s: list[float] = []
-        self.gen_cpu_s: list[float] = []
         self.ops_s: list[float] = []
         self.ops_cpu_s: list[float] = []
         self.op_spans: list[int] = []
+        self.ref_s: list[float] = []
+        # operation time that counts as set-up (the cdc bootstrap)
+        self.staged_s = 0.0
         self.extra: dict = {}
+
+    def reference(self) -> None:
+        for _ in range(REF_SAMPLES):
+            t = time.perf_counter()
+            self.ref_job()
+            self.ref_s.append(time.perf_counter() - t)
 
     def span(self, name):
         return self.tracer.span(name) if self.tracer else nullcontext({})
 
     def op(self, name, fn):
-        """Time one operation as a top-level span. Returns its result
-        (None when it raised, counted as failed), wall and CPU seconds."""
+        """Time one operation as a top-level span, then the reference
+        job. Returns the operation's result (None when it raised,
+        counted as failed), wall and CPU seconds."""
         self.attempted += 1
         t, c = time.perf_counter(), proc.cpu_s()
         out = None
@@ -80,14 +117,15 @@ class Run:
         except Exception as e:  # noqa: BLE001 — a failed op is a datum
             self.failed += 1
             self.problems.append(f"{name} raised {type(e).__name__}: {e}")
-        return out, time.perf_counter() - t, proc.cpu_s() - c
+        dt, cpu = time.perf_counter() - t, proc.cpu_s() - c
+        self.reference()
+        return out, dt, cpu
 
     def timed_gen(self, fn):
-        """Run one input generation, recording wall and CPU seconds."""
-        t, c = time.perf_counter(), proc.cpu_s()
+        """Run one input generation, recording its wall seconds."""
+        t = time.perf_counter()
         out = fn()
         self.gen_s.append(time.perf_counter() - t)
-        self.gen_cpu_s.append(proc.cpu_s() - c)
         return out
 
     def check(self, ok: bool, what: str) -> None:
@@ -163,11 +201,11 @@ def corrupt_one_row(table_dir: str) -> None:
 # -- cdc_steady -----------------------------------------------------------
 
 
-def cdc_steady(run: Run, corrupt_after: int | None = None) -> dict:
+def cdc_steady(run: Run) -> dict:
     from sslr_spark.config import Config, FilteredTable
     from sslr_spark.job import Job
 
-    n_l, n_o, _ = run.sizes
+    n_l, n_o, _, _ = run.sizes
     for i in range(GEN_ROUNDS):
         root = os.path.join(run.tmp, f"src{i}")
         src = run.timed_gen(lambda: gen.CdcSource(run.seed, root, n_l, n_o))
@@ -211,9 +249,7 @@ def cdc_steady(run: Run, corrupt_after: int | None = None) -> dict:
             )
 
     # pass 1: the bootstrap full copy, staged as part of set-up
-    res, run.extra["bootstrap_s"], run.extra["bootstrap_cpu_s"] = run.op(
-        "bootstrap", job.run
-    )
+    res, run.staged_s, _ = run.op("bootstrap", job.run)
     run.extra["bootstrap_span"] = run.op_spans.pop() if run.op_spans else None
     verify(
         "bootstrap", res, sum(len(src.expected(t)) for t in src.tables)
@@ -234,7 +270,7 @@ def cdc_steady(run: Run, corrupt_after: int | None = None) -> dict:
         res, dt, cpu = run.op("pass", job.run)
         run.ops_s.append(dt)
         run.ops_cpu_s.append(cpu)
-        if corrupt_after is not None and len(run.ops_s) == corrupt_after:
+        if len(run.ops_s) == run.corrupt_after:
             corrupt_one_row(os.path.join(tgt_root, "lineitem.parquet"))
         verify(f"pass {len(run.ops_s)}", res, want)
     run.extra["useful_buckets"] = sum(useful)
@@ -296,7 +332,7 @@ def curate_neardup(run: Run) -> dict:
     import sslr_spark.curation as curation
     from sslr_spark.functions.dedup import release_caches
 
-    _, _, n_docs = run.sizes
+    _, _, n_docs, _ = run.sizes
     src_root = os.path.join(run.tmp, "docs")
     os.makedirs(src_root, exist_ok=True)
     path = os.path.join(src_root, "documents.parquet")
@@ -365,12 +401,164 @@ def curate_neardup(run: Run) -> dict:
             f"near-dup stage removed {removed} docs, planted families "
             f"call for {want_removed}",
         )
-        digest_now = digest(out)
-        first = run.extra.setdefault("survivor_digest", digest_now)
-        run.check(first == digest_now, "survivors differ between reps")
     if not out_bytes:
         return {"bytes_ratio": 0.0}
     return {"bytes_ratio": statistics.median(out_bytes) / in_bytes}
 
 
-WORKLOADS = {"cdc_steady": cdc_steady, "curate_neardup": curate_neardup}
+# -- ingest_neardup -------------------------------------------------------
+
+
+class BatchLog:
+    """Micro-batch progress of the ingest query, from a
+    ``StreamingQueryListener``: (rows the source read, triggerExecution
+    seconds). A batch whose input is scanned twice reads its rows
+    twice."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.batches: list[tuple[int, float]] = []
+        log = self
+
+        class Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
+
+            def onQueryProgress(self, event):
+                p = event.progress
+                if p.numInputRows:
+                    log.batches.append((
+                        p.numInputRows,
+                        p.durationMs.get("triggerExecution", 0) / 1000.0,
+                    ))
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        self.listener = Listener()
+        spark.streams.addListener(self.listener)
+
+    def wait_for(self, n: int, timeout: float = 10.0) -> None:
+        """Progress events arrive after the batch commits; wait for
+        the ``n``-th."""
+        end = time.perf_counter() + timeout
+        while len(self.batches) < n and time.perf_counter() < end:
+            time.sleep(0.05)
+
+
+def ingest_neardup(run: Run) -> dict:
+    from pyspark.sql import types as T
+
+    from sslr_spark.sources.parquet import ParquetDatabase
+    from sslr_spark.streaming.pipeline import (
+        read_accepted,
+        streaming_neardup_ingest,
+    )
+
+    *_, n_fresh = run.sizes
+    in_root = os.path.join(run.tmp, "incoming")
+    os.makedirs(in_root, exist_ok=True)
+
+    def make():
+        files, planted = gen.ingest_files(run.seed, INGEST_FILES, n_fresh)
+        size = 0
+        for i, df in enumerate(files):
+            p = os.path.join(in_root, f"part-{i:03d}.parquet")
+            size += gen.write_parquet(df, p)
+            # the file source picks files up oldest first
+            os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+        return files, planted, size
+
+    for _ in range(GEN_ROUNDS):
+        files, planted, in_bytes = run.timed_gen(make)
+    docs = pd.concat(files, ignore_index=True)
+    copies = set(planted["within"]) | set(planted["cross"])
+    run.extra["docs"] = len(docs)
+    run.extra["inputs"] = {
+        "files": INGEST_FILES, "docs": len(docs), "new_docs_per_file": n_fresh,
+        "planted_within_file": len(planted["within"]),
+        "planted_cross_file": len(planted["cross"]),
+        "compact_every": COMPACT_EVERY, "trigger": "availableNow",
+        "max_files_per_trigger": 1,
+    }
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("lang", T.StringType()),
+        T.StructField("source", T.StringType()),
+        T.StructField("n_chars", T.LongType()),
+    ])
+    log = BatchLog(run.spark)
+    out_bytes = []
+    start = time.perf_counter()
+    rep = 0
+    while not run.ops_s or time.perf_counter() - start < run.seconds:
+        root = os.path.join(run.tmp, f"ingest{rep}")
+        target = ParquetDatabase(run.spark, os.path.join(root, "tgt"))
+        rep += 1
+
+        def ingest():
+            q = streaming_neardup_ingest(
+                run.spark, in_root, schema, target,
+                os.path.join(root, "checkpoint"),
+                trigger_seconds=None, max_files_per_trigger=1,
+                compact_every=COMPACT_EVERY,
+            )
+            try:
+                q.awaitTermination()
+            finally:
+                if q.isActive:
+                    q.stop()
+            return True
+
+        seen = len(log.batches)
+        res, dt, cpu = run.op("ingest", ingest)
+        run.ops_s.append(dt)
+        run.ops_cpu_s.append(cpu)
+        if res is None:
+            continue
+        log.wait_for(seen + INGEST_FILES)
+        batches = log.batches[seen:]
+        run.extra.setdefault("batches", []).extend(batches)
+        run.check(
+            len(batches) == INGEST_FILES,
+            f"{len(batches)} micro-batches for {INGEST_FILES} files",
+        )
+        acc = read_accepted(target).toPandas()[list(docs.columns)]
+        got = set(acc["doc_id"])
+        rejected = set(docs["doc_id"]) - got
+        recall = len(rejected & copies) / len(copies)
+        run.extra["dup_recall"] = recall
+        run.check(acc["doc_id"].is_unique, "accepted doc_ids repeat")
+        run.check(
+            digest(acc) == digest(docs[docs["doc_id"].isin(got)]),
+            "accepted rows are not input rows",
+        )
+        run.check(
+            rejected <= copies,
+            f"{len(rejected - copies)} new documents were rejected",
+        )
+        run.check(
+            recall >= MIN_DUP_RECALL,
+            f"rejected {recall:.2f} of the planted near-duplicates",
+        )
+        out_bytes.append(sum(
+            dir_bytes(target.path(t)) for t in (
+                "accepted", "__neardup_index_shingles",
+                "__neardup_index_buckets",
+            )
+        ))
+    if not out_bytes:
+        return {"bytes_ratio": 0.0}
+    return {"bytes_ratio": statistics.median(out_bytes) / in_bytes}
+
+
+WORKLOADS = {
+    "cdc_steady": cdc_steady,
+    "curate_neardup": curate_neardup,
+    "ingest_neardup": ingest_neardup,
+}
