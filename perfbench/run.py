@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""The repository benchmark: one command, three workloads, output checks.
+"""The repository benchmark: one command, two workloads, output checks.
 
 Run from the repository root:
 
@@ -22,6 +22,7 @@ import json
 import multiprocessing as mp
 import os
 import shutil
+import signal
 import statistics
 import sys
 import threading
@@ -64,7 +65,6 @@ LAYER_SPANS = {  # per-layer metric -> span name (seconds per op)
     "dedup.minhash_lsh_pairs_s": "dedup.minhash_lsh_pairs",
     "dedup.dup_clusters_star_s": "dedup.dup_clusters_star",
     "dedup.cluster_keep_best_s": "dedup.cluster_keep_best",
-    "stream.compaction_s": "stream.compaction",
 }
 LAYER_COUNTS = {  # per-layer metric -> tracer counter (per op)
     "updates.rows": "updates.rows",
@@ -84,7 +84,7 @@ SPARK_KEYS = (
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--workload", required=True,
-                   choices=["cdc_steady", "curate_neardup", "ingest_neardup"])
+                   choices=["cdc_steady", "curate_neardup"])
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -100,11 +100,13 @@ def start_watchdog() -> None:
     def fire():
         print(f"perfbench: no result after {WATCHDOG_S:.0f} s; aborting",
               file=sys.stderr, flush=True)
-        for pid in proc.descendants(os.getpid()):
+        pids = proc.descendants(os.getpid())
+        for pid in pids:
             try:
                 os.kill(pid, 9)
             except OSError:
                 pass
+        proc.wait_gone(pids, 3.0)
         os._exit(3)
 
     t = threading.Timer(WATCHDOG_S, fire)
@@ -119,7 +121,7 @@ def layer_metrics(run, tracer, eventlog: str) -> dict[str, float]:
     tops = set(run.op_spans)
     n = max(1, len(tops))
     secs = tracer.layer_seconds(tops)
-    counts = tracer.counts
+    counts = run.extra.get("counts_at_end", tracer.counts)
     base = run.extra.get("counts_at_start", {})
     delta = {k: counts.get(k, 0) - base.get(k, 0) for k in counts}
     m: dict[str, float] = {}
@@ -140,6 +142,11 @@ def layer_metrics(run, tracer, eventlog: str) -> dict[str, float]:
         tracer.layer_seconds({boot}).get("copy.full_copy", 0.0)
         if boot else 0.0
     )
+    ingest = run.extra.get("ingest_span")
+    m["stream.compaction_s"] = (
+        tracer.layer_seconds({ingest}).get("stream.compaction", 0.0)
+        if ingest else 0.0
+    )
     funnel = run.extra.get("funnel", {})
     for stage in CURATION_STAGES:
         m[f"curation.rows.{stage}"] = funnel.get(stage, 0)
@@ -148,8 +155,7 @@ def layer_metrics(run, tracer, eventlog: str) -> dict[str, float]:
     m["stream.batch_s"] = median([b[1] for b in batches])
     m["stream.batch_rows"] = median([b[0] for b in batches])
     busy = sum(b[1] for b in batches)
-    docs = run.extra.get("docs", 0) * len(run.ops_s)
-    m["stream.docs_per_s"] = docs / busy if busy else 0.0
+    m["stream.docs_per_s"] = run.extra.get("docs", 0) / busy if busy else 0.0
     m["stream.dup_recall"] = run.extra.get("dup_recall", 0.0)
 
     spark = tracer.spark_by_top(eventlog)
@@ -185,8 +191,37 @@ def main(argv=None) -> int:
         m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]
     }
     start_watchdog()
-    t_setup = time.perf_counter()
+    # a run that is told to stop still stops what it started (below)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    # an outer tag (the benchmark's tests set one) is kept
+    os.environ.setdefault(proc.TAG_VAR, f"{os.getpid()}-{time.time_ns()}")
     tmp = os.path.join(ROOT, ".perfbench_tmp", f"{args.workload}-{os.getpid()}")
+    try:
+        result = bench(args, units, tmp)
+    finally:
+        # on every way out: the JVM, its Python workers and the
+        # reference pool end before this process does
+        left = proc.stop_all(_gateway_process())
+        shutil.rmtree(tmp, ignore_errors=True)
+    if left:
+        print(f"perfbench: processes {left} did not stop", file=sys.stderr)
+        return 4
+    print(json.dumps(result), flush=True)
+    return 0
+
+
+def _gateway_process():
+    """The ``Popen`` of the Spark JVM, if this process started one."""
+    if "pyspark" not in sys.modules:
+        return None
+    from pyspark import SparkContext
+
+    return getattr(SparkContext._gateway, "proc", None)
+
+
+def bench(args, units, tmp) -> dict:
+    """Set up, run the workload and check it; returns the result line."""
+    t_setup = time.perf_counter()
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(os.path.join(tmp, "local"))
     os.environ["TMPDIR"] = tmp
@@ -293,16 +328,14 @@ def main(argv=None) -> int:
         print(f"metric {k} = {v:.6g} {units[k]} (samples={n})")
     for k, (v, unit, n) in info.items():
         print(f"info {k} = {v:.6g} {unit} (samples={n})")
-    shutil.rmtree(tmp, ignore_errors=True)
-    print(json.dumps({
+    return {
         "correct": run.failed == 0,
         "attempted": max(1, run.attempted),
         "failed": run.failed,
         "metrics": {
             k: {"value": v, "unit": units[k]} for k, v in sorted(metrics.items())
         },
-    }), flush=True)
-    return 0
+    }
 
 
 if __name__ == "__main__":

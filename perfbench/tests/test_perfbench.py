@@ -16,16 +16,28 @@ import re
 import shutil
 import subprocess
 import sys
+import uuid
 
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SPEC = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+import proc  # noqa: E402
 
 
 def bench(*args, cwd=ROOT):
+    """Run the benchmark; every process it started must have ended
+    when it exits."""
     cmd = [sys.executable, os.path.join("perfbench", "run.py"), *args]
-    p = subprocess.run(cmd, cwd=cwd, capture_output=True, text=True, timeout=300)
+    tag = f"test-{os.getpid()}-{uuid.uuid4().hex}"
+    env = {**os.environ, proc.TAG_VAR: tag}
+    p = subprocess.run(
+        cmd, cwd=cwd, env=env, capture_output=True, text=True, timeout=300
+    )
+    left = proc.tagged(tag)
+    assert not left, f"processes outlived the run: {left}"
     lines = p.stdout.strip().splitlines()
     result = None
     if lines:
@@ -76,22 +88,26 @@ def test_traced_run_prints_every_per_layer_metric():
     assert set(result["metrics"]) == {m["name"] for m in SPEC["per_layer"]}
     for m in SPEC["per_layer"]:
         assert result["metrics"][m["name"]]["unit"] == m["unit"]
-    assert result["metrics"]["curation.run_s"]["value"] > 0
-    assert result["metrics"]["spark.jobs"]["value"] > 0
+    m = {k: v["value"] for k, v in result["metrics"].items()}
+    assert m["curation.run_s"] > 0
+    assert m["spark.jobs"] > 0
     assert any(ln.startswith("span curation.run ") for ln in lines)
+    assert m["job.update_table_s"] == 0 and m["stream.batch_s"] == 0
 
 
-def test_traced_ingest_measures_the_streaming_layer():
-    p, lines, result = small("ingest_neardup", 5, 1)
+def test_traced_cdc_run_measures_the_streaming_layer():
+    p, lines, result = small("cdc_steady", 5, 1)
     assert p.returncode == 0, p.stderr[-3000:]
     assert_shape(result)
     assert result["correct"], lines
     m = {k: v["value"] for k, v in result["metrics"].items()}
-    for name in ("stream.batch_s", "stream.batch_rows", "stream.docs_per_s",
-                 "stream.compaction_s", "parquet.replace_partitions_s"):
+    for name in ("job.update_table_s", "updates.rows", "stream.batch_s",
+                 "stream.batch_rows", "stream.docs_per_s",
+                 "stream.compaction_s"):
         assert m[name] > 0, name
     assert 0.6 <= m["stream.dup_recall"] <= 1.0
-    assert m["curation.run_s"] == 0 and m["job.update_table_s"] == 0
+    assert m["curation.run_s"] == 0
+    assert any(ln.startswith("span stream.compaction ") for ln in lines)
 
 
 def test_corrupted_target_row_fails_the_check(clean_cdc):

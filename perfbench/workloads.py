@@ -4,12 +4,13 @@ Each workload is a closed loop with one client: the next operation
 starts when the previous one (and its untimed output check) is done.
 
 - ``cdc_steady``: sync passes of the replication engine in steady
-  state (``Job.run``), each after a seeded change batch.
+  state (``Job.run``), each after a seeded change batch. A traced run
+  then adds one ``streaming_neardup_ingest`` with an availableNow
+  trigger over seeded files with planted near-duplicates, from a fresh
+  target, with index compaction, for the streaming layer's per-layer
+  metrics.
 - ``curate_neardup``: one cold ``run_curation`` over a corpus with
   planted near-duplicate families.
-- ``ingest_neardup``: one ``streaming_neardup_ingest`` run with an
-  availableNow trigger over seeded files with planted near-duplicates,
-  from a fresh target, with index compaction.
 
 Before the first operation and after every one the run times the
 reference job (``Run.reference``), a fixed CPU workload that uses no
@@ -277,6 +278,11 @@ def cdc_steady(run: Run) -> dict:
     target_bytes = sum(
         dir_bytes(os.path.join(tgt_root, f"{t}.parquet")) for t in src.tables
     )
+    if run.tracer:
+        # the streaming layer is measured here, after the passes and
+        # apart from them
+        run.extra["counts_at_end"] = dict(run.tracer.counts)
+        ingest_once(run)
     return {"bytes_ratio": target_bytes / source_bytes()}
 
 
@@ -406,7 +412,7 @@ def curate_neardup(run: Run) -> dict:
     return {"bytes_ratio": statistics.median(out_bytes) / in_bytes}
 
 
-# -- ingest_neardup -------------------------------------------------------
+# -- ingest, in traced runs of cdc_steady --------------------------------
 
 
 class BatchLog:
@@ -450,7 +456,10 @@ class BatchLog:
             time.sleep(0.05)
 
 
-def ingest_neardup(run: Run) -> dict:
+def ingest_once(run: Run) -> None:
+    """One ingest, run as a separate operation of a traced run: its
+    stream.* metrics are per-layer only, and its time is not an
+    end-to-end metric."""
     from pyspark.sql import types as T
 
     from sslr_spark.sources.parquet import ParquetDatabase
@@ -462,23 +471,16 @@ def ingest_neardup(run: Run) -> dict:
     *_, n_fresh = run.sizes
     in_root = os.path.join(run.tmp, "incoming")
     os.makedirs(in_root, exist_ok=True)
-
-    def make():
-        files, planted = gen.ingest_files(run.seed, INGEST_FILES, n_fresh)
-        size = 0
-        for i, df in enumerate(files):
-            p = os.path.join(in_root, f"part-{i:03d}.parquet")
-            size += gen.write_parquet(df, p)
-            # the file source picks files up oldest first
-            os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
-        return files, planted, size
-
-    for _ in range(GEN_ROUNDS):
-        files, planted, in_bytes = run.timed_gen(make)
+    files, planted = gen.ingest_files(run.seed, INGEST_FILES, n_fresh)
+    for i, df in enumerate(files):
+        p = os.path.join(in_root, f"part-{i:03d}.parquet")
+        gen.write_parquet(df, p)
+        # the file source picks files up oldest first
+        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
     docs = pd.concat(files, ignore_index=True)
     copies = set(planted["within"]) | set(planted["cross"])
     run.extra["docs"] = len(docs)
-    run.extra["inputs"] = {
+    run.extra["inputs"]["ingest"] = {
         "files": INGEST_FILES, "docs": len(docs), "new_docs_per_file": n_fresh,
         "planted_within_file": len(planted["within"]),
         "planted_cross_file": len(planted["cross"]),
@@ -493,72 +495,54 @@ def ingest_neardup(run: Run) -> dict:
         T.StructField("n_chars", T.LongType()),
     ])
     log = BatchLog(run.spark)
-    out_bytes = []
-    start = time.perf_counter()
-    rep = 0
-    while not run.ops_s or time.perf_counter() - start < run.seconds:
-        root = os.path.join(run.tmp, f"ingest{rep}")
-        target = ParquetDatabase(run.spark, os.path.join(root, "tgt"))
-        rep += 1
+    root = os.path.join(run.tmp, "ingest")
+    target = ParquetDatabase(run.spark, os.path.join(root, "tgt"))
 
-        def ingest():
-            q = streaming_neardup_ingest(
-                run.spark, in_root, schema, target,
-                os.path.join(root, "checkpoint"),
-                trigger_seconds=None, max_files_per_trigger=1,
-                compact_every=COMPACT_EVERY,
-            )
-            try:
-                q.awaitTermination()
-            finally:
-                if q.isActive:
-                    q.stop()
-            return True
+    def ingest():
+        q = streaming_neardup_ingest(
+            run.spark, in_root, schema, target,
+            os.path.join(root, "checkpoint"),
+            trigger_seconds=None, max_files_per_trigger=1,
+            compact_every=COMPACT_EVERY,
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            if q.isActive:
+                q.stop()
+        return True
 
-        seen = len(log.batches)
-        res, dt, cpu = run.op("ingest", ingest)
-        run.ops_s.append(dt)
-        run.ops_cpu_s.append(cpu)
-        if res is None:
-            continue
-        log.wait_for(seen + INGEST_FILES)
-        batches = log.batches[seen:]
-        run.extra.setdefault("batches", []).extend(batches)
-        run.check(
-            len(batches) == INGEST_FILES,
-            f"{len(batches)} micro-batches for {INGEST_FILES} files",
-        )
-        acc = read_accepted(target).toPandas()[list(docs.columns)]
-        got = set(acc["doc_id"])
-        rejected = set(docs["doc_id"]) - got
-        recall = len(rejected & copies) / len(copies)
-        run.extra["dup_recall"] = recall
-        run.check(acc["doc_id"].is_unique, "accepted doc_ids repeat")
-        run.check(
-            digest(acc) == digest(docs[docs["doc_id"].isin(got)]),
-            "accepted rows are not input rows",
-        )
-        run.check(
-            rejected <= copies,
-            f"{len(rejected - copies)} new documents were rejected",
-        )
-        run.check(
-            recall >= MIN_DUP_RECALL,
-            f"rejected {recall:.2f} of the planted near-duplicates",
-        )
-        out_bytes.append(sum(
-            dir_bytes(target.path(t)) for t in (
-                "accepted", "__neardup_index_shingles",
-                "__neardup_index_buckets",
-            )
-        ))
-    if not out_bytes:
-        return {"bytes_ratio": 0.0}
-    return {"bytes_ratio": statistics.median(out_bytes) / in_bytes}
+    res, _, _ = run.op("ingest", ingest)
+    run.extra["ingest_span"] = run.op_spans.pop() if run.op_spans else None
+    if res is None:
+        return
+    log.wait_for(INGEST_FILES)
+    run.extra["batches"] = log.batches
+    run.check(
+        len(log.batches) == INGEST_FILES,
+        f"{len(log.batches)} micro-batches for {INGEST_FILES} files",
+    )
+    acc = read_accepted(target).toPandas()[list(docs.columns)]
+    got = set(acc["doc_id"])
+    rejected = set(docs["doc_id"]) - got
+    recall = len(rejected & copies) / len(copies)
+    run.extra["dup_recall"] = recall
+    run.check(acc["doc_id"].is_unique, "accepted doc_ids repeat")
+    run.check(
+        digest(acc) == digest(docs[docs["doc_id"].isin(got)]),
+        "accepted rows are not input rows",
+    )
+    run.check(
+        rejected <= copies,
+        f"{len(rejected - copies)} new documents were rejected",
+    )
+    run.check(
+        recall >= MIN_DUP_RECALL,
+        f"rejected {recall:.2f} of the planted near-duplicates",
+    )
 
 
 WORKLOADS = {
     "cdc_steady": cdc_steady,
     "curate_neardup": curate_neardup,
-    "ingest_neardup": ingest_neardup,
 }
