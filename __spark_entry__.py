@@ -64,12 +64,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # then r11) so the r13 head is its leading prefix.
 
 # Keys whose physical plan shape changed in the CURRENT session (exempt
-# from the staleness ordering check in tools/rotation_check.py): the
-# fused star-CC rounds ($SSLR_CC_ROUND), the gate materialization
-# default ($SSLR_GATE_HIST=scored), and the simhash parallelism-floor
-# default ($SSLR_SIMHASH_FLOOR=off).  All verified output-identical
-# locally — full oracle green twice this round (sf0.01 + sf0.001) plus
-# per-knob equality tests in tests/test_round12_fixes.py.
+# from the staleness ordering check in tools/rotation_check.py): star-CC
+# (dup_clusters_star) is back to its join-round form, the only form
+# now; the gate materialization (persisted scored projection) and the
+# simhash plan (no parallelism floor) keep their r12 shape as the one
+# remaining path.  Verified locally with the full oracle at sf0.01 and
+# sf0.001, plus the star-vs-reference equality test in
+# tests/test_dup_clusters.py.
 CHANGED_KEYS: list[str] = [
     "x_curation_pipeline",
     "x_curation_pipeline_neardup",
@@ -135,7 +136,7 @@ _HEAD_KEYS = [
     "text_quality_gate",
     "x_stream_dedup",
     "sample_shuffle_order",
-    # 4 r12-CHANGED keys (fused CC / simhash floor — re-verify first):
+    # 4 CHANGED keys (star-CC round form / simhash plan — re-verify first):
     "dedup_clusters",
     "dedup_cluster_sizes",
     "dedup_simhash",

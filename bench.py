@@ -566,7 +566,7 @@ def main(only: set[str] | None = None) -> dict:
         q_x_curation_pipeline,
     )
 
-    # reset: the r12 'scored' gate mode persists the (doc_id, by,
+    # reset: the quality gates persist the 'scored' (doc_id, by,
     # score_bp) projection through the dedup cache registry; Spark's
     # CacheManager matches an identical plan in the next rep to the
     # already-materialized cache, so WITHOUT a release the later reps

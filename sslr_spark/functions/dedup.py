@@ -1192,35 +1192,16 @@ def simhash(
     before the exchange, so the only shuffle carries ~n_docs rows of
     ``bits`` longs, never tokens. Fingerprints are bit-identical to
     the two-shuffle form (equality-tested)."""
-    import os
-
     word_hash = (
         h64_fast(F.col("word")) if hash_mode == "fast" else h60(F.col("word"))
     )
-    # Parallelism-floor placement ($SSLR_SIMHASH_FLOOR: off | text |
-    # hash). 'text' (the r11 shape) round-robins the raw documents —
-    # the repartition write of full text runs on the few scan tasks
-    # and was the r11 driver regression (0.68x, VERDICT item 2);
-    # 'hash' floors AFTER the tokenize+hash projection, shuffling
-    # only (doc_id, int64) occurrence rows; 'off' (default since
-    # r12) trusts the scan split count — the explode feeds one
+    # no parallelism floor (unlike shingles): the explode feeds one
     # map-side partial aggregate, so there is no fan-out join to
-    # starve, and at scale any floor is a no-op anyway. Driver-shape
-    # A/B (r12, two independent interleaved sessions): text med
-    # 3.60/3.39 s, off 3.17/2.98, hash 3.32/2.97 — 'text' is the
-    # regression, 'off' and 'hash' tie; 'off' wins on zero extra
-    # shuffles.
-    mode = os.environ.get("SSLR_SIMHASH_FLOOR", "off")
-    base = df.select("doc_id", F.col(text_col))
-    if mode == "text":
-        base = _parallel_floor(base)
+    # starve, and a floor would only add a shuffle
     occ = (
-        base
-        .select("doc_id", F.explode(words(F.col(text_col))).alias("word"))
+        df.select("doc_id", F.explode(words(F.col(text_col))).alias("word"))
         .select("doc_id", word_hash.alias("h"))
     )
-    if mode == "hash":
-        occ = _parallel_floor(occ)
     # one aggregation with `bits` conditional sums — no bit explode and
     # no per-word pre-aggregate; the fingerprint assembles from the agg
     # columns without a further shuffle
@@ -2040,133 +2021,6 @@ def incremental_minhash_dedup(
     )
 
 
-def _dup_clusters_star_fused(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_rounds: int = 40,
-) -> DataFrame:
-    """Alternating large-star/small-star CC over ADJACENCY ARRAYS —
-    the fused round form (round 12, guide §2.4: remove shuffles and
-    stages outright).
-
-    Same recurrence and output contract as the ``join`` form in
-    :func:`dup_clusters_star`; what changes is the physical shape.
-    The round state is one row per node ``(src, arr)`` with ``arr`` =
-    the distinct neighbor set, so each phase's per-node minimum is
-    ``least(src, array_min(arr))`` — a map-side expression — and the
-    phase's emitted edges come from exploding a filtered copy of the
-    array instead of joining the edge set back onto an aggregate of
-    itself. Per round: TWO exchanges (re-group large-star output by
-    its new key; re-group small-star output into next round's
-    adjacency) and ~3 stages, vs three exchanges across ~6 stages for
-    the row form — the row form pays a third exchange because a
-    ``localCheckpoint`` does not carry partitioning across rounds, so
-    its canonicalizing distinct cannot serve the next round's
-    min-aggregate (measured: probe2 in OPTIMIZATION_r12.md).
-    The checkpoint-per-round / one-job-per-round structure is kept:
-    the signature aggregate at the top of each round materializes the
-    lazily-checkpointed adjacency.
-
-    Convergence: the signature hashes the SYMMETRIC adjacency (sum of
-    degrees + order-insensitive xor of per-edge hashes) — the round
-    input itself; a repeated input implies a fixpoint. The star test
-    folds into the same aggregate: the graph is a disjoint union of
-    min-centered stars iff every node with a smaller neighbor has
-    exactly one neighbor (``max(when(array_min(arr) < src,
-    size(arr)).otherwise(1)) == 1``) — no separate probe job. Labels
-    read map-side off the final adjacency (``least(src,
-    array_min(arr))``), with no nodes join.
-
-    Memory note (the reason ``join`` stays selectable): a node's
-    whole neighbor set lives in one aggregation buffer / one row, and
-    at the fixpoint a component's center holds the full component —
-    ~8 bytes x cluster size for long ids (a 10M-doc near-dup cluster
-    = an 80 MB row: fine; a 1B-doc cluster would not be). The row
-    form spreads the same star across rows and survives arbitrarily
-    large components.
-    """
-    edges0 = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-
-    def swap(e: DataFrame) -> DataFrame:
-        return e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-    def sym_adj(e: DataFrame) -> DataFrame:
-        # symmetric adjacency: one row per node, distinct neighbors
-        # (collect_set = the canonicalizing distinct, same exchange)
-        return (
-            e.unionByName(swap(e))
-            .groupBy("src")
-            .agg(F.collect_set("dst").alias("arr"))
-            .localCheckpoint(eager=False)
-        )
-
-    def sig_and_star(adj: DataFrame):
-        # one job: materializes the lazy checkpoint, returns the
-        # convergence signature + the star test, all from one pass.
-        # bit_xor of per-row xor-folds is order-insensitive and
-        # overflow-free (ANSI-safe), like the row form's signature.
-        row = adj.agg(
-            F.sum(F.size("arr")).alias("n"),
-            F.expr(
-                "bit_xor(aggregate(arr, 0L, (a, x) -> a ^ xxhash64(src, x)))"
-            ).alias("h"),
-            F.max(
-                F.when(
-                    F.array_min("arr") < F.col("src"), F.size("arr")
-                ).otherwise(F.lit(1))
-            ).alias("maxdeg_child"),
-        ).first()
-        return (row["n"], row["h"]), row["maxdeg_child"]
-
-    def phase(adj: DataFrame, large: bool) -> DataFrame:
-        # large-star: every neighbor v > u points at u's closed-
-        # neighborhood min; small-star: every v <= u (and u itself)
-        # does. Map-side: min and emitted edges both read the array.
-        u, arr = F.col("u"), F.col("arr")
-        pick = (lambda v: v > u) if large else (lambda v: v <= u)
-        out = F.filter(arr, pick)
-        if not large:
-            out = F.array_union(out, F.array(u))
-        return (
-            adj.select(
-                F.col("src").alias("u"),
-                "arr",
-                F.least(F.col("src"), F.array_min("arr")).alias("m"),
-            )
-            .select(F.explode(out).alias("src"), F.col("m").alias("dst"))
-        )
-
-    adj = sym_adj(edges0)
-    prev = None
-    for _ in range(max_rounds):
-        sig, maxdeg_child = sig_and_star(adj)
-        if sig[0] is None or sig == prev or maxdeg_child <= 1:
-            break
-        prev = sig
-        large = phase(adj, large=True)
-        adj2 = (
-            large.unionByName(swap(large))
-            .groupBy("src")
-            .agg(F.collect_set("dst").alias("arr"))
-        )
-        small = phase(adj2, large=False).filter(F.col("src") != F.col("dst"))
-        adj = sym_adj(small)
-    else:
-        import warnings
-
-        warnings.warn(
-            f"dup_clusters_star did not stabilize in {max_rounds} rounds",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
-    return adj.select(
-        F.col("src").alias("doc_id"),
-        F.least(F.col("src"), F.array_min("arr")).alias("cluster_id"),
-    )
-
-
 def dup_clusters_star(
     pairs: DataFrame,
     id_a: str = "doc_a",
@@ -2212,20 +2066,12 @@ def dup_clusters_star(
       running another large+small round would reproduce them exactly,
       so the loop exits without paying it.
 
-    Round-shape knob (round 12, guide §2.4): ``$SSLR_CC_ROUND``
-    selects ``fused`` (default — adjacency-array rounds, two
-    exchanges and ~3 stages per round, see
-    :func:`_dup_clusters_star_fused`) or ``join`` (this function's
-    r11 row-form rounds, three exchanges and ~6 stages per round).
-    Labels are identical (equality-tested); ``join`` remains the
-    escape hatch for graphs whose components are so large that one
-    node's full neighbor set must not be collected into a single
-    array (see the fused docstring's memory note).
+    Every round state is a set of edge ROWS, so no node's neighbor
+    set is ever collected into one row — components of any size
+    survive. Labels come from a left join of the distinct input nodes
+    onto the final stars, so a node whose only edge is a self-loop
+    keeps its own label.
     """
-    import os
-
-    if os.environ.get("SSLR_CC_ROUND", "fused") != "join":
-        return _dup_clusters_star_fused(pairs, id_a, id_b, max_rounds)
 
     def swap(e: DataFrame) -> DataFrame:
         return e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -116,49 +116,19 @@ def quality_quantile_gate(
 
 
 def _gate_frames(scored: DataFrame, by: str) -> tuple[DataFrame, DataFrame]:
-    """(scored, hist) for the quantile gates, with the materialization
-    strategy A/B-selectable while round 12 attributes the r11 driver
-    regression ($SSLR_GATE_HIST: plain | ckpt | scored):
+    """(scored, hist) for the quantile gates. The narrow (doc_id, by,
+    score_bp) projection is persisted through the dedup cache
+    registry, so the corpus-scoring pipeline runs ONCE — the
+    histogram, the thresholds and the final join all read the cache;
+    callers release it via dedup.release_caches() once results are
+    materialized. At scale the cached projection is ~20 bytes/doc and
+    persist() (MEMORY_AND_DISK) spills gracefully."""
+    from sslr_spark.functions.dedup import register_cache
 
-    - 'plain': r11 shape — hist lazy; without exchange reuse the
-      corpus-scoring pipeline feeding ``scored`` can evaluate up to
-      3x (hist's two threshold consumers + the final join).
-    - 'ckpt': pin hist with a LAZY localCheckpoint — the
-      histogram is bounded (<= |groups| x 10001 rows) so truncated
-      lineage costs nothing, and the scoring pipeline evaluates
-      exactly twice (hist materialization + the final join). A
-      checkpoint, not .persist(), on purpose: persist registers the
-      plan with the CacheManager, where an identical later query
-      (e.g. a bench rep) would silently reuse it across reps.
-    - 'scored' (default since r12): additionally persist the narrow
-      (doc_id, by, score_bp) projection through the dedup cache
-      registry (ONE scoring pass total — hist, thresholds and the
-      final join all read the cache); callers must release via
-      dedup.release_caches() once results are materialized — the
-      bench does this between reps, exactly like the shingle-index
-      sections. At scale the cached projection is ~20 bytes/doc and
-      persist() (MEMORY_AND_DISK) spills gracefully.
-
-    Driver-shape A/B (r12, fresh JVM per sample, interleaved):
-    quality_gate plain 2.19/2.93 (min/med s), ckpt 2.37/3.78,
-    scored 1.34/1.79; curation_pipeline plain 3.99/4.45, ckpt
-    4.46/5.12, scored 3.11/5.05. 'ckpt' — the r11 VERDICT's
-    hypothesis — is refuted cold (nothing pins `scored` for the
-    final join); 'scored' is the only mode that makes the expensive
-    feature/LM extraction run once.
-    """
-    import os
-
-    mode = os.environ.get("SSLR_GATE_HIST", "scored")
-    if mode == "scored":
-        from sslr_spark.functions.dedup import register_cache
-
-        scored = register_cache(scored)
+    scored = register_cache(scored)
     hist = scored.groupBy(by, "score_bp").agg(
         F.count(F.lit(1)).alias("__c")
     )
-    if mode == "ckpt":
-        hist = hist.localCheckpoint(eager=False)
     return scored, hist
 
 

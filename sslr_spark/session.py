@@ -31,30 +31,10 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 
-    # Scan-split open cost (guide §6): r11 lowered
-    # spark.sql.files.openCostInBytes to 512 KB so sub-4MB single-file
-    # tables scan as several tasks instead of one. REVERTED to Spark's
-    # 4 MB default in r12 after driver-shape attribution (VERDICT r11
-    # item 2): the r11 same-JVM wins did not reproduce cold
-    # (sample_dsir med 3.41 s @512K vs 3.45 @4M — wash; quality_gate
-    # 1.42 vs 1.36 — wash; both now carry their own one-pass
-    # optimizations), while the copy-shaped sections consistently
-    # paid for it (full_copy med 1.52 @512K vs 1.33 @4M: a ~20 MB
-    # source splits into ~31 sub-MB read tasks and the shuffle-free
-    # copy then commits 31 small output files). At 100 TB
-    # maxPartitionBytes dominates split sizing either way. Override
-    # via $SSLR_FILES_OPEN_COST for small-file-heavy deployments
-    # where scan parallelism on tiny tables matters more than output
-    # file counts.
-    open_cost = os.environ.get(
-        "SSLR_FILES_OPEN_COST", str(4 * 1024 * 1024)
-    )
-
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.openCostInBytes", open_cost)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

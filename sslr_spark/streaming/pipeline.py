@@ -1190,21 +1190,20 @@ def stream_sessionize(
 
     ``state_store``: state-store provider for a NEW checkpoint —
     'rocksdb' / 'hdfs' / a raw provider class; None (default) keeps
-    the session conf (HDFS-backed). Also settable via
-    ``$SSLR_STATE_STORE``. Measured r12 A/B at sf0.1 (driver shape,
-    fresh JVM per sample, 3 availableNow batches): hdfs min 8.24 /
-    med 9.39 s vs rocksdb min 9.87 / med 14.08 s — RocksDB pays
-    native-store open/commit per partition per micro-batch, which
-    dwarfs this operator's three-long-per-key state; it earns its
-    keep only when state outgrows executor heaps (millions of open
-    sessions per partition), so the default stays HDFS and the knob
-    is the deliberate opt-in. Batch-coalescing the source (one
-    availableNow batch instead of three) was considered and REJECTED
-    without measurement: the bench source's two sentinel files exist
-    to advance the watermark BETWEEN batches so open sessions time
-    out and emit; one batch would change what the section computes
-    (open sessions would stay unflushed), violating the
-    results-identical bar.
+    the session conf (HDFS-backed). Measured r12 A/B at sf0.1
+    (local[32], fresh JVM per sample, 3 availableNow batches):
+    hdfs min 8.24 / med 9.39 s vs rocksdb min 9.87 / med 14.08 s —
+    RocksDB pays native-store open/commit per partition per
+    micro-batch, which dwarfs this operator's three-long-per-key
+    state; it earns its keep only when state outgrows executor heaps
+    (millions of open sessions per partition), so the default stays
+    HDFS and the parameter is the deliberate opt-in.
+    Batch-coalescing the source (one availableNow batch instead of
+    three) was considered and REJECTED without measurement: the bench
+    source's two sentinel files exist to advance the watermark
+    BETWEEN batches so open sessions time out and emit; one batch
+    would change what the section computes (open sessions would stay
+    unflushed), violating the results-identical bar.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -1303,9 +1302,7 @@ def stream_sessionize(
         )
     )
     with _shuffle_partitions_scope(spark, state_partitions), \
-            _state_store_scope(
-                spark, state_store or os.environ.get("SSLR_STATE_STORE")
-            ):
+            _state_store_scope(spark, state_store):
         q = (
             sessions.writeStream.format("parquet")
             .option("path", out_dir)

@@ -6,6 +6,8 @@ import pytest
 
 from sslr_spark.session import get_spark
 
+_SLOW_REASON = "marked slow; set SSLR_FULL_SUITE=1 to run"
+
 
 def pytest_collection_modifyitems(config, items):
     """Default-on fast profile (round 12, VERDICT r11 item 1): the
@@ -19,12 +21,26 @@ def pytest_collection_modifyitems(config, items):
     releases with ``SSLR_FULL_SUITE=1 python -m pytest tests/``."""
     if os.environ.get("SSLR_FULL_SUITE"):
         return
-    skip = pytest.mark.skip(
-        reason="marked slow; set SSLR_FULL_SUITE=1 to run"
-    )
+    skip = pytest.mark.skip(reason=_SLOW_REASON)
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many ``slow`` tests the default profile skipped, so a
+    green default run is not mistaken for the full suite."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple)
+        and rep.longrepr[2].endswith(_SLOW_REASON)
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow tests skipped by the default profile; "
+            "run them with SSLR_FULL_SUITE=1"
+        )
 
 
 @pytest.fixture(scope="session")

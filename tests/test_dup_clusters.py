@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+import warnings
+
 import pytest
 
 from sslr_spark.functions.dedup import dup_clusters
@@ -64,6 +67,50 @@ def test_star_equals_propagation(spark):
     a = {(r.doc_id, r.cluster_id) for r in dup_clusters(pairs).collect()}
     b = {(r.doc_id, r.cluster_id) for r in dup_clusters_star(pairs).collect()}
     assert a == b
+
+
+def _random_edges():
+    rng = random.Random(7)
+    return [(rng.randint(1, 150), rng.randint(1, 150)) for _ in range(250)]
+
+
+# (edges, id type) — self-loops, isolated pairs, duplicate and
+# reversed edges, string ids
+STAR_GRAPHS = {
+    "chain": ([(i, i + 1) for i in range(1, 30)], "long"),
+    "star_min_centered": ([(1, i) for i in range(2, 20)], "long"),
+    "star_max_centered": ([(i, 100) for i in range(2, 20)], "long"),
+    "self_loop": ([(5, 5), (5, 6)], "long"),
+    "self_loop_only_node": ([(9, 9), (1, 2), (2, 3), (3, 4)], "long"),
+    "multi_component": (
+        [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10)], "long"
+    ),
+    "dup_and_reversed_edges": (
+        [(2, 1), (1, 2), (3, 2), (2, 3), (7, 9)], "long"
+    ),
+    "random_graph": (_random_edges(), "long"),
+    "string_ids": ([("a", "b"), ("b", "c"), ("x", "y")], "string"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(STAR_GRAPHS))
+def test_star_equals_reference(spark, name):
+    """dup_clusters_star labels every node exactly as min-label
+    propagation does — including a node whose only edge is a
+    self-loop."""
+    from sslr_spark.functions.dedup import dup_clusters_star
+
+    edges, id_type = STAR_GRAPHS[name]
+    pairs = spark.createDataFrame(
+        edges, f"doc_a {id_type}, doc_b {id_type}"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)  # must converge
+        want = dup_clusters(pairs, max_iterations=40).collect()
+        got = dup_clusters_star(pairs).collect()
+    want, got = sorted(map(tuple, want)), sorted(map(tuple, got))
+    assert got == want
+    assert {doc for doc, _ in got} == {v for e in edges for v in e}
 
 
 def test_star_handles_deep_chain_in_few_rounds(spark):

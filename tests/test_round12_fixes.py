@@ -1,17 +1,12 @@
-"""Round 12 fixes: ADVICE r11 items + optimization-variant equivalence.
-
-Every optimization knob this round introduces must be result-neutral;
-these tests pin that, plus the two ADVICE r11 engine items and the
-new opt-in doc_id-unique contract guard.
+"""Round 12 fixes: the two ADVICE r11 engine items and the opt-in
+doc_id-unique contract guard.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def _docs(spark, rows):
@@ -93,114 +88,3 @@ class TestDoubleArrayLiteral:
         assert got[0] == 1.0
         assert got[1] == float("inf") and got[2] == float("-inf")
         assert math.isnan(got[3])
-
-
-class TestSimhashFloorVariantsIdentical:
-    """$SSLR_SIMHASH_FLOOR placements must be fingerprint-identical —
-    the knob only moves WHERE the parallelism floor applies."""
-
-    @pytest.mark.parametrize("mode", ["off", "hash"])
-    def test_fingerprints_equal(self, spark, monkeypatch, mode):
-        from sslr_spark.functions.dedup import simhash
-
-        df = _docs(spark, DOCS)
-        monkeypatch.setenv("SSLR_SIMHASH_FLOOR", "text")
-        base = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
-        monkeypatch.setenv("SSLR_SIMHASH_FLOOR", mode)
-        got = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
-        assert got == base
-
-
-class TestGateHistVariantsIdentical:
-    """$SSLR_GATE_HIST materialization modes must be result-identical —
-    the knob only changes whether the bounded histogram is pinned."""
-
-    @pytest.mark.parametrize("mode", ["plain", "ckpt", "scored"])
-    def test_quantile_gate_results_equal(self, spark, monkeypatch, mode):
-        from sslr_spark.functions import dedup as DD
-        from sslr_spark.functions.quality_model import (
-            score_bp_quantile_gate,
-        )
-
-        scored = spark.createDataFrame(
-            [(i, "en" if i % 3 else "de", (i * 37) % 100) for i in range(60)],
-            "doc_id long, lang string, score_bp int",
-        )
-        monkeypatch.setenv("SSLR_GATE_HIST", "plain")
-        base = sorted(
-            map(tuple, score_bp_quantile_gate(scored, 0.5, "lang").collect())
-        )
-        monkeypatch.setenv("SSLR_GATE_HIST", mode)
-        try:
-            got = sorted(
-                map(
-                    tuple,
-                    score_bp_quantile_gate(scored, 0.5, "lang").collect(),
-                )
-            )
-        finally:
-            DD.release_caches()  # 'scored' mode registers a persist
-        assert got == base
-        assert len(base) >= 60 * 0.5 * 0.9  # sanity: gate kept ~half
-
-
-class TestCcRoundVariantsIdentical:
-    """$SSLR_CC_ROUND forms (fused adjacency-array vs r11 join rounds)
-    must produce identical (doc_id, cluster_id) labels — the knob only
-    changes the physical round shape."""
-
-    GRAPHS = {
-        "chain": [(i, i + 1) for i in range(1, 30)],
-        "star_min_centered": [(1, i) for i in range(2, 20)],
-        "star_max_centered": [(i, 100) for i in range(2, 20)],
-        "self_loop": [(5, 5), (5, 6)],
-        "multi_component": [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10)],
-        "dup_and_reversed_edges": [(2, 1), (1, 2), (3, 2), (2, 3), (7, 9)],
-    }
-
-    @pytest.mark.parametrize("name", sorted(GRAPHS))
-    def test_labels_equal(self, spark, monkeypatch, name):
-        from sslr_spark.functions.dedup import dup_clusters_star
-
-        pairs = spark.createDataFrame(
-            self.GRAPHS[name], "doc_a long, doc_b long"
-        )
-        monkeypatch.setenv("SSLR_CC_ROUND", "join")
-        base = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        monkeypatch.setenv("SSLR_CC_ROUND", "fused")
-        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        assert got == base
-        # every cluster_id is its component's minimum member
-        by_cluster: dict = {}
-        for doc, c in got:
-            by_cluster.setdefault(c, []).append(doc)
-        assert all(c == min(docs) for c, docs in by_cluster.items())
-
-    def test_labels_equal_random_graph(self, spark, monkeypatch):
-        import random
-
-        from sslr_spark.functions.dedup import dup_clusters_star
-
-        rng = random.Random(7)
-        edges = [
-            (rng.randint(1, 150), rng.randint(1, 150)) for _ in range(250)
-        ]
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        monkeypatch.setenv("SSLR_CC_ROUND", "join")
-        base = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        monkeypatch.setenv("SSLR_CC_ROUND", "fused")
-        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        assert got == base
-
-    def test_labels_equal_string_ids(self, spark, monkeypatch):
-        from sslr_spark.functions.dedup import dup_clusters_star
-
-        pairs = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("x", "y")],
-            "doc_a string, doc_b string",
-        )
-        monkeypatch.setenv("SSLR_CC_ROUND", "join")
-        base = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        monkeypatch.setenv("SSLR_CC_ROUND", "fused")
-        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
-        assert got == base

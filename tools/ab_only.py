@@ -3,14 +3,15 @@
 Runs ``bench.py --only <section>`` in alternating variant order
 (ABBA BAAB ...) with a fresh interpreter/JVM per run — the driver's
 measurement shape — and reports per-variant min/median. Variants are
-(env overrides) dicts, so code under test stays identical on disk and
-the toggle is the same env knob a production deployment would use.
+(env overrides) dicts, so code under test stays identical on disk.
+The library has no A/B switches of its own, so a variant varies the
+run environment, e.g. the core count or the driver memory.
 
 Usage:
-    python tools/ab_only.py <section> <rounds> VAR=a,b[,c] [VAR2=x,y]
+    python tools/ab_only.py <section> <rounds> VAR=a,b[,c]
 
 Example:
-    python tools/ab_only.py dedup_simhash 4 SSLR_SIMHASH_FLOOR=text,off,hash
+    python tools/ab_only.py dedup_simhash 4 SPARK_GRAFT_CPUS=4,8
 """
 
 from __future__ import annotations

@@ -10,9 +10,10 @@ via $SPARK_GRAFT_SF_DIR for `bench.py --only` runs whose 8-vs-32-core
 RATIO is the measurement.
 
 Construction (seedless, fully deterministic):
-- documents: FACTOR replicas; replica 0 is the original; replica i>0
-  offsets doc_id by i*ID_OFFSET and replaces every 7th word (phase
-  i mod 7) with a replica-specific token. This preserves corpus
+- documents: FACTOR replicas of (doc_id, text, lang, source,
+  n_chars); replica 0 is the original; replica i>0 offsets doc_id by
+  i*ID_OFFSET and replaces every 7th word (phase i mod 7) with a
+  replica-specific token. This preserves corpus
   word/length statistics and the WITHIN-replica near-dup structure,
   while cross-replica pairs sit at jaccard ~0.4-0.6 — below the
   prefix/containment thresholds (0.8/0.4), above minhash's 0.1, so
@@ -59,23 +60,24 @@ def main() -> None:
     docs = spark.read.parquet(f"{src}/documents.parquet")
 
     def doc_rep(df, i):
-        if i == 0:
-            return df
-        tok = F.lit(f"zrep{i}tok")
-        words = F.split(F.col("text"), " ")
-        perturbed = F.array_join(
-            F.transform(
-                words,
-                lambda w, pos: F.when((pos % 7) == (i % 7), tok).otherwise(w),
-            ),
-            " ",
-        )
+        # one projection for every replica, so extra source columns
+        # cannot break the union; replica 0 keeps its text unchanged
+        text = F.col("text")
+        if i > 0:
+            tok = F.lit(f"zrep{i}tok")
+            text = F.array_join(
+                F.transform(
+                    F.split(text, " "),
+                    lambda w, pos: F.when((pos % 7) == (i % 7), tok).otherwise(w),
+                ),
+                " ",
+            )
         return df.select(
             (F.col("doc_id") + F.lit(i * ID_OFFSET)).alias("doc_id"),
-            perturbed.alias("text"),
+            text.alias("text"),
             "lang",
             "source",
-            F.length(perturbed).alias("n_chars"),
+            F.length(text).cast("long").alias("n_chars"),
         )
 
     reps(docs, doc_rep).coalesce(8).write.mode("overwrite").parquet(
