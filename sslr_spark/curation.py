@@ -25,12 +25,24 @@ the composition, so the whole pipeline stays hash-exact end-to-end
 (the x_curation_pipeline driver key replays all five stages as one
 DuckDB CTE chain).
 
-Scale shape: stages compose LAZILY into one plan — Catalyst sees the
-whole chain, so column pruning reaches the scan and the narrow rule
-filter runs before any shuffle. The expensive stages keep their
-individual 100 TB shapes (hash-shuffle dedup, bounded-histogram gate,
-per-source window cap). The optional funnel report costs one extra
-aggregate per stage and is off by default.
+Scale shape: each stage lands its survivors once, behind a
+plan-truncating local checkpoint (dedup.py ``land``), and the next
+stage plans and runs against that single leaf. Composed lazily,
+every stage that derives a keep-set from the survivors and semi-joins
+it back would multiply the plan (240 leaves and 223 joins with
+near-dup on, re-analyzed and re-run for every funnel count and the
+write). Within a stage Catalyst still sees the whole stage, so column
+pruning reaches the scan and the narrow rule filters run before any
+shuffle; the expensive stages keep their individual 100 TB shapes
+(hash-shuffle dedup, bounded-histogram gate, per-source window cap).
+The optional funnel report counts each landed frame and is off by
+default.
+
+Trade-offs of landing: a landed stage has no lineage, so a block lost
+with its executor fails the job instead of recomputing (the star-CC
+rounds already imposed this on the near-dup stage); and once
+:meth:`CurationResult.release` ran, the curated frame can no longer be
+evaluated.
 """
 
 from __future__ import annotations
@@ -42,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sslr_spark.config import ConfigError
-from sslr_spark.functions.dedup import exact_dedup_groups
+from sslr_spark.functions.dedup import CacheOwner, exact_dedup_groups, land
 from sslr_spark.functions.quality_model import quality_quantile_gate
 from sslr_spark.functions.sampling import shard_assign, source_cap
 from sslr_spark.functions.text import gopher_flags
@@ -205,7 +217,7 @@ def run_curation(spark, cfg: CurationConfig) -> dict:
     )
     out.overwrite(cfg.output_table, res.df)
     rows = out.table_rows(cfg.output_table)
-    res.release()  # final action done — free the near-dup cache
+    res.release()  # final action done — free every landed stage
     return {"funnel": res.funnel, "written_rows": rows}
 
 
@@ -214,23 +226,20 @@ class CurationResult:
     """Final curated frame plus (optionally) per-stage survivor
     counts in pipeline order.
 
-    When the near-dup stage ran, ``df`` reads through a persisted
-    intermediate (the gopher+exact survivor frame, referenced by 4+
-    subtrees of the plan). In a long-lived driver call
-    :meth:`release` after the final action on ``df`` — otherwise the
-    cached blocks live for the application lifetime. Actions after
-    ``release()`` simply recompute from source."""
+    ``df`` reads through the last stage's landed survivors, stored in
+    executor memory (spilling to disk). Call :meth:`release` after
+    the final action on ``df`` — otherwise the blocks live until the
+    frame is garbage-collected. After ``release()``, ``df`` can no
+    longer be evaluated: there is no lineage to recompute it from."""
 
     df: DataFrame
     funnel: dict[str, int] = field(default_factory=dict)
-    _cached: DataFrame | None = None
+    _owner: CacheOwner = field(default_factory=CacheOwner, repr=False)
 
     def release(self) -> None:
-        """Unpersist the near-dup stage's survivor cache (no-op when
-        the stage didn't run or was already released)."""
-        if self._cached is not None:
-            self._cached.unpersist()
-            self._cached = None
+        """Free every block the curation call still holds: the landed
+        survivors and any cache its operators registered. Idempotent."""
+        self._owner.release()
 
 
 def curate_documents(
@@ -272,11 +281,8 @@ def curate_documents(
         raise ValueError(
             f"keep_fraction must be in (0, 1], got {keep_fraction}"
         )
-    funnel: dict[str, int] = {}
-
-    def tick(name: str, frame: DataFrame) -> None:
-        if with_funnel:
-            funnel[name] = frame.count()
+    if dsir_keep_fraction is not None and not dsir_target_source:
+        raise ValueError("dsir_keep_fraction requires dsir_target_source")
 
     # the stage operators (gopher_flags, exact_dedup_groups,
     # quality_quantile_gate) key their outputs on 'doc_id'; thread a
@@ -289,165 +295,157 @@ def curate_documents(
             )
         df = df.withColumnRenamed(key_col, "doc_id")
     kc = "doc_id"
+    funnel: dict[str, int] = {}
+    # every cache and landing the stages make is recorded here, so the
+    # result frees exactly its own blocks
+    owner = CacheOwner()
 
-    cur = df.select(kc, lang_col, source_col, text_col)
-    tick("input", cur)
+    def landed(name: str, frame: DataFrame) -> DataFrame:
+        # stage boundary: store the survivors, then free everything the
+        # stage built on the way (its caches, the previous landing)
+        frame = land(frame)
+        owner.release(keep=frame)
+        if with_funnel:
+            funnel[name] = frame.count()
+        return frame
 
-    if mojibake:
-        # encoding screen FIRST: a mis-decoded doc poisons every
-        # later heuristic (gopher word shapes, dedup shingles, the
-        # quality model's features), so it must not even reach them.
-        # Shape note (measured, round 9): a scan-FUSED bare-column
-        # filter looks cheaper than flags-frame + semi join, but the
-        # pipeline's survivor frame feeds several downstream subtrees
-        # (dedup groups, the gate's scoring, the final projection) and
-        # a fused predicate re-evaluates its heavy token lambdas in
-        # EVERY one — whereas the semi join's broadcast keep-id
-        # exchange materializes once and Spark's ReusedExchange serves
-        # all consumers (warm A/B at sf0.1: 3.0-3.2 s semi vs
-        # 3.9-5.5 s fused for the full chain). Keep the semi join
-        # here; the bare-column mojibake_keep/gopher_keep helpers stay
-        # the right tool for SINGLE-consumer chains (streaming
-        # filters, one-pass screens).
-        from sslr_spark.functions.text import mojibake_flags
+    with owner:
+        raw = cur = df.select(kc, lang_col, source_col, text_col)
+        if with_funnel:
+            funnel["input"] = cur.count()
 
-        mk = mojibake_flags(df, text_col).filter("keep").select(kc)
-        cur = cur.join(mk, kc, "left_semi")
-        tick("mojibake", cur)
+        if mojibake:
+            # encoding screen FIRST: a mis-decoded doc poisons every
+            # later heuristic (gopher word shapes, dedup shingles, the
+            # quality model's features), so it must not even reach them.
+            # Shape note: the rule stages semi-join a keep-id frame
+            # instead of filtering on the bare-column mojibake_keep /
+            # gopher_keep helpers. Round 9 measured that form when the
+            # survivor frame fed several subtrees of one composed plan
+            # (warm A/B at sf0.1, full chain: 3.0-3.2 s semi vs
+            # 3.9-5.5 s fused — the fused predicate re-ran its token
+            # lambdas in every consumer). Each stage now lands, so the
+            # survivors have one consumer, the case the bare-column
+            # helpers are meant for; the semi join stays until an A/B
+            # under landing says otherwise.
+            from sslr_spark.functions.text import mojibake_flags
 
-    if gopher:
-        keep = gopher_flags(df, text_col).filter("keep").select(kc)
-        cur = cur.join(keep, kc, "left_semi")
-        tick("gopher", cur)
+            mk = mojibake_flags(df, text_col).filter("keep").select(kc)
+            cur = landed("mojibake", cur.join(mk, kc, "left_semi"))
 
-    if blocklist:
-        # content-policy gate after the structural rules, before any
-        # dedup work is spent on rows the policy will drop anyway
-        from sslr_spark.functions.text import blocklist_filter
+        if gopher:
+            keep = gopher_flags(df, text_col).filter("keep").select(kc)
+            cur = landed("gopher", cur.join(keep, kc, "left_semi"))
 
-        bk = (
-            blocklist_filter(
-                cur, blocklist, text_col, max_banned_ppm=blocklist_max_ppm
+        if blocklist:
+            # content-policy gate after the structural rules, before any
+            # dedup work is spent on rows the policy will drop anyway
+            from sslr_spark.functions.text import blocklist_filter
+
+            bk = (
+                blocklist_filter(
+                    cur, blocklist, text_col, max_banned_ppm=blocklist_max_ppm
+                )
+                .filter("keep")
+                .select(kc)
             )
-            .filter("keep")
-            .select(kc)
-        )
-        cur = cur.join(bk, kc, "left_semi")
-        tick("blocklist", cur)
+            cur = landed("blocklist", cur.join(bk, kc, "left_semi"))
 
-    if exact_dedup:
-        keepers = exact_dedup_groups(cur, text_col).select(
-            F.col("keep_id").alias(kc)
-        )
-        cur = cur.join(keepers, kc, "left_semi")
-        tick("exact_dedup", cur)
-
-    if near_dup:
-        # MinHash-LSH over the exact-dedup survivors: banded equi-join
-        # candidates, Jaccard-verified pairs, O(log n) star clustering,
-        # longest-member keeper (ties -> smallest key). Only the
-        # cluster LOSERS leave — docs with no near-dup pass untouched.
-        from sslr_spark.functions.dedup import (
-            cluster_keep_best,
-            dup_clusters_star,
-            minhash_lsh_pairs,
-        )
-
-        # the near-dup stage references the survivor frame from
-        # SEVERAL subtrees (shingle pairs, keeper scoring, the
-        # anti-join, every downstream stage) — persisting it
-        # materializes the gopher+exact work once on first action
-        # instead of 4+ times (measured 20 s -> 8 s on the composed
-        # chain). This is also the production shape: major curation
-        # stages land their survivors before a clustering pass.
-        # persist (not localCheckpoint) keeps the lineage, so lost
-        # executors recompute instead of failing the job, and the
-        # blocks are releasable via CurationResult.release().
-        # Without near_dup the chain stays one linear lazy plan.
-        cur = cur.persist()
-        cached = cur
-
-        # hash_mode/doc-freq-cap: the same portable-for-oracle /
-        # fast-for-production split the rest of the dedup family uses
-        pairs = minhash_lsh_pairs(
-            cur, text_col,
-            jaccard_threshold=near_dup_threshold,
-            hash_mode=near_dup_hash_mode,
-            max_shingle_doc_freq=near_dup_max_doc_freq,
-        )
-        clusters = dup_clusters_star(pairs)
-        best = cluster_keep_best(clusters, cur, F.length(F.col(text_col)))
-        losers = (
-            clusters.join(best.select("cluster_id", "keep_id"), "cluster_id")
-            .filter(F.col(kc) != F.col("keep_id"))
-            .select(kc)
-        )
-        cur = cur.join(losers, kc, "left_anti")
-        tick("near_dup", cur)
-
-    if keep_fraction is not None and keep_fraction < 1.0:
-        kept = quality_quantile_gate(
-            cur,
-            keep_fraction,
-            by=lang_col,
-            text_col=text_col,
-            weights=quality_weights,
-            bias=quality_bias,
-        ).select(kc)
-        cur = cur.join(kept, kc, "left_semi")
-        tick("quality_gate", cur)
-
-    if lm_keep_fraction is not None:
-        # CCNet-style LM stage AFTER the heuristic gate: the bigram
-        # model trains on THIS stage's survivors (garbage already
-        # gone, so the model learns the clean distribution) and cuts
-        # the bottom of the per-language perplexity distribution
-        from sslr_spark.functions.quality_model import lm_quality_gate
-
-        lm_kept = lm_quality_gate(
-            cur, lm_keep_fraction, by=lang_col, text_col=text_col,
-            vocab_size=lm_vocab_size,
-        ).select(kc)
-        cur = cur.join(lm_kept, kc, "left_semi")
-        tick("lm_gate", cur)
-
-    if dsir_keep_fraction is not None:
-        # DSIR domain-selection LAST among the content gates: it
-        # re-weights the already-clean pool toward the target
-        # distribution (the paper selects from a pre-filtered raw
-        # set), and both its distributions fit on survivors — the
-        # raw fit on this stage's pool, the target fit on the
-        # target-source docs still standing after the same cleaning,
-        # so a garbage doc inside the target source can't teach the
-        # gate that garbage is on-target.
-        from sslr_spark.functions.sampling import dsir_gate
-
-        if not dsir_target_source:
-            raise ValueError(
-                "dsir_keep_fraction requires dsir_target_source"
+        if exact_dedup:
+            keepers = exact_dedup_groups(cur, text_col).select(
+                F.col("keep_id").alias(kc)
             )
-        d_kept = dsir_gate(
-            cur,
-            cur.filter(F.col(source_col) == dsir_target_source),
-            dsir_keep_fraction,
-            text_col=text_col,
-            n_buckets=dsir_buckets,
-        ).select(kc)
-        cur = cur.join(d_kept, kc, "left_semi")
-        tick("dsir_gate", cur)
+            cur = landed("exact_dedup", cur.join(keepers, kc, "left_semi"))
 
-    if max_per_source is not None:
-        cur = source_cap(cur, source_col, max_per_source, kc)
-        tick("source_cap", cur)
+        if near_dup:
+            # MinHash-LSH over the exact-dedup survivors: banded
+            # equi-join candidates, Jaccard-verified pairs, O(log n) star
+            # clustering, longest-member keeper (ties -> smallest key).
+            # Only the cluster LOSERS leave — docs with no near-dup pass
+            # untouched.
+            from sslr_spark.functions.dedup import (
+                cluster_keep_best,
+                dup_clusters_star,
+                minhash_lsh_pairs,
+            )
+
+            # the stage reads its input from several subtrees (shingle
+            # pairs, keeper scoring, the anti-join): it must be stored,
+            # which it is whenever an earlier stage ran
+            if cur is raw:
+                cur = land(cur)
+            # hash_mode/doc-freq-cap: the same portable-for-oracle /
+            # fast-for-production split the rest of the dedup family uses
+            pairs = minhash_lsh_pairs(
+                cur, text_col,
+                jaccard_threshold=near_dup_threshold,
+                hash_mode=near_dup_hash_mode,
+                max_shingle_doc_freq=near_dup_max_doc_freq,
+            )
+            clusters = dup_clusters_star(pairs)
+            best = cluster_keep_best(clusters, cur, F.length(F.col(text_col)))
+            losers = (
+                clusters.join(best.select("cluster_id", "keep_id"), "cluster_id")
+                .filter(F.col(kc) != F.col("keep_id"))
+                .select(kc)
+            )
+            cur = landed("near_dup", cur.join(losers, kc, "left_anti"))
+
+        if keep_fraction is not None and keep_fraction < 1.0:
+            kept = quality_quantile_gate(
+                cur,
+                keep_fraction,
+                by=lang_col,
+                text_col=text_col,
+                weights=quality_weights,
+                bias=quality_bias,
+            ).select(kc)
+            cur = landed("quality_gate", cur.join(kept, kc, "left_semi"))
+
+        if lm_keep_fraction is not None:
+            # CCNet-style LM stage AFTER the heuristic gate: the bigram
+            # model trains on THIS stage's survivors (garbage already
+            # gone, so the model learns the clean distribution) and cuts
+            # the bottom of the per-language perplexity distribution
+            from sslr_spark.functions.quality_model import lm_quality_gate
+
+            lm_kept = lm_quality_gate(
+                cur, lm_keep_fraction, by=lang_col, text_col=text_col,
+                vocab_size=lm_vocab_size,
+            ).select(kc)
+            cur = landed("lm_gate", cur.join(lm_kept, kc, "left_semi"))
+
+        if dsir_keep_fraction is not None:
+            # DSIR domain-selection LAST among the content gates: it
+            # re-weights the already-clean pool toward the target
+            # distribution (the paper selects from a pre-filtered raw
+            # set), and both its distributions fit on survivors — the
+            # raw fit on this stage's pool, the target fit on the
+            # target-source docs still standing after the same cleaning,
+            # so a garbage doc inside the target source can't teach the
+            # gate that garbage is on-target.
+            from sslr_spark.functions.sampling import dsir_gate
+
+            d_kept = dsir_gate(
+                cur,
+                cur.filter(F.col(source_col) == dsir_target_source),
+                dsir_keep_fraction,
+                text_col=text_col,
+                n_buckets=dsir_buckets,
+            ).select(kc)
+            cur = landed("dsir_gate", cur.join(d_kept, kc, "left_semi"))
+
+        if max_per_source is not None:
+            cur = landed(
+                "source_cap", source_cap(cur, source_col, max_per_source, kc)
+            )
 
     out = cur.select(kc, lang_col, source_col)
     if n_shards:
         out = shard_assign(out, n_shards, kc)
     if key_col != kc:
         out = out.withColumnRenamed(kc, key_col)
-    return CurationResult(
-        out, funnel, _cached=cached if near_dup else None
-    )
+    return CurationResult(out, funnel, owner)
 
 
 def curate_embeddings(

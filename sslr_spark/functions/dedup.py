@@ -25,6 +25,7 @@ from __future__ import annotations
 import contextlib
 import threading
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -41,16 +42,63 @@ from sslr_spark.functions.text import words
 # top-level pair generator releases the PREVIOUS call's caches on
 # entry (callers may also release_caches() explicitly once results
 # are materialized).
+#
+# Landings are the other kind of block: land() stores a frame behind a
+# plan-truncating local checkpoint (iterative rounds, pipeline stages).
+# They are recorded with the same owner but never entry-released — a
+# landed frame has no lineage to fall back on, so only its owner frees
+# it. An owner is a CacheOwner: each thread has a base one (the one
+# release_caches() empties), and ``with owner:`` routes everything the
+# thread persists or lands inside the block to ``owner`` instead.
 # ------------------------------------------------------------------
 
 _CACHES = threading.local()  # per-thread: concurrent pipelines never
 # evict each other's live caches
 
 
+class CacheOwner:
+    """The persisted frames and landed RDDs one owner made.
+
+    ``with owner:`` makes it the thread's current owner for the block;
+    :meth:`release` frees what it holds."""
+
+    def __init__(self) -> None:
+        self.dfs: list[DataFrame] = []
+        # (SparkContext, id) of the RDDs behind land()ed frames: ids,
+        # not handles, so a landing whose frames are all gone is still
+        # cleaned up by Spark's ContextCleaner instead of pinned here
+        self.rdds: list[tuple[SparkContext, int]] = []
+
+    def __enter__(self) -> CacheOwner:
+        _owners().append(self)
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _owners().pop()
+
+    def release(self, keep: DataFrame | None = None) -> None:
+        """Unpersist every cache and landing held here, except the
+        landing behind ``keep``. Idempotent. A frame read through a
+        released landing can no longer be evaluated (Spark raises
+        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); cached frames just
+        recompute."""
+        while self.dfs:
+            self.dfs.pop().unpersist()
+        kept = _landed_rdd(keep) if keep is not None else None
+        for rdd in self.rdds:
+            if rdd != kept:
+                _unpersist_rdd(rdd)
+        self.rdds = [rdd for rdd in self.rdds if rdd == kept]
+
+
+def _owners() -> list[CacheOwner]:
+    if not hasattr(_CACHES, "owners"):
+        _CACHES.owners = [CacheOwner()]
+    return _CACHES.owners
+
+
 def _active() -> list[DataFrame]:
-    if not hasattr(_CACHES, "dfs"):
-        _CACHES.dfs = []
-    return _CACHES.dfs
+    return _owners()[-1].dfs
 
 
 def _persist(df: DataFrame) -> DataFrame:
@@ -60,22 +108,69 @@ def _persist(df: DataFrame) -> DataFrame:
 
 
 # public alias for sibling pair generators (functions/similarity.py)
-# that want their inputs in the same thread-scoped release registry
+# that want their inputs in the same owner-scoped release registry
 register_cache = _persist
 
 
+def _landed_rdd(landed: DataFrame) -> tuple[SparkContext, int]:
+    # a local checkpoint plans as one LogicalRDD over the stored RDD
+    rid = landed._jdf.queryExecution().analyzed().rdd().id()
+    return SparkContext._active_spark_context, rid
+
+
+def _unpersist_rdd(rdd: tuple[SparkContext, int]) -> None:
+    sc, rid = rdd
+    if sc is not SparkContext._active_spark_context:
+        return  # that context is gone, and its blocks with it
+    # the JVM registry holds its RDDs weakly: None once collected
+    jrdd = sc._jsc.getPersistentRDDs().get(rid)
+    if jrdd is not None:
+        jrdd.unpersist(False)
+
+
+def land(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Store ``df`` behind a plan-truncating local checkpoint (memory,
+    spilling to disk) and record the stored RDD with the current
+    owner. The returned frame plans as a single leaf, so whatever
+    builds on it never re-analyzes or re-runs ``df``'s plan.
+    ``eager=False`` defers the store to the first action on the
+    returned frame.
+
+    Trade-off: there is no lineage behind a landing — a block lost
+    with its executor fails the job instead of recomputing, and so
+    does any action after the owner released it."""
+    landed = df.localCheckpoint(eager=eager)
+    _owners()[-1].rdds.append(_landed_rdd(landed))
+    return landed
+
+
+def _unland(landed: DataFrame) -> None:
+    """Free one superseded landing of the current owner now."""
+    rdd = _landed_rdd(landed)
+    owner = _owners()[-1]
+    owner.rdds = [r for r in owner.rdds if r != rdd]
+    _unpersist_rdd(rdd)
+
+
+def _release_dfs() -> None:
+    caches = _active()
+    while caches:
+        caches.pop().unpersist()
+
+
 def release_caches() -> None:
-    """Unpersist every cache created by THIS thread's pair generators.
+    """Unpersist every cache and landing made by THIS thread's
+    operators outside a :class:`CacheOwner` block.
 
     The entry-release in each generator assumes the usual sequential
     shape (generate pairs -> materialize -> generate next). If you
     interleave instead — build pairs A, build pairs B, THEN collect A —
     A's results stay correct but recompute without the cache; wrap
     each build in :func:`cache_scope` (or collect before starting the
-    next generator) to keep the cache benefit."""
-    caches = _active()
-    while caches:
-        caches.pop().unpersist()
+    next generator) to keep the cache benefit. Frames read through a
+    landing (the :func:`dup_clusters` / :func:`dup_clusters_star`
+    labels) cannot be evaluated after this call."""
+    _owners()[-1].release()
 
 
 @contextlib.contextmanager
@@ -98,22 +193,24 @@ def cache_scope():
     Inside the scope the generators' entry-release is suspended, so an
     earlier call's not-yet-materialized result keeps its shingle-index
     cache; everything persists until scope exit, then is released in
-    one sweep. Without a scope the default sequential entry-release
-    behavior applies unchanged."""
+    one sweep. Landings are not caches: they outlive the scope until
+    :func:`release_caches`. Without a scope the default sequential
+    entry-release behavior applies unchanged."""
     _CACHES.suspended = getattr(_CACHES, "suspended", 0) + 1
     try:
         yield
     finally:
         _CACHES.suspended -= 1
         if _CACHES.suspended == 0:
-            release_caches()
+            _release_dfs()
 
 
 def _entry_release() -> None:
     """Called by each top-level pair generator on entry: release the
-    previous call's caches — unless a cache_scope() suspends it."""
+    previous call's caches — unless a cache_scope() suspends it.
+    Landings stay: a frame built on one may still be unevaluated."""
     if not getattr(_CACHES, "suspended", 0):
-        release_caches()
+        _release_dfs()
 
 
 def _cap_hot_shingles(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:
@@ -1285,8 +1382,10 @@ def dup_clusters(
     Iterative min-label propagation (each pass: label <- min(label,
     neighbors' labels)), converging in O(component diameter) joins —
     the standard large-scale connected-components loop (hash-join
-    based; no driver-side graph). Each iteration is checkpointed via
-    localCheckpoint to keep the plan from growing unboundedly.
+    based; no driver-side graph). Each iteration lands its labels
+    (:func:`land`) to keep the plan from growing unboundedly, and
+    frees the previous iteration's landing once the new one is stored;
+    the final labels stay registered until the owner releases them.
     """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
@@ -1299,7 +1398,7 @@ def dup_clusters(
         .withColumn("label", F.col("id"))
     )
     changed = -1  # sentinel for the max_iterations<=0 warning path
-    for _ in range(max_iterations):
+    for i in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
@@ -1316,9 +1415,10 @@ def dup_clusters(
             )
         )
         changed = updated.filter(F.col("new_label") != F.col("label")).count()
-        labels = updated.select(
-            "id", F.col("new_label").alias("label")
-        ).localCheckpoint(eager=True)
+        prev = labels
+        labels = land(updated.select("id", F.col("new_label").alias("label")))
+        if i:  # round 0 read the initial labels, which are not landed
+            _unland(prev)
         if changed == 0:
             break
     else:
@@ -2042,9 +2142,11 @@ def dup_clusters_star(
       (and itself) to that minimum.
     The edge set monotonically contracts to stars centered at
     component minima; convergence is detected by the edge multiset
-    hash going stable. A lazily-marked localCheckpoint per round keeps
-    the plan flat while the signature aggregate doubles as the
-    materializing action — ONE job per round.
+    hash going stable. A lazily-stored landing (:func:`land`) per round
+    keeps the plan flat while the signature aggregate doubles as the
+    materializing action — ONE job per round. Each round frees the one
+    it superseded; the symmetrized input and the final round stay
+    registered (the labels read both) until the owner releases them.
 
     Round shape (r11 optimization, guide §2.4 — remove shuffles and
     jobs outright; round results equality-tested against the prior
@@ -2100,10 +2202,10 @@ def dup_clusters_star(
         ).first()
         return (row["n"], row["h"]), row["n_src"]
 
-    edges_sym = (
+    edges_sym = land(
         und(pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     nodes = edges_sym.select("src").distinct()
 
@@ -2125,12 +2227,14 @@ def dup_clusters_star(
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .unionByName(m2.select("src", F.col("m").alias("dst")))
         )
-        edges = (
-            small.filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=False)
+        landed = land(
+            small.filter(F.col("src") != F.col("dst")).distinct(),
+            eager=False,
         )
-        cur, n_src = sig(edges)
+        cur, n_src = sig(landed)
+        if edges is not edges_sym:
+            _unland(edges)  # superseded, and the new round is stored
+        edges = landed
         if cur == prev:
             break
         if cur[0] == n_src:

@@ -120,8 +120,9 @@ def _gate_frames(scored: DataFrame, by: str) -> tuple[DataFrame, DataFrame]:
     score_bp) projection is persisted through the dedup cache
     registry, so the corpus-scoring pipeline runs ONCE — the
     histogram, the thresholds and the final join all read the cache;
-    callers release it via dedup.release_caches() once results are
-    materialized. At scale the cached projection is ~20 bytes/doc and
+    its owner releases it once results are materialized
+    (dedup.release_caches(), or the CacheOwner of an enclosing call
+    such as curate_documents, which frees it when the gate lands). At scale the cached projection is ~20 bytes/doc and
     persist() (MEMORY_AND_DISK) spills gracefully."""
     from sslr_spark.functions.dedup import register_cache
 

@@ -207,6 +207,125 @@ def test_curation_stage_toggles(spark):
     assert res.df.columns == ["doc_id", "lang", "source"]
 
 
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _example_chain(**overrides):
+    """examples/curate.json with its LM and DSIR gates off, as
+    curate_documents keyword arguments."""
+    import os
+
+    from sslr_spark.curation import load_curation_config
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "examples", "curate.json",
+    )
+    cfg = load_curation_config(path)
+    kwargs = dict(
+        quality_weights=cfg.quality_weights,
+        quality_bias=cfg.quality_bias,
+        keep_fraction=cfg.keep_fraction,
+        max_per_source=cfg.max_per_source,
+        n_shards=cfg.n_shards,
+        mojibake=cfg.mojibake,
+        blocklist=cfg.blocklist,
+        blocklist_max_ppm=cfg.blocklist_max_ppm,
+        gopher=cfg.gopher,
+        exact_dedup=cfg.exact_dedup,
+        near_dup=cfg.near_dup,
+        near_dup_threshold=cfg.near_dup_threshold,
+    )
+    assert kwargs["near_dup"]
+    kwargs.update(overrides)
+    return kwargs
+
+
+def test_curation_plan_is_one_leaf(spark):
+    """Every stage lands its survivors, so the curated frame of the
+    example chain (near-dup on) plans as a projection over ONE stored
+    leaf — no scan, no join left to re-analyze or re-run (composed
+    lazily, the same frame has 240 leaves)."""
+    from sslr_spark.curation import curate_documents
+
+    res = curate_documents(_docs(spark), **_example_chain())
+    try:
+        plan = res.df._jdf.queryExecution().analyzed()
+        assert plan.collectLeaves().size() == 1
+        assert "Join" not in plan.treeString()
+        assert res.df.count() > 0
+    finally:
+        res.release()
+
+
+def test_curation_release_frees_every_landed_block(spark):
+    """release() frees every block the call stored — the landed
+    stages, the star-CC rounds and the registry caches of its
+    operators (minhash shingle index and candidates, the gate's
+    scores) — and is idempotent."""
+    from sslr_spark.curation import curate_documents
+
+    before = _persistent_rdds(spark)
+    res = curate_documents(
+        _docs(spark), **_example_chain(), with_funnel=True
+    )
+    n = res.df.count()
+    assert n == res.funnel["source_cap"] > 0
+    assert _persistent_rdds(spark) - before  # the survivors are stored
+    res.release()
+    assert not _persistent_rdds(spark) - before
+    res.release()  # idempotent
+    assert not _persistent_rdds(spark) - before
+
+
+def test_curation_df_unusable_after_release(spark):
+    """The documented post-release contract: the curated frame reads
+    through the last landed stage, which has no lineage — after
+    release() an action on it fails instead of recomputing."""
+    from sslr_spark.curation import CurationResult, curate_documents
+
+    assert "can no longer be evaluated" in " ".join(
+        CurationResult.__doc__.split()
+    )
+    res = curate_documents(
+        _docs(spark), **_example_chain(near_dup=False)
+    )
+    assert res.df.count() > 0
+    res.release()
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        res.df.count()
+
+
+def test_run_curation_leaves_nothing_persisted(spark, tmp_path):
+    """Session hygiene: back-to-back run_curation calls in one
+    long-lived session leave no persisted RDD and no cached Dataset
+    behind, without any release_caches() by the caller."""
+    import dataclasses
+
+    from sslr_spark.curation import CurationConfig, run_curation
+    from sslr_spark.functions.dedup import release_caches
+    from sslr_spark.sources.parquet import ParquetDatabase
+
+    ParquetDatabase(spark, str(tmp_path / "in")).overwrite(
+        "documents", _docs(spark)
+    )
+    kw = _example_chain()
+    cfg = CurationConfig(
+        source=str(tmp_path / "in"), output=str(tmp_path / "out"),
+        **{f.name: kw[f.name] for f in dataclasses.fields(CurationConfig)
+           if f.name in kw},
+    )
+    release_caches()
+    spark.catalog.clearCache()
+    before = _persistent_rdds(spark)
+    reports = [run_curation(spark, cfg) for _ in range(3)]
+    assert reports[0] == reports[1] == reports[2]
+    assert reports[0]["written_rows"] > 0
+    assert not _persistent_rdds(spark) - before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_curate_embeddings_codebooks_survive_dedup(spark):
     """Stage-threading property: the PQ codebooks must derive from
     the ORIGINAL frame — if semantic dedup drops a codebook vector

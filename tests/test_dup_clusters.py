@@ -127,6 +127,28 @@ def test_star_handles_deep_chain_in_few_rounds(spark):
     assert all(r.cluster_id == 0 for r in out)
 
 
+def test_cc_rounds_free_superseded_landings(spark):
+    """Each round frees the round it superseded: after a multi-round
+    run only the landings the labels read stay stored (dup_clusters:
+    the final labels; dup_clusters_star: the symmetrized input and the
+    final round), and release_caches() frees those too."""
+    from sslr_spark.functions.dedup import dup_clusters_star, release_caches
+
+    def stored():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
+    )
+    release_caches()
+    before = stored()
+    for cc, n_kept in ((dup_clusters, 1), (dup_clusters_star, 2)):
+        assert len(cc(pairs).collect()) == 13
+        assert len(stored() - before) == n_kept, cc.__name__
+        release_caches()
+        assert not stored() - before, cc.__name__
+
+
 def test_star_1k_chain_logarithmic_round_bound(spark):
     """Property pinning the O(log n) recurrence itself: a 1000-edge
     chain (1001 nodes, diameter 1000) must converge within

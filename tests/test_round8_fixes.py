@@ -5,7 +5,8 @@
 2. parse_mp4 aborts on ISO-BMFF 64-bit (size==1 largesize) and
    size==0 (to-EOF) boxes (low).
 3. curation near-dup persist is releasable instead of living for the
-   application lifetime (low).
+   application lifetime (low) — now tests/test_curation.py's landing
+   and release tests.
 4. _codebooks_from_ids silently shrinks when a subset of ids is
    missing, shifting every code index (low).
 """
@@ -303,56 +304,6 @@ def test_decode_pixels_jpeg_real_codec(spark):
 
 
 # ---------------------------------------------------------------- 3
-
-
-def test_curation_neardup_cache_released(spark):
-    """The near-dup stage's persisted intermediate is releasable:
-    release() drops the cached blocks; df actions still work after
-    (they recompute from source)."""
-    from sslr_spark.curation import curate_documents
-
-    rows = [
-        (i, "en", "web", f"some document text number {i % 7} " * 30)
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, lang string, source string, text string"
-    )
-    res = curate_documents(
-        df,
-        quality_weights=[0.1] * 8,
-        quality_bias=0.0,
-        keep_fraction=1.0,
-        n_shards=None,
-        near_dup=True,
-        near_dup_threshold=0.5,
-    )
-    n = res.df.count()  # materializes the cache
-    assert res._cached is not None
-    assert res._cached.storageLevel.useMemory  # actually persisted
-    res.release()
-    assert res._cached is None
-    assert res.df.count() == n  # recomputes fine after release
-    res.release()  # idempotent
-
-
-def test_curation_no_neardup_has_no_cache(spark):
-    from sslr_spark.curation import curate_documents
-
-    df = spark.createDataFrame(
-        [(1, "en", "web", "hello world " * 40)],
-        "doc_id long, lang string, source string, text string",
-    )
-    res = curate_documents(
-        df,
-        quality_weights=[0.1] * 8,
-        quality_bias=0.0,
-        keep_fraction=1.0,
-        n_shards=None,
-        near_dup=False,
-    )
-    assert res._cached is None
-    res.release()  # no-op
 
 
 def test_weighted_sample_bias_and_determinism(spark):

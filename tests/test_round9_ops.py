@@ -715,22 +715,31 @@ def test_dataset_card_no_raw_row_window(spark):
     assert "Window" in opt  # the histogram cumulative exists
 
 
-def test_curation_gate_semi_joins_reuse_exchange(spark):
-    """The gate stages are flags-frame semi joins ON PURPOSE: the
-    survivor frame feeds several downstream subtrees, and the semi
-    join's broadcast keep-id exchange materializes once (Spark
-    ReusedExchange) where a scan-fused predicate re-evaluates its
-    heavy token lambdas per subtree — measured 3.0-3.2 s vs 3.9-5.5 s
-    warm at sf0.1 for the full chain. The bare-column gopher_keep /
-    mojibake_keep helpers remain for single-consumer chains and must
-    stay expression-equal to the flags (pinned in their own tests)."""
-    from sslr_spark.curation import curate_documents
+def test_curation_gate_semi_joins_reuse_exchange(spark, monkeypatch):
+    """The rule stages are flags-frame semi joins ON PURPOSE (round 9:
+    when the survivor frame fed several subtrees of one composed plan,
+    the semi join's broadcast keep-id exchange materialized once where
+    a scan-fused predicate re-evaluated its heavy token lambdas per
+    subtree — 3.0-3.2 s vs 3.9-5.5 s warm at sf0.1 for the full chain).
+    Each stage now lands, so the shape is pinned on the frame each rule
+    stage lands. The bare-column gopher_keep / mojibake_keep helpers
+    remain for single-consumer chains and must stay expression-equal
+    to the flags (pinned in their own tests)."""
+    import sslr_spark.curation as curation
 
+    landed_plans = []
+    real_land = curation.land
+
+    def recording_land(frame, *args, **kwargs):
+        landed_plans.append(plan_of(frame))
+        return real_land(frame, *args, **kwargs)
+
+    monkeypatch.setattr(curation, "land", recording_land)
     docs = spark.createDataFrame(
         [(1, "en", "s", "text here")],
         "doc_id long, lang string, source string, text string",
     )
-    res = curate_documents(
+    res = curation.curate_documents(
         docs,
         quality_weights=[0, 0, 0, 0],
         quality_bias=0.0,
@@ -739,9 +748,10 @@ def test_curation_gate_semi_joins_reuse_exchange(spark):
         mojibake=True,
         n_shards=None,
     )
-    p = plan_of(res.df)
-    # both gate stages present as semi joins
-    assert p.count("LeftSemi") >= 2
+    res.release()
+    # one landing per gate stage (mojibake, gopher), each a semi join
+    assert len(landed_plans) == 2
+    assert all("LeftSemi" in p for p in landed_plans)
 
 
 # ------------------------------------------------------------------

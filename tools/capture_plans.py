@@ -5,8 +5,12 @@ Usage: python tools/capture_plans.py <outdir> <suffix> [name ...]
 Writes <outdir>/<name>_<suffix>.txt for each requested name. Names
 cover the declared query keys (queries()[name]) plus the bench-only
 compositions (curation_neardup, incr_update slice, ...) that have no
-single query key. Plans are captured lazily — no job runs except where
-a section's construction itself requires one (PQ codebook staging).
+single query key. A plan is captured from the frame a name builds,
+and building it runs every job its construction needs: PQ codebook
+staging, the connected-components rounds of dup_clusters /
+dup_clusters_star, and every curation stage, each of which lands its
+survivors (so a curation capture shows the final projection over the
+last landed stage, not the stages themselves).
 """
 
 from __future__ import annotations
