@@ -14,8 +14,9 @@ to override): ``queries`` holds the MEDIAN, ``min`` the fastest rep,
 multi-seconds, so round-over-round comparisons should read medians.
 ``value`` is the sum of medians. Sections that mutate state get a
 ``reset`` callback (outside the timer) restoring the pre-section shape
-so every rep measures the same work; dedup sections release their
-shingle caches between reps so reps stay cold.
+so every rep measures the same work. Operator caches need no reset:
+each dedup, gate or sampling call frees the previous call's caches on
+entry (functions/dedup.py cache registry), so every rep is cold.
 
 ISOLATION (round-8): the full pass runs ~37 sections in ONE
 long-lived JVM, so late sections inherit session pressure (code
@@ -324,8 +325,6 @@ def main(only: set[str] | None = None) -> dict:
     # shingle cap. The md5-derived portable hash exists only for the
     # DuckDB oracle (CORRECTNESS gate) and costs ~16 digests/shingle —
     # benching it would measure the parity harness, not the engine.
-    # Dedup sections release their shingle caches between reps so each
-    # rep is cold (the cache is in-run reuse, not a cross-run fixture).
     from sslr_spark.functions import dedup as DD
     from sslr_spark.queries_ext import (
         q_sim_topk_bruteforce,
@@ -338,23 +337,18 @@ def main(only: set[str] | None = None) -> dict:
         lambda: DD.minhash_lsh_pairs(
             docs, hash_mode="fast", max_shingle_doc_freq=250
         ).count(),
-        reset=DD.release_caches,
     )
     run(
         "dedup_simhash",
         lambda: DD.simhash_pairs(docs, hash_mode="fast").count(),
-        reset=DD.release_caches,
     )
-    DD.release_caches()
     # round 9: containment (excerpt) pairs + the C4-style blocklist gate
     run(
         "dedup_containment",
         lambda: DD.ngram_containment_pairs(
             docs, threshold=0.4, max_shingle_doc_freq=250
         ).count(),
-        reset=DD.release_caches,
     )
-    DD.release_caches()
     if want("text_blocklist"):
         from sslr_spark.functions.text import blocklist_filter as _blf
     run(
@@ -375,12 +369,9 @@ def main(only: set[str] | None = None) -> dict:
         )
     run("dataset_card", lambda: q_x_dataset_card(spark, SF_DIR).count())
     run("corpus_diff", lambda: q_dedup_corpus_diff(spark, SF_DIR).count())
-    # reset: release the 'scored' gate persist between reps — see the
-    # quality_gate section note (cold-rep contract)
     run(
         "lm_quality_gate",
         lambda: q_x_lm_quality_gate(spark, SF_DIR).count(),
-        reset=DD.release_caches,
     )
     run(
         "strip_boilerplate",
@@ -395,7 +386,6 @@ def main(only: set[str] | None = None) -> dict:
         lambda: DD.incremental_exact_dedup(
             docs.filter(F.col("doc_id") % 10 == 0), docs, m=1 << 20
         ).filter("in_corpus").count(),
-        reset=DD.release_caches,
     )
 
     from sslr_spark.queries import q_x_range_join
@@ -414,9 +404,7 @@ def main(only: set[str] | None = None) -> dict:
     run(
         "leakage_safe_split",
         lambda: q_sample_leakage_safe(spark, SF_DIR).count(),
-        reset=DD.release_caches,
     )
-    DD.release_caches()
     run(
         "pack_token_budget",
         lambda: q_pack_token_budget(spark, SF_DIR).count(),
@@ -452,15 +440,11 @@ def main(only: set[str] | None = None) -> dict:
         lambda: DD.ngram_jaccard_pairs_prefix(
             docs, threshold=0.8, max_shingle_doc_freq=100
         ).count(),
-        reset=DD.release_caches,
     )
-    DD.release_caches()
     run(
         "winnow_spans",
         lambda: DD.shared_span_stats(docs).count(),
-        reset=DD.release_caches,
     )
-    DD.release_caches()
 
     # ---- adversarial prefix join: the corpus shape PPJoin exists for.
     # Every document shares a common boilerplate tail, so the PLAIN
@@ -483,22 +467,19 @@ def main(only: set[str] | None = None) -> dict:
             "cast(id div 2 as string)) as text",
         )
         bcorp = boiler.unionByName(dups).localCheckpoint(eager=True)
-        with DD.cache_scope():
-            sh = DD.shingles(bcorp, "text", 3).persist()
-            aux["jaccard_plain_adversarial_pairs"] = int(
-                sh.groupBy("shingle").count()
-                .agg(F.sum(F.expr("count * (count - 1) div 2")))
-                .first()[0]
-            )
-            sh.unpersist()
+        sh = DD.shingles(bcorp, "text", 3).persist()
+        aux["jaccard_plain_adversarial_pairs"] = int(
+            sh.groupBy("shingle").count()
+            .agg(F.sum(F.expr("count * (count - 1) div 2")))
+            .first()[0]
+        )
+        sh.unpersist()
     run(
         "jaccard_prefix_adversarial",
         lambda: DD.ngram_jaccard_pairs_prefix(
             bcorp, threshold=0.8
         ).count(),
-        reset=DD.release_caches,
     )
-    DD.release_caches()
 
     from sslr_spark.queries_ext import (
         q_sample_shard_manifest,
@@ -566,25 +547,14 @@ def main(only: set[str] | None = None) -> dict:
         q_x_curation_pipeline,
     )
 
-    # reset: the quality gates persist the 'scored' (doc_id, by,
-    # score_bp) projection through the dedup cache registry; Spark's
-    # CacheManager matches an identical plan in the next rep to the
-    # already-materialized cache, so WITHOUT a release the later reps
-    # would read rep 0's cache and measure warm — the same cold-rep
-    # contract the dedup sections enforce (measurement-fairness fix,
-    # r12; the driver's r12 numbers for the four gate sections are
-    # cold-rep medians, directly comparable to every earlier round)
     run(
         "quality_gate",
         lambda: q_text_quality_gate(spark, SF_DIR).count(),
-        reset=DD.release_caches,
     )
     run(
         "shuffle_order",
         lambda: q_sample_shuffle_order(spark, SF_DIR).count(),
     )
-    # no reset: curate_documents owns its gate cache and frees it when
-    # the gate stage lands, so every rep is cold
     run(
         "curation_pipeline",
         lambda: q_x_curation_pipeline(spark, SF_DIR).count(),
@@ -728,9 +698,7 @@ def main(only: set[str] | None = None) -> dict:
                 emb_ce, [1, 2, 3, 4, 5, 6, 7, 8], list(range(100, 116)),
                 threshold=0.8, m=16, dedup_mode="fast",
             ).count(),
-            reset=DD.release_caches,
         )
-        DD.release_caches()
 
     # ---- round-9 continuation operators ------------------------------
     from sslr_spark.queries_ext import (
@@ -778,9 +746,6 @@ def main(only: set[str] | None = None) -> dict:
     run(
         "ccnet_buckets",
         lambda: q_text_ccnet_buckets(spark, SF_DIR).count(),
-        # lm_perplexity_buckets shares _gate_frames — release the
-        # 'scored' persist between reps (cold-rep contract)
-        reset=DD.release_caches,
     )
 
     # ---- round-9c sections ------------------------------------------
@@ -1005,8 +970,7 @@ SECTION_NOTES = {
     ),
     "pagerank": (
         "3 fixed iterations over the host graph; each iteration adds "
-        "one join+agg to the plan — deep iteration counts should pass "
-        "checkpoint_every to truncate lineage"
+        "one join+agg to the plan"
     ),
     # r8 clean reruns flagged these three >1.25x vs the r7 full-pass
     # minima. Attribution (r9): ENVIRONMENT, two mechanisms, both

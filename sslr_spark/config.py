@@ -198,6 +198,9 @@ _KNOWN_TOP = {
     "bucketHash",
     "parallelTables",
     "compactFilesPerBucket",
+    "mergeOnRead",
+    "mergeOnReadMaxLog",
+    "mergeOnReadMaxLogBytes",
 }
 _KNOWN_FILTERED = {"where", "wheres", "uses"}
 

@@ -35,21 +35,23 @@ from sslr_spark.functions.text import words
 # ------------------------------------------------------------------
 # cache registry
 #
-# The pair generators persist their shingle inverted index (it feeds
-# 2-3 consumers). A bare .persist() leaks: caches accumulate across
-# queries in one long-lived session — at 100 TB a leaked shingle cache
-# is an executor OOM. Every persist goes through _persist(); each
-# top-level pair generator releases the PREVIOUS call's caches on
-# entry (callers may also release_caches() explicitly once results
-# are materialized).
+# Two kinds of stored block. A cache is a persist() made through
+# _persist() / register_cache(): the pair generators' shingle index,
+# the gates' scored projection. A bare .persist() leaks: caches
+# accumulate across queries in one long-lived session, and at 100 TB
+# a leaked shingle cache is an executor OOM. A landing is a frame
+# stored behind a plan-truncating local checkpoint by land():
+# iterative rounds, pipeline stages. It has no lineage to fall back
+# on, so a frame read through it fails once it is freed.
 #
-# Landings are the other kind of block: land() stores a frame behind a
-# plan-truncating local checkpoint (iterative rounds, pipeline stages).
-# They are recorded with the same owner but never entry-released — a
-# landed frame has no lineage to fall back on, so only its owner frees
-# it. An owner is a CacheOwner: each thread has a base one (the one
-# release_caches() empties), and ``with owner:`` routes everything the
-# thread persists or lands inside the block to ``owner`` instead.
+# Every block is recorded with the thread's current CacheOwner, and
+# only that owner frees it. Each thread has a base owner (the one
+# release_caches() empties); ``with owner:`` makes ``owner`` current
+# for the block, and cache_scope() is such a block that frees what it
+# holds on exit. At the base owner each top-level operator frees the
+# previous call's caches on entry (_entry_release), so a session of
+# sequential calls holds one call's caches at a time; inside any other
+# owner, that owner decides.
 # ------------------------------------------------------------------
 
 _CACHES = threading.local()  # per-thread: concurrent pipelines never
@@ -97,18 +99,14 @@ def _owners() -> list[CacheOwner]:
     return _CACHES.owners
 
 
-def _active() -> list[DataFrame]:
-    return _owners()[-1].dfs
-
-
 def _persist(df: DataFrame) -> DataFrame:
     df = df.persist()
-    _active().append(df)
+    _owners()[-1].dfs.append(df)
     return df
 
 
-# public alias for sibling pair generators (functions/similarity.py)
-# that want their inputs in the same owner-scoped release registry
+# public alias for sibling operators (functions/similarity.py, the
+# quality gates) that want their inputs in the same owner registry
 register_cache = _persist
 
 
@@ -152,31 +150,20 @@ def _unland(landed: DataFrame) -> None:
     _unpersist_rdd(rdd)
 
 
-def _release_dfs() -> None:
-    caches = _active()
-    while caches:
-        caches.pop().unpersist()
-
-
 def release_caches() -> None:
-    """Unpersist every cache and landing made by THIS thread's
-    operators outside a :class:`CacheOwner` block.
-
-    The entry-release in each generator assumes the usual sequential
-    shape (generate pairs -> materialize -> generate next). If you
-    interleave instead — build pairs A, build pairs B, THEN collect A —
-    A's results stay correct but recompute without the cache; wrap
-    each build in :func:`cache_scope` (or collect before starting the
-    next generator) to keep the cache benefit. Frames read through a
-    landing (the :func:`dup_clusters` / :func:`dup_clusters_star`
-    labels) cannot be evaluated after this call."""
+    """Free every cache and landing the thread's current owner holds:
+    outside any :class:`CacheOwner` block, everything this thread's
+    operators stored. Frames read through a landing (the
+    :func:`dup_clusters` / :func:`dup_clusters_star` labels, the
+    ``bpe_train`` rules) cannot be evaluated after this call; cached
+    frames just recompute."""
     _owners()[-1].release()
 
 
 @contextlib.contextmanager
 def cache_scope():
-    """Context manager scoping pair-generator caches to a block, for
-    interleaved pipelines::
+    """A :class:`CacheOwner` block that frees what it holds on exit,
+    for interleaved pipelines::
 
         with cache_scope():
             pairs_a = minhash_lsh_pairs(corpus_a)
@@ -190,27 +177,28 @@ def cache_scope():
     materialize with ``.count()``, write them out, or feed them to
     dup_clusters_star, never pull them to the driver.)
 
-    Inside the scope the generators' entry-release is suspended, so an
-    earlier call's not-yet-materialized result keeps its shingle-index
-    cache; everything persists until scope exit, then is released in
-    one sweep. Landings are not caches: they outlive the scope until
-    :func:`release_caches`. Without a scope the default sequential
-    entry-release behavior applies unchanged."""
-    _CACHES.suspended = getattr(_CACHES, "suspended", 0) + 1
+    Like any owner block it stops entry-release inside it, so an
+    earlier call's not-yet-materialized result keeps its cache. On
+    exit it frees its own caches and landings — never the enclosing
+    owner's — so collect a landed result (dup_clusters labels) inside
+    the block."""
+    owner = CacheOwner()
     try:
-        yield
+        with owner:
+            yield
     finally:
-        _CACHES.suspended -= 1
-        if _CACHES.suspended == 0:
-            _release_dfs()
+        owner.release()
 
 
 def _entry_release() -> None:
-    """Called by each top-level pair generator on entry: release the
-    previous call's caches — unless a cache_scope() suspends it.
+    """Called by each top-level operator on entry: at the thread's base
+    owner, free the previous call's caches. Inside a CacheOwner block
+    (cache_scope included) it does nothing — that owner decides.
     Landings stay: a frame built on one may still be unevaluated."""
-    if not getattr(_CACHES, "suspended", 0):
-        _release_dfs()
+    owners = _owners()
+    if len(owners) == 1:
+        while owners[0].dfs:
+            owners[0].dfs.pop().unpersist()
 
 
 def _cap_hot_shingles(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:

@@ -119,13 +119,15 @@ def _gate_frames(scored: DataFrame, by: str) -> tuple[DataFrame, DataFrame]:
     """(scored, hist) for the quantile gates. The narrow (doc_id, by,
     score_bp) projection is persisted through the dedup cache
     registry, so the corpus-scoring pipeline runs ONCE — the
-    histogram, the thresholds and the final join all read the cache;
-    its owner releases it once results are materialized
-    (dedup.release_caches(), or the CacheOwner of an enclosing call
-    such as curate_documents, which frees it when the gate lands). At scale the cached projection is ~20 bytes/doc and
-    persist() (MEMORY_AND_DISK) spills gracefully."""
-    from sslr_spark.functions.dedup import register_cache
+    histogram, the thresholds and the final join all read the cache.
+    Like the pair generators, a gate frees the previous call's caches
+    on entry, so standalone gates hold one scored cache at a time;
+    inside a CacheOwner (curate_documents) the owner frees it when the
+    gate stage lands. At scale the cached projection is ~20 bytes/doc
+    and persist() (MEMORY_AND_DISK) spills gracefully."""
+    from sslr_spark.functions.dedup import _entry_release, register_cache
 
+    _entry_release()
     scored = register_cache(scored)
     hist = scored.groupBy(by, "score_bp").agg(
         F.count(F.lit(1)).alias("__c")

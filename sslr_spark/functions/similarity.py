@@ -453,8 +453,7 @@ def all_pairs_topk_blocked(
         raise ValueError(f"mode must be portable|fast, got {mode!r}")
     _entry_release()
     # one cached input feeds the guard's size scan AND both join
-    # sides; released at the next pair-generator entry (dedup.py
-    # cache registry / cache_scope)
+    # sides; held by the current owner (dedup.py cache registry)
     df = register_cache(df)
     if max_block_size is not None:
         df = guard_oversize_blocks(

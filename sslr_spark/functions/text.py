@@ -1373,15 +1373,21 @@ def bpe_train(
     token occurrences -> millions of distinct words), and every round
     costs one map-side-combined pair aggregate + a TakeOrdered(1) +
     one narrow fold projection over the vocabulary only.
-    localCheckpoint per round keeps the plan flat (the pagerank
-    lineage-truncation pattern); rounds are inherently sequential —
-    that is BPE, not a Spark limitation. ``word_re`` restricts
-    training to plain lowercase words by default so character
-    splitting is engine-portable (no grapheme-cluster ambiguity).
+    Each round lands its argmax row and the merged vocabulary
+    (dedup.land, a plan-truncating local checkpoint) and frees the
+    vocabulary it superseded, so the plan stays flat; rounds are
+    inherently sequential — that is BPE, not a Spark limitation.
+    ``word_re`` restricts training to plain lowercase words by default
+    so character splitting is engine-portable (no grapheme-cluster
+    ambiguity).
 
     Output: one row per learned rule — (rank, lhs, rhs, merged,
-    pair_count), rank 1 = first merge.
+    pair_count), rank 1 = first merge. The rules read landed rows held
+    by the current cache owner (dedup.release_caches frees them), the
+    same contract as the dup_clusters labels.
     """
+    from sslr_spark.functions.dedup import _unland, land
+
     a = "split(s, ' ')"
     # guard: sequence(1, 0) DESCENDS in Spark, so a fully-merged
     # single-symbol word would index element_at(a, 2) out of bounds
@@ -1399,12 +1405,14 @@ def bpe_train(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    cur = vocab.select(
-        F.array_join(F.split(F.col("w"), ""), " ").alias("s"), "freq"
-    ).localCheckpoint(eager=True)
+    cur = land(
+        vocab.select(
+            F.array_join(F.split(F.col("w"), ""), " ").alias("s"), "freq"
+        )
+    )
     rounds = []
     for rank in range(1, n_merges + 1):
-        best = (
+        best = land(
             cur.select(F.explode(F.expr(pair_expr)).alias("p"), "freq")
             .groupBy(
                 F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs")
@@ -1413,7 +1421,6 @@ def bpe_train(
             .orderBy(F.col("pair_count").desc(), "lhs", "rhs")
             .limit(1)
             .withColumn("merged", F.concat(F.col("lhs"), F.col("rhs")))
-            .localCheckpoint(eager=True)
         )
         rounds.append(
             best.select(
@@ -1424,11 +1431,14 @@ def bpe_train(
                 "pair_count",
             )
         )
-        cur = (
-            cur.crossJoin(F.broadcast(best))
-            .select(F.expr(merge_expr).alias("s"), "freq")
-            .localCheckpoint(eager=True)
+        merged = land(
+            cur.crossJoin(F.broadcast(best)).select(
+                F.expr(merge_expr).alias("s"), "freq"
+            )
         )
+        _unland(cur)  # superseded, and the new round is stored
+        cur = merged
+    _unland(cur)  # the rules never read the final vocabulary
     out = rounds[0]
     for r in rounds[1:]:
         out = out.unionByName(r)

@@ -549,10 +549,10 @@ def streaming_neardup_ingest(
             import warnings
 
             warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        # cache_scope: incremental_minhash_dedup's entry-release would
-        # otherwise unpersist the in-batch pair generator's shingle
-        # cache before any write action materializes survivors —
-        # recomputing the whole LSH pipeline once per output table
+        # cache_scope: the batch owns its caches, so the in-batch pair
+        # generator's shingle cache lives until the table writes below
+        # have read it (incremental_minhash_dedup does not free it on
+        # entry) and is freed when the batch ends
         try:
             with cache_scope():
                 ep = F.lit(int(epoch_id))

@@ -1,0 +1,141 @@
+"""Tests for the dedup cache registry: every cache and landing an
+operator stores has one owner, and only that owner frees it."""
+
+from __future__ import annotations
+
+import pytest
+
+from tests.test_plans import SF
+
+
+@pytest.fixture(scope="module")
+def docs(spark):
+    # materialized here, so the tests' stored-block deltas see only
+    # the blocks the operators under test make
+    df = spark.read.parquet(f"{SF}/documents.parquet").cache()
+    df.count()
+    return df
+
+
+def _stored(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_dedup_caches_released(spark, docs):
+    """The pair generators must not leak persisted RDDs across calls
+    (a leaked shingle cache at 100 TB is an executor OOM)."""
+    from sslr_spark.functions.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+        release_caches,
+    )
+
+    def n_cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    base = n_cached()
+    minhash_lsh_pairs(docs).count()
+    after_first = n_cached()
+    # a second call releases the first call's caches before persisting
+    # its own — no accumulation
+    ngram_jaccard_pairs(docs, threshold=0.5).count()
+    assert n_cached() <= after_first
+    release_caches()
+    assert n_cached() <= base
+
+
+@pytest.mark.slow
+def test_cache_scope_keeps_interleaved_caches_live(spark, docs):
+    """Inside cache_scope() a later generator call must NOT release an
+    earlier call's caches (interleaved pipelines keep their shingle
+    index); scope exit releases everything."""
+    from sslr_spark.functions.dedup import (
+        cache_scope,
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    def n_cached():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    base = n_cached()
+    with cache_scope():
+        a = minhash_lsh_pairs(docs)
+        assert a.count() >= 0  # materializes a's shingle-index cache
+        after_a = n_cached()
+        assert after_a > base
+        b = ngram_jaccard_pairs(docs, threshold=0.5)
+        assert b.count() >= 0
+        # b's entry did NOT evict a's still-live caches
+        assert n_cached() >= after_a
+    assert n_cached() <= base
+
+
+def test_standalone_gates_hold_one_cache(spark):
+    """A gate frees the previous call's scored cache on entry, as the
+    pair generators do: three gates on three inputs leave one."""
+    from sslr_spark.functions.dedup import release_caches
+    from sslr_spark.functions.quality_model import quality_quantile_gate
+
+    release_caches()
+    before = _stored(spark)
+    for n in (10, 20, 30):
+        df = spark.createDataFrame(
+            [(i, "a", "w " * (i + 2)) for i in range(n)],
+            "doc_id long, lang string, text string",
+        )
+        assert quality_quantile_gate(
+            df, keep_fraction=0.5, by="lang",
+            weights=[0.5, 0.0, 0.0, 0.0], bias=-2.0,
+        ).count() > 0
+    assert len(_stored(spark) - before) <= 1
+    release_caches()
+    assert not _stored(spark) - before
+
+
+def test_cache_scope_inside_owner_keeps_owner_caches(spark, docs):
+    """cache_scope() frees only what was stored inside it: the
+    enclosing owner's earlier caches stay held and stored."""
+    from sslr_spark.functions.dedup import (
+        CacheOwner,
+        cache_scope,
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    owner = CacheOwner()
+    with owner:
+        assert minhash_lsh_pairs(docs).count() >= 0
+        held = list(owner.dfs)
+        assert held
+        before_scope = _stored(spark)
+        with cache_scope():
+            # n=4: a shingle plan of its own, not the owner's cached one
+            assert ngram_jaccard_pairs(docs, n=4, threshold=0.5).count() >= 0
+        assert not _stored(spark) - before_scope
+    try:
+        assert len(owner.dfs) == len(held)
+        assert all(df.storageLevel.useMemory for df in held)
+    finally:
+        owner.release()
+    assert not any(df.storageLevel.useMemory for df in held)
+
+
+def test_bpe_train_rounds_are_owned(spark):
+    """bpe_train lands its rounds with the current owner and frees
+    each superseded vocabulary: only the rules' landings stay stored,
+    and release_caches() frees those too."""
+    from sslr_spark.functions.dedup import release_caches
+    from sslr_spark.functions.text import bpe_train
+
+    df = spark.createDataFrame(
+        [(1, "low lower lowest"), (2, "newer newest wider")],
+        "doc_id long, text string",
+    )
+    release_caches()
+    before = _stored(spark)
+    rules = bpe_train(df, n_merges=4)
+    assert rules.count() == 4
+    assert len(_stored(spark) - before) == 4  # one landing per rule
+    release_caches()
+    assert not _stored(spark) - before

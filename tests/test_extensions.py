@@ -172,56 +172,6 @@ def test_hot_shingle_cap_bounds_skewed_corpus(spark):
     assert all(a >= 2000 for a, _ in got)
 
 
-def test_dedup_caches_released(spark, docs):
-    """The pair generators must not leak persisted RDDs across calls
-    (a leaked shingle cache at 100 TB is an executor OOM)."""
-    from sslr_spark.functions.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-        release_caches,
-    )
-
-    def n_cached():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    base = n_cached()
-    minhash_lsh_pairs(docs).count()
-    after_first = n_cached()
-    # a second call releases the first call's caches before persisting
-    # its own — no accumulation
-    ngram_jaccard_pairs(docs, threshold=0.5).count()
-    assert n_cached() <= after_first
-    release_caches()
-    assert n_cached() <= base
-
-
-@pytest.mark.slow
-def test_cache_scope_keeps_interleaved_caches_live(spark, docs):
-    """Inside cache_scope() a later generator call must NOT release an
-    earlier call's caches (interleaved pipelines keep their shingle
-    index); scope exit releases everything."""
-    from sslr_spark.functions.dedup import (
-        cache_scope,
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    def n_cached():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    base = n_cached()
-    with cache_scope():
-        a = minhash_lsh_pairs(docs)
-        assert a.count() >= 0  # materializes a's shingle-index cache
-        after_a = n_cached()
-        assert after_a > base
-        b = ngram_jaccard_pairs(docs, threshold=0.5)
-        assert b.count() >= 0
-        # b's entry did NOT evict a's still-live caches
-        assert n_cached() >= after_a
-    assert n_cached() <= base
-
-
 def test_hash_split_deterministic_and_append_stable(spark, docs):
     """The same doc lands in the same split on re-run AND when the
     corpus grows — the property rand() splits lack."""

@@ -382,6 +382,19 @@ def test_compaction_off_by_default(spark, tmp_path):
     assert cfg2.compact_files_per_bucket == 4
 
 
+def test_merge_on_read_keys_load(tmp_path):
+    path = tmp_path / "mor.json"
+    path.write_text(
+        '{"source": "/s", "target": "/t", "tables": ["a"], '
+        '"mergeOnRead": true, "mergeOnReadMaxLog": 0.25, '
+        '"mergeOnReadMaxLogBytes": 1048576}'
+    )
+    cfg = load_config(str(path))
+    assert cfg.merge_on_read is True
+    assert cfg.merge_on_read_max_log == 0.25
+    assert cfg.merge_on_read_max_log_bytes == 1048576
+
+
 def test_plan_dry_run_reports_without_writing(spark, tmp_path):
     """job.plan(): first pass says full_copy; after a sync + source
     changes it reports pending rows and mismatched buckets — and the

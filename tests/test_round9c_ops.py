@@ -278,19 +278,6 @@ def test_pagerank_deterministic_across_partitionings(spark):
     assert a == b
 
 
-def test_pagerank_checkpoint_every_matches_uncheckpointed(spark):
-    edges = [("a", "b"), ("b", "c"), ("c", "a")]
-    df = spark.createDataFrame(
-        [(s, d, 1) for s, d in edges], "src string, dst string, n_links long"
-    )
-    plain = {r.host: r.rank_micros for r in pagerank(df, 4).collect()}
-    ckpt = {
-        r.host: r.rank_micros
-        for r in pagerank(df, 4, checkpoint_every=2).collect()
-    }
-    assert plain == ckpt
-
-
 # ------------------------------------------------------------------
 # image perceptual hashing
 # ------------------------------------------------------------------
