@@ -505,7 +505,7 @@ def main(only: set[str] | None = None) -> dict:
     # number (ADC scan + rerank over stored codes) is the one that
     # matters at scale; pq_build is the amortized encode+write cost.
     from sslr_spark.functions.similarity import (
-        pq_encode_arrow,
+        pq_encode_fixed,
         pq_topk_from_codes,
     )
 
@@ -515,7 +515,7 @@ def main(only: set[str] | None = None) -> dict:
         codes_path = os.path.join(TMP, "pq_codes.parquet")
         # staging: grab the codebooks + query vector once (driver-side;
         # the returned encoded frame is lazy and unused here)
-        _, books = pq_encode_arrow(emb, cw_ids, m=16)
+        _, books = pq_encode_fixed(emb, cw_ids, m=16)
         qvec = [
             float(x)
             for x in emb.filter(F.col("vec_id") == 0).select("embedding")
@@ -523,7 +523,7 @@ def main(only: set[str] | None = None) -> dict:
         ]
 
         def _build():
-            enc, _ = pq_encode_arrow(emb, cw_ids, m=16)
+            enc, _ = pq_encode_fixed(emb, cw_ids, m=16)
             enc.select("vec_id", "__codes", "embedding").write.mode(
                 "overwrite"
             ).parquet(codes_path)
@@ -909,7 +909,7 @@ SECTION_NOTES = {
         "r10 attribution (VERDICT r9 item 2 — the one section >2x "
         "without its own snapshot figure): byte-level comparison of "
         "every function on the path (ivfpq_topk_residual/_serve, "
-        "ivf_index_fixed, pq_encode_with_books, _codebooks_from_ids, "
+        "ivf_index_fixed, pq_encode_residual_fixed, _codebooks_from_ids, "
         "_topk_per_query_salted, the q_ wrapper and its constants) "
         "shows r8 -> r10 IDENTICAL; same-box --only snapshot runs: "
         "r8 code min 4.85-5.73 s across 4 trials, r9-head code "

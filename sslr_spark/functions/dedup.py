@@ -154,8 +154,7 @@ def release_caches() -> None:
     """Free every cache and landing the thread's current owner holds:
     outside any :class:`CacheOwner` block, everything this thread's
     operators stored. Frames read through a landing (the
-    :func:`dup_clusters` / :func:`dup_clusters_star` labels, the
-    ``bpe_train`` rules) cannot be evaluated after this call; cached
+    :func:`dup_clusters_star` labels, the ``bpe_train`` rules) cannot be evaluated after this call; cached
     frames just recompute."""
     _owners()[-1].release()
 
@@ -180,8 +179,8 @@ def cache_scope():
     Like any owner block it stops entry-release inside it, so an
     earlier call's not-yet-materialized result keeps its cache. On
     exit it frees its own caches and landings — never the enclosing
-    owner's — so collect a landed result (dup_clusters labels) inside
-    the block."""
+    owner's — so collect a landed result (dup_clusters_star labels)
+    inside the block."""
     owner = CacheOwner()
     try:
         with owner:
@@ -1354,80 +1353,6 @@ def simhash_pairs(
 
 
 # ------------------------------------------------------------------
-# duplicate clusters (connected components over pair edges)
-# ------------------------------------------------------------------
-
-def dup_clusters(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Resolve near-dup pairs into clusters: (doc_id, cluster_id) where
-    cluster_id = the smallest doc_id in the connected component — the
-    canonical keeper, so dedup-apply is `filter(doc_id == cluster_id)`.
-
-    Iterative min-label propagation (each pass: label <- min(label,
-    neighbors' labels)), converging in O(component diameter) joins —
-    the standard large-scale connected-components loop (hash-join
-    based; no driver-side graph). Each iteration lands its labels
-    (:func:`land`) to keep the plan from growing unboundedly, and
-    frees the previous iteration's landing once the new one is stored;
-    the final labels stay registered until the owner releases them.
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    changed = -1  # sentinel for the max_iterations<=0 warning path
-    for i in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("new_label"),
-                "label",
-            )
-        )
-        changed = updated.filter(F.col("new_label") != F.col("label")).count()
-        prev = labels
-        labels = land(updated.select("id", F.col("new_label").alias("label")))
-        if i:  # round 0 read the initial labels, which are not landed
-            _unland(prev)
-        if changed == 0:
-            break
-    else:
-        # A component with diameter > max_iterations would silently
-        # split into multiple clusters (several keepers for one group)
-        import warnings
-
-        warnings.warn(
-            f"dup_clusters stopped after {max_iterations} iterations "
-            "without converging"
-            + (f" ({changed} labels still changing)" if changed >= 0 else "")
-            + "; raise max_iterations for deep chains",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
-# ------------------------------------------------------------------
 # embedding near-dup
 # ------------------------------------------------------------------
 
@@ -2120,8 +2045,9 @@ def dup_clusters_star(
     MapReduce CC recurrence; min-label propagation needs O(diameter)
     joins, which a 10k-long near-dup chain turns into 10k shuffles).
 
-    Same output contract as :func:`dup_clusters`: (doc_id, cluster_id)
-    with cluster_id = the component's smallest doc_id.
+    Returns (doc_id, cluster_id) with cluster_id = the component's
+    smallest doc_id — the canonical keeper, so dedup-apply is
+    ``filter(doc_id == cluster_id)``.
 
     Each round:
     - large-star: every node u links its LARGER neighbors to the
@@ -2280,7 +2206,7 @@ def cluster_keep_best(
     score, most trusted source — not the numerically smallest id).
 
     ``clusters``: (id_col, cluster_id) as produced by
-    :func:`dup_clusters` / :func:`dup_clusters_star`.
+    :func:`dup_clusters_star`.
     ``score``: a Column over ``docs`` columns; the keeper is the
     member with the LARGEST score, ties broken by smallest id (fully
     deterministic).

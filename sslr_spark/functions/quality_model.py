@@ -120,15 +120,20 @@ def _gate_frames(scored: DataFrame, by: str) -> tuple[DataFrame, DataFrame]:
     score_bp) projection is persisted through the dedup cache
     registry, so the corpus-scoring pipeline runs ONCE — the
     histogram, the thresholds and the final join all read the cache.
-    Like the pair generators, a gate frees the previous call's caches
-    on entry, so standalone gates hold one scored cache at a time;
-    inside a CacheOwner (curate_documents) the owner frees it when the
-    gate stage lands. At scale the cached projection is ~20 bytes/doc
-    and persist() (MEMORY_AND_DISK) spills gracefully."""
+    The cache is filled here, before either reader plans: left lazy,
+    the broadcast threshold stage and the final join's scan run at
+    once and both compute the same partitions (Spark logs "Block
+    rdd_N_0 already exists"). Like the pair generators, a gate frees
+    the previous call's caches on entry, so standalone gates hold one
+    scored cache at a time; inside a CacheOwner (curate_documents)
+    the owner frees it when the gate stage lands. At scale the cached
+    projection is ~20 bytes/doc and persist() (MEMORY_AND_DISK)
+    spills gracefully."""
     from sslr_spark.functions.dedup import _entry_release, register_cache
 
     _entry_release()
     scored = register_cache(scored)
+    scored.count()  # fill the cache once
     hist = scored.groupBy(by, "score_bp").agg(
         F.count(F.lit(1)).alias("__c")
     )

@@ -1165,11 +1165,49 @@ def pq_encode_with_books(
     books: list[list[list[float]]],
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Encode with PUBLISHED codebooks (e.g. from :func:`pq_train`):
-    the same Arrow-batched integer-quantized scoring as
-    pq_encode_arrow, minus the codebook derivation — the serving-side
-    encode for new batches against a frozen index, append-stable by
-    construction (frozen books => stable codes)."""
+    """Encode with PUBLISHED codebooks (from :func:`pq_train`, or the
+    fixed ids through :func:`pq_encode_fixed`): each vector's ``m``
+    sub-vectors take the index of their nearest codeword — the
+    serving-side encode for new batches against a frozen index,
+    append-stable by construction (frozen books => stable codes).
+
+    Distances are computed on UNIT-normalized vectors — on unit
+    vectors squared L2 is ``2 - 2*cos``, so the integer ADC pre-rank
+    is monotone in the cosine the rerank targets, where raw L2 ranks
+    by magnitude as much as by angle. Normalization is algebraic, and
+    the per-row constant ``subsq/s`` term of the expansion
+
+        ||x_sub/||x|| - c||^2 = subsq/s - 2*dot(x_sub, c)/sqrt(s)
+                                + ||c||^2      (s = ||x||^2)
+
+    is DROPPED: it is identical for every codeword of a subspace, so
+    the reduced score ``d' = ||c||^2 - 2*dot/sqrt(s)`` has the same
+    argmin (and, summed over subspaces, shifts every ADC total by the
+    same per-row constant — rank-invariant). Zero-norm vectors take
+    ``d' = ||c||^2`` (guarded: without it 0/sqrt(0) is NaN), giving
+    a deterministic argmin; the rerank drops them.
+
+    DETERMINISM CONTRACT (shared by this kernel,
+    :func:`pq_encode_residual_fixed`, :func:`_pq_adc_expr` and the
+    DuckDB oracle SQL): no engine ever sums raw doubles. Every sum —
+    vector sum-of-squares, per-subspace dot, codeword sum-of-squares
+    — quantizes each TERM to a bigint first (``floor(x*y * 1e12 +
+    0.5)``; a term is one or two IEEE-exact binary ops on identical
+    inputs), so the sums are integer and order-free. The score then
+    combines those integers through a fixed sequence of single IEEE
+    ops (cast, divide, sqrt, subtract — each exactly rounded, hence
+    engine-identical; :func:`_pq_score` is the scalar spelling) and
+    quantizes to a bigint (``floor(d * 1e9 + 0.5)``); the argmin
+    compares bigints with ties to the LOWER codeword index (numpy
+    ``argmin`` first-match here, ``row_number order by d, c`` in the
+    SQL). Unspecified summation order — the one cross-engine wobble a
+    float spelling leaves open — cannot flip a code or an ADC cut.
+
+    Arrow-batched numpy, not JVM array expressions: the expression
+    form paid interpreted-lambda cost per (row, subspace, codeword)
+    and took 5-17 s on a 500-row fixture this kernel encodes in under
+    4 s. Pure per-row map — zero shuffle, zero row amplification
+    (plan-pinned)."""
     import numpy as np
 
     m = len(books)
@@ -1238,122 +1276,15 @@ def pq_encode_fixed(
     Like :func:`ivf_index_fixed`, "fixed" is what makes the operator
     verification-grade: no iterative KMeans state, so the exact code
     assignment replays in the DuckDB oracle. A production deployment
-    would train per-subspace KMeans codebooks the same way ivf_index
-    trains cells; the plan shape (and this encoder's argmin) is
-    identical, only the literals change.
-
-    Distances are computed on UNIT-normalized vectors — on unit
-    vectors squared L2 is ``2 - 2*cos``, so the integer ADC pre-rank
-    is monotone in the cosine the rerank targets, where raw L2 ranks
-    by magnitude as much as by angle. Normalization is algebraic, and
-    the per-row constant ``subsq/s`` term of the expansion
-
-        ||x_sub/||x|| - c||^2 = subsq/s - 2*dot(x_sub, c)/sqrt(s)
-                                + ||c||^2      (s = ||x||^2)
-
-    is DROPPED: it is identical for every codeword of a subspace, so
-    the reduced score ``d' = ||c||^2 - 2*dot/sqrt(s)`` has the same
-    argmin (and, summed over subspaces, shifts every ADC total by the
-    same per-row constant — rank-invariant). Zero-norm vectors take
-    ``d' = ||c||^2`` (guarded: without it 0/sqrt(0) is NaN), giving
-    the deterministic all-ties argmin; the rerank drops them.
-
-    DETERMINISM CONTRACT (shared by this encoder, pq_encode_arrow,
-    _pq_adc_expr, and the DuckDB oracle SQL): no engine ever sums raw
-    doubles. Every sum — vector sum-of-squares, per-subspace dot,
-    codeword sum-of-squares — quantizes each TERM to a bigint first
-    (``floor(x*y * 1e12 + 0.5)``; a term is one or two IEEE-exact
-    binary ops on identical inputs), so the sums are integer and
-    order-free. The score then combines those integers through a
-    fixed sequence of single IEEE ops (cast, divide, sqrt, subtract —
-    each exactly rounded, hence engine-identical) and quantizes to a
-    bigint (``floor(d * 1e9 + 0.5)``); the argmin compares bigints
-    with ties to the LOWER codeword index in every path (expression
-    ``array_position(min)`` first-match, numpy ``argmin`` first-match,
-    SQL ``row_number order by d, c``). Unspecified summation order —
-    the one cross-engine wobble a float spelling leaves open — cannot
-    flip a code or an ADC cut here.
-
-    Per subspace the scoring is THREE array expressions — a
-    ``transform`` over the 2-D codeword literal computing all ks dots,
-    a ``zip_with`` applying the score, and
-    ``array_position(d', array_min(d'))`` for the argmin. No
-    per-candidate expression expansion: the expanded-struct form
-    re-inlined the norm subtree into every candidate and took
-    Catalyst/codegen 160+ s at m=16, ks=16 for a 2000-row input; a
-    per-candidate ``aggregate`` fold still spent ~18 s in interpreted
-    lambda machinery. This form encodes the same input in well under
-    a second. Pure per-row map — zero shuffle, zero row amplification
-    (plan-pinned).
+    trains the codebooks (:func:`pq_train`); the encode kernel
+    (:func:`pq_encode_with_books`) is the same, only the literals
+    change.
 
     Returns (encoded df with an array<int> ``__codes`` column,
     codebooks as [subspace][codeword][dim] Python lists — normalized).
     """
-    rows = (
-        df.filter(F.col(id_col).isin(list(codebook_ids)))
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cw"))
-        .collect()  # bounded: ks rows
-    )
-    rows.sort(key=lambda r: r.cid)
-    _require_all_ids(rows, codebook_ids, "codebook", id_col)
-    dim = len(rows[0].cw)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
-    units = [_unit_quantized(r.cw) for r in rows]
-    books = [
-        [u[j * dsub:(j + 1) * dsub] for u in units] for j in range(m)
-    ]
-    cwsq = [
-        [_sumsq_int(cw) for cw in books[j]] for j in range(m)
-    ]
-    s_int = F.aggregate(
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(
-                x.cast("double") * x.cast("double") * F.lit(1e12)
-                + F.lit(0.5)
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    s_d = s_int.cast("double") / F.lit(1e12)
-    code_cols = []
-    for j in range(m):
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        dots = F.transform(
-            F.lit(books[j]),  # array<array<double>>: ks x dsub
-            lambda cw: F.aggregate(
-                F.zip_with(
-                    sub,
-                    cw,
-                    lambda x, y: F.floor(
-                        x.cast("double") * y * F.lit(1e12) + F.lit(0.5)
-                    ),
-                ),
-                F.lit(0).cast("long"),
-                lambda a, v: a + v,
-            ),
-        )
-        scores = F.zip_with(
-            dots,
-            F.lit(cwsq[j]),
-            lambda dt, cq: F.floor(
-                F.when(s_int == 0, cq.cast("double") / F.lit(1e12)).otherwise(
-                    cq.cast("double") / F.lit(1e12)
-                    - (F.lit(2.0) * (dt.cast("double") / F.lit(1e12)))
-                    / F.sqrt(s_d)
-                )
-                * F.lit(1e9)
-                + F.lit(0.5)
-            ),
-        )
-        code_cols.append(
-            (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
-        )
-    return df.withColumn("__codes", F.array(*code_cols)), books
+    books, _ = _codebooks_from_ids(df, codebook_ids, m, vec_col, id_col)
+    return pq_encode_with_books(df, books, vec_col), books
 
 
 def _sumsq_int(vec) -> int:
@@ -1400,8 +1331,9 @@ def _pq_score(cwsq_int: int, dot_int: int, s_int: int) -> float:
     """The canonical reduced score ``cwsq - 2*dot/sqrt(s)`` from the
     integer-quantized components, as a FIXED sequence of single IEEE
     ops (each exactly rounded, hence engine-identical). Mirrored
-    op-for-op by the Spark expression in pq_encode_fixed, the numpy
-    path in pq_encode_arrow, and the oracle SQL."""
+    op-for-op by the numpy kernel in pq_encode_with_books and the
+    oracle SQL; at ``s_int = 10**12`` (a unit vector) it is the
+    residual encoder's score, whose divisor is then exactly 1."""
     import math
 
     if s_int == 0:
@@ -1420,7 +1352,6 @@ def pq_topk_fixed(
     rerank_factor: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    arrow: bool = False,
 ) -> DataFrame:
     """Top-k via product quantization: ADC (asymmetric distance
     computation) pre-ranks the corpus reading ONLY the m sub-codes —
@@ -1435,15 +1366,8 @@ def pq_topk_fixed(
     codes scan is narrow (4 ints/vector), the table lookup is a
     literal element_at — no join, no shuffle before the TakeOrdered
     cut.
-
-    ``arrow=True`` swaps in :func:`pq_encode_arrow` (numpy einsum per
-    record batch) for the encode stage — the production path; the
-    default expression encoder is the oracle-parity path.
     """
-    import math
-
-    _encode = pq_encode_arrow if arrow else pq_encode_fixed
-    encoded, books = _encode(df, codebook_ids, m, vec_col, id_col)
+    encoded, books = pq_encode_fixed(df, codebook_ids, m, vec_col, id_col)
     qrow = df.filter(F.col(id_col) == query_vec_id).select(vec_col).take(1)
     if not qrow:
         raise ValueError(f"query vector {id_col}={query_vec_id} not found")
@@ -1469,7 +1393,7 @@ def pq_topk_from_codes(
     the m sub-codes, cut to ``k * rerank_factor`` candidates, rerank
     by exact cosine. This is the stage a production deployment pays
     per query — the codes are encoded once (:func:`pq_encode_fixed` /
-    :func:`pq_encode_arrow`), written to storage, and scanned many
+    :func:`pq_encode_with_books`), written to storage, and scanned many
     times; fusing build+query in one call (``pq_topk_fixed``) exists
     for the oracle-verified single-shot form.
 
@@ -1525,13 +1449,13 @@ def _pq_adc_expr(qvec: list[float], books, m: int):
     ``__codes``: the per-(subspace, codeword) distance table computed
     driver-side with the SAME integer-quantized reduced score the
     encoders use (every sum is a sum of per-term bigints; every float
-    op a single exactly-rounded IEEE op — see pq_encode_fixed's
+    op a single exactly-rounded IEEE op — see pq_encode_with_books's
     determinism contract), then scaled to bigints
     (``floor(d * 1e6 + 0.5)``) so per-row ADC sums are order-free and
     engine-exact. The oracle SQL re-derives the identical table from
     the same stored floats because no step depends on summation
-    order. Shared by :func:`pq_topk_fixed` and
-    :func:`ivfpq_topk_fixed`."""
+    order. Shared by :func:`pq_topk_from_codes` and
+    :func:`ivfpq_topk_serve`."""
     import math
 
     qs_int = _sumsq_int(qvec)
@@ -1574,7 +1498,6 @@ def ivfpq_topk_fixed(
     rerank_factor: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    arrow: bool = False,
 ) -> DataFrame:
     """IVF-PQ: the classic large-scale ANN pairing — the IVF coarse
     quantizer prunes the scan to ``n_probe`` cells, the PQ codes make
@@ -1591,48 +1514,11 @@ def ivfpq_topk_fixed(
     equals :func:`ivf_ann_fixed` (equality-tested), the same way PQ
     alone equals brute force."""
     indexed, cents = ivf_index_fixed(df, centroid_ids, vec_col, id_col)
-    _encode = pq_encode_arrow if arrow else pq_encode_fixed
-    encoded, books = _encode(indexed, codebook_ids, m, vec_col, id_col)
-    qrow = df.filter(F.col(id_col) == query_vec_id).select(vec_col).take(1)
-    if not qrow:
-        raise ValueError(f"query vector {id_col}={query_vec_id} not found")
-    qvec = [float(x) for x in qrow[0][0]]
-    q = df.sparkSession.createDataFrame(
-        [(qvec,)], f"__qvec {df.schema[vec_col].dataType.simpleString()}"
-    )
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .withColumn("__qsim", F.round(cosine_expr("centroid", "__qvec"), 9))
-        .orderBy(F.col("__qsim").desc(), F.col("cell"))
-        .limit(n_probe)
-        .select(F.col("cell").alias("__probe_cell"))
-    )
-    adc = _pq_adc_expr(qvec, books, m)
-    cand = (
-        encoded.join(
-            F.broadcast(probe), F.col("__cell") == F.col("__probe_cell")
-        )
-        .filter(F.col(id_col) != query_vec_id)
-        .withColumn("adc_dist", adc.cast("long"))
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col))
-        .limit(k * rerank_factor)
-    )
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            "adc_dist",
-            F.round(
-                F.try_divide(
-                    dot_expr(vec_col, "__qvec"),
-                    norm_expr(vec_col) * norm_expr("__qvec"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    books, _ = _codebooks_from_ids(df, codebook_ids, m, vec_col, id_col)
+    return ivfpq_topk_serve(
+        indexed, cents, books, query_vec_id,
+        k=k, n_probe=n_probe, rerank_factor=rerank_factor,
+        vec_col=vec_col, id_col=id_col,
     )
 
 
@@ -1677,76 +1563,69 @@ def pq_encode_residual_fixed(
     better at equal bytes (Jegou et al., "Product Quantization for
     Nearest Neighbor Search", §IV).
 
-    Determinism contract (same as pq_encode_fixed): unit(x) divides
-    by the quantized norm (one exactly-rounded IEEE divide per
-    element), the residual is one IEEE subtract of engine-identical
-    doubles, every dot term quantizes to a bigint before summation,
-    and the reduced score ``||cw||^2 - 2*dot(r_sub, cw)`` (the
-    per-row ||r_sub||^2 constant is dropped — same argmin) combines
-    the integers through single IEEE ops. No division by the residual
-    norm anywhere, so no zero-norm guard is needed. Pure per-row map:
-    zero shuffle, zero row amplification."""
+    Determinism contract (the one :func:`pq_encode_with_books`
+    documents): unit(x) divides by the quantized norm (one
+    exactly-rounded IEEE divide per element), the residual is one
+    IEEE subtract of engine-identical doubles, every dot term
+    quantizes to a bigint before summation, and the reduced score
+    ``||cw||^2 - 2*dot(r_sub, cw)`` (the per-row ||r_sub||^2 constant
+    is dropped — same argmin) combines the integers through single
+    IEEE ops, then a ``floor(d*1e9 + 0.5)`` bigint argmin with
+    first-match ties. No division by the residual norm anywhere, so
+    no zero-norm guard is needed. Arrow-batched numpy like the raw
+    encoder: the JVM expression form took 96-115 s on a 500-row
+    fixture this kernel encodes in under 1 s. Pure per-row map: zero
+    shuffle, zero row amplification."""
+    import numpy as np
+
     m = len(books)
     dsub = len(books[0][0])
-    cwsq = [[_sumsq_int(cw) for cw in books[j]] for j in range(m)]
-    s_int = F.aggregate(
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(
-                x.cast("double") * x.cast("double") * F.lit(1e12)
-                + F.lit(0.5)
-            ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    bk = np.asarray(books, dtype=np.float64)              # (m, ks, dsub)
+    cwsq_int = np.asarray(
+        [[_sumsq_int(cw) for cw in books[j]] for j in range(m)],
+        dtype=np.int64,
     )
-    unit = F.when(
-        s_int == 0, F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    ).otherwise(
-        F.transform(
-            F.col(vec_col),
-            lambda x: x.cast("double")
-            / F.sqrt(s_int.cast("double") / F.lit(1e12)),
-        )
-    )
-    cu = F.element_at(F.lit(cent_units), F.col(cell_col) + 1)
-    resid = F.zip_with(unit, cu, lambda a, b: a - b)
-    code_cols = []
-    for j in range(m):
-        # NB: the transform lambda must stay single-parameter —
-        # PySpark reads a second parameter (even a default) as an
-        # (element, index) lambda; rsub binds through the helper's
-        # default arg instead, consumed within this iteration
-        rsub = F.slice(resid, j * dsub + 1, dsub)
+    cwsq_d = cwsq_int / 1e12
+    cents = np.asarray(cent_units, dtype=np.float64)      # (n_cells, dim)
 
-        def _dot(cw, _rsub=rsub):
-            return F.aggregate(
-                F.zip_with(
-                    _rsub,
-                    cw,
-                    lambda x, y: F.floor(x * y * F.lit(1e12) + F.lit(0.5)),
-                ),
-                F.lit(0).cast("long"),
-                lambda a, v: a + v,
-            )
+    out_schema = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}"
+        for f in indexed.schema.fields
+    ) + ", __codes array<int>"
 
-        dots = F.transform(F.lit(books[j]), lambda cw: _dot(cw))
-        scores = F.zip_with(
-            dots,
-            F.lit(cwsq[j]),
-            lambda dt, cq: F.floor(
-                (
-                    cq.cast("double") / F.lit(1e12)
-                    - (F.lit(2.0) * (dt.cast("double") / F.lit(1e12)))
+    def encode(batches):
+        for pdf in batches:
+            if len(pdf):
+                x = np.asarray(
+                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
                 )
-                * F.lit(1e9)
-                + F.lit(0.5)
-            ),
-        )
-        code_cols.append(
-            (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
-        )
-    return indexed.withColumn("__codes", F.array(*code_cols))
+                s_int = (
+                    np.floor((x * x) * 1e12 + 0.5).astype(np.int64)
+                    .sum(axis=1)
+                )
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    u = x / np.sqrt(s_int / 1e12)[:, None]
+                u = np.where((s_int == 0)[:, None], x, u)
+                cell = pdf[cell_col].to_numpy().astype(np.int64)
+                r = u - cents[cell]                        # (n, dim)
+                rs = r.reshape(len(pdf), m, dsub)
+                prods = rs[:, :, None, :] * bk[None, :, :, :]
+                dot_int = (
+                    np.floor(prods * 1e12 + 0.5).astype(np.int64)
+                    .sum(axis=3)
+                )
+                d = cwsq_d[None, :, :] - 2.0 * (dot_int / 1e12)
+                d_q = np.floor(d * 1e9 + 0.5).astype(np.int64)
+                pdf = pdf.copy()
+                pdf["__codes"] = [
+                    c.tolist() for c in d_q.argmin(axis=2).astype("int32")
+                ]
+            else:
+                pdf = pdf.copy()
+                pdf["__codes"] = []
+            yield pdf
+
+    return indexed.mapInPandas(encode, out_schema)
 
 
 def residualize_codebooks(
@@ -1812,74 +1691,6 @@ def residualize_codebooks(
     return [
         [rv[j * dsub:(j + 1) * dsub] for rv in resids] for j in range(m)
     ]
-
-
-def pq_encode_residual_arrow(
-    indexed: DataFrame,
-    books: list[list[list[float]]],
-    cent_units: list[list[float]],
-    vec_col: str = "embedding",
-    cell_col: str = "__cell",
-) -> DataFrame:
-    """Arrow-batched numpy variant of :func:`pq_encode_residual_fixed`
-    — the PRODUCTION residual encoder (the expression form pays
-    interpreted-lambda cost per (row, subspace, codeword): measured
-    384 s for a 100k-row encode that this path does in seconds).
-    Implements the same determinism contract op-for-op — per-term
-    bigint quantization, identical single-IEEE-op score sequence,
-    floor(d*1e9+0.5) bigint argmin with first-match ties — so its
-    codes are bit-identical to the expression path (equality-tested),
-    exactly as pq_encode_arrow mirrors pq_encode_fixed."""
-    import numpy as np
-
-    m = len(books)
-    dsub = len(books[0][0])
-    bk = np.asarray(books, dtype=np.float64)              # (m, ks, dsub)
-    cwsq_int = np.asarray(
-        [[_sumsq_int(cw) for cw in books[j]] for j in range(m)],
-        dtype=np.int64,
-    )
-    cwsq_d = cwsq_int / 1e12
-    cents = np.asarray(cent_units, dtype=np.float64)      # (n_cells, dim)
-
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in indexed.schema.fields
-    ) + ", __codes array<int>"
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf):
-                x = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                s_int = (
-                    np.floor((x * x) * 1e12 + 0.5).astype(np.int64)
-                    .sum(axis=1)
-                )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    u = x / np.sqrt(s_int / 1e12)[:, None]
-                u = np.where((s_int == 0)[:, None], x, u)
-                cell = pdf[cell_col].to_numpy().astype(np.int64)
-                r = u - cents[cell]                        # (n, dim)
-                rs = r.reshape(len(pdf), m, dsub)
-                prods = rs[:, :, None, :] * bk[None, :, :, :]
-                dot_int = (
-                    np.floor(prods * 1e12 + 0.5).astype(np.int64)
-                    .sum(axis=3)
-                )
-                d = cwsq_d[None, :, :] - 2.0 * (dot_int / 1e12)
-                d_q = np.floor(d * 1e9 + 0.5).astype(np.int64)
-                pdf = pdf.copy()
-                pdf["__codes"] = [
-                    c.tolist() for c in d_q.argmin(axis=2).astype("int32")
-                ]
-            else:
-                pdf = pdf.copy()
-                pdf["__codes"] = []
-            yield pdf
-
-    return indexed.mapInPandas(encode, out_schema)
 
 
 def pq_train_residual(
@@ -1963,7 +1774,6 @@ def ivfpq_topk_serve(
     id_col: str = "vec_id",
     residual: bool = False,
     unit_centroids: bool = True,
-    arrow: bool = False,
 ) -> DataFrame:
     """Serve an IVF-PQ top-k query against ANY (indexed, cents,
     books) triple — trained (ivf_index + pq_train/pq_train_residual)
@@ -1987,19 +1797,13 @@ def ivfpq_topk_serve(
 
     m = len(books)
     dsub = len(books[0][0])
-    cent_rows = sorted(cents.collect(), key=lambda r: r.cell)  # bounded
-    if unit_centroids:
-        cent_units = [_unit_quantized(r.centroid) for r in cent_rows]
-    else:
-        cent_units = [[float(x) for x in r.centroid] for r in cent_rows]
     if residual:
-        # arrow: the production encoder (numpy per record batch);
-        # default: the expression encoder, the oracle-parity path —
-        # both bit-identical by the shared determinism contract
-        _enc = (
-            pq_encode_residual_arrow if arrow else pq_encode_residual_fixed
-        )
-        encoded = _enc(indexed, books, cent_units, vec_col)
+        cent_rows = sorted(cents.collect(), key=lambda r: r.cell)  # bounded
+        if unit_centroids:
+            cent_units = [_unit_quantized(r.centroid) for r in cent_rows]
+        else:
+            cent_units = [[float(x) for x in r.centroid] for r in cent_rows]
+        encoded = pq_encode_residual_fixed(indexed, books, cent_units, vec_col)
     else:
         encoded = pq_encode_with_books(indexed, books, vec_col)
 
@@ -2116,7 +1920,6 @@ def ivfpq_topk_residual(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     books: list[list[list[float]]] | None = None,
-    arrow: bool = False,
 ) -> DataFrame:
     """IVF-PQ with RESIDUAL encoding — the standard FAISS IVFADC
     pairing: the coarse quantizer prunes the scan to ``n_probe``
@@ -2141,56 +1944,8 @@ def ivfpq_topk_residual(
     return ivfpq_topk_serve(
         indexed, cents, books, query_vec_id,
         k=k, n_probe=n_probe, rerank_factor=rerank_factor,
-        vec_col=vec_col, id_col=id_col, residual=True, arrow=arrow,
+        vec_col=vec_col, id_col=id_col, residual=True,
     )
-
-
-def pq_encode_arrow(
-    df: DataFrame,
-    codebook_ids: list[int],
-    m: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[DataFrame, list[list[list[float]]]]:
-    """Arrow-batched numpy variant of :func:`pq_encode_fixed`: per
-    record batch, all subspace scores come from vectorized numpy ops,
-    argmin per (row, subspace) — the production encoder. The JVM
-    expression form scores each codeword through interpreted lambda
-    machinery (~3 ms/row at m=16, ks=16); this path is a handful of
-    vectorized ops per batch, and is what a GPU encoder would look
-    like too.
-
-    Implements pq_encode_fixed's determinism contract op-for-op:
-    per-term bigint quantization (``floor(x*y*1e12 + 0.5)``) makes
-    every sum integer and order-free; the score combines those
-    integers through the identical single-IEEE-op sequence; the final
-    bigint quantization (``floor(d*1e9 + 0.5)``) means argmin ties
-    are EXACT integer ties, broken to the lower codeword index by
-    numpy's first-match argmin — the same winner as the expression
-    path and the SQL oracle's ``order by d, c``, on every input, not
-    just non-adversarial ones.
-
-    Returns (encoded df with ``__codes``, normalized codebooks)."""
-    rows = (
-        df.filter(F.col(id_col).isin(list(codebook_ids)))
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cw"))
-        .collect()
-    )
-    rows.sort(key=lambda r: r.cid)
-    _require_all_ids(rows, codebook_ids, "codebook", id_col)
-    dim = len(rows[0].cw)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
-    units = [_unit_quantized(r.cw) for r in rows]
-    books = [
-        [u[j * dsub:(j + 1) * dsub] for u in units] for j in range(m)
-    ]
-    # the numpy kernel itself lives in pq_encode_with_books (one copy
-    # serves the fixed-codebook path here and the pq_train serving
-    # path) — this wrapper only derives the codebooks
-    return pq_encode_with_books(df, books, vec_col), books
 
 
 def ivf_cell_drift(

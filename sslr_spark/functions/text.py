@@ -1384,7 +1384,7 @@ def bpe_train(
     Output: one row per learned rule — (rank, lhs, rhs, merged,
     pair_count), rank 1 = first merge. The rules read landed rows held
     by the current cache owner (dedup.release_caches frees them), the
-    same contract as the dup_clusters labels.
+    same contract as the dup_clusters_star labels.
     """
     from sslr_spark.functions.dedup import _unland, land
 

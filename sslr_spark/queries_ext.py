@@ -608,10 +608,9 @@ from counts
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup clusters: connected components over the 3-gram-Jaccard
     pair graph; cluster_id = smallest member (the keeper). Spark runs
-    alternating large-star/small-star (O(log n) rounds — the scale
-    path; min-label propagation, O(diameter), remains as
-    dup_clusters); the oracle is a recursive CTE — an iterative
-    algorithm with a full value-hash check."""
+    alternating large-star/small-star (O(log n) rounds); the oracle
+    is a recursive CTE — an iterative algorithm with a full
+    value-hash check."""
     pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.05)
     return D.dup_clusters_star(pairs)
 
@@ -1603,7 +1602,7 @@ def q_sim_topk_pq(spark, sf_dir):
     )
 
 
-# PQ determinism contract (see similarity.py pq_encode_fixed): every
+# PQ determinism contract (see similarity.py pq_encode_with_books): every
 # sum quantizes each TERM to a bigint first (floor(x*y*1e12 + 0.5)),
 # so sums are integer and order-free in any engine; the score then
 # combines the integers through single exactly-rounded IEEE ops.
@@ -1643,7 +1642,7 @@ _PQ_SLICE_DOT = (
 # engines (same argmin, rank-invariant ADC shift); s = 0 guarded
 # (0/sqrt(0) is NaN). {s}/{dot}/{cwsq} are the INTEGER-quantized
 # components; the op sequence below is the exact one _pq_score /
-# pq_encode_fixed / pq_encode_arrow run.
+# pq_encode_with_books runs.
 _PQ_D = (
     "case when {s} = 0 then cast({cwsq} as double) / 1e12 else "
     "cast({cwsq} as double) / 1e12 - "
@@ -1820,10 +1819,7 @@ def q_sim_topk_ivfpq_residual(spark, sf_dir):
     distribution; the ADC table becomes (cell, subspace, codeword)-
     indexed because the query residual differs per probed cell. Both
     quantizers fixed, every residual an exactly-rounded IEEE op —
-    the full pipeline replays in DuckDB. arrow=True runs the numpy
-    encoder (bit-identical by the shared determinism contract,
-    equality-tested vs the expression path — same pairing as the
-    other PQ keys' encode)."""
+    the full pipeline replays in DuckDB."""
     return S.ivfpq_topk_residual(
         _emb(spark, sf_dir),
         _IVF_CENT_IDS,
@@ -1832,7 +1828,6 @@ def q_sim_topk_ivfpq_residual(spark, sf_dir):
         k=10,
         m=_PQ_M,
         n_probe=3,
-        arrow=True,
     )
 
 

@@ -48,4 +48,14 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Freeing a landing (dedup._unland / CacheOwner.release) is meant
+    # to drop a locally checkpointed RDD for good, and Spark warns
+    # "cannot be recomputed after unpersisting" once per freed RDD.
+    # Landed frames are MapPartitionsRDDs, so only that class's
+    # logger is raised; every other logger keeps the WARN root level.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

@@ -139,3 +139,13 @@ def test_bpe_train_rounds_are_owned(spark):
     assert len(_stored(spark) - before) == 4  # one landing per rule
     release_caches()
     assert not _stored(spark) - before
+
+
+def test_freed_landings_do_not_warn_root_stays_warn(spark):
+    """Freeing a landing is intended, so the session raises the one
+    logger that warns about it ("locally checkpointed ... cannot be
+    recomputed after unpersisting") to ERROR; the root stays WARN."""
+    log_manager = spark.sparkContext._jvm.org.apache.logging.log4j.LogManager
+    landing = log_manager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+    assert landing.getLevel().toString() == "ERROR"
+    assert log_manager.getRootLogger().getLevel().toString() == "WARN"

@@ -7,7 +7,27 @@ import warnings
 
 import pytest
 
-from sslr_spark.functions.dedup import dup_clusters
+from sslr_spark.functions.dedup import dup_clusters_star
+
+
+def _union_find(edges):
+    """Reference labels: plain-Python union-find over the pairs,
+    every node labelled with its component's smallest id (the
+    smaller root always wins a union, so each root is that id)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return sorted((v, find(v)) for v in list(parent))
 
 
 def test_chain_and_islands(spark):
@@ -15,7 +35,9 @@ def test_chain_and_islands(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
         "doc_a long, doc_b long",
     )
-    got = {(r.doc_id, r.cluster_id) for r in dup_clusters(pairs).collect()}
+    got = {
+        (r.doc_id, r.cluster_id) for r in dup_clusters_star(pairs).collect()
+    }
     assert got == {
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10),
@@ -25,14 +47,12 @@ def test_chain_and_islands(spark):
 
 @pytest.mark.slow
 def test_long_chain_converges(spark):
-    # a 30-node chain needs ~log-diameter passes with doubling — our
-    # simple propagation needs diameter passes; keep under max_iterations
     n = 18
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
     got = dict(
-        (r.doc_id, r.cluster_id) for r in dup_clusters(pairs, max_iterations=25).collect()
+        (r.doc_id, r.cluster_id) for r in dup_clusters_star(pairs).collect()
     )
     assert all(v == 0 for v in got.values())
     assert len(got) == n + 1
@@ -40,18 +60,16 @@ def test_long_chain_converges(spark):
 
 def test_keeper_is_min_id(spark):
     pairs = spark.createDataFrame([(7, 3), (3, 9)], "doc_a long, doc_b long")
-    got = dict((r.doc_id, r.cluster_id) for r in dup_clusters(pairs).collect())
+    got = dict(
+        (r.doc_id, r.cluster_id) for r in dup_clusters_star(pairs).collect()
+    )
     assert got == {3: 3, 7: 3, 9: 3}
 
 
 @pytest.mark.slow
 def test_star_equals_propagation(spark):
-    """large-star/small-star yields exactly the same clusters as
-    min-label propagation on assorted graph shapes."""
-    import random
-
-    from sslr_spark.functions.dedup import dup_clusters, dup_clusters_star
-
+    """large-star/small-star yields exactly the same clusters as the
+    union-find reference on random trees joined by extra cycles."""
     rng = random.Random(7)
     edges = set()
     # several components: a clique, a chain, a star, random trees
@@ -64,9 +82,8 @@ def test_star_equals_propagation(spark):
     pairs = spark.createDataFrame(
         sorted(edges), "doc_a long, doc_b long"
     )
-    a = {(r.doc_id, r.cluster_id) for r in dup_clusters(pairs).collect()}
-    b = {(r.doc_id, r.cluster_id) for r in dup_clusters_star(pairs).collect()}
-    assert a == b
+    got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
+    assert got == _union_find(edges)
 
 
 def _random_edges():
@@ -95,30 +112,24 @@ STAR_GRAPHS = {
 
 @pytest.mark.parametrize("name", sorted(STAR_GRAPHS))
 def test_star_equals_reference(spark, name):
-    """dup_clusters_star labels every node exactly as min-label
-    propagation does — including a node whose only edge is a
+    """dup_clusters_star labels every node exactly as the union-find
+    reference does — including a node whose only edge is a
     self-loop."""
-    from sslr_spark.functions.dedup import dup_clusters_star
-
     edges, id_type = STAR_GRAPHS[name]
     pairs = spark.createDataFrame(
         edges, f"doc_a {id_type}, doc_b {id_type}"
     )
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)  # must converge
-        want = dup_clusters(pairs, max_iterations=40).collect()
-        got = dup_clusters_star(pairs).collect()
-    want, got = sorted(map(tuple, want)), sorted(map(tuple, got))
-    assert got == want
+        got = sorted(map(tuple, dup_clusters_star(pairs).collect()))
+    assert got == _union_find(edges)
     assert {doc for doc, _ in got} == {v for e in edges for v in e}
 
 
 def test_star_handles_deep_chain_in_few_rounds(spark):
-    """A 120-node chain: propagation needs 120 iterations (and warns
-    at its default 20); star converges logarithmically and labels the
-    whole chain with its minimum."""
-    from sslr_spark.functions.dedup import dup_clusters_star
-
+    """A 120-node chain: min-label propagation would need 120
+    iterations; star converges logarithmically and labels the whole
+    chain with its minimum."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], "doc_a long, doc_b long"
     )
@@ -129,10 +140,10 @@ def test_star_handles_deep_chain_in_few_rounds(spark):
 
 def test_cc_rounds_free_superseded_landings(spark):
     """Each round frees the round it superseded: after a multi-round
-    run only the landings the labels read stay stored (dup_clusters:
-    the final labels; dup_clusters_star: the symmetrized input and the
-    final round), and release_caches() frees those too."""
-    from sslr_spark.functions.dedup import dup_clusters_star, release_caches
+    run only the landings the labels read stay stored (the symmetrized
+    input and the final round), and release_caches() frees those
+    too."""
+    from sslr_spark.functions.dedup import release_caches
 
     def stored():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
@@ -142,11 +153,10 @@ def test_cc_rounds_free_superseded_landings(spark):
     )
     release_caches()
     before = stored()
-    for cc, n_kept in ((dup_clusters, 1), (dup_clusters_star, 2)):
-        assert len(cc(pairs).collect()) == 13
-        assert len(stored() - before) == n_kept, cc.__name__
-        release_caches()
-        assert not stored() - before, cc.__name__
+    assert len(dup_clusters_star(pairs).collect()) == 13
+    assert len(stored() - before) == 2
+    release_caches()
+    assert not stored() - before
 
 
 def test_star_1k_chain_logarithmic_round_bound(spark):
@@ -157,9 +167,6 @@ def test_star_1k_chain_logarithmic_round_bound(spark):
     propagation, this chain would need ~1000 rounds and the warning
     below would fire."""
     import math
-    import warnings
-
-    from sslr_spark.functions.dedup import dup_clusters_star
 
     n = 1001
     pairs = spark.createDataFrame(
@@ -171,6 +178,15 @@ def test_star_1k_chain_logarithmic_round_bound(spark):
         out = dup_clusters_star(pairs, max_rounds=budget).collect()
     assert len(out) == n
     assert all(r.cluster_id == 0 for r in out)
+
+
+def test_star_zero_rounds_warns_not_crashes(spark):
+    """max_rounds=0 runs no round: the operator warns that it did not
+    stabilize and still returns one label per node."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    with pytest.warns(RuntimeWarning, match="did not stabilize"):
+        out = dup_clusters_star(pairs, max_rounds=0).collect()
+    assert sorted(r.doc_id for r in out) == [1, 2, 3]
 
 
 def test_cluster_keep_best_prefers_score_then_min_id(spark):

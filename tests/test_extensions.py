@@ -981,165 +981,6 @@ def test_hard_negatives_labels_and_ranks(spark):
     assert len(out2) == 2
 
 
-_PQ_IDS = list(range(100, 116))  # ks=16, and the key's m=16
-
-
-@pytest.mark.slow
-def test_pq_encode_codes_shape_and_determinism(spark, emb):
-    from sslr_spark.functions.similarity import pq_encode_fixed
-
-    encoded, books = pq_encode_fixed(emb, _PQ_IDS, m=16)
-    assert len(books) == 16 and all(len(b) == 16 for b in books)
-    assert all(len(cw) == 4 for b in books for cw in b)
-    rows = encoded.select("vec_id", "__codes").collect()
-    assert all(len(r["__codes"]) == 16 for r in rows)
-    assert all(0 <= c < 16 for r in rows for c in r["__codes"])
-    # a codebook vector's best codeword in every subspace is itself
-    self_codes = {r["vec_id"]: list(r["__codes"]) for r in rows}
-    for rank, cid in enumerate(sorted(_PQ_IDS)):
-        assert self_codes[cid] == [rank] * 16, (cid, self_codes[cid])
-    again = {r["vec_id"]: list(r["__codes"]) for r in
-             pq_encode_fixed(emb, _PQ_IDS, m=16)[0]
-             .select("vec_id", "__codes").collect()}
-    assert self_codes == again
-
-
-def test_pq_adc_preranking_recall_floor_vs_bruteforce(spark, emb):
-    """Blind-spot guard the oracle CANNOT provide: the DuckDB oracle
-    replays the engine's own ADC formula, so a semantic regression
-    that degrades code quality (a bad scale factor, a broken slice
-    offset) could stay hash-green while ranking garbage. Pin recall
-    against brute-force truth instead: at rerank_factor=4 the ADC cut
-    must recover a healthy share of the true top-10 (measured 8/9/4
-    on queries 0/20/40 — floor set with slack below)."""
-    from sslr_spark.functions.similarity import pq_topk_fixed, topk_bruteforce
-
-    cw = list(range(100, 116))
-    total = 0
-    for q in (0, 20, 40):
-        t = {r.vec_id for r in topk_bruteforce(emb, q, 10).collect()}
-        p = {
-            r.vec_id
-            for r in pq_topk_fixed(
-                emb, cw, q, k=10, m=16, arrow=True
-            ).collect()
-        }
-        overlap = len(t & p)
-        total += overlap
-        assert overlap >= 3, (q, overlap)  # any single query stays sane
-    assert total >= 15  # ~half the true neighbors across the panel
-
-
-@pytest.mark.slow
-def test_pq_train_codebooks_encode_and_beat_fixed_distortion(spark, emb):
-    """pq_train (per-subspace distributed KMeans) is the production
-    codebook path: trained books must be well-formed, encode
-    deterministically through the shared kernel, and give LOWER mean
-    quantized distortion than codebooks grabbed from arbitrary rows —
-    the property that makes training worth running."""
-    from sslr_spark.functions.similarity import (
-        pq_encode_arrow,
-        pq_encode_with_books,
-        pq_train,
-    )
-
-    m, ks = 16, 16
-    trained = pq_train(emb, m=m, ks=ks, seed=7)
-    assert len(trained) == m and all(len(b) == ks for b in trained)
-    assert all(len(cw) == 4 for b in trained for cw in b)
-    enc = pq_encode_with_books(emb, trained)
-    rows = enc.select("vec_id", "__codes").collect()
-    assert all(len(r["__codes"]) == m for r in rows)
-    assert all(0 <= c < ks for r in rows for c in r["__codes"])
-    again = {
-        r["vec_id"]: list(r["__codes"])
-        for r in pq_encode_with_books(emb, trained)
-        .select("vec_id", "__codes").collect()
-    }
-    assert again == {r["vec_id"]: list(r["__codes"]) for r in rows}
-
-    def distortion(books, encoded):
-        # mean squared L2 between each unit vector's subspaces and its
-        # assigned codewords, via the books and codes (driver-side on
-        # the 500-row fixture)
-        import numpy as np
-
-        from sslr_spark.functions.similarity import _unit_quantized
-
-        bk = np.asarray(books)
-        total, n = 0.0, 0
-        for r in encoded.select("embedding", "__codes").collect():
-            u = np.asarray(_unit_quantized(r["embedding"])).reshape(m, -1)
-            cw = bk[np.arange(m), np.asarray(r["__codes"])]
-            total += float(((u - cw) ** 2).sum())
-            n += 1
-        return total / n
-
-    fixed_enc, fixed_books = pq_encode_arrow(
-        emb, list(range(100, 116)), m=m
-    )
-    assert distortion(trained, enc) < distortion(fixed_books, fixed_enc)
-
-
-@pytest.mark.slow
-def test_pq_arrow_encoder_equals_expression_encoder(spark, emb):
-    """The numpy/einsum production encoder must assign the SAME code
-    in every subspace as the JVM expression encoder (both compute the
-    reduced unit-normalized score rounded to 9 decimals)."""
-    from sslr_spark.functions.similarity import (
-        pq_encode_arrow,
-        pq_encode_fixed,
-        pq_topk_fixed,
-    )
-
-    ee = {r["vec_id"]: list(r["__codes"]) for r in
-          pq_encode_fixed(emb, _PQ_IDS, m=16)[0]
-          .select("vec_id", "__codes").collect()}
-    ea = {r["vec_id"]: list(r["__codes"]) for r in
-          pq_encode_arrow(emb, _PQ_IDS, m=16)[0]
-          .select("vec_id", "__codes").collect()}
-    assert ee == ea
-    # and the full query pipeline agrees end to end
-    a = pq_topk_fixed(emb, _PQ_IDS, 0, k=10, m=16, arrow=True).collect()
-    b = pq_topk_fixed(emb, _PQ_IDS, 0, k=10, m=16).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-@pytest.mark.slow
-def test_pq_full_rerank_equals_bruteforce(spark, emb):
-    """With the rerank cut covering the whole corpus, PQ's final
-    top-k must equal exact brute force — the ADC pre-rank only
-    prunes, the rerank restores exact ordering."""
-    from sslr_spark.functions.similarity import pq_topk_fixed, topk_bruteforce
-
-    n = emb.count()
-    got = pq_topk_fixed(
-        emb, _PQ_IDS, query_vec_id=0, k=10, m=16,
-        rerank_factor=(n // 10) + 1,
-    ).select("vec_id", "cos_sim").collect()
-    want = topk_bruteforce(emb, query_vec_id=0, k=10).collect()
-    assert [(r.vec_id, r.cos_sim) for r in got] == [
-        (r.vec_id, r.cos_sim) for r in want
-    ]
-
-
-@pytest.mark.slow
-def test_pq_recall_at_default_rerank(spark, emb):
-    """Recall sanity at the production cut (rerank_factor=4). This
-    corpus is nearly isotropic (top cosine 0.33, median 0.01 — the
-    true neighbors barely separate from the bulk), so PQ recall is
-    data-limited: measured 7/10 at m=16/ks=16; the bound asserts the
-    pre-rank is doing real work, not that this synthetic corpus is
-    PQ-friendly."""
-    from sslr_spark.functions.similarity import pq_topk_fixed, topk_bruteforce
-
-    got = {r.vec_id for r in pq_topk_fixed(
-        emb, _PQ_IDS, query_vec_id=0, k=10, m=16
-    ).collect()}
-    want = {r.vec_id for r in topk_bruteforce(emb, 0, k=10).collect()}
-    assert len(got & want) >= 5, (got, want)
-
-
 @pytest.mark.slow
 def test_prefix_jaccard_equals_plain_at_all_thresholds(spark, docs):
     """Prefix filtering (PPJoin) must be LOSSLESS: identical pair set
@@ -1539,25 +1380,3 @@ def test_prefix_candidates_wide_doc_no_overflow(spark):
     finally:
         spark.conf.unset("spark.sql.ansi.enabled")
     assert cand == {(1, 2)}
-
-
-@pytest.mark.slow
-def test_ivfpq_full_cover_equals_ivf(spark, emb):
-    """IVF-PQ with full probe + full-cover rerank must equal the
-    plain fixed-quantizer IVF at the same probe: the PQ pre-rank only
-    prunes; the rerank restores exact ordering within probed cells."""
-    from sslr_spark.functions.similarity import ivf_ann_fixed, ivfpq_topk_fixed
-
-    cents, cws = list(range(1, 9)), _PQ_IDS
-    n = emb.count()
-    a = [(r.vec_id, r.cos_sim) for r in ivfpq_topk_fixed(
-        emb, cents, cws, 0, k=10, m=16, n_probe=8,
-        rerank_factor=(n // 10) + 1,
-    ).collect()]
-    b = [(r.vec_id, r.cos_sim) for r in ivf_ann_fixed(
-        emb, cents, 0, k=10, n_probe=8,
-    ).collect()]
-    assert a == b
-    # pruned probe returns a bounded result from probed cells only
-    got = ivfpq_topk_fixed(emb, cents, cws, 0, k=10, m=16, n_probe=3)
-    assert got.count() == 10

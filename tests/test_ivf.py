@@ -2,10 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
-from pyspark.sql import functions as F
-
 from sslr_spark.functions.similarity import ivf_index, ivf_search, topk_bruteforce
 
 
@@ -81,163 +77,3 @@ def test_ivf_cells_partition_the_data(spark):
     assert centroids.count() == 5
 
 
-@pytest.mark.slow
-def test_ivfpq_residual_beats_raw_on_clustered_corpus(spark):
-    """Residual IVF-PQ calibration at EQUAL code budget (m=8, ks=16,
-    same cells, same probe rule): on a clustered corpus — the regime
-    real embeddings live in, and the one residual encoding exists for
-    — residual-trained codes (pq_train_residual over the KMeans-cell
-    residuals, RAW centers per the unit_centroids=False contract)
-    must recall at least as much of the exact top-10 as raw-trained
-    codes. On a structureless uniform corpus the two are statistically
-    indistinguishable (residual norms ~= vector norms), which is why
-    this fixture is synthesized with real cluster structure."""
-    import numpy as np
-
-    from sslr_spark.functions.similarity import (
-        dot_expr,
-        ivf_index,
-        ivfpq_topk_serve,
-        norm_expr,
-        pq_train,
-        pq_train_residual,
-    )
-
-    rng = np.random.RandomState(7)
-    dim, ncl, per = 64, 8, 64
-    centers = rng.randn(ncl, dim)
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    X = np.vstack([c + 0.35 * rng.randn(per, dim) for c in centers])
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
-        "vec_id long, embedding array<float>",
-    )
-
-    indexed, cents = ivf_index(emb, n_cells=8)
-    indexed = indexed.persist()
-    indexed.count()
-    cent_raw = [
-        [float(x) for x in r.centroid]
-        for r in sorted(cents.collect(), key=lambda r: r.cell)
-    ]
-    books_raw = pq_train(emb, m=8, ks=16)
-    books_res = pq_train_residual(indexed, cent_raw, m=8, ks=16)
-
-    def truth(qid, k=10):
-        q = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == qid).first()["embedding"]
-        ]
-        qdf = spark.createDataFrame([(q,)], "__qvec array<float>")
-        rows = (
-            emb.filter(F.col("vec_id") != qid)
-            .crossJoin(F.broadcast(qdf))
-            .select(
-                "vec_id",
-                F.round(
-                    F.try_divide(
-                        dot_expr("embedding", "__qvec"),
-                        norm_expr("embedding") * norm_expr("__qvec"),
-                    ),
-                    6,
-                ).alias("cs"),
-            )
-            .orderBy(F.col("cs").desc(), "vec_id")
-            .limit(k)
-            .collect()
-        )
-        return {r["vec_id"] for r in rows}
-
-    tot_raw = tot_res = 0
-    try:
-        for qid in (0, 97, 201, 333, 449):
-            t = truth(qid)
-            raw = {
-                r["vec_id"]
-                for r in ivfpq_topk_serve(
-                    indexed, cents, books_raw, qid,
-                    k=10, n_probe=3, rerank_factor=1, residual=False,
-                ).collect()
-            }
-            res = {
-                r["vec_id"]
-                for r in ivfpq_topk_serve(
-                    indexed, cents, books_res, qid,
-                    k=10, n_probe=3, rerank_factor=1,
-                    residual=True, unit_centroids=False,
-                ).collect()
-            }
-            tot_raw += len(raw & t)
-            tot_res += len(res & t)
-    finally:
-        indexed.unpersist()
-    # the calibration row: residual >= raw at equal budget
-    assert tot_res >= tot_raw, (tot_res, tot_raw)
-    # sanity floor: the 3-of-8-cell pruned scan at rerank_factor=1
-    # (no exact-rerank safety net) still recalls a solid fraction
-    assert tot_res >= 15, tot_res  # >= 30% across 5 queries
-
-
-@pytest.mark.slow
-def test_residual_encoders_expression_and_arrow_bit_identical(spark):
-    """The numpy residual encoder must produce byte-for-byte the same
-    codes as the expression encoder on every row — the determinism
-    contract both implement (per-term bigint quantization, identical
-    IEEE op sequence, first-match argmin)."""
-    from sslr_spark.functions.similarity import (
-        _codebooks_from_ids,
-        _unit_quantized,
-        ivf_index_fixed,
-        pq_encode_residual_arrow,
-        pq_encode_residual_fixed,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    )
-    indexed, cents = ivf_index_fixed(emb, [1, 2, 3, 4, 5, 6, 7, 8])
-    cent_units = [
-        _unit_quantized(r.centroid)
-        for r in sorted(cents.collect(), key=lambda r: r.cell)
-    ]
-    books, _ = _codebooks_from_ids(
-        emb, list(range(100, 116)), 16, "embedding", "vec_id"
-    )
-    expr = {
-        r["vec_id"]: list(r["__codes"])
-        for r in pq_encode_residual_fixed(
-            indexed, books, cent_units
-        ).select("vec_id", "__codes").collect()
-    }
-    arrow = {
-        r["vec_id"]: list(r["__codes"])
-        for r in pq_encode_residual_arrow(
-            indexed, books, cent_units
-        ).select("vec_id", "__codes").collect()
-    }
-    assert expr == arrow
-
-
-def test_ivfpq_residual_full_cover_equals_bruteforce(spark):
-    """With every cell probed and a rerank cut covering the whole
-    corpus, residual IVF-PQ must return exactly the brute-force
-    top-k (ids, scores, order) — the ADC pre-rank can then only
-    reorder candidates the exact-cosine rerank re-sorts, so any
-    disagreement means the residual pipeline LOST or duplicated a
-    candidate. Same equality contract as ivf_ann_fixed / plain PQ."""
-    from sslr_spark.functions.similarity import ivfpq_topk_residual
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).cache()
-    cents = [1, 2, 3, 4, 5, 6, 7, 8]
-    exact = topk_bruteforce(emb, 0, k=10).collect()
-    got = ivfpq_topk_residual(
-        emb, cents, list(range(100, 116)), query_vec_id=0,
-        k=10, m=16, n_probe=len(cents), rerank_factor=50,
-        arrow=True,
-    ).collect()
-    assert [(r.vec_id, r.cos_sim) for r in got] == [
-        (r.vec_id, r.cos_sim) for r in exact
-    ]

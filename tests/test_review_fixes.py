@@ -1,6 +1,6 @@
 """Regression tests for the round-2 review findings: layout-compat
-guard, bucket-clustered writes, scalable-probe type fallback,
-dup_clusters edge cases, SQL literal rendering, state blast radius.
+guard, bucket-clustered writes, scalable-probe type fallback, SQL
+literal rendering, state blast radius.
 """
 
 from __future__ import annotations
@@ -95,15 +95,6 @@ def test_key_at_offset_scalable_date_leading_key_falls_back(spark):
     assert key_at_offset_scalable(df, ["d", "seq"], 123) == key_at_offset(
         df, ["d", "seq"], 123
     )
-
-
-def test_dup_clusters_zero_iterations_warns_not_crashes(spark):
-    from sslr_spark.functions.dedup import dup_clusters
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
-    with pytest.warns(RuntimeWarning, match="without converging"):
-        out = dup_clusters(pairs, max_iterations=0).collect()
-    assert len(out) == 3  # initial labels returned
 
 
 def test_sql_literal_rendering():

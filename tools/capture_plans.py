@@ -7,8 +7,8 @@ cover the declared query keys (queries()[name]) plus the bench-only
 compositions (curation_neardup, incr_update slice, ...) that have no
 single query key. A plan is captured from the frame a name builds,
 and building it runs every job its construction needs: PQ codebook
-staging, the connected-components rounds of dup_clusters /
-dup_clusters_star, and every curation stage, each of which lands its
+staging, the connected-components rounds of dup_clusters_star,
+and every curation stage, each of which lands its
 survivors (so a curation capture shows the final projection over the
 last landed stage, not the stages themselves).
 """

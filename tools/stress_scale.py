@@ -298,8 +298,6 @@ def main() -> None:
         )
         ivfpq_topk_serve(
             indexed, cents, books, 0, k=10, n_probe=3, residual=True,
-            arrow=True,  # the production encoder; the expression
-            # form pays ~3 ms/(row*subspace) interpreted-lambda cost
         ).collect()
 
     # embedding-side curation pipeline (round-8 probe, VERDICT item
