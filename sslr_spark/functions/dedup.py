@@ -207,7 +207,11 @@ def _cap_hot_shingles(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:
     production failure mode of shingle joins. Dropping ubiquitous
     shingles is standard MinHash practice (they carry ~zero Jaccard
     signal: docs sharing only boilerplate are not near-dups)."""
-    hot = _hot_shingle_set(sh, max_doc_freq)
+    return _drop_hot(sh, _hot_shingle_set(sh, max_doc_freq))
+
+
+def _drop_hot(sh: DataFrame, hot: DataFrame | None) -> DataFrame:
+    """``sh`` without the shingles in ``hot`` (None: unchanged)."""
     if hot is None:
         return sh
     # The hot set is usually tiny (a handful of boilerplate shingles)
@@ -218,6 +222,17 @@ def _cap_hot_shingles(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:
     # shuffled anti-join when it isn't — exactly the guard, with no
     # extra driver-side count job.
     return sh.join(hot, "shingle", "left_anti")
+
+
+def _index_shingles(
+    df: DataFrame, text_col: str, n: int, max_doc_freq: int | None
+) -> tuple[DataFrame, DataFrame | None]:
+    """The shingle half of :func:`minhash_index`: ``df``'s (doc_id,
+    shingle) index with its own boilerplate set dropped, and that set
+    (None when capping is off)."""
+    raw = shingles(df, text_col, n)
+    hot = _hot_shingle_set(raw, max_doc_freq)
+    return _drop_hot(raw, hot), hot
 
 
 # ------------------------------------------------------------------
@@ -474,6 +489,54 @@ def _asymmetric_jaccard(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
+def _doc_arrays(sh: DataFrame) -> DataFrame:
+    """(doc_id, __arr): each document's distinct (doc_id, shingle)
+    rows packed into one array — the per-doc side of
+    :func:`_verify_jaccard`."""
+    return sh.groupBy("doc_id").agg(F.collect_list("shingle").alias("__arr"))
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    arrs_a: DataFrame,
+    arrs_b: DataFrame,
+    threshold: float,
+    a: str = "doc_a",
+    b: str = "doc_b",
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs — the one verify form of the
+    candidate generators (MinHash-LSH in a frame and against a corpus,
+    the PPJoin prefix filter). ``cand`` holds (``a``, ``b``) id pairs;
+    ``arrs_a`` / ``arrs_b`` hold (doc_id, __arr) with each doc's
+    DISTINCT shingles as an array. Returns (``a``, ``b``, jaccard)
+    with jaccard = round(|A∩B| / (|A|+|B|-|A∩B|), 6) >= threshold.
+
+    Shape (r11, guide §2.3/§2.4): two equi-joins of the pairs against
+    doc-count-sized array tables and an array intersection per pair —
+    the exploded (doc, shingle) index is never re-shuffled per verify,
+    so the cost is candidates x set size however few pairs banding or
+    prefixes left. Over distinct per-doc sets the intersection size
+    is the count a shingle-join aggregate would produce."""
+
+    def side(arrs: DataFrame, key: str, arr: str) -> DataFrame:
+        return arrs.select(
+            F.col("doc_id").alias(key), F.col("__arr").alias(arr)
+        )
+
+    ver = cand.join(side(arrs_a, a, "__arr_a"), a).join(
+        side(arrs_b, b, "__arr_b"), b
+    )
+    n_common = F.size(F.array_intersect("__arr_a", "__arr_b"))
+    jac = F.col("__nc") / (
+        F.size("__arr_a") + F.size("__arr_b") - F.col("__nc")
+    )
+    return (
+        ver.withColumn("__nc", n_common)
+        .select(a, b, F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def _t_ppm(threshold: float) -> int:
     """Integer ppm threshold with the one-ppm rounding-band slack (see
     :func:`prefix_candidates` — true J >= t - 1e-6 covers everything
@@ -632,17 +695,11 @@ def ngram_jaccard_pairs_prefix(
     aggregate — bounded partitions, no unpartitioned window, no
     million-row rank dimension to join.
 
-    Verify shape (r11, guide §2.3/§2.4): the per-doc ordered list the
-    prefix step already builds IS each doc's full shingle set, so the
-    exact verify joins each candidate pair against that bounded
-    per-doc ARRAY table (two equi-joins on a doc-count-sized frame)
-    and counts the intersection per pair with ``array_intersect`` —
-    replacing the previous candidate-x-shingles explode join that
-    re-shuffled the full inverted index per verify. n_common =
-    |array_intersect| over distinct per-doc sets — the same count the
-    explode join aggregated (equality-tested). The PPJoin length
-    filter inside :func:`prefix_candidates` prunes candidates before
-    any of this runs.
+    Verify: the per-doc ordered list the prefix step already builds
+    IS each doc's full shingle set, so its shingle array is the
+    per-doc side of :func:`_verify_jaccard`. The PPJoin length filter
+    inside :func:`prefix_candidates` prunes candidates before any of
+    this runs.
     """
     _entry_release()
     # ONE persisted frame serves the whole query: per-doc ordered
@@ -652,38 +709,11 @@ def ngram_jaccard_pairs_prefix(
     per_doc = _persist(
         _prefix_per_doc(shingles(df, text_col, n), max_shingle_doc_freq)
     )
-    cand = _prefix_pairs(per_doc, threshold)
-    arrays = per_doc.select(
-        "doc_id",
-        F.size("__ord").alias("__n"),
-        F.col("__ord.shingle").alias("__arr"),
-    )
-    ver = cand.join(
-        arrays.select(
-            F.col("doc_id").alias("key_a"),
-            F.col("__n").alias("n_a"),
-            F.col("__arr").alias("__arr_a"),
-        ),
-        "key_a",
-    ).join(
-        arrays.select(
-            F.col("doc_id").alias("key_b"),
-            F.col("__n").alias("n_b"),
-            F.col("__arr").alias("__arr_b"),
-        ),
-        "key_b",
-    )
-    n_common = F.size(F.array_intersect("__arr_a", "__arr_b"))
-    jac = F.col("__nc") / (F.col("n_a") + F.col("n_b") - F.col("__nc"))
-    return (
-        ver.withColumn("__nc", n_common)
-        .select(
-            F.col("key_a").alias("doc_a"),
-            F.col("key_b").alias("doc_b"),
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    arrays = per_doc.select("doc_id", F.col("__ord.shingle").alias("__arr"))
+    return _verify_jaccard(
+        _prefix_pairs(per_doc, threshold), arrays, arrays, threshold,
+        "key_a", "key_b",
+    ).withColumnsRenamed({"key_a": "doc_a", "key_b": "doc_b"})
 
 
 # ------------------------------------------------------------------
@@ -1033,15 +1063,21 @@ def lsh_band_buckets(
     )
 
 
-def lsh_candidates(
-    sh: DataFrame, n_hashes: int, n_bands: int, hash_mode: str = "portable"
+def _band_keys(
+    sh: DataFrame, n_hashes: int, n_bands: int, hash_mode: str
 ) -> DataFrame:
-    """Raw banded-LSH candidate pairs over a distinct (doc_id,
-    shingle) index — bucket collisions BEFORE any Jaccard
-    verification. Shared by :func:`minhash_lsh_pairs` (which verifies
-    them) and :func:`minhash_calibration` (which measures them)."""
-    sigs = minhash_signatures(sh, n_hashes, hash_mode)
-    buckets = lsh_band_buckets(sigs, n_bands, n_hashes // n_bands, hash_mode)
+    """(doc_id, band, sig) band keys of a distinct (doc_id, shingle)
+    index — the signing half of :func:`minhash_index`."""
+    return lsh_band_buckets(minhash_signatures(sh, n_hashes, hash_mode),
+                            n_bands, n_hashes // n_bands, hash_mode)
+
+
+def lsh_candidates(buckets: DataFrame) -> DataFrame:
+    """Raw banded-LSH candidate pairs: the (band, sig) self-join of
+    (doc_id, band, sig) band keys — bucket collisions BEFORE any
+    Jaccard verification, (doc_a, doc_b) with doc_a < doc_b. Shared
+    by :func:`minhash_lsh_pairs` (which verifies them) and
+    :func:`minhash_calibration` (which measures them)."""
     a, b = buckets.alias("a"), buckets.alias("b")
     return (
         a.join(
@@ -1086,7 +1122,7 @@ def minhash_calibration(
             shingles(df, text_col, shingle_n), max_shingle_doc_freq
         )
     )
-    cand = lsh_candidates(sh, n_hashes, n_bands, hash_mode)
+    cand = lsh_candidates(_band_keys(sh, n_hashes, n_bands, hash_mode))
     truth = (
         _pairwise_jaccard(sh, "doc_id")
         .filter(F.col("jaccard") >= threshold)
@@ -1196,59 +1232,38 @@ def minhash_lsh_pairs(
     verification join (:func:`_cap_hot_shingles`)."""
     _entry_release()  # previous pair-generation caches die here
     # The shingle inverted index feeds three consumers (signatures,
-    # both sides of the verification join) — persist it once instead
-    # of recomputing the explode+distinct per consumer.
-    sh = _persist(
-        _cap_hot_shingles(
-            shingles(df, text_col, shingle_n), max_shingle_doc_freq
-        )
+    # the candidate-doc prune, the verify arrays) — persist it once
+    # instead of recomputing the explode per consumer.
+    sh, _ = _index_shingles(df, text_col, shingle_n, max_shingle_doc_freq)
+    sh = _persist(sh)
+    return _lsh_pairs(
+        sh, _band_keys(sh, n_hashes, n_bands, hash_mode), jaccard_threshold
     )
-    # cand feeds the verification join AND the doc_b prune set below —
-    # persist the (small, LSH-bounded) pair list instead of replaying
-    # the band self-join per consumer
-    cand = _persist(lsh_candidates(sh, n_hashes, n_bands, hash_mode))
 
-    # exact-verify candidates with true Jaccard over shingle sets,
-    # computed on PER-DOC ARRAYS built only for docs that appear in a
-    # candidate pair (r11, guide §2.3/§2.4): a semi join prunes the
-    # index to candidate docs (the prune set is |candidate docs| rows
-    # — AQE broadcasts it when small, shuffled semi when not), one
-    # aggregate packs each such doc's distinct shingles into an array,
-    # and the pair's n_common is array_intersect over the two arrays.
-    # The previous form re-shuffled the full shingle index through two
-    # verify joins + a pair aggregate even when banding left a handful
-    # of candidates. n_common over distinct per-doc sets is identical
-    # (equality-tested); jaccard rounding convention unchanged.
+
+def _lsh_pairs(
+    sh: DataFrame, buckets: DataFrame, threshold: float
+) -> DataFrame:
+    """Verified in-frame pairs (doc_a, doc_b, jaccard) of a built
+    index: ``sh`` (doc_id, shingle) and its ``buckets`` (doc_id, band,
+    sig). The core of :func:`minhash_lsh_pairs`, which the streaming
+    ingest runs over its landed batch index."""
+    # cand feeds the verification join AND the candidate-doc prune set
+    # below — persist the (small, LSH-bounded) pair list instead of
+    # replaying the band self-join per consumer
+    cand = _persist(lsh_candidates(buckets))
+    # verify arrays only for docs that appear in a candidate pair
+    # (r11): a semi join prunes the index to candidate docs (the prune
+    # set is |candidate docs| rows — AQE broadcasts it when small,
+    # shuffled semi when not) before one aggregate packs each such
+    # doc's shingles; the full index never reaches the verify joins
     cand_docs = (
         cand.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    arrs = (
-        sh.join(cand_docs, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_list("shingle").alias("__arr"))
-    )
-    ver = cand.join(
-        arrs.select(
-            F.col("doc_id").alias("doc_a"), F.col("__arr").alias("__arr_a")
-        ),
-        "doc_a",
-    ).join(
-        arrs.select(
-            F.col("doc_id").alias("doc_b"), F.col("__arr").alias("__arr_b")
-        ),
-        "doc_b",
-    )
-    n_common = F.size(F.array_intersect("__arr_a", "__arr_b"))
-    jac = F.col("__nc") / (
-        F.size("__arr_a") + F.size("__arr_b") - F.col("__nc")
-    )
-    return (
-        ver.withColumn("__nc", n_common)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
+    arrs = _doc_arrays(sh.join(cand_docs, "doc_id", "left_semi"))
+    return _verify_jaccard(cand, arrs, arrs, threshold)
 
 
 # ------------------------------------------------------------------
@@ -1398,12 +1413,19 @@ def embedding_near_dup_pairs(
         raise ValueError(f"mode must be portable|fast, got {mode!r}")
     _entry_release()
     # one cached input feeds the guard's size scan AND both join
-    # sides — without it the guard costs a third full read
+    # sides — without it the guard costs a third full read. The cache
+    # is filled before the pair join plans: its join sides (and a
+    # caller's own join back onto ``df``) run as concurrent stages,
+    # and reading a lazy cache from both computes the same partitions
+    # twice (Spark logs "Block rdd_N_0 already exists"). The guard's
+    # size aggregate scans every partition, so it fills the cache.
     df = _persist(df)
     if max_block_size is not None:
         df = guard_oversize_blocks(
             df, block_col, max_block_size, "embedding_near_dup_pairs"
         )
+    else:
+        df.count()
     if mode == "fast":
         return _near_dup_pairs_numpy(df, vec_col, block_col, threshold)
     # per-row norm ONCE (n evaluations), not per pair (n^2): same
@@ -1881,14 +1903,51 @@ def minhash_index(
     rescanned at all. Appending a new accepted slice = union the new
     slice's index rows (the artifacts are row-per-(doc, shingle|band),
     so incremental index maintenance is a plain append)."""
-    raw = shingles(corpus, text_col, shingle_n)
-    hot = _hot_shingle_set(raw, max_shingle_doc_freq)
-    sh = raw.join(hot, "shingle", "left_anti") if hot is not None else raw
-    buckets = lsh_band_buckets(
-        minhash_signatures(sh, n_hashes, hash_mode),
-        n_bands, n_hashes // n_bands, hash_mode,
+    sh, hot = _index_shingles(
+        corpus, text_col, shingle_n, max_shingle_doc_freq
     )
-    return sh, buckets, hot
+    return sh, _band_keys(sh, n_hashes, n_bands, hash_mode), hot
+
+
+def _corpus_matches(
+    b_sh: DataFrame,
+    b_buckets: DataFrame,
+    c_sh: DataFrame,
+    c_buckets: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Verified (batch_id, corpus_id, jaccard) pairs between a batch
+    index and a corpus index, each a (doc_id, shingle) frame plus its
+    (doc_id, band, sig) band keys. The core of
+    :func:`incremental_minhash_dedup`, which the streaming ingest runs
+    over its landed batch index."""
+    cand = _persist(
+        b_buckets.alias("b")
+        .join(
+            c_buckets.alias("c"),
+            (F.col("b.band") == F.col("c.band"))
+            & (F.col("b.sig") == F.col("c.sig")),
+        )
+        .select(
+            F.col("b.doc_id").alias("batch_id"),
+            F.col("c.doc_id").alias("corpus_id"),
+        )
+        .distinct()
+    )
+    # prune the CORPUS shingle index to candidate docs before its
+    # verify arrays are built — the batch is tiny, so the LSH-bounded
+    # candidate set is too, while c_sh is the whole accepted corpus;
+    # without the prune every ingest aggregates the full corpus index.
+    # AQE picks broadcast vs shuffled semi join.
+    cands = cand.select(F.col("corpus_id").alias("doc_id")).distinct()
+    return _verify_jaccard(
+        cand,
+        _doc_arrays(b_sh),
+        _doc_arrays(c_sh.join(cands, "doc_id", "left_semi")),
+        threshold,
+        "batch_id",
+        "corpus_id",
+    )
 
 
 def incremental_minhash_dedup(
@@ -1931,86 +1990,26 @@ def incremental_minhash_dedup(
     the ingest pays only batch-side hashing plus the candidate
     joins."""
     _entry_release()  # previous pair-generation caches die here
-    rows_per_band = n_hashes // n_bands
     if corpus_index is not None:
-        if len(corpus_index) == 3:
-            c_sh, c_buckets, hot = corpus_index
-        else:  # legacy 2-tuple: no hot-shingle capping recorded
-            c_sh, c_buckets = corpus_index
-            hot = None
-        c_sh = _persist(c_sh)
+        # a 2-tuple is an index built with capping off (no hot set),
+        # e.g. the streaming ingest's stored shingle and bucket tables
+        c_sh, c_buckets, *hot = corpus_index
+        hot = hot[0] if hot else None
     elif corpus is not None:
-        raw = shingles(corpus, text_col, shingle_n)
-        hot = _hot_shingle_set(raw, max_shingle_doc_freq)
-        c_sh = _persist(
-            raw.join(hot, "shingle", "left_anti") if hot is not None else raw
+        c_sh, c_buckets, hot = minhash_index(
+            corpus, text_col, shingle_n, n_hashes, n_bands, hash_mode,
+            max_shingle_doc_freq,
         )
-        c_buckets = lsh_band_buckets(
-            minhash_signatures(c_sh, n_hashes, hash_mode),
-            n_bands, rows_per_band, hash_mode,
-        )
+        # signatures and the verify prune both read it; the cache
+        # serves c_buckets too (lookup is by plan, at execution)
+        c_sh = _persist(c_sh)
     else:
         raise ValueError("pass either corpus or corpus_index")
-    b_sh = shingles(batch, text_col, shingle_n)
-    if hot is not None:
-        b_sh = b_sh.join(hot, "shingle", "left_anti")
-    b_sh = _persist(b_sh)
-    b_buckets = lsh_band_buckets(
-        minhash_signatures(b_sh, n_hashes, hash_mode),
-        n_bands, rows_per_band, hash_mode,
+    b_sh = _persist(_drop_hot(shingles(batch, text_col, shingle_n), hot))
+    scored = _corpus_matches(
+        b_sh, _band_keys(b_sh, n_hashes, n_bands, hash_mode),
+        c_sh, c_buckets, jaccard_threshold,
     )
-    cand = _persist(
-        b_buckets.alias("b")
-        .join(
-            c_buckets.alias("c"),
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.sig") == F.col("c.sig")),
-        )
-        .select(
-            F.col("b.doc_id").alias("batch_id"),
-            F.col("c.doc_id").alias("corpus_id"),
-        )
-        .distinct()
-    )
-    # prune the CORPUS shingle index to candidate docs before the
-    # (corpus_id, shingle) verify shuffle — the batch is tiny, so the
-    # LSH-bounded candidate set is too, while c_sh is the whole
-    # accepted corpus; without the prune the verify join re-shuffles
-    # the full corpus index on every ingest. Inner-join semantics make
-    # the prune a no-op on results; AQE picks broadcast vs shuffled
-    # semi join. The per-doc size agg gets the same prune: only
-    # candidate corpus docs ever reach the jaccard expression.
-    cand_cids = cand.select("corpus_id").distinct()
-    cs_pruned = c_sh.join(
-        cand_cids.select(F.col("corpus_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    )
-    bs = b_sh.select(F.col("doc_id").alias("batch_id"), "shingle")
-    cs = cs_pruned.select(F.col("doc_id").alias("corpus_id"), "shingle")
-    inter = (
-        cand.join(bs, "batch_id")
-        .join(cs, ["corpus_id", "shingle"])
-        .groupBy("batch_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    zb = b_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nb")).select(
-        F.col("doc_id").alias("batch_id"), "nb"
-    )
-    zc = cs_pruned.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("nc")
-    ).select(F.col("doc_id").alias("corpus_id"), "nc")
-    jac = F.col("n_common") / (F.col("nb") + F.col("nc") - F.col("n_common"))
-    scored = (
-        inter.join(zb, "batch_id")
-        .join(zc, "corpus_id")
-        .select(
-            "batch_id", "corpus_id", F.round(jac, 6).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-    from pyspark.sql import Window
-
     # best match per batch doc; candidate sets are LSH-bounded, so the
     # window partitions hold a handful of rows each
     w = Window.partitionBy("batch_id").orderBy(
@@ -2359,15 +2358,11 @@ def incremental_containment_dedup(
     itself.
     """
     _entry_release()
-    raw = shingles(corpus, text_col, shingle_n)
-    hot = _hot_shingle_set(raw, max_shingle_doc_freq)
-    c_sh = _persist(
-        raw.join(hot, "shingle", "left_anti") if hot is not None else raw
+    c_sh, hot = _index_shingles(
+        corpus, text_col, shingle_n, max_shingle_doc_freq
     )
-    b_sh = shingles(batch, text_col, shingle_n)
-    if hot is not None:
-        b_sh = b_sh.join(hot, "shingle", "left_anti")
-    b_sh = _persist(b_sh)
+    c_sh = _persist(c_sh)
+    b_sh = _persist(_drop_hot(shingles(batch, text_col, shingle_n), hot))
     inter = (
         b_sh.select(F.col("doc_id").alias("batch_id"), "shingle")
         .join(
@@ -2390,8 +2385,6 @@ def incremental_containment_dedup(
         .select("batch_id", "corpus_id", F.round(cont, 6).alias("containment"))
         .filter(F.col("containment") >= threshold)
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("batch_id").orderBy(
         F.col("containment").desc(), F.col("corpus_id")
     )

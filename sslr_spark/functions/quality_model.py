@@ -140,6 +140,27 @@ def _gate_frames(scored: DataFrame, by: str) -> tuple[DataFrame, DataFrame]:
     return scored, hist
 
 
+def _cumulative(hist: DataFrame, by: str) -> DataFrame:
+    """The gate histogram with, per row, ``__cum`` (docs scoring at or
+    above its score_bp in its group) and ``__n`` (the group's size).
+    Both sum ``__c`` over frames of one ordered ``by`` window, so they
+    share one Window operator over one exchange of the bounded
+    histogram — the group sizes need no second aggregate joined
+    back."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(by).orderBy(F.col("score_bp").desc())
+    up_to = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    whole = w.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return hist.select(
+        "*",
+        F.sum("__c").over(up_to).alias("__cum"),
+        F.sum("__c").over(whole).alias("__n"),
+    )
+
+
 def score_bp_quantile_gate(
     scored: DataFrame, keep_fraction: float, by: str
 ) -> DataFrame:
@@ -150,24 +171,9 @@ def score_bp_quantile_gate(
     window over the bounded histogram, broadcast thresholds. Any
     integer score works (negative log-prob basis points included);
     generic so model-score and LM-perplexity gates cannot drift."""
-    from pyspark.sql import Window
-
     scored, hist = _gate_frames(scored, by)
-    # group sizes sum the histogram instead of re-counting the scored
-    # frame: identical totals, and the scoring pipeline (the expensive
-    # feature/LM extraction feeding ``scored``) runs one less full
-    # pass — the histogram's exchange serves both consumers (r11,
-    # guide §2.4; previously hist, sizes and the final join each
-    # recomputed ``scored`` from the corpus)
-    sizes = hist.groupBy(by).agg(F.sum("__c").alias("__n"))
-    w = (
-        Window.partitionBy(by)
-        .orderBy(F.col("score_bp").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     thr = (
-        hist.withColumn("__cum", F.sum("__c").over(w))
-        .join(sizes, by)
+        _cumulative(hist, by)
         .filter(
             F.col("__cum")
             >= F.ceil(F.lit(float(keep_fraction)) * F.col("__n"))
@@ -384,18 +390,7 @@ def lm_perplexity_buckets(
         )
     )
     scored, hist = _gate_frames(scored, by)
-    # same histogram-sum derivation as score_bp_quantile_gate (one
-    # less full LM-scoring pass; identical totals)
-    sizes = hist.groupBy(by).agg(F.sum("__c").alias("__n"))
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy(by)
-        .orderBy(F.col("score_bp").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = hist.withColumn("__cum", F.sum("__c").over(w)).join(sizes, by)
-    thr = cum.groupBy(by).agg(
+    thr = _cumulative(hist, by).groupBy(by).agg(
         F.max(
             F.when(
                 F.col("__cum") >= F.ceil(F.col("__n") / F.lit(3.0)),

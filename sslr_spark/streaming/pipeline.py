@@ -433,22 +433,26 @@ def streaming_neardup_ingest(
     """Continuous near-dup-deduped ingest: every arriving micro-batch
     is collapsed within itself, probed against the ACCEPTED corpus's
     persisted MinHash index, and only genuinely new documents land —
-    the streaming composition of :func:`incremental_minhash_dedup` +
-    :func:`minhash_index`.
+    the streaming composition of :func:`minhash_lsh_pairs` ->
+    :func:`incremental_minhash_dedup` -> :func:`minhash_index`, with
+    the same results.
 
-    Per micro-batch (epoch):
+    Per micro-batch (epoch), the batch is shingled and signed ONCE:
+    its (doc_id, shingle) index and (doc_id, band, sig) band keys are
+    landed in the batch's own cache scope, and each step below reads
+    a slice of them through the cores of those three functions:
 
     1. in-batch collapse: LSH-verified pairs, min-id keeper (the
        ``doc_b`` side of each verified pair drops — conservative on
        transitive chains, same policy as the batch pair queries);
-    2. corpus probe: survivors run against the stored index tables —
-       batch-side hashing plus candidate joins only, the accepted
-       corpus itself is NEVER rescanned (its shingles/band-buckets
-       were persisted when its docs were accepted);
-    3. landing: survivors append to ``accepted_table`` and their index
-       rows (shingles + band buckets) append to the index tables —
-       index maintenance is a plain append because the artifacts are
-       row-per-(doc, shingle|band).
+    2. corpus probe: the survivors' slice runs against the stored
+       index tables — candidate joins and verification only, the
+       accepted corpus itself is NEVER rescanned (its shingles and
+       band keys were stored when its docs were accepted);
+    3. landing: fresh docs append to ``accepted_table`` and their
+       slice of the index (shingles + band keys) appends to the index
+       tables — index maintenance is a plain append because the
+       artifacts are row-per-(doc, shingle|band).
 
     Exactly-once for CHECKPOINTED replays (the crash-recovery path,
     where a replayed epoch carries the same id and file set): all
@@ -482,18 +486,20 @@ def streaming_neardup_ingest(
     the smallest segments, so per-call rewrite is bounded by the new
     batches plus the smallest segments and total maintenance I/O over
     the stream's life amortizes to O(corpus · log corpus) — safe to
-    leave on for very long-lived ingests. The offline
-    :func:`compact_neardup_index` full rewrite remains available to
-    collapse everything to one base between restarts.
+    leave on for very long-lived ingests. Between restarts,
+    ``compact_neardup_index_incremental(target, max_segments=1)`` is
+    the offline full rewrite that collapses everything to one base.
 
     Returns the StreamingQuery. Accepted reads carry the ``__epoch``
     partition column (drop it downstream if unwanted).
     """
     from sslr_spark.functions.dedup import (
+        _band_keys,
+        _corpus_matches,
+        _lsh_pairs,
         cache_scope,
-        incremental_minhash_dedup,
-        minhash_index,
-        minhash_lsh_pairs,
+        land,
+        shingles,
     )
 
     sh_table = f"{index_table}_shingles"
@@ -533,8 +539,6 @@ def streaming_neardup_ingest(
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.take(1):
             return
-        batch = batch_df.persist()
-        fresh = None
         index_ready = _has_committed_data(bk_table)
         if int(epoch_id) == 0 and index_ready:
             msg = (
@@ -549,82 +553,68 @@ def streaming_neardup_ingest(
             import warnings
 
             warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        # cache_scope: the batch owns its caches, so the in-batch pair
-        # generator's shingle cache lives until the table writes below
-        # have read it (incremental_minhash_dedup does not free it on
-        # entry) and is freed when the batch ends
-        try:
-            with cache_scope():
-                ep = F.lit(int(epoch_id))
-                pairs = minhash_lsh_pairs(
-                    batch, text_col, shingle_n, n_hashes, n_bands,
-                    jaccard_threshold, hash_mode,
+        # cache_scope: the batch owns every block it stores — the
+        # batch itself, its index, the drop set, the pair generators'
+        # caches — and frees them when the batch ends
+        with cache_scope():
+            ep = F.lit(int(epoch_id))
+            batch = land(batch_df)  # every step below reads this
+            # the batch is shingled and signed ONCE; the in-batch
+            # pairs, the corpus probe and the new index rows all read
+            # slices of these two landings (shingles are per-row and
+            # signatures per-doc, so a slice equals re-indexing the
+            # sliced docs)
+            sh = land(shingles(batch, text_col, shingle_n))
+            bk = land(_band_keys(sh, n_hashes, n_bands, hash_mode))
+            # in-batch collapse: the doc_b side of each verified pair
+            drop = _lsh_pairs(sh, bk, jaccard_threshold).select(
+                F.col("doc_b").alias("doc_id")
+            )
+            if index_ready:
+                # live partitions only: after a compaction crash,
+                # folded epochs can coexist on disk with the sealed
+                # segment holding the same rows — the manifest says
+                # which copy counts
+                live = live_epoch_filter(
+                    load_segment_manifest(target, index_table),
+                    exclude_epoch=int(epoch_id),
                 )
-                losers = pairs.select(
-                    F.col("doc_b").alias("doc_id")
-                ).distinct()
-                survivors = batch.join(losers, "doc_id", "left_anti")
-                if index_ready:
-                    # live partitions only: after a compaction crash,
-                    # folded epochs can coexist on disk with the
-                    # sealed segment holding the same rows — the
-                    # manifest says which copy counts
-                    live = live_epoch_filter(
-                        load_segment_manifest(target, index_table),
-                        exclude_epoch=int(epoch_id),
-                    )
-                    c_sh = (
-                        target.read(sh_table).filter(live).drop("__epoch")
-                    )
-                    c_bk = (
-                        target.read(bk_table).filter(live).drop("__epoch")
-                    )
-                    flags = incremental_minhash_dedup(
-                        survivors,
-                        text_col=text_col,
-                        shingle_n=shingle_n,
-                        n_hashes=n_hashes,
-                        n_bands=n_bands,
-                        jaccard_threshold=jaccard_threshold,
-                        hash_mode=hash_mode,
-                        corpus_index=(c_sh, c_bk),
-                    )
-                    fresh = survivors.join(
-                        flags.filter(~F.col("near_dup")).select("doc_id"),
-                        "doc_id",
-                        "left_semi",
-                    ).persist()
-                else:
-                    fresh = survivors.persist()
-                new_sh, new_bk, _ = minhash_index(
-                    fresh, text_col, shingle_n, n_hashes, n_bands, hash_mode
+                near = _corpus_matches(
+                    sh.join(drop, "doc_id", "left_anti"),
+                    bk.join(drop, "doc_id", "left_anti"),
+                    target.read(sh_table).filter(live).drop("__epoch"),
+                    target.read(bk_table).filter(live).drop("__epoch"),
+                    jaccard_threshold,
                 )
-                target.replace_partitions(
-                    accepted_table, fresh.withColumn("__epoch", ep), "__epoch"
+                drop = drop.unionByName(
+                    near.select(F.col("batch_id").alias("doc_id"))
                 )
-                target.replace_partitions(
-                    sh_table, new_sh.withColumn("__epoch", ep), "__epoch"
-                )
-                target.replace_partitions(
-                    bk_table, new_bk.withColumn("__epoch", ep), "__epoch"
-                )
-            if (
-                compact_every
-                and int(epoch_id) > 0
-                and int(epoch_id) % compact_every == 0
+            # stored once: each of the three writes below reads it
+            drop = land(drop.distinct())
+            for table, rows in (
+                (accepted_table, batch),
+                (sh_table, sh),
+                (bk_table, bk),
             ):
-                # runs after this epoch's table writes but BEFORE the
-                # streaming checkpoint commits the epoch — replay stays
-                # safe because compaction converges under replay and
-                # keep_last leaves the replayable epochs separately
-                # addressable
-                compact_neardup_index_incremental(
-                    target, index_table, accepted_table
+                target.replace_partitions(
+                    table,
+                    rows.join(drop, "doc_id", "left_anti")
+                    .withColumn("__epoch", ep),
+                    "__epoch",
                 )
-        finally:
-            if fresh is not None:
-                fresh.unpersist()
-            batch.unpersist()
+        if (
+            compact_every
+            and int(epoch_id) > 0
+            and int(epoch_id) % compact_every == 0
+        ):
+            # runs after this epoch's table writes but BEFORE the
+            # streaming checkpoint commits the epoch — replay stays
+            # safe because compaction converges under replay and
+            # keep_last leaves the replayable epochs separately
+            # addressable
+            compact_neardup_index_incremental(
+                target, index_table, accepted_table
+            )
 
     writer = stream.writeStream.foreachBatch(apply_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -730,108 +720,6 @@ def read_accepted(
     )
 
 
-def compact_neardup_index(
-    target: ParquetDatabase,
-    index_table: str = "__neardup_index",
-    accepted_table: str = "accepted",
-    keep_last: int = 2,
-) -> int:
-    """Fold ALL live partitions — sealed segments and every foldable
-    epoch — into ONE fresh base segment: the OFFLINE full rewrite
-    (cost ∝ corpus) that keeps a long-running ingest from
-    accumulating one tiny partition per trigger (a year of 1-minute
-    triggers is ~500k directories; every index load lists them all).
-    For bounded in-stream maintenance use
-    :func:`compact_neardup_index_incremental`.
-
-    ``keep_last`` recent epochs stay untouched: Structured Streaming
-    only ever replays the most recent uncommitted epoch, and a
-    replayed epoch relies on its own partition staying separately
-    addressable (the exactly-once design excludes it from the index
-    load — folding it into the base would make replays self-match
-    into data loss).
-
-    Crash-safe the same way as the incremental compactor: the new
-    base is written under a FRESH negative id from the manifest's
-    ``next_seg`` counter and stays INVISIBLE until the single atomic
-    manifest commit; superseded segments and folded epochs are GCd
-    only after. No LIVE partition is ever rewritten in place, so a
-    crash at any point leaves readers (:func:`live_epoch_filter` /
-    :func:`read_accepted`) on exactly the pre-call state, and a
-    re-run overwrites the orphan and converges. (A pre-manifest
-    legacy layout gets the no-op bootstrap manifest first, adopting
-    a legacy ``-1`` base — and the union is built distinct, which
-    also converges any duplicate rows a pre-manifest crash left.)
-
-    Returns the number of epochs folded.
-    """
-    sh_table = f"{index_table}_shingles"
-    bk_table = f"{index_table}_buckets"
-    tables = [t for t in (accepted_table, sh_table, bk_table)
-              if target.table_exists(t)]
-    if not tables:
-        return 0
-    # the reference for committed epochs must be the bucket table
-    # (written last each epoch, so its max epoch is the newest FULLY
-    # committed one).  If it is absent (e.g. only `accepted`
-    # materialized on this target) there is no committed-epoch
-    # reference — skip compaction rather than cut from a table whose
-    # max epoch may be half-written.
-    if bk_table not in tables:
-        return 0
-    m = load_segment_manifest(target, index_table)
-    if m is None:
-        m = {"folded_upto": -1, "segments": {}, "next_seg": -2}
-        legacy = target.read(bk_table).filter(F.col("__epoch") == -1)
-        n = legacy.count()
-        if n:
-            m["segments"][-1] = n
-        # bootstrap commit BEFORE any write: see the incremental
-        # compactor — without a manifest every partition is live, so
-        # a first-write crash would expose the orphan
-        _write_segment_manifest(target, index_table, m)
-    all_parts = sorted(
-        r[0]
-        for r in target.read(bk_table).select("__epoch").distinct().collect()
-        if r[0] is not None
-    )
-    live_set = {
-        e for e in all_parts
-        if (e >= 0 and e > m["folded_upto"]) or e in m["segments"]
-    }
-    epochs = sorted(e for e in live_set if e >= 0)
-    fold = epochs[:-keep_last] if keep_last > 0 else epochs
-    old_segs = sorted(e for e in live_set if e < 0)
-    if not fold and len(old_segs) <= 1:
-        return 0  # already (at most) one base, nothing new to fold
-    seg_id = m["next_seg"]
-    m["next_seg"] -= 1
-    for t in tables:
-        base = (
-            target.read(t)
-            .filter(F.col("__epoch").isin(fold + old_segs))
-            .withColumn("__epoch", F.lit(seg_id))
-            .distinct()
-        )
-        target.replace_partitions(t, base, "__epoch")
-    rows = (
-        target.read(bk_table).filter(F.col("__epoch") == seg_id).count()
-    )
-    m["segments"] = {seg_id: rows}
-    if fold:
-        m["folded_upto"] = max(max(fold), m["folded_upto"])
-    _write_segment_manifest(target, index_table, m)
-    # GC after the manifest commit: folded epochs, superseded
-    # segments, and any dead partition a crashed run left behind
-    live_now = {seg_id} | {
-        e for e in all_parts if e >= 0 and e > m["folded_upto"]
-    }
-    gc = sorted(set(all_parts) - live_now)
-    for t in tables:
-        target.drop_partitions(t, "__epoch", gc)
-    return len(fold)
-
-
 def compact_neardup_index_incremental(
     target: ParquetDatabase,
     index_table: str = "__neardup_index",
@@ -840,8 +728,20 @@ def compact_neardup_index_incremental(
     max_segments: int = 8,
 ) -> dict:
     """Size-tiered INCREMENTAL compaction of the streaming near-dup
-    tables (VERDICT r3 task #5 — the bounded in-stream maintenance the
-    full rewrite above is not).
+    tables (VERDICT r3 task #5): the bounded in-stream maintenance
+    that keeps a long-running ingest from accumulating one tiny
+    partition per trigger (a year of 1-minute triggers is ~500k
+    directories; every index load lists them all).
+    ``max_segments=1`` is the OFFLINE full rewrite (cost ∝ corpus):
+    every live partition past ``keep_last`` folds into ONE base
+    segment, each row written once.
+
+    ``keep_last`` recent epochs stay untouched: Structured Streaming
+    only ever replays the most recent uncommitted epoch, and a
+    replayed epoch relies on its own partition staying separately
+    addressable (the exactly-once design excludes it from the index
+    load — folding it into a segment would make replays self-match
+    into data loss).
 
     One call:
 
@@ -906,13 +806,12 @@ def compact_neardup_index_incremental(
         """Write the union of partitions ``ids`` as partition
         ``seg_id`` across all three tables; returns bucket rows.
 
-        Built DISTINCT (matching the full compactor's convention):
-        a crash of the pre-manifest (round-3) full compactor could
-        leave a legacy -1 base plus its not-yet-dropped source
-        epochs, and the bootstrap adopts both copies as live —
-        without the dedupe here those duplicates would survive every
-        incremental fold forever, since folds only ever union live
-        partitions."""
+        Built DISTINCT: a crash of the pre-manifest (round-3) full
+        compactor could leave a legacy -1 base plus its
+        not-yet-dropped source epochs, and the bootstrap adopts both
+        copies as live — without the dedupe here those duplicates
+        would survive every fold forever, since folds only ever union
+        live partitions."""
         for t in tables:
             part = (
                 target.read(t)
@@ -927,17 +826,28 @@ def compact_neardup_index_incremental(
             .count()
         )
 
+    # the size-tiered merge below would take every segment, the new
+    # fold segment included: seal the folded epochs and the old
+    # segments together instead, so each row is written once
+    merge_all = (
+        bool(fold) and max_segments <= 1 and len(segs) + 1 > max_segments
+    )
     if fold:
+        old = sorted(segs) if merge_all else []
         seg_id = m["next_seg"]
         m["next_seg"] -= 1
-        rows = _seal(fold, seg_id)
+        rows = _seal(fold + old, seg_id)
+        for p in old:
+            del segs[p]
         segs[seg_id] = rows
         stats["folded_epochs"] = len(fold)
+        if merge_all:
+            stats["merged_segments"] = len(old) + 1
         stats["rewritten_rows"] += rows
         m["folded_upto"] = max(fold)
-        dead += fold
+        dead += fold + old
     # size-tiered merge: collapse the smallest (excess + 1) segments
-    if len(segs) > max_segments:
+    if len(segs) > max_segments and not merge_all:
         pick = sorted(segs, key=lambda k: (segs[k], k))[
             : len(segs) - max_segments + 1
         ]

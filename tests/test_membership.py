@@ -207,109 +207,3 @@ def test_incremental_dedup_property_matches_exact_join(
     for i, t in enumerate(batch_texts):
         assert got[1000 + i] == (t in corpus_set), repr(t)
 
-
-def test_incremental_minhash_dedup_catches_edits(spark):
-    """Exact dedup misses edited re-crawls; the MinHash sibling must
-    flag them with the right corpus match."""
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "completely different words about spark and parquet"),
-        ],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [
-            # doc 1 with one word changed: near-dup, not exact
-            (10, "the quick brown fox leaps over the lazy dog today"),
-            # unrelated
-            (11, "nothing here resembles anything in the corpus at all"),
-            # exact copy of doc 2: self-evident near-dup at 1.0
-            (12, "completely different words about spark and parquet"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        # 16 bands x 1 row: collision prob 1-(1-J)^16, ~0.9999 at the
-        # edited doc's J=0.45 (the default 4x4 banding targets higher-J
-        # regimes and would legitimately miss it ~84% of the time)
-        for r in D.incremental_minhash_dedup(
-            batch, corpus, jaccard_threshold=0.1, n_bands=16
-        ).collect()
-    }
-    assert len(out) == 3
-    assert out[10]["near_dup"] and out[10]["match_id"] == 1
-    assert 0.1 <= out[10]["jaccard"] < 1.0
-    assert not out[11]["near_dup"] and out[11]["match_id"] is None
-    assert out[12]["near_dup"] and out[12]["match_id"] == 2
-    assert out[12]["jaccard"] == 1.0
-
-
-def test_incremental_minhash_prebuilt_index_roundtrip(spark, tmp_path):
-    """The corpus index persists to parquet and reloads: results with
-    the reloaded index equal the direct-corpus computation, with no
-    corpus rescan in the ingest path."""
-    from sslr_spark.functions.dedup import (
-        incremental_minhash_dedup,
-        minhash_index,
-    )
-    from sslr_spark.sources.parquet import ParquetDatabase
-
-    corpus = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(40)],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100, "alpha beta gamma delta 7 epsilon zeta"),
-         (101, "totally unrelated content with different words here")],
-        "doc_id long, text string",
-    )
-    db = ParquetDatabase(spark, str(tmp_path / "idx"))
-    sh, buckets, hot = minhash_index(corpus)
-    assert hot is None  # no cap requested
-    db.overwrite("c_sh", sh)
-    db.overwrite("c_buckets", buckets)
-
-    direct = sorted(
-        map(tuple, incremental_minhash_dedup(
-            batch, corpus, jaccard_threshold=0.3
-        ).collect())
-    )
-    via_index = sorted(
-        map(tuple, incremental_minhash_dedup(
-            batch,
-            jaccard_threshold=0.3,
-            corpus_index=(db.read("c_sh"), db.read("c_buckets")),
-        ).collect())
-    )
-    assert direct == via_index
-    assert any(r[0] == 100 and r[1] for r in direct)  # exact copy flagged
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="corpus or corpus_index"):
-        incremental_minhash_dedup(batch)
-
-
-def test_incremental_minhash_caps_both_sides(spark):
-    """The boilerplate cap derives from the corpus and drops hot
-    shingles from the BATCH too — corpus-only capping would deflate
-    the batch-side set size and miss near-dups."""
-    boiler = "terms of service apply to all content here"
-    corpus = spark.createDataFrame(
-        [(i, f"{boiler} unique body {i} alpha beta") for i in range(20)],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100, f"{boiler} unique body 7 alpha gamma")],
-        "doc_id long, text string",
-    )
-    out = D.incremental_minhash_dedup(
-        batch, corpus, jaccard_threshold=0.3, n_bands=16,
-        max_shingle_doc_freq=10,
-    ).collect()[0]
-    # shared informative content: 'unique body 7 alpha' shingles; with
-    # symmetric capping J is high enough to flag; corpus-only capping
-    # would dilute nb with ~8 boilerplate shingles and drop J below 0.3
-    assert out["near_dup"] and out["match_id"] == 7

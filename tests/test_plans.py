@@ -96,6 +96,27 @@ def test_minhash_candidates_have_no_cross_join(spark):
     release_caches()
 
 
+def test_quantile_gates_take_group_sizes_from_the_window(spark):
+    """The quantile gates read each group's size off the cumulative
+    window's own ``by`` partitioning: the only join left in the
+    optimized plan is the broadcast of the thresholds back onto the
+    scored docs. A second aggregate for the sizes, joined back onto
+    the window, costs extra Spark jobs per gate."""
+    import re
+
+    from sslr_spark.functions.quality_model import (
+        lm_perplexity_buckets,
+        quality_quantile_gate,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    gate = quality_quantile_gate(
+        docs, 0.5, weights=[0.02, -0.005, 1.0, 0.1], bias=-2.0
+    )
+    for df in (gate, lm_perplexity_buckets(docs)):
+        assert len(re.findall(r"\bJoin\b", optimized_of(df))) == 1
+
+
 def test_text_quality_stays_jvm_side_single_stage(spark):
     """Text quality metrics are pure JVM column expressions — the
     whole pipeline must be one narrow Project over the scan: no Python

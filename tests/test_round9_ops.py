@@ -5,12 +5,10 @@
 - blocklist_filter: C4-style bad-word gate — broadcast-join wordlist,
   integer-ppm budget, one exchange.
 - mojibake_flags: encoding screen — narrow codegen, zero shuffle.
-- minhash_lsh_pairs / ngram_jaccard_pairs_prefix /
-  incremental_minhash_dedup now prune the verify join's big side to
-  candidate docs before the (doc, shingle) shuffle — at 100 TB the
-  unpruned join re-shuffles the FULL shingle index even when banding
-  leaves a handful of candidates. Results are inner-join-invariant;
-  the plan tests pin the semi-join prune.
+- ngram_jaccard_pairs_prefix verifies over per-doc shingle arrays,
+  never a re-shuffle of the exploded (doc, shingle) index (the
+  MinHash generators' candidate-doc prune is pinned in
+  test_minhash.py).
 """
 from __future__ import annotations
 
@@ -164,16 +162,6 @@ def test_mojibake_zero_shuffle(spark):
 # candidate-pruned verify joins
 # ------------------------------------------------------------------
 
-def test_minhash_verify_prunes_sb_side(corpus):
-    """The (doc_b, shingle) verify join's big side must pass through a
-    semi join against the candidate doc_b set — without it the full
-    shingle index shuffles per verification."""
-    with D.cache_scope():
-        df = D.minhash_lsh_pairs(corpus, hash_mode="fast")
-        txt = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "LeftSemi" in txt
-
-
 def test_prefix_verify_uses_array_intersect(corpus):
     """r11: the prefix verify counts intersections over the per-doc
     ordered ARRAYS the prefix step already built (two doc-count-sized
@@ -184,59 +172,6 @@ def test_prefix_verify_uses_array_intersect(corpus):
         df = D.ngram_jaccard_pairs_prefix(corpus, threshold=0.8)
         txt = df._jdf.queryExecution().optimizedPlan().toString()
         assert "array_intersect" in txt
-
-
-def test_incremental_minhash_prunes_corpus_side(spark, corpus):
-    batch = spark.createDataFrame(
-        [(10, "intro words here " + " ".join(f"tok{i}" for i in range(40)))],
-        "doc_id long, text string",
-    )
-    with D.cache_scope():
-        df = D.incremental_minhash_dedup(batch, corpus, hash_mode="fast")
-        txt = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "LeftSemi" in txt
-        out = {r.doc_id: r for r in df.collect()}
-    assert out[10].near_dup and out[10].match_id == 1
-
-
-def test_pruned_pairs_equal_unpruned_semantics(spark):
-    """Inner-join invariance: the pruned verify join returns exactly
-    the pairs the docstring contract promises — cross-checked against
-    a driver-side exact Jaccard on a corpus WITH true near-dups."""
-    import itertools
-
-    base = ["alpha beta gamma delta epsilon zeta eta theta iota kappa"]
-    rows = []
-    for i in range(8):
-        words = base[0].split()
-        if i % 2:
-            words[i % len(words)] = f"mut{i}"
-        rows.append((i, " ".join(words + [f"tail{i % 3}", "common", "suffix"])))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def sh_set(t):
-        w = t.split()
-        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)}
-
-    texts = dict(rows)
-    expected = set()
-    for a, b in itertools.combinations(sorted(texts), 2):
-        A, B = sh_set(texts[a]), sh_set(texts[b])
-        if A and B:
-            j = len(A & B) / len(A | B)
-            if round(j, 6) >= 0.3:
-                expected.add((a, b))
-    with D.cache_scope():
-        got = {
-            (r.doc_a, r.doc_b)
-            for r in D.minhash_lsh_pairs(
-                docs, jaccard_threshold=0.3, n_hashes=16, n_bands=8
-            ).collect()
-        }
-    # banding at 8 bands x 2 rows catches essentially everything at
-    # j>=0.3 on this corpus; verification must then equal exact Jaccard
-    assert got <= expected
-    assert expected and got  # non-degenerate
 
 
 # ------------------------------------------------------------------

@@ -342,7 +342,7 @@ def test_compact_neardup_index_folds_old_epochs(spark, tmp_path):
     base; dedup behavior is unchanged afterwards and a second
     compaction is a no-op."""
     from sslr_spark.streaming.pipeline import (
-        compact_neardup_index,
+        compact_neardup_index_incremental,
         streaming_neardup_ingest,
     )
 
@@ -370,9 +370,14 @@ def test_compact_neardup_index_folds_old_epochs(spark, tmp_path):
         ).parquet(src_dir)
         run()
 
-    folded = compact_neardup_index(target, keep_last=2)
-    assert folded == 1  # epoch 0 folded, epochs 1-2 kept
-    assert compact_neardup_index(target, keep_last=2) == 0  # idempotent
+    def full():  # the offline full rewrite
+        return compact_neardup_index_incremental(
+            target, keep_last=2, max_segments=1
+        )
+
+    stats = full()
+    assert stats["folded_epochs"] == 1  # epoch 0 folded, epochs 1-2 kept
+    assert full()["folded_epochs"] == 0  # idempotent
 
     acc = target.read("accepted")
     assert {r["doc_id"] for r in acc.collect()} == {1, 2, 3}
@@ -594,6 +599,8 @@ def test_incremental_compaction_dedupes_legacy_crash_dupes(
         target, keep_last=2, max_segments=1
     )
     assert stats["folded_epochs"] == 2 and stats["merged_segments"] == 2
+    # one seal of epochs 0-1 plus the base: each row written once
+    assert stats["rewritten_rows"] == 10
     acc = P.read_accepted(target)
     assert acc.count() == 20  # epochs 0..3, no double-counted rows
     assert acc.select("doc_id").distinct().count() == 20
@@ -607,15 +614,19 @@ def test_incremental_compaction_dedupes_legacy_crash_dupes(
 @pytest.mark.slow
 def test_compaction_state_machine_property(spark, tmp_path_factory):
     """Hypothesis state machine over the compactor: any interleaving
-    of epoch arrivals, incremental compactions, FULL compactions, and
-    the two crash modes (die before the manifest commit / die before
-    GC) must keep the live view exactly equal to everything ever
-    ingested — no loss, no duplicates — at every step."""
+    of epoch arrivals, incremental compactions, FULL compactions
+    (``max_segments=1``), and the two crash modes (die before the
+    manifest commit / die before GC) must keep the live view exactly
+    equal to everything ever ingested — no loss, no duplicates — at
+    every step."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
+    from functools import partial
     from unittest import mock
 
     import sslr_spark.streaming.pipeline as P
+
+    full = partial(P.compact_neardup_index_incremental, max_segments=1)
 
     OPS = ["epoch", "epoch", "compact", "full",
            "crash_manifest", "crash_gc",
@@ -651,11 +662,11 @@ def test_compaction_state_machine_property(spark, tmp_path_factory):
                 P.compact_neardup_index_incremental(target, keep_last=2,
                                                     max_segments=3)
             elif op == "full":
-                P.compact_neardup_index(target, keep_last=2)
+                full(target, keep_last=2)
             elif op in ("crash_manifest", "full_crash_manifest"):
                 fn = (P.compact_neardup_index_incremental
                       if op == "crash_manifest"
-                      else P.compact_neardup_index)
+                      else full)
                 real = P._write_segment_manifest
 
                 # let the no-op BOOTSTRAP commit through (it changes
@@ -677,7 +688,7 @@ def test_compaction_state_machine_property(spark, tmp_path_factory):
             elif op in ("crash_gc", "full_crash_gc"):
                 fn = (P.compact_neardup_index_incremental
                       if op == "crash_gc"
-                      else P.compact_neardup_index)
+                      else full)
                 with mock.patch.object(
                     ParquetDatabase, "drop_partitions",
                     lambda *a, **kw: None,

@@ -8,9 +8,9 @@ one at a time — under the two maintenance policies:
   every epoch (the in-stream default since round 4) — folds the new
   epoch into a sealed segment and size-tiered-merges the smallest
   segments only when over ``max_segments``;
-- ``full``: the offline :func:`compact_neardup_index` run at the same
-  cadence (the pre-round-4 in-stream behavior) — every call rewrites
-  the whole base.
+- ``full``: the offline full rewrite (``max_segments=1``) run at the
+  same cadence (the pre-round-4 in-stream behavior) — every call
+  rewrites the whole base.
 
 Prints one JSON line with total and worst-single-call rewritten rows
 for each policy. The point is the SHAPE: full-rewrite grows
@@ -65,12 +65,9 @@ def main() -> None:
     n_epochs = int(sys.argv[1]) if len(sys.argv) > 1 else 32
     rows = int(sys.argv[2]) if len(sys.argv) > 2 else 50
 
-    from pyspark.sql import functions as F
-
     from sslr_spark.session import get_spark
     from sslr_spark.sources.parquet import ParquetDatabase
     from sslr_spark.streaming.pipeline import (
-        compact_neardup_index,
         compact_neardup_index_incremental,
     )
 
@@ -94,17 +91,12 @@ def main() -> None:
     full_total, full_max = 0, 0
     for e in range(n_epochs):
         _mk_epoch(spark, full, e, rows)
-        folded = compact_neardup_index(full, keep_last=2)
-        if folded:
-            # the whole corpus lands in one freshly sealed segment
-            # (negative id, GC leaves exactly one live) per call
-            wrote = (
-                full.read("__neardup_index_buckets")
-                .filter(F.col("__epoch") < 0)
-                .count()
-            )
-            full_total += wrote
-            full_max = max(full_max, wrote)
+        # the whole live corpus lands in one freshly sealed segment
+        s = compact_neardup_index_incremental(
+            full, keep_last=2, max_segments=1
+        )
+        full_total += s["rewritten_rows"]
+        full_max = max(full_max, s["rewritten_rows"])
 
     shutil.rmtree(TMP, ignore_errors=True)
     corpus = n_epochs * rows
