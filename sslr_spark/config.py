@@ -46,8 +46,10 @@ class Config:
     version_column: str = "xmin"  # CDC version/watermark column
     # Chunk sizes size Spark partitions, not OFFSET/LIMIT pages:
     update_chunk_size: int = 1000
-    delete_chunk_size: int = 1000  # rows per coarse hash-diff bucket
-    min_delete_chunk_size: int = 100  # rows per fine (repair-unit) bucket
+    # No effect (the one-pass diff has one bucket level, sized by
+    # min_delete_chunk_size); loaded so reference configs still load.
+    delete_chunk_size: int = 1000
+    min_delete_chunk_size: int = 100  # rows per diff (repair-unit) bucket
     throttle_percentage: int = 80
     full_copy_threshold: float = 0.5
     # Phase toggles (reference internal/config.go:27-28, defaults true;

@@ -129,17 +129,35 @@ def bucket_fingerprints(
     keeps the whole computation map-side-combinable.
     """
     _bucket, _kh = _hash_fns(hash_mode)
+    return _fingerprints(df, _bucket(pk_cols, n_buckets), _kh(pk_cols))
+
+
+def _fingerprints(df: DataFrame, bucket, kh) -> DataFrame:
+    """(bucket, cnt, fp): the row count and bit_xor of the key hash
+    ``kh`` per value of the ``bucket`` column expression."""
     return (
-        df.select(
-            _bucket(pk_cols, n_buckets).alias("bucket"),
-            _kh(pk_cols).alias("kh"),
-        )
+        df.select(bucket.alias("bucket"), kh.alias("kh"))
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.expr("bit_xor(kh)").alias("fp"),
         )
     )
+
+
+def _fingerprint_diff(s: DataFrame, t: DataFrame) -> DataFrame:
+    """Full-outer join of source and target fingerprints, kept where
+    they differ (a bucket missing on one side differs too)."""
+    joined = s.withColumnsRenamed({"cnt": "s_cnt", "fp": "s_fp"}).join(
+        t.withColumnsRenamed({"cnt": "t_cnt", "fp": "t_fp"}),
+        on="bucket",
+        how="full_outer",
+    )
+    diff = ~(
+        F.col("s_cnt").eqNullSafe(F.col("t_cnt"))
+        & F.col("s_fp").eqNullSafe(F.col("t_fp"))
+    )
+    return joined.filter(diff)
 
 
 def mismatched_buckets(
@@ -150,16 +168,7 @@ def mismatched_buckets(
     (J4: the source/target hash comparison as an equi-join)."""
     s = bucket_fingerprints(source_df, pk_cols, n_buckets, hash_mode)
     t = bucket_fingerprints(target_df, pk_cols, n_buckets, hash_mode)
-    joined = s.withColumnsRenamed({"cnt": "s_cnt", "fp": "s_fp"}).join(
-        t.withColumnsRenamed({"cnt": "t_cnt", "fp": "t_fp"}),
-        on="bucket",
-        how="full_outer",
-    )
-    diff = ~(
-        F.col("s_cnt").eqNullSafe(F.col("t_cnt"))
-        & F.col("s_fp").eqNullSafe(F.col("t_fp"))
-    )
-    return joined.filter(diff).select("bucket")
+    return _fingerprint_diff(s, t).select("bucket")
 
 
 def repair_buckets(
@@ -241,31 +250,12 @@ def sync_deletes_partitioned(
     # bucket assignment must match the STORED layout's hash mode on
     # both sides; only the ephemeral fingerprint hash follows hash_mode
     bmode = stored_bucket_hash(target, table)
+    _bucket, _ = _hash_fns(bmode)
     _, _kh = _hash_fns(hash_mode)
-    s_fp = (
-        with_bucket(src, pk_cols, n_buckets, bmode)
-        .select(F.col(BUCKET_COL).alias("bucket"), _kh(pk_cols).alias("kh"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.expr("bit_xor(kh)").alias("fp"))
-    )
+    s_fp = _fingerprints(src, _bucket(pk_cols, n_buckets), _kh(pk_cols))
     # the stored partition column prunes the target scan to key columns
-    t_fp = (
-        tgt.select(
-            F.col(BUCKET_COL).cast("long").alias("bucket"),
-            _kh(pk_cols).alias("kh"),
-        )
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.expr("bit_xor(kh)").alias("fp"))
-    )
-    joined = s_fp.withColumnsRenamed({"cnt": "s_cnt", "fp": "s_fp"}).join(
-        t_fp.withColumnsRenamed({"cnt": "t_cnt", "fp": "t_fp"}), "bucket", "full_outer"
-    )
-    bad = joined.filter(
-        ~(
-            F.col("s_cnt").eqNullSafe(F.col("t_cnt"))
-            & F.col("s_fp").eqNullSafe(F.col("t_fp"))
-        )
-    ).select("bucket", "s_cnt")
+    t_fp = _fingerprints(tgt, F.col(BUCKET_COL).cast("long"), _kh(pk_cols))
+    bad = _fingerprint_diff(s_fp, t_fp).select("bucket", "s_cnt")
     if throttle is None:
         from sslr_spark.throttle import Throttle
 

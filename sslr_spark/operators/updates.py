@@ -29,6 +29,7 @@ deduplicated (last version wins) before the merge.
 
 from __future__ import annotations
 
+import contextlib
 import logging
 from dataclasses import dataclass
 
@@ -234,8 +235,6 @@ def merge_upsert_partitioned(
     pk_cols: list[str],
     n_buckets: int,
     full_rewrite_fraction: float = 0.5,
-    broadcast_key_bytes: int = 64 << 20,
-    aligned_rewrite_bytes: int = 2 << 30,
 ) -> None:
     """Partition-pruned merge against a bucket-partitioned target:
     only the partitions containing updated keys are read (pruned scan)
@@ -246,19 +245,12 @@ def merge_upsert_partitioned(
     Scattered-update guard: when the batch touches more than
     ``full_rewrite_fraction`` of the buckets, pruning buys nothing —
     the merge would rewrite most of the table anyway, plus pay the
-    dynamic-overwrite bookkeeping per partition. That case rewrites
-    the whole table instead, and HOW is size-gated: tables over
-    ``aligned_rewrite_bytes`` whose key set fits under
-    ``broadcast_key_bytes`` (estimated from a sampled max row width)
-    use the shuffle-avoiding aligned write (a broadcast
-    anti-join keeps the target read's bucket alignment —
-    overwrite_partitioned_aligned) because at cluster scale moving
-    the whole table through a shuffle is the dominant cost; smaller
-    tables (and giant key batches) take the one-shot clustered
-    rewrite, which measures faster locally. The design point remains
-    CDC batches clustered on key ranges (measured sublinear at the
-    100x probe); the guard keeps the pathological scattered-keys
-    case near full-copy cost."""
+    dynamic-overwrite bookkeeping per partition. That case takes one
+    shuffled anti-join and one clustered whole-table rewrite
+    (:func:`_write_bucketed`). The design point remains CDC batches
+    clustered on key ranges (measured sublinear at the 100x probe);
+    the guard keeps the pathological scattered-keys case near
+    full-copy cost."""
     from sslr_spark.operators.deletes import (
         BUCKET_COL,
         stored_bucket_hash,
@@ -281,84 +273,103 @@ def merge_upsert_partitioned(
         if not affected:
             return
         tgt = target.read(table, with_meta=True)
+        scattered = len(affected) > full_rewrite_fraction * n_buckets
+        if not scattered:
+            tgt = tgt.filter(F.col(BUCKET_COL).isin(affected))  # pruning
         keys = upd.select(*pk_cols).distinct()
-        if len(affected) > full_rewrite_fraction * n_buckets:
-            # Gate the FORCED broadcast on estimated bytes, not row
-            # count: a 1M-key set of ~1KB composite string PKs is a
-            # gigabyte — row count alone would wave it through and
-            # OOM the driver. Width is sampled from the persisted
-            # slice (bounded collect). The big-table check is pure
-            # metadata — it goes FIRST, so a small table (the common
-            # case, which always takes the clustered rewrite) never
-            # pays the key-count and width-sample driver jobs that
-            # only the aligned path's byte gate consumes (r11,
-            # guide §1.2 — don't compute things you throw away).
-            big_table = (
-                hasattr(target, "table_bytes")
-                and target.table_bytes(table) >= aligned_rewrite_bytes
-            )
-            key_bytes = None
-            if big_table and hasattr(target, "overwrite_partitioned_aligned"):
-                n_keys = keys.count()  # cheap: slice is persisted
-                sample = keys.limit(100).collect()
-                row_bytes = max(  # conservative: max sampled width
-                    (sum(len(str(v)) for v in r) + 16 for r in sample),
-                    default=16,
-                )
-                key_bytes = n_keys * row_bytes
-            if (
-                key_bytes is not None
-                and key_bytes <= broadcast_key_bytes
-            ):
-                # Shuffle-avoiding path for BIG tables: a BROADCAST
-                # anti-join is narrow, so the kept rows retain the
-                # bucket alignment of the partitioned-dir read and
-                # the rewrite needs no full-table shuffle — at
-                # cluster scale, moving the whole table over the
-                # network is the dominant cost. Alignment is the
-                # correctness condition — a shuffled anti-join would
-                # scatter buckets across tasks and explode the file
-                # count — hence the hard broadcast. Below the byte
-                # threshold the one-shot clustered rewrite wins
-                # instead (interleaved A/B at sf0.1: 1.4-2.9 s vs
-                # 1.9-4.2 s — local shuffles are memory-speed, so the
-                # aligned path's second write job costs more than the
-                # shuffle it saves).
-                kept = tgt.join(
-                    F.broadcast(keys), on=pk_cols, how="left_anti"
-                )
-                target.overwrite_partitioned_aligned(
-                    table, kept, upd.select(*kept.columns), BUCKET_COL,
-                    n_buckets=n_buckets, bucket_hash=bmode,
-                )
-                return
-            # Giant scattered batch (keys too big to broadcast): pay
-            # the shuffled anti-join + one clean clustered rewrite.
-            kept = tgt.drop(BUCKET_COL).join(keys, on=pk_cols, how="left_anti")
-            out = kept.unionByName(upd.drop(BUCKET_COL).select(*kept.columns))
-            sp = int(
-                target.spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            target.overwrite_partitioned(
-                table, with_bucket(out, pk_cols, n_buckets, bmode), BUCKET_COL,
-                n_buckets=n_buckets,
-                files_per_bucket=max(1, sp // n_buckets),
-                bucket_hash=bmode,
-                sort_cols=pk_cols,
-            )
-            return
-        kept = (
-            tgt.filter(F.col(BUCKET_COL).isin(affected))  # partition pruning
-            .drop(BUCKET_COL)
-            .join(keys, on=pk_cols, how="left_anti")
-        )
+        kept = tgt.drop(BUCKET_COL).join(keys, on=pk_cols, how="left_anti")
         out = kept.unionByName(upd.drop(BUCKET_COL).select(*kept.columns))
-        target.replace_partitions(
-            table, with_bucket(out, pk_cols, n_buckets, bmode), BUCKET_COL,
-            sort_cols=pk_cols,
-        )
+        if scattered:
+            _write_bucketed(target, table, out, pk_cols, n_buckets, bmode)
+        else:
+            target.replace_partitions(
+                table, with_bucket(out, pk_cols, n_buckets, bmode),
+                BUCKET_COL, sort_cols=pk_cols,
+            )
     finally:
         upd.unpersist()
+
+
+def _write_bucketed(
+    target: ParquetDatabase,
+    table: str,
+    df: DataFrame,
+    pk_cols: list[str],
+    n_buckets: int,
+    bucket_hash: str,
+) -> None:
+    """Write ``df`` as the whole of ``table`` in the bucket-partitioned
+    layout — the one writer behind the full copy, the scattered-batch
+    rewrite and a stream's first batch. Each bucket is salted across
+    ``shuffle.partitions // n_buckets`` writers, so a bucket count
+    below the session's task slots still uses the cluster, and rows
+    sort by key inside each file."""
+    from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
+
+    sp = int(target.spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    target.overwrite_partitioned(
+        table, with_bucket(df, pk_cols, n_buckets, bucket_hash), BUCKET_COL,
+        n_buckets=n_buckets,
+        files_per_bucket=max(1, sp // n_buckets),
+        bucket_hash=bucket_hash,
+        sort_cols=pk_cols,
+    )
+
+
+def upsert_batch(
+    target: ParquetDatabase,
+    table: str,
+    updates: DataFrame,
+    pk_cols: list[str],
+    version_col: str = "xmin",
+    n_buckets: int | None = None,
+    bucket_hash: str = "portable",
+    throttle=None,
+) -> int:
+    """Apply one CDC change slice to ``table``; returns its row count.
+
+    The one upsert path of :func:`sync_updates` and of the stream
+    (``stream_incremental_sync``): collapse to the latest version per
+    key, persist once, count (under ``throttle``: the count scans the
+    source), then apply by the STORED layout (``effective_buckets``):
+    bucketed -> :func:`merge_upsert_partitioned`; in-place targets
+    (``apply_upsert``) -> DELETE+INSERT / MERGE without the version
+    column, which they never store (reference
+    internal/updates.go:117-124); else :func:`merge_upsert` and an
+    atomic overwrite. A missing table is created from the slice in
+    the configured layout (``n_buckets`` / ``bucket_hash``)."""
+    from sslr_spark.operators.deletes import effective_buckets
+
+    updates = dedup_latest_version(updates, pk_cols, version_col).persist()
+    try:
+        with throttle or contextlib.nullcontext():
+            n = updates.count()
+        if not n:
+            return 0
+        n_buckets = effective_buckets(target, table, n_buckets)
+        exists = target.table_exists(table)
+        if n_buckets and exists:
+            merge_upsert_partitioned(
+                target, table, updates, pk_cols, n_buckets
+            )
+        elif n_buckets:
+            _write_bucketed(
+                target, table, updates, pk_cols, n_buckets, bucket_hash
+            )
+        elif hasattr(target, "apply_upsert"):
+            applied = updates.drop(version_col)
+            if not exists and hasattr(target, "create_table"):
+                target.create_table(table, applied.schema)
+            target.apply_upsert(table, applied, pk_cols)
+        elif exists:
+            target.overwrite(
+                table, merge_upsert(target.read(table), updates, pk_cols)
+            )
+        else:
+            target.overwrite(table, updates)
+    finally:
+        updates.unpersist()
+    return n
 
 
 def plan_version_batches(
@@ -436,12 +447,11 @@ def sync_updates(
     ``n_buckets`` set, the target is maintained bucket-partitioned and
     merges rewrite only touched partitions (the scale path).
 
-    ``strip_version`` drops the version column from written payloads —
-    JDBC targets never store the source's transaction id, exactly as
-    the reference strips xmin from copied columns
-    (internal/updates.go:117-124). In-place-capable targets (adapters
-    exposing ``apply_upsert``) are applied with DELETE+INSERT of the
-    changed keys instead of read-merge-overwrite.
+    ``strip_version`` drops the version column from the full copy's
+    payload — JDBC targets never store the source's transaction id,
+    exactly as the reference strips xmin from copied columns
+    (internal/updates.go:117-124). Incremental batches apply through
+    :func:`upsert_batch`.
 
     ``merge_on_read`` applies incremental batches as upsert-log
     APPENDS (append_upsert_log) instead of merges — the small-batch
@@ -488,7 +498,6 @@ def sync_updates(
             probe=probe,
         )
     drop_col = version_col if strip_version else None
-    in_place = hasattr(target, "apply_upsert")
 
     if rng.full_table:
         if merge_on_read and target.table_exists(upsert_log_table(table)):
@@ -505,8 +514,8 @@ def sync_updates(
                 target.set_copy_pending(table)
             target.drop(upsert_log_table(table))
         if n_buckets:
-            from sslr_spark.operators.copy import filtered_source as _fs
-            from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
+            from sslr_spark.operators.copy import CopyProgressReporter
+            from sslr_spark.operators.deletes import BUCKET_COL
 
             # layout migration is loud: a resync of a table stored
             # unpartitioned rewrites it into the bucket-partitioned
@@ -518,33 +527,18 @@ def sync_updates(
                 and (target.layout_meta(table) or {}).get("n_buckets")
                 != n_buckets
             ):
-                import logging
-
                 logging.getLogger("sslr_spark").warning(
                     "full copy migrates target %r to the bucket-"
                     "partitioned layout (%d buckets, %s=N directories)",
                     table, n_buckets, BUCKET_COL,
                 )
-            df = with_bucket(
-                _fs(source_df, where), pk_cols, n_buckets, bucket_hash
-            )
-            # salt the initial copy if the bucket count is below the
-            # session's task slots, so the big write uses the cluster
-            sp = int(
-                target.spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            from sslr_spark.operators.copy import CopyProgressReporter
-
             with throttle:  # the copy job reads the source end-to-end
                 with CopyProgressReporter(
                     target.spark, rng.source_rows, table
                 ):
-                    target.overwrite_partitioned(
-                        table, df, BUCKET_COL,
-                        n_buckets=n_buckets,
-                        files_per_bucket=max(1, sp // n_buckets),
-                        bucket_hash=bucket_hash,
-                        sort_cols=pk_cols,
+                    _write_bucketed(
+                        target, table, filtered_source(source_df, where),
+                        pk_cols, n_buckets, bucket_hash,
                     )
             # footer-exact, no count job over the just-written table
             rows = target.table_rows(table)
@@ -558,13 +552,6 @@ def sync_updates(
                 )
         state_store.set(TableState(table, rng.end_version, where or ""))
         return rows
-
-    # Incremental path: honor the STORED layout — an existing
-    # unpartitioned table merges unpartitioned even if config asks for
-    # buckets (the flip migrates on the next full copy, not here).
-    from sslr_spark.operators.deletes import effective_buckets
-
-    n_buckets = effective_buckets(target, table, n_buckets)
 
     slice_df = filtered_source(source_df, where).filter(
         F.col(version_col) >= F.lit(rng.start_version)
@@ -581,36 +568,28 @@ def sync_updates(
         batch = slice_df.filter(
             (F.col(version_col) >= F.lit(lo)) & (F.col(version_col) <= F.lit(hi))
         )
-        updates = dedup_latest_version(batch, pk_cols, version_col)
-        if drop_col and drop_col in updates.columns:
-            updates = updates.drop(drop_col)
-        # Persist across the count AND the merge: the dedup window
-        # re-scans the source slice, and without the cache the merge
-        # recomputes it from the parquet scan (measured ~2 s/batch at
-        # sf0.1 — the count and the merge each paid the full
-        # slice-scan + window). The merge's own with_bucket persist is
-        # a narrow child of this cache, so it fills from memory.
-        updates = updates.persist()
-        try:
-            with throttle:  # the count scans the source slice
-                n = updates.count()
-            if n:
-                if merge_on_read:
+        if merge_on_read:
+            updates = dedup_latest_version(
+                batch, pk_cols, version_col
+            ).persist()
+            try:
+                with throttle:  # the count scans the source slice
+                    n = updates.count()
+                if n:
                     append_upsert_log(
                         target, table, updates, pk_cols, version_col
                     )
-                elif n_buckets:
-                    merge_upsert_partitioned(
-                        target, table, updates, pk_cols, n_buckets
-                    )
-                elif in_place:
-                    target.apply_upsert(table, updates, pk_cols)
-                else:
-                    merged = merge_upsert(target.read(table), updates, pk_cols)
-                    target.overwrite(table, merged)
-                total += n
-        finally:
-            updates.unpersist()
+            finally:
+                updates.unpersist()
+        else:
+            # incremental merges honor the STORED layout: an existing
+            # unpartitioned table merges unpartitioned even if config
+            # asks for buckets (the flip migrates on the next full copy)
+            n = upsert_batch(
+                target, table, batch, pk_cols, version_col,
+                n_buckets, bucket_hash, throttle,
+            )
+        total += n
         # watermark advances to the end of the fully applied batch (T2)
         state_store.set(TableState(table, hi, where or ""))
     if not batches:
@@ -625,11 +604,9 @@ def sync_updates(
     ):
         # maintenance after the state commits: a crash mid-compaction
         # loses no sync progress (same placement as file compaction)
-        compact_upsert_log(
-            target, table, pk_cols, version_col,
-            n_buckets=n_buckets, bucket_hash=bucket_hash,
-        )
+        compact_upsert_log(target, table, pk_cols, version_col)
     return total
+
 
 
 # ------------------------------------------------------------------
@@ -755,8 +732,7 @@ def read_merged(
 
     Broadcast gate: the anti-join's broadcast is FORCED only when the
     log's estimated key bytes (footer row count x a bounded-sample
-    key width, same gate as merge_upsert_partitioned) fit under
-    ``broadcast_key_bytes``. The compaction invariant bounds log ROWS
+    key width) fit under ``broadcast_key_bytes``. The compaction invariant bounds log ROWS
     at a fraction of the base — at 100 TB that is billions of keys,
     far past driver capacity, and a forced hint would disable Spark's
     own size check. Above the gate the anti-join is left plain and
@@ -859,8 +835,6 @@ def compact_upsert_log(
     table: str,
     pk_cols: list[str],
     version_col: str = "xmin",
-    n_buckets: int | None = None,
-    bucket_hash: str = "portable",
 ) -> dict:
     """Fold the log into the base and truncate it.
 
@@ -870,8 +844,7 @@ def compact_upsert_log(
     debt, not base size. At 100 TB with a 10%-row log clustered on
     recent keys, this folds a handful of buckets instead of moving
     the whole table through a write. Unpartitioned bases keep the
-    whole-table staged-rename swap (with ``n_buckets`` set that swap
-    doubles as the migration INTO the bucketed layout).
+    whole-table staged-rename swap.
 
     Crash contract, whole-table path: the overwrite is the atomic
     staged-rename swap; a crash BEFORE the swap leaves the old base +
@@ -952,17 +925,6 @@ def compact_upsert_log(
                 out.unpersist()
         finally:
             log_b.unpersist()
-    elif n_buckets:
-        from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
-
-        merged = read_merged(target, table, pk_cols, version_col)
-        target.overwrite_partitioned(
-            table,
-            with_bucket(merged, pk_cols, n_buckets, bucket_hash),
-            BUCKET_COL,
-            n_buckets=n_buckets,
-            bucket_hash=bucket_hash,
-        )
     else:
         merged = read_merged(target, table, pk_cols, version_col)
         target.overwrite(table, merged)

@@ -50,6 +50,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sslr_spark.sources.parquet import ParquetDatabase, read_layout, write_layout
+
 
 def merge_condition(pk_cols: list[str], target_alias: str = "t",
                     source_alias: str = "s") -> str:
@@ -145,8 +147,6 @@ class DeltaDatabase:
         bucket_hash: str | None = None,
         sort_cols: list[str] | None = None,
     ) -> None:
-        from sslr_spark.sources.parquet import ParquetDatabase
-
         df = ParquetDatabase._cluster_by_partition(
             df, partition_col, files_per_bucket, n_buckets, sort_cols
         )
@@ -157,18 +157,9 @@ class DeltaDatabase:
             .save(self.path(table))
         )
         if n_buckets:
-            import json
-
-            # underscore-prefixed: ignored by scans AND by VACUUM
-            with open(
-                os.path.join(self.path(table), "_sslr_layout.json"), "w"
-            ) as fh:
-                json.dump(
-                    {"partition_col": partition_col,
-                     "n_buckets": int(n_buckets),
-                     "bucket_hash": bucket_hash or "portable"},
-                    fh,
-                )
+            write_layout(
+                self.path(table), partition_col, n_buckets, bucket_hash
+            )
 
     def replace_partitions(
         self, table: str, df: DataFrame, partition_col: str,
@@ -205,13 +196,7 @@ class DeltaDatabase:
             )
 
     def layout_meta(self, table: str) -> dict | None:
-        import json
-
-        p = os.path.join(self.path(table), "_sslr_layout.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
+        return read_layout(self.path(table))
 
     def append(self, table: str, df: DataFrame) -> None:
         df.write.format("delta").mode("append").save(self.path(table))

@@ -15,12 +15,44 @@ rename is the dependency-free local equivalent.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+LAYOUT_MARKER = "_sslr_layout.json"
+
+
+def write_layout(
+    table_dir: str, partition_col: str, n_buckets: int,
+    bucket_hash: str | None = None,
+) -> None:
+    """Record a bucket-partitioned layout in ``table_dir``'s
+    ``_sslr_layout.json`` marker (``_``-prefixed: ignored by Spark
+    scans and by Delta's VACUUM)."""
+    with open(os.path.join(table_dir, LAYOUT_MARKER), "w") as fh:
+        json.dump(
+            {
+                "partition_col": partition_col,
+                "n_buckets": int(n_buckets),
+                "bucket_hash": bucket_hash or "portable",
+            },
+            fh,
+        )
+
+
+def read_layout(table_dir: str) -> dict | None:
+    """The layout marker :func:`write_layout` left in ``table_dir``, or
+    None for unpartitioned and pre-marker layouts."""
+    p = os.path.join(table_dir, LAYOUT_MARKER)
+    if not os.path.exists(p):
+        return None
+    with open(p) as fh:
+        return json.load(fh)
 
 
 class ParquetDatabase:
@@ -62,21 +94,9 @@ class ParquetDatabase:
     # -- write ---------------------------------------------------------
     def overwrite(self, table: str, df: DataFrame) -> None:
         """Atomically replace ``table`` with ``df`` (stage + swap)."""
-        final = self.path(table)
-        stage = os.path.join(self.root, f".stage-{table}-{uuid.uuid4().hex}")
-        old = os.path.join(self.root, f".old-{table}-{uuid.uuid4().hex}")
+        stage = self._stage_dir(table)
         df.write.mode("overwrite").parquet(stage)
-        try:
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(stage, final)
-        except BaseException:
-            # roll back: restore the previous committed table
-            if not os.path.exists(final) and os.path.exists(old):
-                os.rename(old, final)
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
+        self._swap(stage, self.path(table), table)
 
     def overwrite_partitioned(
         self,
@@ -100,84 +120,29 @@ class ParquetDatabase:
         salts the write clustering to raise write parallelism when the
         bucket count is below the cluster's task slots (at the cost of
         that many files per bucket)."""
-        final = self.path(table)
-        stage = os.path.join(self.root, f".stage-{table}-{uuid.uuid4().hex}")
-        old = os.path.join(self.root, f".old-{table}-{uuid.uuid4().hex}")
-        df = self._cluster_by_partition(
+        stage = self._stage_dir(table)
+        self._cluster_by_partition(
             df, partition_col, files_per_bucket, n_buckets, sort_cols
-        )
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+        ).write.mode("overwrite").partitionBy(partition_col).parquet(stage)
         if n_buckets:
-            import json
+            write_layout(stage, partition_col, n_buckets, bucket_hash)
+        self._swap(stage, self.path(table), table)
 
-            with open(os.path.join(stage, "_sslr_layout.json"), "w") as fh:
-                json.dump(
-                    {
-                        "partition_col": partition_col,
-                        "n_buckets": int(n_buckets),
-                        "bucket_hash": bucket_hash or "portable",
-                    },
-                    fh,
-                )
+    def _stage_dir(self, name: str) -> str:
+        return os.path.join(self.root, f".stage-{name}-{uuid.uuid4().hex}")
+
+    def _swap(self, stage: str, final: str, name: str) -> None:
+        """Swap the written ``stage`` dir in at ``final`` by rename:
+        the old dir aside, the stage into place, the old dir removed.
+        A failure before the swap completes restores the previous
+        committed dir and drops the stage."""
+        old = os.path.join(self.root, f".old-{name}-{uuid.uuid4().hex}")
         try:
             if os.path.exists(final):
                 os.rename(final, old)
             os.rename(stage, final)
         except BaseException:
-            if not os.path.exists(final) and os.path.exists(old):
-                os.rename(old, final)
-            shutil.rmtree(stage, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-
-    def overwrite_partitioned_aligned(
-        self,
-        table: str,
-        aligned_df: DataFrame,
-        extra_df: DataFrame,
-        partition_col: str,
-        n_buckets: int | None = None,
-        bucket_hash: str | None = None,
-    ) -> None:
-        """Atomic partitioned overwrite skipping the full-table
-        shuffle, for the scattered-merge fallback: ``aligned_df`` must
-        come from a partition-dir-aligned read of this table, filtered
-        only by NARROW ops (broadcast anti-join, filter) — its tasks
-        then hold rows of few buckets each, so a ``partitionBy`` write
-        WITHOUT re-clustering opens few files per task (measured ~2-4
-        files/bucket vs the tasks x buckets explosion an unaligned
-        frame would produce). The small ``extra_df`` (the update
-        slice) appends clustered. Two passes into one stage dir, one
-        atomic swap."""
-        final = self.path(table)
-        stage = os.path.join(self.root, f".stage-{table}-{uuid.uuid4().hex}")
-        old = os.path.join(self.root, f".old-{table}-{uuid.uuid4().hex}")
-        aligned_df.write.partitionBy(partition_col).parquet(stage)
-        (
-            extra_df.repartition(
-                max(8, (n_buckets or 64) // 8), F.col(partition_col)
-            )
-            .write.mode("append")
-            .partitionBy(partition_col)
-            .parquet(stage)
-        )
-        if n_buckets:
-            import json
-
-            with open(os.path.join(stage, "_sslr_layout.json"), "w") as fh:
-                json.dump(
-                    {
-                        "partition_col": partition_col,
-                        "n_buckets": int(n_buckets),
-                        "bucket_hash": bucket_hash or "portable",
-                    },
-                    fh,
-                )
-        try:
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(stage, final)
-        except BaseException:
+            # roll back: restore the previous committed dir
             if not os.path.exists(final) and os.path.exists(old):
                 os.rename(old, final)
             shutil.rmtree(stage, ignore_errors=True)
@@ -280,8 +245,7 @@ class ParquetDatabase:
 
     def table_bytes(self, table: str) -> int:
         """On-disk size of a table (data files only) — a free cost
-        signal for plan choices (e.g. shuffle-avoiding vs one-shot
-        rewrites in merge_upsert_partitioned)."""
+        signal (e.g. the merge-on-read log's bytes cap)."""
         total = 0
         for dirpath, _, files in os.walk(self.path(table)):
             for f in files:
@@ -293,13 +257,7 @@ class ParquetDatabase:
         """The ``_sslr_layout.json`` marker written by
         :meth:`overwrite_partitioned` (None for unpartitioned or
         pre-marker layouts)."""
-        import json
-
-        p = os.path.join(self.path(table), "_sslr_layout.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return json.load(fh)
+        return read_layout(self.path(table))
 
     # -- per-table sidecar markers ---------------------------------
     # ``_``-prefixed files inside the table directory: invisible to
@@ -390,12 +348,12 @@ class ParquetDatabase:
         rewrite ONLY the partitions whose data-file count exceeds the
         cap, one clustered (and optionally PK-sorted) file each.
 
-        Incremental merges and aligned scattered rewrites accumulate
-        2-4 files per touched bucket per sync; after many syncs the
-        pruned reads the layout exists for degrade into many-small-file
-        scans. This is the plain-parquet VACUUM/OPTIMIZE analog: cost
-        ∝ oversize partitions only, never the table; untouched buckets
-        keep their files byte-identical.
+        The bucketed whole-table rewrite salts each bucket across
+        ``files_per_bucket`` writers, so a bucket can hold many small
+        files; the pruned reads the layout exists for then degrade
+        into many-small-file scans. This is the plain-parquet
+        VACUUM/OPTIMIZE analog: cost ∝ oversize partitions only, never
+        the table; untouched buckets keep their files byte-identical.
 
         Crash safety differs from :meth:`replace_partitions` on
         purpose: the repair path's dynamic overwrite is safe because
@@ -436,22 +394,15 @@ class ParquetDatabase:
             .partitionBy(pcol)
             .parquet(stage)
         )
-        final = self.path(table)
         try:
             for v in over:
                 part = f"{pcol}={v}"
                 staged = os.path.join(stage, part)
-                dst = os.path.join(final, part)
-                old = os.path.join(self.root, f".old-{part}-{uuid.uuid4().hex}")
-                if not os.path.exists(staged):
-                    continue  # bucket vanished between list and read
-                os.rename(dst, old)
-                try:
-                    os.rename(staged, dst)
-                except BaseException:
-                    os.rename(old, dst)  # roll the bucket back
-                    raise
-                shutil.rmtree(old, ignore_errors=True)
+                # a bucket can vanish between the list and the read
+                if os.path.exists(staged):
+                    self._swap(
+                        staged, os.path.join(self.path(table), part), part
+                    )
         finally:
             shutil.rmtree(stage, ignore_errors=True)
         return {

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sslr_spark.operators.updates import dedup_latest_version, merge_upsert
+from sslr_spark.operators.updates import dedup_latest_version, upsert_batch
 from sslr_spark.sources.parquet import ParquetDatabase
 
 
@@ -90,6 +90,31 @@ def _event_time(df: DataFrame, ts_col: str) -> DataFrame:
     return df
 
 
+def _start_foreach_batch(
+    spark: SparkSession,
+    source_path: str,
+    schema: T.StructType,
+    apply_batch,
+    checkpoint_dir: str,
+    trigger_seconds: float | None,
+    max_files_per_trigger: int | None,
+):
+    """Start a checkpointed file-source stream that hands each
+    micro-batch to ``apply_batch(batch_df, epoch_id)``. Trigger:
+    processingTime every ``trigger_seconds``, else availableNow."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    writer = reader.parquet(source_path).writeStream.foreachBatch(
+        apply_batch
+    ).option("checkpointLocation", checkpoint_dir)
+    if trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    else:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_incremental_sync(
     spark: SparkSession,
     source_path: str,
@@ -118,77 +143,23 @@ def stream_incremental_sync(
       buckets, not table size. ``None`` falls back to whole-table
       read-merge-overwrite (small targets only).
 
+    Each micro-batch applies through the batch pass's own upsert,
+    :func:`~sslr_spark.operators.updates.upsert_batch`.
+
     Returns the StreamingQuery.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        updates = dedup_latest_version(batch_df, pk_cols, version_col)
-        from sslr_spark.operators.deletes import (
-            BUCKET_COL,
-            effective_buckets,
-            with_bucket,
+        # an empty micro-batch counts 0 on the slice upsert_batch
+        # persists, so the files are read once
+        upsert_batch(
+            target, table, batch_df, pk_cols, version_col,
+            n_buckets, bucket_hash,
         )
-        from sslr_spark.operators.updates import merge_upsert_partitioned
 
-        # Honor the STORED layout (same guard as the batch path): a
-        # pre-existing unpartitioned target merges unpartitioned; a
-        # target bucketed with a different count keeps its own count.
-        eff = effective_buckets(target, table, n_buckets)
-        if eff:
-            if target.table_exists(table):
-                merge_upsert_partitioned(
-                    target, table, updates, pk_cols, eff
-                )
-            else:
-                # fresh table: create it in the CONFIGURED hash mode,
-                # same as the batch full-copy path (existing tables
-                # merge under their stored mode via
-                # merge_upsert_partitioned)
-                target.overwrite_partitioned(
-                    table,
-                    with_bucket(updates, pk_cols, eff, bucket_hash),
-                    BUCKET_COL,
-                    n_buckets=eff,
-                    bucket_hash=bucket_hash,
-                    sort_cols=pk_cols,
-                )
-            return
-        if hasattr(target, "apply_upsert"):
-            # in-place target (JDBC / Delta without buckets): apply the
-            # micro-batch as DELETE+INSERT / MERGE — never a per-trigger
-            # whole-table rewrite. Version ids never land in in-place
-            # targets (same as the batch path's strip_version).
-            applied = (
-                updates.drop(version_col)
-                if version_col in updates.columns
-                else updates
-            )
-            if not target.table_exists(table) and hasattr(
-                target, "create_table"
-            ):
-                target.create_table(table, applied.schema)
-            target.apply_upsert(table, applied, pk_cols)
-            return
-        if target.table_exists(table):
-            merged = merge_upsert(target.read(table), updates, pk_cols)
-        else:
-            merged = updates
-        target.overwrite(table, merged)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        spark, source_path, schema, apply_batch, checkpoint_dir,
+        trigger_seconds, max_files_per_trigger,
     )
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_mor_sync(
@@ -239,84 +210,79 @@ def stream_mor_sync(
         upsert_log_table,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(source_path)
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        meta = (
-            target.read_table_meta(table, "stream_mor")
-            if hasattr(target, "read_table_meta")
-            and target.table_exists(table)
-            else None
-        )
-        if meta is not None and int(epoch_id) <= int(meta.get("epoch", -1)):
-            return  # replayed epoch: already applied
-        flags = None
-        if tombstone_flag and tombstone_flag in batch_df.columns:
-            flags = F.col(tombstone_flag)
-            payload_df = batch_df.drop(tombstone_flag)
-        else:
-            payload_df = batch_df
-        if not target.table_exists(table):
-            # bootstrap: the first batch IS the base (tombstoned rows
-            # never existed downstream — drop them outright)
-            base0 = batch_df if flags is None else batch_df.filter(
-                ~flags
-            ).drop(tombstone_flag)
-            target.overwrite(
-                table, dedup_latest_version(base0, pk_cols, version_col)
+        # stored once: the emptiness count and the bootstrap or log
+        # append read the batch's files a single time
+        batch_df = batch_df.persist()
+        try:
+            if not batch_df.count():
+                return
+            meta = (
+                target.read_table_meta(table, "stream_mor")
+                if hasattr(target, "read_table_meta")
+                and target.table_exists(table)
+                else None
             )
-        else:
-            base_cols = target.read(table).columns
-            if flags is None:
-                append_upsert_log(
-                    target, table, payload_df, pk_cols, version_col
-                )
-                log_batch = None
+            if meta is not None and int(epoch_id) <= int(meta.get("epoch", -1)):
+                return  # replayed epoch: already applied
+            flags = None
+            if tombstone_flag and tombstone_flag in batch_df.columns:
+                flags = F.col(tombstone_flag)
+                payload_df = batch_df.drop(tombstone_flag)
             else:
-                # tombstones keep key+version, null payload — the same
-                # shape append_delete_log writes, but with the CDC
-                # row's own version
-                dtypes = dict(batch_df.drop(tombstone_flag).dtypes)
-                nulled = batch_df.select(
-                    *[
-                        F.col(c)
-                        if c in pk_cols or c == version_col
-                        else F.when(
-                            flags, F.lit(None).cast(dtypes[c])
-                        ).otherwise(F.col(c)).alias(c)
-                        for c in base_cols
-                    ],
-                    flags.alias(TOMBSTONE_COL),
+                payload_df = batch_df
+            if not target.table_exists(table):
+                # bootstrap: the first batch IS the base (tombstoned rows
+                # never existed downstream — drop them outright)
+                base0 = batch_df if flags is None else batch_df.filter(
+                    ~flags
+                ).drop(tombstone_flag)
+                target.overwrite(
+                    table, dedup_latest_version(base0, pk_cols, version_col)
                 )
-                log_batch = dedup_latest_version(
-                    nulled, pk_cols, version_col
+            else:
+                base_cols = target.read(table).columns
+                if flags is None:
+                    append_upsert_log(
+                        target, table, payload_df, pk_cols, version_col
+                    )
+                    log_batch = None
+                else:
+                    # tombstones keep key+version, null payload — the same
+                    # shape append_delete_log writes, but with the CDC
+                    # row's own version
+                    dtypes = dict(batch_df.drop(tombstone_flag).dtypes)
+                    nulled = batch_df.select(
+                        *[
+                            F.col(c)
+                            if c in pk_cols or c == version_col
+                            else F.when(
+                                flags, F.lit(None).cast(dtypes[c])
+                            ).otherwise(F.col(c)).alias(c)
+                            for c in base_cols
+                        ],
+                        flags.alias(TOMBSTONE_COL),
+                    )
+                    log_batch = dedup_latest_version(
+                        nulled, pk_cols, version_col
+                    )
+                if log_batch is not None:
+                    target.append(upsert_log_table(table), log_batch)
+                if should_compact_upsert_log(
+                    target, table, max_log_fraction, max_log_bytes=max_log_bytes
+                ):
+                    compact_upsert_log(target, table, pk_cols, version_col)
+            if hasattr(target, "write_table_meta"):
+                target.write_table_meta(
+                    table, "stream_mor", {"epoch": int(epoch_id)}
                 )
-            if log_batch is not None:
-                target.append(upsert_log_table(table), log_batch)
-            if should_compact_upsert_log(
-                target, table, max_log_fraction, max_log_bytes=max_log_bytes
-            ):
-                compact_upsert_log(target, table, pk_cols, version_col)
-        if hasattr(target, "write_table_meta"):
-            target.write_table_meta(
-                table, "stream_mor", {"epoch": int(epoch_id)}
-            )
+        finally:
+            batch_df.unpersist()
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        spark, source_path, schema, apply_batch, checkpoint_dir,
+        trigger_seconds, max_files_per_trigger,
     )
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_event_aggregate(
@@ -531,34 +497,31 @@ def streaming_neardup_ingest(
                 return True
         return False
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_path)
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        index_ready = _has_committed_data(bk_table)
-        if int(epoch_id) == 0 and index_ready:
-            msg = (
-                "streaming_neardup_ingest: epoch 0 over an already-"
-                "populated target — this is a rebuild with a fresh "
-                "checkpoint, not a crash replay; stale higher-epoch "
-                "partitions are not reconciled. Rebuild into a fresh "
-                "target instead, or pass force=True to acknowledge."
-            )
-            if not force:
-                raise RuntimeError(msg)
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
         # cache_scope: the batch owns every block it stores — the
         # batch itself, its index, the drop set, the pair generators'
         # caches — and frees them when the batch ends
         with cache_scope():
+            # every step below reads this landing, the emptiness probe
+            # included, so the batch's files are read once
+            batch = land(batch_df)
+            if batch.isEmpty():
+                return
+            index_ready = _has_committed_data(bk_table)
+            if int(epoch_id) == 0 and index_ready:
+                msg = (
+                    "streaming_neardup_ingest: epoch 0 over an already-"
+                    "populated target — this is a rebuild with a fresh "
+                    "checkpoint, not a crash replay; stale higher-epoch "
+                    "partitions are not reconciled. Rebuild into a fresh "
+                    "target instead, or pass force=True to acknowledge."
+                )
+                if not force:
+                    raise RuntimeError(msg)
+                import warnings
+
+                warnings.warn(msg, RuntimeWarning, stacklevel=2)
             ep = F.lit(int(epoch_id))
-            batch = land(batch_df)  # every step below reads this
             # the batch is shingled and signed ONCE; the in-batch
             # pairs, the corpus probe and the new index rows all read
             # slices of these two landings (shingles are per-row and
@@ -616,14 +579,10 @@ def streaming_neardup_ingest(
                 target, index_table, accepted_table
             )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        spark, source_path, schema, apply_batch, checkpoint_dir,
+        trigger_seconds, max_files_per_trigger,
     )
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------------------------

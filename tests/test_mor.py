@@ -143,25 +143,6 @@ def test_mor_delete_tombstones_and_resurrection(spark, tmp_path):
     assert _rows(db.read("t")) == expect
 
 
-def test_mor_compaction_into_bucketed_layout(spark, tmp_path):
-    from sslr_spark.operators.deletes import BUCKET_COL
-
-    db = _db(spark, tmp_path)
-    db.overwrite("t", _base(spark))
-    append_upsert_log(
-        db, "t",
-        spark.createDataFrame(
-            [(3, "u3", 200)], "id long, payload string, xmin long"
-        ),
-        ["id"],
-    )
-    compact_upsert_log(db, "t", ["id"], n_buckets=8, bucket_hash="fast")
-    assert (db.layout_meta("t") or {}).get("n_buckets") == 8
-    merged = db.read("t", with_meta=True)
-    assert BUCKET_COL in merged.columns
-    assert merged.filter("id = 3").first().payload == "u3"
-
-
 def test_mor_job_mode_end_to_end(spark, tmp_path):
     """mergeOnRead as an ENGINE mode: first pass full-copies (no
     log), the incremental pass lands updates as log appends and

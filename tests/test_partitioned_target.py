@@ -114,12 +114,10 @@ def test_partitioned_scattered_merge_falls_back_to_full_rewrite(
     assert len(parts) == 16
 
 
-def test_scattered_merge_aligned_path_equals_clustered(spark, tmp_path):
-    """The size-gated shuffle-avoiding rewrite
-    (overwrite_partitioned_aligned, taken for big tables) must
-    produce the same logical state and a bounded file count as the
-    one-shot clustered rewrite; forcing each path via the byte
-    threshold."""
+def test_scattered_merge_clustered_rewrite_layout(spark, tmp_path):
+    """A scattered batch (touching most buckets) takes the clustered
+    whole-table rewrite: the expected rows, a bounded file count and
+    the layout marker all survive it."""
     import datetime
 
     from sslr_spark.operators.deletes import with_bucket
@@ -134,24 +132,19 @@ def test_scattered_merge_aligned_path_equals_clustered(spark, tmp_path):
     want = _logical(
         src.filter(F.col("id") % 3 != 0).unionByName(upd)
     )
-    results = {}
-    for mode, thresh in (("aligned", 0), ("clustered", 1 << 60)):
-        db = ParquetDatabase(spark, str(tmp_path / mode))
-        db.overwrite_partitioned(
-            "t", with_bucket(src, ["id"], 16), BUCKET_COL, n_buckets=16
-        )
-        merge_upsert_partitioned(
-            db, "t", upd, ["id"], 16, aligned_rewrite_bytes=thresh
-        )
-        results[mode] = _logical(db.read("t"))
-        files = [
-            f for _, _, fs in os.walk(db.path("t")) for f in fs
-            if not f.startswith((".", "_"))
-        ]
-        # bounded: no tasks-x-buckets explosion from a misaligned write
-        assert len(files) <= 16 * 6, f"{mode}: {len(files)} files"
-        assert db.layout_meta("t")["n_buckets"] == 16
-    assert results["aligned"] == results["clustered"] == want
+    db = ParquetDatabase(spark, str(tmp_path / "clustered"))
+    db.overwrite_partitioned(
+        "t", with_bucket(src, ["id"], 16), BUCKET_COL, n_buckets=16
+    )
+    merge_upsert_partitioned(db, "t", upd, ["id"], 16)
+    assert _logical(db.read("t")) == want
+    files = [
+        f for _, _, fs in os.walk(db.path("t")) for f in fs
+        if not f.startswith((".", "_"))
+    ]
+    # bounded: no tasks-x-buckets explosion from an unclustered write
+    assert len(files) <= 16 * 6, f"{len(files)} files"
+    assert db.layout_meta("t")["n_buckets"] == 16
 
 
 def test_partitioned_delete_repair_selective(spark, tmp_path):

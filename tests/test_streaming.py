@@ -4,6 +4,7 @@ foreachBatch merge, windowed/session aggregation with watermarks."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -834,3 +835,120 @@ def test_stream_sessionize_drops_below_watermark_events(spark, tmp_path):
         (1, t0, t0, 1),
         (1, t0 + 100 * minute, t0 + 100 * minute, 1),
     }
+
+
+def _write_files(spark, src_dir, rows_per_file, make_rows, ddl):
+    """One parquet file per entry of ``rows_per_file``, with strictly
+    increasing mtimes so a ``max_files_per_trigger=1`` stream reads
+    them one per micro-batch, in order."""
+    os.makedirs(src_dir)
+    for i, n in enumerate(rows_per_file):
+        part = os.path.join(src_dir, f"part-{i}")
+        spark.createDataFrame(make_rows(i, n), ddl).coalesce(1).write.parquet(
+            part
+        )
+        (f,) = [x for x in os.listdir(part) if x.endswith(".parquet")]
+        dst = os.path.join(src_dir, f"f{i}.parquet")
+        os.rename(os.path.join(part, f), dst)
+        os.utime(dst, (1_700_000_000 + i * 60,) * 2)
+        shutil.rmtree(part)
+
+
+@pytest.mark.parametrize("kind", ["sync", "mor", "neardup"])
+def test_stream_batches_scan_their_files_once(spark, tmp_path, kind):
+    """Each micro-batch reads its source files once: Spark's
+    ``numInputRows`` for batch i equals the rows of the i-th file (an
+    emptiness probe ahead of the apply would scan the files twice and
+    report double)."""
+    from sslr_spark.streaming.pipeline import (
+        stream_mor_sync,
+        streaming_neardup_ingest,
+    )
+
+    sizes = [7, 12, 5]
+    src_dir = str(tmp_path / "src")
+    target = ParquetDatabase(spark, str(tmp_path / "target"))
+    ckpt = str(tmp_path / "ckpt")
+    if kind == "neardup":
+        ddl = "doc_id long, text string"
+        _write_files(
+            spark, src_dir, sizes,
+            lambda i, n: [
+                (i * 100 + j, " ".join(f"w{i}_{j}_{k}" for k in range(8)))
+                for j in range(n)
+            ],
+            ddl,
+        )
+    else:
+        ddl = "id long, payload string, xmin long"
+        _write_files(
+            spark, src_dir, sizes,
+            lambda i, n: [(j, f"p{i}_{j}", 100 + i) for j in range(n)],
+            ddl,
+        )
+    schema = spark.createDataFrame([], ddl).schema
+    if kind == "sync":
+        q = stream_incremental_sync(
+            spark, src_dir, schema, target, "t", ["id"], ckpt,
+            max_files_per_trigger=1,
+        )
+    elif kind == "mor":
+        q = stream_mor_sync(
+            spark, src_dir, schema, target, "t", ["id"], ckpt,
+            max_files_per_trigger=1,
+        )
+    else:
+        q = streaming_neardup_ingest(
+            spark, src_dir, schema, target, ckpt, max_files_per_trigger=1,
+        )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert [p["numInputRows"] for p in q.recentProgress] == sizes
+
+
+@pytest.mark.parametrize("n_buckets", [16, None])
+def test_batch_pass_and_stream_apply_alike(spark, tmp_path, n_buckets):
+    """The batch pass (sync_updates) and the stream
+    (stream_incremental_sync) apply the same two change waves through
+    one upsert path: equal logical targets, equal stored layouts."""
+    from sslr_spark.operators.updates import sync_updates
+    from sslr_spark.state import StateStore
+
+    ddl = "id long, payload string, xmin long"
+    wave1 = [(i, f"a{i}", 100) for i in range(200)]
+    wave2 = [(i, f"b{i}", 200) for i in range(0, 60, 2)] + [
+        (i, f"n{i}", 201) for i in range(200, 220)
+    ]
+    changed = {r[0] for r in wave2}
+
+    source = ParquetDatabase(spark, str(tmp_path / "source"))
+    batch_t = ParquetDatabase(spark, str(tmp_path / "batch"))
+    store = StateStore(batch_t)
+    snapshots = (wave1, [r for r in wave1 if r[0] not in changed] + wave2)
+    for snapshot in snapshots:
+        source.overwrite("t", spark.createDataFrame(snapshot, ddl))
+        sync_updates(
+            source.read("t"), batch_t, store, "t", ["id"],
+            n_buckets=n_buckets,
+        )
+
+    src_dir = str(tmp_path / "src")
+    _write_files(spark, src_dir, [len(wave1), len(wave2)],
+                 lambda i, n: (wave1, wave2)[i], ddl)
+    stream_t = ParquetDatabase(spark, str(tmp_path / "stream"))
+    q = stream_incremental_sync(
+        spark, src_dir, spark.createDataFrame([], ddl).schema, stream_t,
+        "t", ["id"], str(tmp_path / "ckpt"), max_files_per_trigger=1,
+        n_buckets=n_buckets,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+
+    def rows(db):
+        return sorted(tuple(r) for r in db.read("t").collect())
+
+    assert rows(stream_t) == rows(batch_t)
+    assert len(rows(batch_t)) == 220
+    assert stream_t.layout_meta("t") == batch_t.layout_meta("t")
+    if n_buckets:
+        assert batch_t.layout_meta("t")["n_buckets"] == n_buckets
