@@ -33,7 +33,7 @@ import contextlib
 import logging
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sslr_spark.operators.copy import copy_full_table, filtered_source
@@ -213,7 +213,11 @@ def dedup_latest_version(
 
 
 def merge_upsert(
-    target_df: DataFrame, updates: DataFrame, pk_cols: list[str]
+    target_df: DataFrame,
+    updates: DataFrame,
+    pk_cols: list[str],
+    *,
+    broadcast_keys: bool = False,
 ) -> DataFrame:
     """Upsert semantics of the reference's delete-then-COPY transaction
     (J2, internal/updates.go:171-222): rows matching an updated key are
@@ -221,10 +225,20 @@ def merge_upsert(
 
     Expressed as anti-join + union so Catalyst picks the join strategy
     (broadcast when the update slice is small — the common CDC case).
+    ``broadcast_keys`` forces the key side's broadcast: the MOR read's
+    byte-gated decision (a hint on ``updates`` would also sit on the
+    union branch, which Spark logs as a join hint without a join).
     With a transactional table format this is MERGE INTO.
-    """
+
+    The module's one keyed overlay — the copy-on-write merges, the MOR
+    read and its compaction apply changes through it. Rows flagged by
+    :data:`TOMBSTONE_COL` remove their keys and are never inserted."""
     keys = updates.select(*pk_cols).distinct()
+    if broadcast_keys:
+        keys = F.broadcast(keys)
     kept = target_df.join(keys, on=pk_cols, how="left_anti")
+    if TOMBSTONE_COL in updates.columns:
+        updates = updates.filter(~F.col(TOMBSTONE_COL))
     return kept.unionByName(updates.select(*target_df.columns))
 
 
@@ -250,7 +264,13 @@ def merge_upsert_partitioned(
     (:func:`_write_bucketed`). The design point remains CDC batches
     clustered on key ranges (measured sublinear at the 100x probe);
     the guard keeps the pathological scattered-keys case near
-    full-copy cost."""
+    full-copy cost.
+
+    Tombstones (the MOR compaction's :data:`TOMBSTONE_COL`) remove
+    their keys. Dynamic overwrite cannot express a bucket they leave
+    empty, so only such a change set probes the surviving buckets and
+    drops the emptied ones after a pruned rewrite; the scattered
+    rewrite replaces the whole table and needs no extra step."""
     from sslr_spark.operators.deletes import (
         BUCKET_COL,
         stored_bucket_hash,
@@ -276,16 +296,30 @@ def merge_upsert_partitioned(
         scattered = len(affected) > full_rewrite_fraction * n_buckets
         if not scattered:
             tgt = tgt.filter(F.col(BUCKET_COL).isin(affected))  # pruning
-        keys = upd.select(*pk_cols).distinct()
-        kept = tgt.drop(BUCKET_COL).join(keys, on=pk_cols, how="left_anti")
-        out = kept.unionByName(upd.drop(BUCKET_COL).select(*kept.columns))
+        out = merge_upsert(
+            tgt.drop(BUCKET_COL), upd.drop(BUCKET_COL), pk_cols
+        )
         if scattered:
             _write_bucketed(target, table, out, pk_cols, n_buckets, bmode)
-        else:
+            return
+        out = with_bucket(out, pk_cols, n_buckets, bmode)
+        emptied = []
+        if TOMBSTONE_COL in updates.columns:
+            # persist: the emptied-bucket probe must run BEFORE the
+            # rewrite (it reads the files the rewrite replaces), and
+            # the cache hands the computed rows to the write
+            out = out.persist()
+            left = {
+                int(r[0]) for r in out.select(BUCKET_COL).distinct().collect()
+            }
+            emptied = [b for b in affected if b not in left]
+        try:
             target.replace_partitions(
-                table, with_bucket(out, pk_cols, n_buckets, bmode),
-                BUCKET_COL, sort_cols=pk_cols,
+                table, out, BUCKET_COL, sort_cols=pk_cols
             )
+            target.drop_partitions(table, BUCKET_COL, emptied)
+        finally:
+            out.unpersist()
     finally:
         upd.unpersist()
 
@@ -328,16 +362,19 @@ def upsert_batch(
 ) -> int:
     """Apply one CDC change slice to ``table``; returns its row count.
 
-    The one upsert path of :func:`sync_updates` and of the stream
-    (``stream_incremental_sync``): collapse to the latest version per
+    The one upsert path of :func:`sync_updates`, of the streams
+    (``stream_incremental_sync``, ``stream_mor_sync``'s first batch)
+    and of :func:`compact_upsert_log`; a change set may carry
+    :data:`TOMBSTONE_COL` (deleted keys): collapse to the latest version per
     key, persist once, count (under ``throttle``: the count scans the
     source), then apply by the STORED layout (``effective_buckets``):
     bucketed -> :func:`merge_upsert_partitioned`; in-place targets
     (``apply_upsert``) -> DELETE+INSERT / MERGE without the version
     column, which they never store (reference
     internal/updates.go:117-124); else :func:`merge_upsert` and an
-    atomic overwrite. A missing table is created from the slice in
-    the configured layout (``n_buckets`` / ``bucket_hash``)."""
+    atomic overwrite. A missing table is created from the slice's
+    live rows in the configured layout (``n_buckets`` /
+    ``bucket_hash``)."""
     from sslr_spark.operators.deletes import effective_buckets
 
     updates = dedup_latest_version(updates, pk_cols, version_col).persist()
@@ -348,16 +385,21 @@ def upsert_batch(
             return 0
         n_buckets = effective_buckets(target, table, n_buckets)
         exists = target.table_exists(table)
+        rows = updates
+        if not exists and TOMBSTONE_COL in updates.columns:
+            # after the collapse, so a key upserted then deleted inside
+            # the slice stays deleted; a new table holds no tombstone
+            rows = updates.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
         if n_buckets and exists:
             merge_upsert_partitioned(
                 target, table, updates, pk_cols, n_buckets
             )
         elif n_buckets:
             _write_bucketed(
-                target, table, updates, pk_cols, n_buckets, bucket_hash
+                target, table, rows, pk_cols, n_buckets, bucket_hash
             )
         elif hasattr(target, "apply_upsert"):
-            applied = updates.drop(version_col)
+            applied = rows.drop(version_col)
             if not exists and hasattr(target, "create_table"):
                 target.create_table(table, applied.schema)
             target.apply_upsert(table, applied, pk_cols)
@@ -366,7 +408,7 @@ def upsert_batch(
                 table, merge_upsert(target.read(table), updates, pk_cols)
             )
         else:
-            target.overwrite(table, updates)
+            target.overwrite(table, rows)
     finally:
         updates.unpersist()
     return n
@@ -454,7 +496,8 @@ def sync_updates(
     :func:`upsert_batch`.
 
     ``merge_on_read`` applies incremental batches as upsert-log
-    APPENDS (append_upsert_log) instead of merges — the small-batch
+    APPENDS (the log writer behind append_upsert_log collapses and
+    appends each batch once) instead of merges — the small-batch
     scale mode: write cost per batch is the batch itself, readers
     overlay via read_merged, and the pass compacts when the log
     exceeds ``max_log_fraction`` of the base. Requires the version
@@ -569,18 +612,15 @@ def sync_updates(
             (F.col(version_col) >= F.lit(lo)) & (F.col(version_col) <= F.lit(hi))
         )
         if merge_on_read:
-            updates = dedup_latest_version(
-                batch, pk_cols, version_col
-            ).persist()
-            try:
-                with throttle:  # the count scans the source slice
-                    n = updates.count()
-                if n:
-                    append_upsert_log(
-                        target, table, updates, pk_cols, version_col
-                    )
-            finally:
-                updates.unpersist()
+            # the log's footer row count gives the appended rows with
+            # no count job (the range probe saw the slice non-empty)
+            log_t = upsert_log_table(table)
+            before = target.table_rows(log_t) or 0
+            with throttle:  # the append job scans the source slice
+                append_upsert_log(
+                    target, table, batch, pk_cols, version_col
+                )
+            n = target.table_rows(log_t) - before
         else:
             # incremental merges honor the STORED layout: an existing
             # unpartitioned table merges unpartitioned even if config
@@ -640,14 +680,20 @@ def append_upsert_log(
     version_col: str = "xmin",
 ) -> None:
     """MOR write path: land a CDC batch as a log APPEND — no base
-    read, no bucket rewrite, cost = the batch itself. The batch is
-    pre-collapsed to latest-version-per-key (bounded, map-side
-    max_by) so replaying one log file never carries intra-batch
-    stale rows; ACROSS batches the read/compaction overlay resolves
-    versions (versions must be distinct per key across upsert and
-    delete batches — CDC transaction ids are). Columns align to the
-    base table's schema so the overlay union never reorders fields;
-    every log row carries the tombstone marker (False here)."""
+    read, no bucket rewrite, cost = the batch itself. ACROSS batches
+    the read/compaction overlay resolves versions (versions must be
+    distinct per key across upsert and delete batches — CDC
+    transaction ids are).
+
+    The one writer of upsert-log rows: checks the batch's columns
+    against the base table (names AND types), collapses it to
+    latest-version-per-key (bounded, map-side max_by) so replaying one
+    log file never carries intra-batch stale rows, nulls the payload
+    of tombstoned rows (key + version only) and appends it with the
+    :data:`TOMBSTONE_COL` marker — False for a batch that does not
+    carry one. One Spark job, no count: callers that must skip an
+    empty set count it themselves. Columns align to the base's order
+    so the overlay union never reorders fields."""
     base_schema = target.read(table).schema
     base_cols = [f.name for f in base_schema]
     missing = [c for c in base_cols if c not in updates.columns]
@@ -676,11 +722,25 @@ def append_upsert_log(
             f"fails nondeterministically at read; cast the batch "
             f"first: {mismatched}"
         )
-    batch = dedup_latest_version(updates, pk_cols, version_col)
-    target.append(
-        upsert_log_table(table),
-        batch.select(*base_cols).withColumn(TOMBSTONE_COL, F.lit(False)),
-    )
+    if TOMBSTONE_COL not in updates.columns:
+        rows = dedup_latest_version(
+            updates.select(*base_cols), pk_cols, version_col
+        ).withColumn(TOMBSTONE_COL, F.lit(False))
+    else:
+        dead = F.col(TOMBSTONE_COL)
+        rows = dedup_latest_version(
+            updates.select(*base_cols, TOMBSTONE_COL), pk_cols, version_col
+        ).select(
+            *[
+                F.col(f.name)
+                if f.name in pk_cols or f.name == version_col
+                else F.when(dead, F.lit(None).cast(f.dataType))
+                .otherwise(F.col(f.name)).alias(f.name)
+                for f in base_schema
+            ],
+            dead,
+        )
+    target.append(upsert_log_table(table), rows)
 
 
 def append_delete_log(
@@ -692,23 +752,23 @@ def append_delete_log(
     version_col: str = "xmin",
 ) -> None:
     """MOR delete path: land deletions as TOMBSTONE log rows — key +
-    version + null payload + tombstone=True — instead of the
-    bucket-diff repair rewrite. The overlay read (and compaction)
-    drops a key whose latest log row is a tombstone; a later upsert
-    at a higher version resurrects it, exactly like the in-place
-    DELETE+INSERT sequence would."""
+    ``version`` + null payload — instead of the bucket-diff repair
+    rewrite. The overlay read (and compaction) drops a key whose
+    latest log row is a tombstone; a later upsert at a higher version
+    resurrects it, exactly like the in-place DELETE+INSERT sequence
+    would."""
     base = target.read(table)
     dtypes = dict(base.dtypes)
-    batch = keys.select(*pk_cols).distinct()
-    for c in base.columns:
-        if c in pk_cols:
-            continue
-        val = F.lit(version) if c == version_col else F.lit(None)
-        batch = batch.withColumn(c, val.cast(dtypes[c]))
-    target.append(
-        upsert_log_table(table),
-        batch.select(*base.columns).withColumn(TOMBSTONE_COL, F.lit(True)),
-    )
+    batch = keys.select(
+        *pk_cols,
+        *[
+            (F.lit(version) if c == version_col else F.lit(None))
+            .cast(dtypes[c]).alias(c)
+            for c in base.columns
+            if c not in pk_cols
+        ],
+    ).withColumn(TOMBSTONE_COL, F.lit(True))
+    append_upsert_log(target, table, batch, pk_cols, version_col)
 
 
 def read_merged(
@@ -722,13 +782,13 @@ def read_merged(
     """MOR read path: base overlaid with the upsert/delete log,
     latest-version-wins per key, tombstone winners dropped. Scale
     shape: the LOG (small by the compaction invariant) is collapsed
-    to latest-per-key and its key set probes the base with an
-    anti-join — the base is never shuffled and never sorted. A log
-    key's row always supersedes the base row (equal versions
-    included), which is what makes crash-replayed compactions
-    idempotent (within the log, an upsert beats a tombstone at an
-    equal version — see dedup_latest_version). With no log the base
-    returns as-is.
+    to latest-per-key and overlaid with :func:`merge_upsert` — its key
+    set probes the base with an anti-join, so the base is never
+    shuffled and never sorted. A log key's row always supersedes the
+    base row (equal versions included), which is what makes
+    crash-replayed compactions idempotent (within the log, an upsert
+    beats a tombstone at an equal version — see dedup_latest_version).
+    With no log the base returns as-is.
 
     Broadcast gate: the anti-join's broadcast is FORCED only when the
     log's estimated key bytes (footer row count x a bounded-sample
@@ -771,7 +831,6 @@ def read_merged(
             F.col(version_col) <= F.lit(int(as_of_version))
         )
     log = dedup_latest_version(raw_log, pk_cols, version_col)
-    keys = log.select(*pk_cols)
     # pre-collapse footer count is an upper bound on distinct keys —
     # zero Spark jobs; the width sample (bounded collect of 100 keys)
     # only runs when the 16-byte-minimum lower bound already fits.
@@ -791,13 +850,7 @@ def read_merged(
             default=16,
         )
         force_broadcast = log_rows * row_bytes <= broadcast_key_bytes
-    keep = base.join(
-        F.broadcast(keys) if force_broadcast else keys,
-        pk_cols,
-        "left_anti",
-    )
-    survivors = log.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
-    return keep.unionByName(survivors)
+    return merge_upsert(base, log, pk_cols, broadcast_keys=force_broadcast)
 
 
 def should_compact_upsert_log(
@@ -838,13 +891,11 @@ def compact_upsert_log(
 ) -> dict:
     """Fold the log into the base and truncate it.
 
-    Layout-aware cost (round 9): when the base is STORED
-    bucket-partitioned, compaction rewrites ONLY the partitions that
-    contain log keys (dynamic partition overwrite) — cost ∝ overlay
-    debt, not base size. At 100 TB with a 10%-row log clustered on
-    recent keys, this folds a handful of buckets instead of moving
-    the whole table through a write. Unpartitioned bases keep the
-    whole-table staged-rename swap.
+    The log applies as one change set through :func:`upsert_batch` —
+    the copy-on-write apply, at the STORED layout: a bucketed base
+    rewrites only the buckets the log touches (or, past the scattered
+    guard, the whole table; see :func:`merge_upsert_partitioned`), an
+    unpartitioned base takes the whole-table staged-rename swap.
 
     Crash contract, whole-table path: the overwrite is the atomic
     staged-rename swap; a crash BEFORE the swap leaves the old base +
@@ -864,70 +915,15 @@ def compact_upsert_log(
     if not target.table_exists(log_t):
         return {"folded_rows": 0}
     folded = target.table_rows(log_t) or 0
-
     layout = (
-        target.layout_meta(table)
-        if hasattr(target, "layout_meta")
-        else None
+        target.layout_meta(table) if hasattr(target, "layout_meta") else None
     ) or {}
-    stored_buckets = layout.get("n_buckets")
-    if stored_buckets and hasattr(target, "replace_partitions"):
-        from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
-
-        bmode = layout.get("bucket_hash", "portable")
-        base_cols = target.read(table).columns
-        log = dedup_latest_version(
-            target.read(log_t, with_meta=True).select(
-                *base_cols, TOMBSTONE_COL
-            ),
-            pk_cols,
-            version_col,
-        )
-        log_b = with_bucket(log, pk_cols, stored_buckets, bmode).persist()
-        try:
-            affected = sorted(
-                int(r[0])
-                for r in log_b.select(BUCKET_COL).distinct().collect()
-            )  # bounded: <= stored_buckets values
-            if not affected:
-                target.drop(log_t)
-                return {"folded_rows": folded}
-            base = target.read(table, with_meta=True).filter(
-                F.col(BUCKET_COL).isin(affected)  # partition pruning
-            )
-            keep = base.join(
-                log_b.select(*pk_cols), pk_cols, "left_anti"
-            )
-            survivors = log_b.filter(~F.col(TOMBSTONE_COL)).drop(
-                TOMBSTONE_COL
-            )
-            # persist: the emptied-bucket probe below must run BEFORE
-            # the rewrite (it reads the files the rewrite replaces),
-            # and the cache hands the already-computed fold to the
-            # write instead of a second pruned scan
-            out = keep.unionByName(
-                survivors.select(*keep.columns)
-            ).persist()
-            try:
-                # buckets left EMPTY by tombstones: dynamic overwrite
-                # cannot express an empty partition — find them first
-                left = {
-                    int(r[0])
-                    for r in out.select(BUCKET_COL).distinct().collect()
-                }
-                target.replace_partitions(
-                    table, out, BUCKET_COL, sort_cols=pk_cols
-                )
-                emptied = [b for b in affected if b not in left]
-                if emptied and hasattr(target, "drop_partitions"):
-                    target.drop_partitions(table, BUCKET_COL, emptied)
-            finally:
-                out.unpersist()
-        finally:
-            log_b.unpersist()
-    else:
-        merged = read_merged(target, table, pk_cols, version_col)
-        target.overwrite(table, merged)
+    log = target.read(log_t, with_meta=True).select(
+        *target.read(table).columns, TOMBSTONE_COL
+    )
+    upsert_batch(
+        target, table, log, pk_cols, version_col, layout.get("n_buckets")
+    )
     target.drop(log_t)
     if hasattr(target, "write_table_meta"):
         import time

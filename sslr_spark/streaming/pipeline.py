@@ -16,78 +16,60 @@ aggregations, and versions are unbounded 64-bit.
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sslr_spark.operators.updates import dedup_latest_version, upsert_batch
+from sslr_spark.operators.updates import (
+    TOMBSTONE_COL,
+    append_upsert_log,
+    compact_upsert_log,
+    should_compact_upsert_log,
+    upsert_batch,
+)
 from sslr_spark.sources.parquet import ParquetDatabase
 
 
-@contextlib.contextmanager
-def _shuffle_partitions_scope(spark: SparkSession, n: int | None):
-    """Temporarily pin spark.sql.shuffle.partitions for a streaming
-    query START (the value is captured into the checkpoint at first
-    batch planning); restores the previous session value on exit."""
-    if n is None:
-        yield
-        return
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-@contextlib.contextmanager
-def _state_store_scope(spark: SparkSession, provider: str | None):
-    """Temporarily pin the state-store provider class for a streaming
-    query START. ``provider``: None keeps the session conf (HDFS-backed
-    default); 'rocksdb' selects Spark's bundled RocksDB provider —
-    measured r12 for stream_sessionize (A/B in its docstring). The
-    conf is captured per-query at start, so scoping it leaves the rest
-    of the session untouched."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    if provider is None:
-        yield
-        return
-    classes = {
-        "rocksdb": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        "hdfs": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        ),
-    }
-    cls = classes.get(provider, provider)  # raw class name passes through
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, cls)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _event_time(df: DataFrame, ts_col: str) -> DataFrame:
-    """withWatermark requires TIMESTAMP; testdata parquet may carry
-    TIMESTAMP_NTZ. Cast NTZ wall-clock to session-tz TIMESTAMP — window
-    boundaries stay wall-clock aligned, so batch/stream parity holds as
-    long as both paths go through the same cast."""
+def _watermarked(df: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+    """``df`` watermarked on event time ``ts_col``. withWatermark
+    requires TIMESTAMP; testdata parquet may carry TIMESTAMP_NTZ. Cast
+    NTZ wall-clock to session-tz TIMESTAMP — window boundaries stay
+    wall-clock aligned, so batch/stream parity holds as long as both
+    paths go through the same cast."""
     if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
         df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df
+    return df.withWatermark(ts_col, watermark)
+
+
+def _file_stream(
+    spark: SparkSession,
+    source_path: str,
+    schema: T.StructType,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The one streaming reader: parquet files under ``source_path``
+    with ``schema``, at most ``max_files_per_trigger`` per micro-batch
+    when set."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(source_path)
+
+
+def _drain(df: DataFrame, out_dir: str, checkpoint_dir: str) -> None:
+    """Run one checkpointed availableNow pass of the streaming ``df``,
+    appending its output rows to ``out_dir`` as parquet, and wait for
+    it to finish."""
+    (
+        df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def _start_foreach_batch(
@@ -102,12 +84,11 @@ def _start_foreach_batch(
     """Start a checkpointed file-source stream that hands each
     micro-batch to ``apply_batch(batch_df, epoch_id)``. Trigger:
     processingTime every ``trigger_seconds``, else availableNow."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    writer = reader.parquet(source_path).writeStream.foreachBatch(
-        apply_batch
-    ).option("checkpointLocation", checkpoint_dir)
+    writer = _file_stream(
+        spark, source_path, schema, max_files_per_trigger
+    ).writeStream.foreachBatch(apply_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
     if trigger_seconds is not None:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     else:
@@ -191,10 +172,15 @@ def stream_mor_sync(
     flagged rows land as tombstone log rows carrying their OWN
     per-row versions (unlike the batch delete phase, which
     synthesizes watermark+1); unflagged rows are upserts. The flag
-    column itself never reaches the log payload.
+    column itself never reaches the log payload. Every log row goes
+    through ``append_upsert_log``, so a batch whose column types
+    differ from the base is rejected, flagged or not.
 
-    The first non-empty micro-batch BOOTSTRAPS the base table (an
-    atomic overwrite); every later batch appends. Crash semantics:
+    The first non-empty micro-batch BOOTSTRAPS the base table through
+    :func:`~sslr_spark.operators.updates.upsert_batch`'s creation path
+    (an atomic overwrite of the collapsed batch's live rows: a key
+    whose latest row is flagged never exists downstream); every later
+    batch appends. Crash semantics:
     foreachBatch replays an epoch after a crash — a replayed APPEND
     would duplicate log rows, which the overlay's
     latest-version-wins collapse already makes invisible to readers
@@ -202,14 +188,6 @@ def stream_mor_sync(
     (``_sslr_stream_mor.json``) additionally makes the common replay
     a no-op, mirroring the batch engine's data-before-state commit
     order. Returns the StreamingQuery."""
-    from sslr_spark.operators.updates import (
-        TOMBSTONE_COL,
-        append_upsert_log,
-        compact_upsert_log,
-        should_compact_upsert_log,
-        upsert_log_table,
-    )
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # stored once: the emptiness count and the bootstrap or log
         # append read the batch's files a single time
@@ -219,55 +197,17 @@ def stream_mor_sync(
                 return
             meta = (
                 target.read_table_meta(table, "stream_mor")
-                if hasattr(target, "read_table_meta")
-                and target.table_exists(table)
-                else None
-            )
-            if meta is not None and int(epoch_id) <= int(meta.get("epoch", -1)):
+                if hasattr(target, "read_table_meta") else None
+            ) or {}
+            if int(epoch_id) <= int(meta.get("epoch", -1)):
                 return  # replayed epoch: already applied
-            flags = None
-            if tombstone_flag and tombstone_flag in batch_df.columns:
-                flags = F.col(tombstone_flag)
-                payload_df = batch_df.drop(tombstone_flag)
-            else:
-                payload_df = batch_df
+            batch = batch_df
+            if tombstone_flag and tombstone_flag in batch.columns:
+                batch = batch.withColumnRenamed(tombstone_flag, TOMBSTONE_COL)
             if not target.table_exists(table):
-                # bootstrap: the first batch IS the base (tombstoned rows
-                # never existed downstream — drop them outright)
-                base0 = batch_df if flags is None else batch_df.filter(
-                    ~flags
-                ).drop(tombstone_flag)
-                target.overwrite(
-                    table, dedup_latest_version(base0, pk_cols, version_col)
-                )
+                upsert_batch(target, table, batch, pk_cols, version_col)
             else:
-                base_cols = target.read(table).columns
-                if flags is None:
-                    append_upsert_log(
-                        target, table, payload_df, pk_cols, version_col
-                    )
-                    log_batch = None
-                else:
-                    # tombstones keep key+version, null payload — the same
-                    # shape append_delete_log writes, but with the CDC
-                    # row's own version
-                    dtypes = dict(batch_df.drop(tombstone_flag).dtypes)
-                    nulled = batch_df.select(
-                        *[
-                            F.col(c)
-                            if c in pk_cols or c == version_col
-                            else F.when(
-                                flags, F.lit(None).cast(dtypes[c])
-                            ).otherwise(F.col(c)).alias(c)
-                            for c in base_cols
-                        ],
-                        flags.alias(TOMBSTONE_COL),
-                    )
-                    log_batch = dedup_latest_version(
-                        nulled, pk_cols, version_col
-                    )
-                if log_batch is not None:
-                    target.append(upsert_log_table(table), log_batch)
+                append_upsert_log(target, table, batch, pk_cols, version_col)
                 if should_compact_upsert_log(
                     target, table, max_log_fraction, max_log_bytes=max_log_bytes
                 ):
@@ -295,8 +235,7 @@ def windowed_event_aggregate(
     watermark — works on both a streaming and a batch DataFrame
     (identical code path; T9 upgrade over the reference)."""
     return (
-        _event_time(events, ts_col)
-        .withWatermark(ts_col, watermark)
+        _watermarked(events, ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -364,8 +303,7 @@ def sessionized_stream(
     """Session-window aggregation (dynamic-gap session_window) — the
     streaming-native version of the batch sessionize query."""
     return (
-        _event_time(events, ts_col)
-        .withWatermark(ts_col, watermark)
+        _watermarked(events, ts_col, watermark)
         .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -598,9 +536,7 @@ def streaming_neardup_ingest(
 # crash at any point leaves a state the next call converges from,
 # with readers (live_epoch_filter) never seeing duplicates.
 #
-# No manifest = legacy layout: every partition is live (the pre-r4
-# full-rewrite compactor produced only the -1 base and dropped folded
-# epochs before returning).
+# No manifest = never compacted: every partition is a live epoch.
 # ------------------------------------------------------------------
 
 _SEG_MANIFEST = "_sslr_segments.json"
@@ -609,8 +545,8 @@ _SEG_MANIFEST = "_sslr_segments.json"
 def load_segment_manifest(
     target: ParquetDatabase, index_table: str = "__neardup_index"
 ) -> dict | None:
-    """The index's segment manifest, or None for legacy/uncompacted
-    layouts. Shape: ``{"folded_upto": int, "segments": {id: rows},
+    """The index's segment manifest, or None for an index that was
+    never compacted. Shape: ``{"folded_upto": int, "segments": {id: rows},
     "next_seg": int}`` — epochs <= folded_upto are dead (their rows
     live in segments); negative partitions are live iff listed."""
     import json
@@ -643,7 +579,7 @@ def _write_segment_manifest(
 
 def live_epoch_filter(manifest: dict | None, exclude_epoch: int | None = None):
     """Column predicate selecting LIVE ``__epoch`` partitions under
-    ``manifest`` (None = legacy: everything live). Readers of the
+    ``manifest`` (None = never compacted: everything live). Readers of the
     near-dup tables must apply this — after a crashed compaction the
     folded epochs may still be on disk next to the sealed segment
     holding the same rows, and only the manifest says which copy
@@ -736,18 +672,12 @@ def compact_neardup_index_incremental(
     m = load_segment_manifest(target, index_table)
     if m is None:
         m = {"folded_upto": -1, "segments": {}, "next_seg": -2}
-        # adopt a legacy -1 base produced by the pre-manifest full
-        # compactor as a tracked (largest) segment
-        legacy = target.read(bk_table).filter(F.col("__epoch") == -1)
-        n = legacy.count()
-        if n:
-            m["segments"][-1] = n
         # bootstrap commit BEFORE any segment write: with no manifest
-        # on disk, legacy liveness treats EVERY partition as live, so
-        # a crash between a first segment write and its manifest
-        # commit would leave the orphan visible (duplicates). Once
-        # this no-op manifest exists, untracked negatives are
-        # invisible and every later crash window converges.
+        # on disk every partition reads as live, so a crash between a
+        # first segment write and its manifest commit would leave the
+        # orphan visible (duplicates). Once this no-op manifest
+        # exists, untracked negatives are invisible and every later
+        # crash window converges.
         _write_segment_manifest(target, index_table, m)
     all_parts = sorted(
         r[0]
@@ -761,29 +691,28 @@ def compact_neardup_index_incremental(
     segs: dict[int, int] = dict(m["segments"])
     dead: list[int] = []
 
-    def _seal(ids: list[int], seg_id: int) -> int:
-        """Write the union of partitions ``ids`` as partition
-        ``seg_id`` across all three tables; returns bucket rows.
-
-        Built DISTINCT: a crash of the pre-manifest (round-3) full
-        compactor could leave a legacy -1 base plus its
-        not-yet-dropped source epochs, and the bootstrap adopts both
-        copies as live — without the dedupe here those duplicates
-        would survive every fold forever, since folds only ever union
-        live partitions."""
+    def _seal(ids: list[int]) -> None:
+        """Write the union of partitions ``ids`` as one new segment
+        across all three tables; the segment supersedes ``ids``."""
+        seg_id = m["next_seg"]
+        m["next_seg"] -= 1
         for t in tables:
             part = (
                 target.read(t)
                 .filter(F.col("__epoch").isin(ids))
                 .withColumn("__epoch", F.lit(seg_id))
-                .distinct()
             )
             target.replace_partitions(t, part, "__epoch")
-        return (
+        rows = (
             target.read(bk_table)
             .filter(F.col("__epoch") == seg_id)
             .count()
         )
+        for p in ids:
+            segs.pop(p, None)  # folded epochs are not segments
+        segs[seg_id] = rows
+        stats["rewritten_rows"] += rows
+        dead.extend(ids)
 
     # the size-tiered merge below would take every segment, the new
     # fold segment included: seal the folded epochs and the old
@@ -793,32 +722,18 @@ def compact_neardup_index_incremental(
     )
     if fold:
         old = sorted(segs) if merge_all else []
-        seg_id = m["next_seg"]
-        m["next_seg"] -= 1
-        rows = _seal(fold + old, seg_id)
-        for p in old:
-            del segs[p]
-        segs[seg_id] = rows
+        _seal(fold + old)
         stats["folded_epochs"] = len(fold)
         if merge_all:
             stats["merged_segments"] = len(old) + 1
-        stats["rewritten_rows"] += rows
         m["folded_upto"] = max(fold)
-        dead += fold + old
     # size-tiered merge: collapse the smallest (excess + 1) segments
     if len(segs) > max_segments and not merge_all:
         pick = sorted(segs, key=lambda k: (segs[k], k))[
             : len(segs) - max_segments + 1
         ]
-        seg_id = m["next_seg"]
-        m["next_seg"] -= 1
-        rows = _seal(pick, seg_id)
-        for p in pick:
-            del segs[p]
-        segs[seg_id] = rows
+        _seal(pick)
         stats["merged_segments"] = len(pick)
-        stats["rewritten_rows"] += rows
-        dead += pick
     m["segments"] = segs
     stats["segments"] = len(segs)
     if dead:
@@ -829,7 +744,7 @@ def compact_neardup_index_incremental(
     live_now = {e for e in all_parts
                 if (e >= 0 and e > m["folded_upto"]) or e in segs}
     gc = sorted((set(all_parts) | set(dead)) - live_now)
-    if dead or (gc and load_segment_manifest(target, index_table)):
+    if gc:  # dead ⊆ gc; the manifest exists since the bootstrap
         for t in tables:
             target.drop_partitions(t, "__epoch", gc)
     return stats
@@ -866,23 +781,15 @@ def stream_dedup(
     Scale shape: state partitions by ``key_cols``; per-key payload is
     just the event-time entry. One availableNow pass drains the
     source and writes the survivors to ``out_dir`` as parquet."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(source_path)
-    df = _event_time(df, ts_col).withWatermark(ts_col, watermark)
+    df = _watermarked(
+        _file_stream(spark, source_path, schema, max_files_per_trigger),
+        ts_col, watermark,
+    )
     deduped = df.dropDuplicatesWithinWatermark(key_cols).select(
         *select_cols,
         F.unix_micros(F.col(ts_col)).alias("ts_us"),
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(deduped, out_dir, checkpoint_dir)
 
 
 def stream_interval_join(
@@ -915,16 +822,13 @@ def stream_interval_join(
     keeps only rows inside the watermark horizon. Late data beyond
     the watermark drops on BOTH sides — the documented Structured
     Streaming semantics (T9)."""
-    left = (
-        spark.readStream.schema(schema).parquet(source_path)
-        .filter(left_filter)
+    left, right = (
+        _watermarked(
+            _file_stream(spark, source_path, schema).filter(side),
+            ts_col, watermark,
+        )
+        for side in (left_filter, right_filter)
     )
-    right = (
-        spark.readStream.schema(schema).parquet(source_path)
-        .filter(right_filter)
-    )
-    left = _event_time(left, ts_col).withWatermark(ts_col, watermark)
-    right = _event_time(right, ts_col).withWatermark(ts_col, watermark)
     lcols = [F.col(f"l.{c}").alias(c) for c in join_keys]
     joined = (
         left.alias("l")
@@ -946,14 +850,7 @@ def stream_interval_join(
             F.unix_micros(F.col(f"r.{ts_col}")).alias("right_ts_us"),
         )
     )
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(joined, out_dir, checkpoint_dir)
 
 
 SESSION_OUTPUT_SCHEMA = T.StructType(
@@ -986,8 +883,6 @@ def stream_sessionize(
     watermark: str = "10 minutes",
     max_files_per_trigger: int | None = None,
     metrics: dict | None = None,
-    state_partitions: int | None = None,
-    state_store: str | None = None,
 ) -> None:
     """CUSTOM stateful streaming operator: gap-timeout sessionization
     via ``applyInPandasWithState`` — the arbitrary-state primitive the
@@ -1044,29 +939,12 @@ def stream_sessionize(
     closed-session immutability (an accumulator total; approximate
     under task retries, like any Spark accumulator-backed metric).
 
-    ``state_partitions``: state-store partition count for a NEW
-    checkpoint — an int pins it (via a scoped
-    spark.sql.shuffle.partitions around the start); None (default)
-    keeps the session conf. Existing checkpoints keep their recorded
-    count either way (Spark pins it at first start). Measured r11
-    A/B at sf0.1 (3 availableNow batches): 1 partition 10.1-10.4 s,
-    4 partitions 4.8-5.4 s, 32 partitions 5.3-5.4 s — the per-batch
-    cost here is compute that parallelizes, NOT state-store commit
-    fan-out, so deriving a tiny count from source bytes (the AQE-like
-    heuristic) makes this operator SLOWER; the session conf stays the
-    right default and the knob exists for deliberate production
-    pinning only.
+    State partitions and the state-store provider follow the session
+    conf: A/Bs at sf0.1 found no pinned partition count (1, 4, 32) and
+    not the RocksDB provider faster than the defaults — the per-batch
+    cost is compute that parallelizes, and RocksDB's per-partition
+    commit dwarfs this operator's three-long-per-key state.
 
-    ``state_store``: state-store provider for a NEW checkpoint —
-    'rocksdb' / 'hdfs' / a raw provider class; None (default) keeps
-    the session conf (HDFS-backed). Measured r12 A/B at sf0.1
-    (local[32], fresh JVM per sample, 3 availableNow batches):
-    hdfs min 8.24 / med 9.39 s vs rocksdb min 9.87 / med 14.08 s —
-    RocksDB pays native-store open/commit per partition per
-    micro-batch, which dwarfs this operator's three-long-per-key
-    state; it earns its keep only when state outgrows executor heaps
-    (millions of open sessions per partition), so the default stays
-    HDFS and the parameter is the deliberate opt-in.
     Batch-coalescing the source (one availableNow batch instead of
     three) was considered and REJECTED without measurement: the bench
     source's two sentinel files exist to advance the watermark
@@ -1150,11 +1028,10 @@ def stream_sessionize(
                 }
             )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(source_path)
-    df = _event_time(df, ts_col).withWatermark(ts_col, watermark)
+    df = _watermarked(
+        _file_stream(spark, source_path, schema, max_files_per_trigger),
+        ts_col, watermark,
+    )
     sessions = (
         df.select(
             F.col(key_col),
@@ -1170,16 +1047,7 @@ def stream_sessionize(
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    with _shuffle_partitions_scope(spark, state_partitions), \
-            _state_store_scope(spark, state_store):
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(sessions, out_dir, checkpoint_dir)
     if metrics is not None:
         metrics["late_dropped"] = int(dropped_acc.value)
 
@@ -1277,11 +1145,10 @@ def stream_hll(
     from sslr_spark.functions.hashing import h60
     from sslr_spark.functions.sketches import _hll_rho
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(source_path)
-    df = _event_time(df, ts_col).withWatermark(ts_col, watermark)
+    df = _watermarked(
+        _file_stream(spark, source_path, schema, max_files_per_trigger),
+        ts_col, watermark,
+    )
     h = h60(
         F.coalesce(F.col(value_col).cast("string"), F.lit("\x00"))
     ).alias("__h")
@@ -1302,15 +1169,7 @@ def stream_hll(
             "rho",
         )
     )
-    q = (
-        regs.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(regs, out_dir, checkpoint_dir)
 
 
 def stream_cms(
@@ -1346,11 +1205,10 @@ def stream_cms(
     (win_start_us, group..., row, col, cnt) parquet rows."""
     from sslr_spark.functions.sketches import _cms_cells
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(source_path)
-    df = _event_time(df, ts_col).withWatermark(ts_col, watermark)
+    df = _watermarked(
+        _file_stream(spark, source_path, schema, max_files_per_trigger),
+        ts_col, watermark,
+    )
     v = F.coalesce(F.col(value_col).cast("string"), F.lit("\x00"))
     regs = (
         df.select(
@@ -1373,12 +1231,4 @@ def stream_cms(
             "cnt",
         )
     )
-    q = (
-        regs.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(regs, out_dir, checkpoint_dir)

@@ -489,6 +489,98 @@ def test_compaction_rewrites_only_affected_buckets(spark, tmp_path):
     assert db.layout_meta("t")["n_buckets"] == 8
 
 
+def test_compaction_scattered_log_takes_clustered_rewrite(spark, tmp_path):
+    """A log touching more than half the buckets — one of them fully
+    tombstoned — folds through the scattered guard's clustered
+    whole-table rewrite, like a scattered copy-on-write batch: every
+    bucket is rewritten, the annihilated bucket has no directory, the
+    base equals the pre-compaction overlay read and the layout marker
+    survives."""
+    from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
+
+    db, base = _bucketed_db(spark, tmp_path)
+    buckets = {
+        r.id: r[BUCKET_COL]
+        for r in with_bucket(base, ["id"], 8, "portable").collect()
+    }
+    kill_bucket = buckets[0]
+    kill_ids = [i for i, b in buckets.items() if b == kill_bucket]
+    others = sorted(set(buckets.values()) - {kill_bucket})
+    # one updated key in each of five other buckets: 6 of 8 touched
+    upd_ids = [
+        next(i for i, b in sorted(buckets.items()) if b == ub)
+        for ub in others[:5]
+    ]
+    untouched = others[5:]
+    append_upsert_log(
+        db, "t",
+        spark.createDataFrame(
+            [(i, f"u{i}", 200) for i in upd_ids],
+            "id long, payload string, xmin long",
+        ),
+        ["id"],
+    )
+    append_delete_log(
+        db, "t", spark.createDataFrame([(i,) for i in kill_ids], "id long"),
+        ["id"], version=200,
+    )
+    expect = _rows(read_merged(db, "t", ["id"]))
+    snap_before = {
+        b: _file_snapshot(os.path.join(db.path("t"), f"{BUCKET_COL}={b}"))
+        for b in untouched
+    }
+
+    out = compact_upsert_log(db, "t", ["id"])
+    assert out["folded_rows"] == len(upd_ids) + len(kill_ids)
+    assert not db.table_exists(upsert_log_table("t"))
+    assert _rows(db.read("t")) == expect
+    assert not os.path.exists(
+        os.path.join(db.path("t"), f"{BUCKET_COL}={kill_bucket}")
+    ), "fully-tombstoned bucket dir must be gone"
+    for b in untouched:
+        assert snap_before[b] != _file_snapshot(
+            os.path.join(db.path("t"), f"{BUCKET_COL}={b}")
+        ), f"bucket {b} kept its files: not the whole-table rewrite"
+    assert db.layout_meta("t")["n_buckets"] == 8
+    assert db.layout_meta("t")["bucket_hash"] == "portable"
+
+
+def test_partitioned_merge_drops_bucket_emptied_by_tombstones(
+    spark, tmp_path
+):
+    """A change set carrying the tombstone marker deletes its
+    tombstoned keys and never writes them; a bucket it leaves empty
+    is removed (dynamic overwrite cannot express an empty partition)."""
+    from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
+    from sslr_spark.operators.updates import (
+        TOMBSTONE_COL,
+        merge_upsert_partitioned,
+    )
+
+    db, base = _bucketed_db(spark, tmp_path)
+    buckets = {
+        r.id: r[BUCKET_COL]
+        for r in with_bucket(base, ["id"], 8, "portable").collect()
+    }
+    kill_bucket = buckets[0]
+    kill_ids = [i for i, b in buckets.items() if b == kill_bucket]
+    upd_id = next(i for i, b in buckets.items() if b != kill_bucket)
+    changes = spark.createDataFrame(
+        [(i, None, 200, True) for i in kill_ids]
+        + [(upd_id, "u", 200, False)],
+        f"id long, payload string, xmin long, {TOMBSTONE_COL} boolean",
+    )
+    merge_upsert_partitioned(db, "t", changes, ["id"], 8)
+    expect = {
+        (r.id, r.payload, r.xmin) for r in base.collect()
+        if r.id not in kill_ids and r.id != upd_id
+    } | {(upd_id, "u", 200)}
+    assert _rows(db.read("t")) == expect
+    assert not os.path.exists(
+        os.path.join(db.path("t"), f"{BUCKET_COL}={kill_bucket}")
+    )
+
+
 def test_compaction_pruned_path_is_crash_idempotent(spark, tmp_path):
     """Crash AFTER the partition rewrite but BEFORE the log drop:
     the stale log re-applies as no-ops (each bucket's rewrite is a
@@ -610,6 +702,70 @@ def test_stream_mor_sync_append_overlay_and_compact(spark, tmp_path):
     assert _rows(db.read("t")) == expect
     # epoch sidecar recorded (replay guard)
     assert db.read_table_meta("t", "stream_mor")["epoch"] >= 0
+
+
+def test_stream_mor_sync_bootstrap_drops_key_deleted_in_first_batch(
+    spark, tmp_path
+):
+    """The bootstrap collapses the first micro-batch before it drops
+    flagged rows: a key upserted and then deleted inside that batch
+    never reaches the base."""
+    from pyspark.sql import types as T
+
+    from sslr_spark.streaming.pipeline import stream_mor_sync
+
+    src = str(tmp_path / "src")
+    db = _db(spark, tmp_path, "stream_mor_boot")
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("payload", T.StringType()),
+            T.StructField("xmin", T.LongType()),
+            T.StructField("is_deleted", T.BooleanType()),
+        ]
+    )
+    spark.createDataFrame(
+        [(1, "a", 100, False), (5, "b", 100, False), (5, None, 101, True)],
+        schema,
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream_mor_sync(
+        spark, src, schema, db, "t", ["id"], str(tmp_path / "ckpt"),
+        tombstone_flag="is_deleted",
+    ).awaitTermination()
+    assert _rows(read_merged(db, "t", ["id"])) == {(1, "a", 100)}
+    assert db.read("t").columns == ["id", "payload", "xmin"]
+
+
+def test_stream_mor_sync_rejects_mistyped_flagged_batch(spark, tmp_path):
+    """Flagged (tombstone-carrying) stream batches go through the same
+    column-type guard as append_upsert_log: an int version against a
+    bigint base fails the batch and writes no log rows."""
+    from pyspark.sql import types as T
+
+    from sslr_spark.streaming.pipeline import stream_mor_sync
+
+    src = str(tmp_path / "src")
+    db = _db(spark, tmp_path, "stream_mor_typed")
+    db.overwrite("t", _base(spark))
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("payload", T.StringType()),
+            T.StructField("xmin", T.IntegerType()),
+            T.StructField("is_deleted", T.BooleanType()),
+        ]
+    )
+    spark.createDataFrame(
+        [(1, "U1", 200, False), (2, None, 200, True)], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    q = stream_mor_sync(
+        spark, src, schema, db, "t", ["id"], str(tmp_path / "ckpt"),
+        tombstone_flag="is_deleted",
+    )
+    with pytest.raises(Exception, match="column types"):
+        q.awaitTermination()
+    assert not db.table_exists(upsert_log_table("t"))
+    assert _rows(read_merged(db, "t", ["id"])) == _rows(_base(spark))
 
 
 # ------------------------------------------------------------------

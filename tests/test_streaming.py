@@ -566,52 +566,6 @@ def test_incremental_compaction_crash_convergence(spark, tmp_path, monkeypatch):
     assert target.read("accepted").count() == 50
 
 
-def test_incremental_compaction_dedupes_legacy_crash_dupes(
-    spark, tmp_path
-):
-    """ADVICE r4: a crash of the pre-manifest (round-3) FULL compactor
-    could leave a legacy -1 base plus its not-yet-dropped source
-    epochs; the manifest bootstrap adopts BOTH copies as live. The
-    incremental path's _seal must build segments distinct (like the
-    full compactor) so those duplicates converge instead of surviving
-    every fold forever."""
-    import sslr_spark.streaming.pipeline as P
-
-    target = ParquetDatabase(spark, str(tmp_path / "legacy_dupes"))
-    for e in range(4):
-        _mk_epoch(spark, target, e, 5)
-    # simulate the round-3 crash artifact: a -1 base holding copies of
-    # epochs 0-1 (what the pre-manifest full compactor wrote before it
-    # died mid-GC), with the source epochs still on disk, no manifest
-    for t in ("accepted", "__neardup_index_shingles",
-              "__neardup_index_buckets"):
-        legacy = (
-            target.read(t)
-            .filter(F.col("__epoch").isin([0, 1]))
-            .withColumn("__epoch", F.lit(-1))
-        )
-        target.replace_partitions(t, legacy, "__epoch")
-    # both copies are live at bootstrap: 4 epochs x 5 + 10 legacy dupes
-    assert P.read_accepted(target).count() == 30
-
-    # max_segments=1 forces the fold segment to merge with the adopted
-    # legacy base on the first call — the distinct collapses the dupes
-    stats = P.compact_neardup_index_incremental(
-        target, keep_last=2, max_segments=1
-    )
-    assert stats["folded_epochs"] == 2 and stats["merged_segments"] == 2
-    # one seal of epochs 0-1 plus the base: each row written once
-    assert stats["rewritten_rows"] == 10
-    acc = P.read_accepted(target)
-    assert acc.count() == 20  # epochs 0..3, no double-counted rows
-    assert acc.select("doc_id").distinct().count() == 20
-    # the index tables converged too
-    bk = target.read("__neardup_index_buckets").filter(
-        P.live_epoch_filter(P.load_segment_manifest(target))
-    )
-    assert bk.count() == 20
-
-
 @pytest.mark.slow
 def test_compaction_state_machine_property(spark, tmp_path_factory):
     """Hypothesis state machine over the compactor: any interleaving
