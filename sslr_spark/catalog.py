@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import re
 
-from dataclasses import dataclass, field
 from enum import Enum
 
 from pyspark.sql import types as T
@@ -47,13 +46,6 @@ class SchemaMismatch(Exception):
 class MissingPrimaryKey(Exception):
     """Table has no usable primary key (reference
     internal/job.go:216-218)."""
-
-
-@dataclass
-class TableMeta:
-    table: str
-    schema: T.StructType
-    primary_keys: list[str] = field(default_factory=list)
 
 
 def schemas_equal(

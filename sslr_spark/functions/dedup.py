@@ -1667,8 +1667,7 @@ def semantic_dedup(
     pair space — with n_cells sized so clusters hold ~1e3-1e5 vectors,
     the within-cell pair join (embedding_near_dup_pairs, blocked on
     the cell and guarded by ``max_block_size``) is linear-ish in
-    corpus size, never all-pairs. The production quantizer is the
-    distributed-KMeans ivf_index; the fixed variant keeps the whole
+    corpus size, never all-pairs. Pinned centroids keep the whole
     operator SQL-reproducible for the oracle. ``mode='fast'`` swaps
     the pair join's interpreted expression cosine for per-block numpy
     BLAS (see embedding_near_dup_pairs) — the production path;

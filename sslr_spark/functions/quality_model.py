@@ -2,7 +2,8 @@
 
 Heuristic metrics (functions/text.py::quality_metrics) are the weak
 signal; production pipelines also run a trained quality classifier.
-Two paths, mirroring the ivf_index / ivf_index_fixed split:
+A trainer and a fixed-literal scorer, as in the IVF index (KMeans
+trains centroids; fixed centroids make the oracle-checked form):
 
 - :func:`train_quality_classifier` — distributed MLlib logistic
   regression over the heuristic feature columns (the library/trainer

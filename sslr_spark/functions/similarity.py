@@ -1,21 +1,31 @@
 """Similarity search over an embedding column (array<float>).
 
-Baseline: brute-force cosine top-k — a single scan with a JVM
-array-fold dot product (no UDF), then a top-k. Scale path: LSH
-bucketing (sign-bit buckets here; hyperplane or IVF centroids in a
-real deployment) so the query only scans one bucket — same answer
-shape, sub-linear work.
+Baseline: brute-force cosine top-k — a single scan against the
+collected query vector, then a TakeOrdered top-k; the scoring kernel
+(JVM array fold or one BLAS gemv per Arrow batch) follows the vector
+width. Scale path: LSH bucketing or an IVF coarse quantizer, so the
+query only scans its probe buckets/cells — same answer shape,
+sub-linear work.
 
 Float math parity note: all arithmetic is forced to double and folds
 run in index order, so Spark and DuckDB (list_transform/list_sum over
 the same index order) agree bit-for-bit; results are rounded to 6
-decimals anyway before comparison.
+decimals anyway before comparison. Every cosine drops zero-norm rows
+(NULL score), and an operator that collects its query row
+(``_query_row``) raises on a missing query id.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Vector width from which topk_bruteforce scores with one BLAS gemv per
+# Arrow batch instead of the JVM array fold. Swept at 64-768 dims on
+# local[4]: from 384 dims the Arrow kernel is no slower at any corpus
+# size; below it the JVM fold wins on small corpora (2k rows) and
+# loses on large ones (crossover sweep in CHANGES.md).
+_ARROW_MIN_DIM = 384
 
 
 def dot_expr(a: str, b: str) -> Column:
@@ -36,7 +46,43 @@ def norm_expr(a: str) -> Column:
 
 
 def cosine_expr(a: str, b: str) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+    """Cosine of two array columns; NULL when either side has zero
+    norm (try_divide: a plain division raises DIVIDE_BY_ZERO under
+    ANSI mode, the Spark 4 default, and kills the whole query)."""
+    return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
+
+
+def _query_row(df: DataFrame, query_vec_id: int, id_col: str, *cols):
+    """The query's row (``cols`` evaluated on it), collected once. A
+    wrong id raises instead of masquerading as an empty corpus."""
+    rows = df.filter(F.col(id_col) == query_vec_id).select(*cols).take(1)
+    if not rows:
+        raise ValueError(f"query vector {id_col}={query_vec_id} not found")
+    return rows[0]
+
+
+def _with_qvec(df: DataFrame, qvec) -> DataFrame:
+    """``df`` plus the collected query vector as the literal array<double>
+    column ``__qvec`` (exact for float inputs too): the scan side needs
+    no join and no broadcast job."""
+    return df.withColumn("__qvec", _double_array_literal(qvec))
+
+
+def _cosine_topk(
+    scored: DataFrame, k: int, id_col: str, sim: Column, *keep: str
+) -> DataFrame:
+    """The exact top-k tail every cosine search ends in: ``sim``
+    rounded to 6 decimals as ``cos_sim``, TakeOrdered cut on (cos_sim
+    desc, id), NULL (zero-norm) rows dropped. The NULL filter runs
+    AFTER the cut: descending order puts NULLs last, so the result is
+    the same, and a filter before it would be pushed into the scan as
+    a second evaluation of the cosine per row."""
+    return (
+        scored.select(id_col, *keep, F.round(sim, 6).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .limit(k)
+        .filter(F.col("cos_sim").isNotNull())
+    )
 
 
 def sign_lsh_bucket(vec_col: str, n_bits: int = 8) -> Column:
@@ -61,24 +107,48 @@ def topk_bruteforce(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors of the vector with ``query_vec_id``.
+    """Exact top-k cosine neighbors of the vector with ``query_vec_id``
+    — the brute-force baseline and the recall oracle for the ANN
+    variants. Zero-norm rows are dropped; a missing id raises.
 
-    The one-row query side is broadcast; the scan side stays
-    partitioned — this is the brute-force ANN baseline and the recall
-    oracle for the LSH variant.
-    """
-    q = df.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("__qvec")
-    )
-    scored = (
-        df.filter(F.col(id_col) != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            F.round(cosine_expr(vec_col, "__qvec"), 6).alias("cos_sim"),
+    The query row is collected once; the scan side stays partitioned.
+    The kernel follows the query's width: below ``_ARROW_MIN_DIM`` the
+    JVM array fold scores against the query as a literal; from it on,
+    one BLAS gemv per Arrow record batch (mapInPandas) amortizes the
+    Arrow transfer and wins. Both round
+    in the JVM (F.round, HALF_UP); they can differ only by last-ULP
+    summation order at an exact half-boundary of the 6th decimal."""
+    qvec = [float(x) for x in _query_row(df, query_vec_id, id_col, vec_col)[0]]
+    corpus = df.filter(F.col(id_col) != query_vec_id)
+    if len(qvec) < _ARROW_MIN_DIM:
+        return _cosine_topk(
+            _with_qvec(corpus, qvec), k, id_col, cosine_expr(vec_col, "__qvec")
         )
+
+    import numpy as np
+    import pandas as pd
+
+    qv = np.asarray(qvec, dtype=np.float64)
+    qn = float(np.sqrt((qv * qv).sum()))
+    schema = f"{id_col} {df.schema[id_col].dataType.simpleString()}, __sim double"
+
+    def score(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            norms = np.sqrt((m * m).sum(axis=1)) * qn
+            keep = norms > 0
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = m @ qv / norms
+            yield pd.DataFrame(
+                {id_col: pdf[id_col][keep], "__sim": sims[keep]}
+            )
+
+    return _cosine_topk(
+        corpus.select(id_col, vec_col).mapInPandas(score, schema),
+        k, id_col, F.col("__sim"),
     )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
 def topk_lsh(
@@ -97,15 +167,12 @@ def topk_lsh(
     q = bucketed.filter(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("__qvec"), F.col("__bucket").alias("__qbucket")
     )
-    scored = (
-        bucketed.filter(F.col(id_col) != query_vec_id)
-        .join(F.broadcast(q), F.col("__bucket") == F.col("__qbucket"))
-        .select(
-            id_col,
-            F.round(cosine_expr(vec_col, "__qvec"), 6).alias("cos_sim"),
-        )
+    return _cosine_topk(
+        bucketed.filter(F.col(id_col) != query_vec_id).join(
+            F.broadcast(q), F.col("__bucket") == F.col("__qbucket")
+        ),
+        k, id_col, cosine_expr(vec_col, "__qvec"),
     )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
 def ivf_index(
@@ -114,13 +181,13 @@ def ivf_index(
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantizer: KMeans centroids + cell assignment.
-
-    Returns (indexed_df with a __cell column, centroids_df). At scale
-    the indexed table is written partitioned by __cell so a query scans
-    only its probe cells (same partition-pruning story as the sync
-    engine's bucket partitioning). Training samples the input; KMeans
-    runs on Spark ML (distributed)."""
+    """IVF coarse quantizer trained by Spark ML KMeans (distributed):
+    centroids plus the model's nearest-center (Euclidean) assignment.
+    Served by :func:`ivf_topk_serve`, the query path of
+    :func:`ivf_index_fixed` too. The assignment stays KMeans' own:
+    re-assigning by argmax cosine (:func:`assign_cells_fixed`) loses
+    the residual-vs-raw IVF-PQ calibration (CHANGES.md). Returns
+    (indexed with __cell, centroids(cell, centroid array<double>))."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -135,45 +202,6 @@ def ivf_index(
     return indexed, centroids
 
 
-def ivf_search(
-    indexed: DataFrame,
-    centroids: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """IVF query: rank cells by centroid distance, scan the best
-    ``n_probe`` cells only, exact cosine within them. The centroid
-    ranking is a tiny driver-side computation (n_cells rows); the scan
-    is partition-pruned to the probe cells."""
-    import math
-
-    cents = centroids.collect()
-
-    def dist(c):
-        return math.sqrt(sum((a - b) ** 2 for a, b in zip(c, query_vec)))
-
-    probe = [r.cell for r in sorted(cents, key=lambda r: dist(r.centroid))[:n_probe]]
-    q = indexed.sparkSession.createDataFrame(
-        [([float(x) for x in query_vec],)], "qvec array<float>"
-    )
-    scoped = indexed.filter(F.col("__cell").isin(probe))
-    if exclude_id is not None:
-        scoped = scoped.filter(F.col(id_col) != exclude_id)
-    return (
-        scoped.crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            F.round(cosine_expr(vec_col, "qvec"), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def ivf_index_fixed(
     df: DataFrame,
     centroid_ids: list[int],
@@ -183,9 +211,10 @@ def ivf_index_fixed(
     """Deterministic IVF coarse quantizer: centroids are the embeddings
     of caller-fixed row ids — no iterative training, so assignment is
     fully SQL-reproducible and the correctness oracle can replay it in
-    DuckDB. ``ivf_index`` (distributed KMeans) stays the production
-    trainer; this variant pins the quantizer for verification and for
-    incremental re-indexing (frozen centroids, append-stable cells).
+    DuckDB. :func:`ivf_index` trains centroids with KMeans instead;
+    both serve through :func:`ivf_topk_serve`. Pinned centroids suit
+    verification and incremental re-indexing (frozen centroids,
+    append-stable cells).
 
     Assignment = argmax cosine(vec, centroid) (spherical-IVF
     convention), ties broken by the LOWER cell id. Scale shape: the
@@ -256,12 +285,15 @@ def assign_cells_fixed(
     under struct ordering. Pure per-row map expression: zero shuffle,
     zero row amplification. Pass ``score_col`` to also keep the
     winning rounded cosine (centrality consumers:
-    sampling.cluster_balance)."""
+    sampling.cluster_balance). A zero-norm vector scores NULL against
+    every centroid and lands in cell 0 (try_divide, ANSI-safe)."""
     scored = [
         F.struct(
             F.round(
-                dot_expr(vec_col, f"__c{i}")
-                / (norm_expr(vec_col) * F.lit(_l2(r.centroid))),
+                F.try_divide(
+                    dot_expr(vec_col, f"__c{i}"),
+                    norm_expr(vec_col) * F.lit(_l2(r.centroid)),
+                ),
                 9,
             ).alias("s"),
             F.lit(-i).alias("nc"),
@@ -343,6 +375,46 @@ def _l2(vec) -> float:
     return math.sqrt(acc)
 
 
+def ivf_topk_serve(
+    indexed: DataFrame,
+    cents: DataFrame,
+    query_vec_id: int,
+    k: int = 10,
+    n_probe: int = 3,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Serve an IVF top-k query against ANY (indexed, cents) pair —
+    trained (:func:`ivf_index`) or fixed (:func:`ivf_index_fixed`):
+    rank cells by centroid-vs-query cosine, scan the top ``n_probe``
+    cells, exact cosine within. With ``n_probe`` = all cells this
+    equals :func:`topk_bruteforce` (property-tested)."""
+    qvec = _query_row(indexed, query_vec_id, id_col, vec_col)[0]
+    scan = indexed.join(
+        F.broadcast(_probe_cells(cents, qvec, n_probe)),
+        F.col("__cell") == F.col("__probe_cell"),
+    ).filter(F.col(id_col) != query_vec_id)
+    return _cosine_topk(
+        _with_qvec(scan, qvec), k, id_col, cosine_expr(vec_col, "__qvec")
+    )
+
+
+def _probe_cells(cents: DataFrame, qvec, n_probe: int) -> DataFrame:
+    """The ``n_probe`` cells whose centroids are most cosine-similar to
+    the query vector ``qvec``, as ``__probe_cell``. The cut is
+    orderBy+limit — planned as TakeOrdered (per-partition heap +
+    driver merge), not a row_number window, which would drag all rows
+    to one partition. Ordering is total (sim desc, cell asc), so the
+    cut is deterministic."""
+    return (
+        _with_qvec(cents, qvec)
+        .withColumn("__qsim", F.round(cosine_expr("centroid", "__qvec"), 9))
+        .orderBy(F.col("__qsim").desc(), F.col("cell"))
+        .limit(n_probe)
+        .select(F.col("cell").alias("__probe_cell"))
+    )
+
+
 def ivf_ann_fixed(
     df: DataFrame,
     centroid_ids: list[int],
@@ -352,40 +424,11 @@ def ivf_ann_fixed(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """IVF ANN with the fixed quantizer, end-to-end declarative (no
-    driver-side collect): rank cells by centroid-vs-query cosine, scan
-    the top ``n_probe`` cells, exact cosine within. With
-    ``n_probe == len(centroid_ids)`` this equals ``topk_bruteforce``
-    (property-tested)."""
+    """IVF ANN with the fixed quantizer: :func:`ivf_index_fixed` then
+    :func:`ivf_topk_serve`."""
     indexed, cents = ivf_index_fixed(df, centroid_ids, vec_col, id_col)
-    q = df.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("__qvec")
-    )
-    # top-n_probe cells via orderBy+limit — planned as TakeOrdered
-    # (per-partition heap + driver merge), NOT the row_number window
-    # this used before: an unpartitioned window drags all rows to one
-    # partition and warned in every bench run, even though the input
-    # here is only n_cells rows. Ordering is total (sim desc, cell
-    # asc), so the cut is deterministic.
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .withColumn("__qsim", F.round(cosine_expr("centroid", "__qvec"), 9))
-        .orderBy(F.col("__qsim").desc(), F.col("cell"))
-        .limit(n_probe)
-        .select(F.col("cell").alias("__probe_cell"))
-    )
-    return (
-        indexed.join(
-            F.broadcast(probe), F.col("__cell") == F.col("__probe_cell")
-        )
-        .filter(F.col(id_col) != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            F.round(cosine_expr(vec_col, "__qvec"), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return ivf_topk_serve(
+        indexed, cents, query_vec_id, k, n_probe, vec_col, id_col
     )
 
 
@@ -579,18 +622,10 @@ def topk_quantized(
     — compose with LSH/IVF blocking exactly like the float paths.
     The one-row query side broadcasts; TakeOrdered merges per-partition
     top-k (no global sort)."""
-    qrows = (
-        df.filter(F.col(id_col) == query_vec_id)
-        .select(quantize_int8(vec_col, scale).alias("__q"))
-        .take(1)
+    qrow = _query_row(
+        df, query_vec_id, id_col, quantize_int8(vec_col, scale).alias("__q")
     )
-    if not qrows:
-        # same contract as topk_bruteforce_arrow: a wrong id must not
-        # masquerade as an empty corpus
-        raise ValueError(
-            f"query vector {id_col}={query_vec_id} not found"
-        )
-    qd = df.sparkSession.createDataFrame(qrows, "__q array<bigint>")
+    qd = df.sparkSession.createDataFrame([qrow], "__q array<bigint>")
     cv = quantize_int8(vec_col, scale)
     dot = F.aggregate(
         F.zip_with(cv, F.col("__q"), lambda a, b: a * b),
@@ -656,14 +691,10 @@ def range_search_quantized(
             f"threshold must be a non-negative rational, got "
             f"{threshold_num}/{threshold_den}"
         )
-    qrows = (
-        df.filter(F.col(id_col) == query_vec_id)
-        .select(quantize_int8(vec_col, scale).alias("__q"))
-        .take(1)
+    qrow = _query_row(
+        df, query_vec_id, id_col, quantize_int8(vec_col, scale).alias("__q")
     )
-    if not qrows:
-        raise ValueError(f"query vector {id_col}={query_vec_id} not found")
-    qd = df.sparkSession.createDataFrame(qrows, "__q array<bigint>")
+    qd = df.sparkSession.createDataFrame([qrow], "__q array<bigint>")
     cv = quantize_int8(vec_col, scale)
     dot = F.aggregate(
         F.zip_with(cv, F.col("__q"), lambda a, b: a * b),
@@ -695,73 +726,6 @@ def range_search_quantized(
         .drop("__nn2")
         .orderBy(F.col("dot").desc(), F.col(id_col))
     )
-
-
-def topk_bruteforce_arrow(
-    df: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Arrow-batched numpy variant of :func:`topk_bruteforce`: cosine
-    per partition as ONE BLAS matrix-vector product over the record
-    batch (mapInPandas), then the usual TakeOrdered merge.
-
-    Equality-tested against the JVM fold on the fixture corpus; in
-    general the two paths can differ by last-ULP summation order
-    (pairwise BLAS reduction vs the sequential fold) at exact
-    half-boundary values of the 6th decimal. Rounding happens in the
-    JVM layer (F.round, HALF_UP) on BOTH paths, so the rounding MODE
-    can never diverge. Zero-norm rows score NaN inside the batch and
-    are filtered out (descending sort would otherwise rank NaN first;
-    the JVM fold's ANSI division errors on them instead — filter
-    degenerate vectors upstream either way).
-
-    Which path wins is dimensional: at 64 dims the JVM higher-order
-    fold stays in codegen and avoids Arrow serde; at real embedding
-    widths (≥ 768) one BLAS gemv per batch amortizes the transfer and
-    wins — this variant IS the scale path for wide vectors, and the
-    pattern (batch matrix op in mapInPandas) is what a GPU scorer
-    would follow too."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = (
-        df.filter(F.col(id_col) == query_vec_id).select(vec_col).collect()
-    )
-    if not q_rows:
-        raise ValueError(f"query vector {query_vec_id} not found")
-
-    qv = np.asarray(q_rows[0][0], dtype=np.float64)
-    qn = float(np.sqrt((qv * qv).sum()))
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, __raw_sim double"
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            norms = np.sqrt((m * m).sum(axis=1)) * qn
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(norms > 0, m @ qv / norms, np.nan)
-            yield pd.DataFrame({id_col: pdf[id_col], "__raw_sim": sims})
-
-    scored = (
-        df.filter(F.col(id_col) != query_vec_id)
-        .select(id_col, vec_col)
-        .mapInPandas(score, schema)
-        # pandas NaN crosses Arrow as NULL (and isnan(NULL) is false):
-        # guard both spellings of "no valid score"
-        .filter(
-            F.col("__raw_sim").isNotNull() & ~F.isnan(F.col("__raw_sim"))
-        )
-        .select(id_col, F.round(F.col("__raw_sim"), 6).alias("cos_sim"))
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
 # ------------------------------------------------------------------
@@ -849,21 +813,14 @@ def topk_binary(
         if probe is None:
             raise ValueError("empty corpus")
         dim = int(probe["d"])
-    qrows = (
-        df.filter(F.col(id_col) == query_vec_id)
-        .select(
-            sign_pack_words(vec_col, dim).alias("__qsig"),
-            F.col(vec_col).alias("__qvec"),
-        )
-        .take(1)
+    qrow = _query_row(
+        df, query_vec_id, id_col,
+        sign_pack_words(vec_col, dim).alias("__qsig"),
+        F.col(vec_col).alias("__qvec"),
     )
-    if not qrows:
-        raise ValueError(
-            f"query vector {id_col}={query_vec_id} not found"
-        )
     vec_type = df.schema[vec_col].dataType.simpleString()
     q = df.sparkSession.createDataFrame(
-        qrows, f"__qsig array<bigint>, __qvec {vec_type}"
+        [qrow], f"__qsig array<bigint>, __qvec {vec_type}"
     )
     cand = (
         df.filter(F.col(id_col) != query_vec_id)
@@ -875,25 +832,10 @@ def topk_binary(
         .orderBy(F.col("hamming").asc(), F.col(id_col))
         .limit(k * rerank_factor)
     )
-    # try_divide: an all-zero vector (norm 0) in the candidate window
-    # must drop, not crash the rerank with DIVIDE_BY_ZERO under ANSI
-    # sessions (Spark 4 default) — same contract as topk_quantized;
+    # an all-zero vector in the candidate window drops (NULL cosine);
     # the oracle guards with `nn > 0` for the same rows
-    return (
-        cand.select(
-            id_col,
-            "hamming",
-            F.round(
-                F.try_divide(
-                    dot_expr(vec_col, "__qvec"),
-                    norm_expr(vec_col) * norm_expr("__qvec"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return _cosine_topk(
+        cand, k, id_col, cosine_expr(vec_col, "__qvec"), "hamming"
     )
 
 
@@ -980,16 +922,7 @@ def ivf_recall(
     def scored(base: DataFrame) -> DataFrame:
         return (
             base.filter(F.col(id_col) != F.col("query_id"))
-            .withColumn(
-                "cos_sim",
-                F.round(
-                    F.try_divide(
-                        dot_expr(vec_col, "__qvec"),
-                        norm_expr(vec_col) * norm_expr("__qvec"),
-                    ),
-                    6,
-                ),
-            )
+            .withColumn("cos_sim", F.round(cosine_expr(vec_col, "__qvec"), 6))
             .filter(F.col("cos_sim").isNotNull())
         )
 
@@ -1063,16 +996,7 @@ def hard_negatives(
             (F.col(label_col) != F.col("__qlabel"))
             & (F.col(id_col) != F.col("query_id"))
         )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                F.try_divide(
-                    dot_expr(vec_col, "__qvec"),
-                    norm_expr(vec_col) * norm_expr("__qvec"),
-                ),
-                6,
-            ),
-        )
+        .withColumn("cos_sim", F.round(cosine_expr(vec_col, "__qvec"), 6))
         .filter(F.col("cos_sim").isNotNull())
     )
     return _topk_per_query_salted(cand, k, id_col, salt_partitions).select(
@@ -1096,13 +1020,12 @@ def pq_train(
     seed: int = 42,
 ) -> list[list[list[float]]]:
     """Train per-subspace PQ codebooks with distributed KMeans — the
-    production counterpart of the fixed-codebook path, exactly as
-    ``ivf_index`` (KMeans) pairs with ``ivf_index_fixed``: train here
-    on a sample, publish the codebooks, and encode/serve through
-    :func:`pq_encode_with_books` / :func:`pq_topk_from_codes`, whose
-    plans are identical to the verification-grade fixed path (the
-    oracle pins the plan via fixed codebooks; this trains better
-    literals for the same plan).
+    trained counterpart of the fixed-codebook path, as
+    :func:`ivf_index` is of :func:`ivf_index_fixed`: train here on a
+    sample, publish the codebooks, and encode/serve through
+    :func:`pq_encode_with_books` / :func:`pq_topk_from_codes`, the same
+    plans the fixed path runs (the oracle pins the plan via fixed
+    codebooks; training only supplies better literals for it).
 
     Vectors are unit-normalized with the same quantized norm the
     encoders use, then each of the ``m`` dim/m-wide slices is fit
@@ -1368,10 +1291,7 @@ def pq_topk_fixed(
     cut.
     """
     encoded, books = pq_encode_fixed(df, codebook_ids, m, vec_col, id_col)
-    qrow = df.filter(F.col(id_col) == query_vec_id).select(vec_col).take(1)
-    if not qrow:
-        raise ValueError(f"query vector {id_col}={query_vec_id} not found")
-    qvec = [float(x) for x in qrow[0][0]]
+    qvec = [float(x) for x in _query_row(df, query_vec_id, id_col, vec_col)[0]]
     return pq_topk_from_codes(
         encoded, books, qvec, k=k, rerank_factor=rerank_factor,
         vec_col=vec_col, id_col=id_col, exclude_id=query_vec_id,
@@ -1408,10 +1328,6 @@ def pq_topk_from_codes(
     changed."""
     m = len(books)
     adc = _pq_adc_expr(qvec, books, m)
-    q = encoded.sparkSession.createDataFrame(
-        [(qvec,)],
-        f"__qvec {encoded.schema[vec_col].dataType.simpleString()}",
-    )
     cand = encoded
     if exclude_id is not None:
         cand = cand.filter(F.col(id_col) != exclude_id)
@@ -1425,22 +1341,9 @@ def pq_topk_from_codes(
     fetched = encoded.select(id_col, vec_col).join(
         F.broadcast(ids), id_col
     )
-    return (
-        fetched.crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            "adc_dist",
-            F.round(
-                F.try_divide(
-                    dot_expr(vec_col, "__qvec"),
-                    norm_expr(vec_col) * norm_expr("__qvec"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return _cosine_topk(
+        _with_qvec(fetched, qvec),
+        k, id_col, cosine_expr(vec_col, "__qvec"), "adc_dist",
     )
 
 
@@ -1807,23 +1710,8 @@ def ivfpq_topk_serve(
     else:
         encoded = pq_encode_with_books(indexed, books, vec_col)
 
-    qrow = (
-        indexed.filter(F.col(id_col) == query_vec_id).select(vec_col).take(1)
-    )
-    if not qrow:
-        raise ValueError(f"query vector {id_col}={query_vec_id} not found")
-    qvec = [float(x) for x in qrow[0][0]]
-    q = indexed.sparkSession.createDataFrame(
-        [(qvec,)],
-        f"__qvec {indexed.schema[vec_col].dataType.simpleString()}",
-    )
-    probe = (
-        cents.crossJoin(F.broadcast(q))
-        .withColumn("__qsim", F.round(cosine_expr("centroid", "__qvec"), 9))
-        .orderBy(F.col("__qsim").desc(), F.col("cell"))
-        .limit(n_probe)
-        .select(F.col("cell").alias("__probe_cell"))
-    )
+    qvec = [float(x) for x in _query_row(indexed, query_vec_id, id_col, vec_col)[0]]
+    probe = _probe_cells(cents, qvec, n_probe)
     cwsq = [[_sumsq_int(cw) for cw in books[j]] for j in range(m)]
     if residual:
         # per-cell ADC tables: the query residual differs per cell, so
@@ -1889,22 +1777,9 @@ def ivfpq_topk_serve(
         .orderBy(F.col("adc_dist").asc(), F.col(id_col))
         .limit(k * rerank_factor)
     )
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            "adc_dist",
-            F.round(
-                F.try_divide(
-                    dot_expr(vec_col, "__qvec"),
-                    norm_expr(vec_col) * norm_expr("__qvec"),
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return _cosine_topk(
+        _with_qvec(cand, qvec),
+        k, id_col, cosine_expr(vec_col, "__qvec"), "adc_dist",
     )
 
 

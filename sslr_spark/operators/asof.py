@@ -60,56 +60,3 @@ def asof_join(
         )
     return out.filter(F.col("__is_left") == 1).drop("__is_left")
 
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    by_cols: list[str],
-    ts_col: str,
-    value_cols: list[str],
-    suffix: str = "_asof",
-) -> DataFrame:
-    """Same as-of semantics via grouped ``applyInPandas`` +
-    ``pd.merge_asof`` per partition key — the Arrow-batched fallback
-    shape for operators whose per-group logic can't be expressed as
-    window functions. Results are identical to :func:`asof_join`
-    (equality-tested); the union+window form is preferred in
-    production because it stays JVM-side."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [
-            T.StructField(f"{c}{suffix}", dict(zip(right.columns, right.schema.fields))[c].dataType, True)
-            for c in value_cols
-        ]
-    )
-    lt = left.withColumn("__side", F.lit(0))
-    rt = right.withColumn("__side", F.lit(1))
-    for c in lt.columns:
-        if c not in rt.columns:
-            rt = rt.withColumn(c, F.lit(None).cast(dict(lt.dtypes)[c]))
-    for c in rt.columns:
-        if c not in lt.columns:
-            lt = lt.withColumn(c, F.lit(None).cast(dict(rt.dtypes)[c]))
-    unioned = lt.unionByName(rt.select(*lt.columns))
-    left_out_cols = list(left.columns)
-
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = pdf[pdf["__side"] == 0][left_out_cols].sort_values(ts_col)
-        rpdf = (
-            pdf[pdf["__side"] == 1][[ts_col] + value_cols]
-            .sort_values(ts_col)
-            .rename(columns={c: f"{c}{suffix}" for c in value_cols})
-        )
-        if lpdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        if rpdf.empty:
-            out = lpdf.copy()
-            for c in value_cols:
-                out[f"{c}{suffix}"] = None
-            return out
-        return pd.merge_asof(lpdf, rpdf, on=ts_col, direction="backward")
-
-    return unioned.groupBy(*by_cols).applyInPandas(per_group, out_schema)

@@ -141,8 +141,3 @@ def min_key(df: DataFrame, pk_cols: Sequence[str]) -> tuple | None:
     row = df.agg(F.min(F.struct(*[F.col(c) for c in pk_cols])).alias("k")).first()
     return tuple(row["k"]) if row and row["k"] is not None else None
 
-
-def sorted_pk_cols(pk_cols: Sequence[str]) -> list[str]:
-    """PK column names sorted lexicographically before use, preserving
-    the reference's deterministic key order (internal/job.go:214-221)."""
-    return sorted(pk_cols)

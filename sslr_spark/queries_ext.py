@@ -2054,9 +2054,9 @@ def q_sim_ivf_ann(spark, sf_dir):
     """IVF ANN with a deterministic fixed quantizer (centroids = the
     embeddings of vec_ids 1..8), probe the 3 closest cells, exact
     cosine within — hash-checked against a DuckDB replay of the full
-    assignment + probe + ranking. The iterative KMeans trainer
-    (S.ivf_index) remains the production path (unit-tested); this
-    query pins the quantizer so the result is SQL-reproducible."""
+    assignment + probe + ranking. An index trained by S.ivf_index
+    serves through the same path (S.ivf_topk_serve); this query pins
+    the quantizer so the result is SQL-reproducible."""
     return S.ivf_ann_fixed(
         _emb(spark, sf_dir), _IVF_CENT_IDS, query_vec_id=0, k=10, n_probe=3
     )

@@ -225,96 +225,6 @@ def stream_mor_sync(
     )
 
 
-def windowed_event_aggregate(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Event-time tumbling-window aggregation with a lateness
-    watermark — works on both a streaming and a batch DataFrame
-    (identical code path; T9 upgrade over the reference)."""
-    return (
-        _watermarked(events, ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-FIRST_SEEN_OUTPUT = T.StructType(
-    [
-        T.StructField("key", T.StringType(), False),
-        T.StructField("first_version", T.LongType(), True),
-    ]
-)
-FIRST_SEEN_STATE = T.StructType([T.StructField("seen", T.BooleanType(), False)])
-
-
-def streaming_first_seen(
-    keyed_stream: DataFrame,
-    key_col: str = "key",
-    version_col: str = "xmin",
-):
-    """Custom stateful operator via applyInPandasWithState: streaming
-    exact-dedup — emit each key only the FIRST time it is ever seen
-    across micro-batches; per-key GroupState persists in the
-    checkpoint. This is the streaming form of exact dedup (a new
-    document/key passes once; re-deliveries and re-crawls are dropped),
-    state bounded by distinct keys and shardable by the groupBy hash.
-    """
-    import pandas as pd
-
-    def fn(key, pdf_iter, state):
-        if state.exists:
-            return iter(())
-        first_version = None
-        for pdf in pdf_iter:
-            v = pdf[version_col].min()
-            first_version = v if first_version is None else min(first_version, v)
-        state.update((True,))
-        return iter(
-            [pd.DataFrame({"key": [key[0]], "first_version": [first_version]})]
-        )
-
-    return keyed_stream.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=FIRST_SEEN_OUTPUT,
-        stateStructType=FIRST_SEEN_STATE,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
-def sessionized_stream(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Session-window aggregation (dynamic-gap session_window) — the
-    streaming-native version of the batch sessionize query."""
-    return (
-        _watermarked(events, ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
 def streaming_neardup_ingest(
     spark: SparkSession,
     source_path: str,

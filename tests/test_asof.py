@@ -1,11 +1,14 @@
-"""As-of join: union+window form vs grouped-pandas merge_asof form
-must agree exactly; edge cases (no prior right row, equal timestamps)."""
+"""As-of join: the union+window operator against an independent
+pandas ``merge_asof`` over the collected rows; edge cases (no prior
+right row, equal timestamps)."""
 
 from __future__ import annotations
 
 import datetime
 
-from sslr_spark.operators.asof import asof_join, asof_join_pandas
+from pyspark.sql import functions as F
+
+from sslr_spark.operators.asof import asof_join
 
 
 def _data(spark):
@@ -39,30 +42,40 @@ def test_asof_semantics(spark):
     }
 
 
-def test_pandas_variant_agrees(spark):
+def _merge_asof_reference(left, right, key, value) -> dict:
+    """Independent reference: ``pd.merge_asof(by="user_id")`` over the
+    collected rows, as {left key: as-of value}."""
+    import pandas as pd
+
+    lp = left.toPandas().sort_values("ts")
+    rp = right.select(
+        "user_id", "ts", F.col(value).alias(f"{value}_asof")
+    ).toPandas().sort_values("ts")
+    out = pd.merge_asof(lp, rp, on="ts", by="user_id")
+    keys = out[key].itertuples(index=False, name=None)
+    return {
+        k: None if pd.isna(v) else v for k, v in zip(keys, out[f"{value}_asof"])
+    }
+
+
+def _asof(left, right, key, value) -> dict:
+    out = asof_join(left, right, ["user_id"], "ts", [value])
+    return {tuple(r[c] for c in key): r[f"{value}_asof"] for r in out.collect()}
+
+
+def test_asof_equals_merge_asof_reference(spark):
     left, right = _data(spark)
-    a = {
-        (r.user_id, r.name): r.price_asof
-        for r in asof_join(left, right, ["user_id"], "ts", ["price"]).collect()
-    }
-    b = {
-        (r.user_id, r.name): r.price_asof
-        for r in asof_join_pandas(left, right, ["user_id"], "ts", ["price"]).collect()
-    }
-    assert a == b
+    key = ["user_id", "name"]
+    assert _asof(left, right, key, "price") == _merge_asof_reference(
+        left, right, key, "price"
+    )
 
 
-def test_pandas_variant_on_events(spark):
-    from pyspark.sql import functions as F
-
+def test_asof_equals_merge_asof_reference_on_events(spark):
     from sslr_spark.queries import read_events
 
     ev = read_events(spark, "/root/testdata/sf0.001/").drop("ts_us")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value"
-    )
-    a = asof_join(ev, purchases, ["user_id"], "ts", ["value"])
-    b = asof_join_pandas(ev, purchases, ["user_id"], "ts", ["value"])
-    ka = sorted((r.event_id, r.value_asof) for r in a.collect())
-    kb = sorted((r.event_id, r.value_asof) for r in b.collect())
-    assert ka == kb and len(ka) == 1000
+    purchases = ev.filter(F.col("event_type") == "purchase")
+    got = _asof(ev, purchases, ["event_id"], "value")
+    assert got == _merge_asof_reference(ev, purchases, ["event_id"], "value")
+    assert len(got) == 1000

@@ -662,7 +662,7 @@ def test_quantized_topk_zero_norm_and_missing_id(spark, emb):
     quantize to int8 zero (|x| < 0.5/127) must be silently dropped —
     not crash the query with DIVIDE_BY_ZERO under Spark 4's default
     ANSI sessions — and a missing query id must raise, matching
-    topk_bruteforce_arrow's contract."""
+    topk_bruteforce's contract."""
     import pytest as _pt
     from pyspark.sql import functions as F
 
@@ -687,39 +687,6 @@ def test_quantized_topk_zero_norm_and_missing_id(spark, emb):
 
     with _pt.raises(ValueError, match="not found"):
         topk_quantized(emb, -12345, k=5)
-
-
-def test_arrow_topk_equals_jvm_fold(spark, emb):
-    """The Arrow/numpy batch scorer must produce exactly the JVM
-    fold's results (same rounding, same tie order)."""
-    from sslr_spark.functions.similarity import (
-        topk_bruteforce,
-        topk_bruteforce_arrow,
-    )
-
-    jvm = [(r.vec_id, r.cos_sim) for r in topk_bruteforce(emb, 0, k=10).collect()]
-    arrow = [
-        (r.vec_id, r.cos_sim)
-        for r in topk_bruteforce_arrow(emb, 0, k=10).collect()
-    ]
-    assert jvm == arrow
-
-
-def test_arrow_topk_filters_zero_norm_vectors(spark):
-    from sslr_spark.functions.similarity import topk_bruteforce_arrow
-
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [0.9, 0.1]),
-            (2, [0.0, 0.0]),   # zero norm: NaN score, must not rank
-            (3, [0.5, 0.5]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    got = [r.vec_id for r in topk_bruteforce_arrow(emb, 0, k=3).collect()]
-    assert 2 not in got
-    assert got[0] == 1  # highest cosine, not NaN
 
 
 def test_leakage_safe_split_chains_multiple_holdouts(spark):

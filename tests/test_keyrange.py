@@ -10,7 +10,6 @@ from sslr_spark.operators.keyrange import (
     key_at_offset,
     min_key,
     range_predicate,
-    sorted_pk_cols,
 )
 
 
@@ -56,9 +55,18 @@ def test_min_key(spark):
     assert min_key(df.filter(F.col("tenant") == "zz"), ["tenant", "seq"]) is None
 
 
-def test_sorted_pk_cols():
-    assert sorted_pk_cols(["seq", "tenant"]) == ["seq", "tenant"]
-    assert sorted_pk_cols(["tenant", "seq"]) == ["seq", "tenant"]
+def test_discover_primary_keys_sorts_names():
+    """Composite PK columns are name-sorted before use, preserving the
+    reference's deterministic key order (internal/job.go:214-221)."""
+    from pyspark.sql import types as T
+
+    from sslr_spark.catalog import discover_primary_keys
+
+    schema = T.StructType(
+        [T.StructField("tenant", T.StringType()), T.StructField("seq", T.LongType())]
+    )
+    for pks in (["seq", "tenant"], ["tenant", "seq"]):
+        assert discover_primary_keys({"t": pks}, "t", schema) == ["seq", "tenant"]
 
 
 @pytest.mark.slow

@@ -241,44 +241,6 @@ def test_frame_sampling(spark):
     assert len({(r.doc_id, r.frame_fp) for r in frames}) == len(frames)
 
 
-def test_streaming_first_seen_dedup(spark, tmp_path):
-    from sslr_spark.streaming.pipeline import streaming_first_seen
-
-    src_dir = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src_dir)
-
-    wave1 = spark.createDataFrame(
-        [("a", 1), ("a", 2), ("b", 3)], "key string, xmin long"
-    )
-    wave1.write.mode("append").parquet(src_dir)
-
-    def run_wave(qname):
-        # memory sink can't resume a checkpoint; collect via foreachBatch
-        emitted: list = []
-        stream = spark.readStream.schema("key string, xmin long").parquet(src_dir)
-        q = (
-            streaming_first_seen(stream)
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda df, _eid: emitted.extend(df.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return {r.key: r.first_version for r in emitted}
-
-    out1 = run_wave("fs1")
-    assert out1 == {"a": 1, "b": 3}
-
-    # wave 2: duplicate of 'a' plus brand-new 'c' — only 'c' may pass
-    spark.createDataFrame([("a", 9), ("c", 10)], "key string, xmin long").write.mode(
-        "append"
-    ).parquet(src_dir)
-    out2 = run_wave("fs2")
-    assert out2 == {"c": 10}
-
-
 def test_png_pixel_decode_unfilters_all_filter_types():
     """png_to_pixels against an ADVERSARIALLY-filtered PNG: every
     scanline encoded with a different spec filter (Sub, Up, Average,

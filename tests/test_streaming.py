@@ -1,5 +1,5 @@
 """Structured Streaming mode tests: file-source incremental sync via
-foreachBatch merge, windowed/session aggregation with watermarks."""
+foreachBatch merge, stateful streaming operators with watermarks."""
 
 from __future__ import annotations
 
@@ -11,11 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sslr_spark.sources.parquet import ParquetDatabase
-from sslr_spark.streaming.pipeline import (
-    sessionized_stream,
-    stream_incremental_sync,
-    windowed_event_aggregate,
-)
+from sslr_spark.streaming.pipeline import stream_incremental_sync
 from tests.conftest import assert_df_equal, make_timestamps
 
 
@@ -55,45 +51,6 @@ def test_stream_sync_merges_arriving_batches(spark, tmp_path):
     # re-processing of wave 1 (wave-1 rows keep their old versions)
     assert out.filter(F.col("xmin") == 999).count() == 10
     assert out.filter((F.col("id") >= 10) & (F.col("id") < 300) & (F.col("xmin") == 999)).count() == 0
-
-
-def test_windowed_aggregate_streaming_matches_batch(spark, tmp_path):
-    from sslr_spark.queries import read_events
-
-    events = read_events(spark, "/root/testdata/sf0.001")
-    batch = windowed_event_aggregate(events).collect()
-
-    # same code path over a stream (file source), memory sink
-    src_dir = str(tmp_path / "ev")
-    events.write.parquet(src_dir)
-    stream = spark.readStream.schema(events.schema).parquet(src_dir)
-    q = (
-        windowed_event_aggregate(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("winagg")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = spark.sql("select * from winagg").collect()
-    # append mode only emits windows the watermark has closed; every
-    # emitted window must match the batch result exactly
-    batch_map = {(r.window_start, r.event_type): (r.n, r.total_value) for r in batch}
-    assert len(streamed) > 0
-    for r in streamed:
-        assert batch_map[(r.window_start, r.event_type)] == (r.n, r.total_value)
-
-
-def test_session_window_stream(spark, tmp_path):
-    from sslr_spark.queries import read_events
-
-    events = read_events(spark, "/root/testdata/sf0.001")
-    sess = sessionized_stream(events).collect()
-    assert len(sess) > 0
-    # sessions are per-user, non-overlapping, end after start
-    assert all(r.session_end > r.session_start for r in sess)
-    assert sum(r.n_events for r in sess) == events.count()
 
 
 def test_chunk_and_scrub_work_on_streams(spark, tmp_path):
