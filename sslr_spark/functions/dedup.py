@@ -33,25 +33,27 @@ from sslr_spark.functions.hashing import h60, h64_fast
 from sslr_spark.functions.text import words
 
 # ------------------------------------------------------------------
-# cache registry
+# cache registry: the only code in sslr_spark that stores a frame
 #
-# Two kinds of stored block. A cache is a persist() made through
-# _persist() / register_cache(): the pair generators' shingle index,
-# the gates' scored projection. A bare .persist() leaks: caches
-# accumulate across queries in one long-lived session, and at 100 TB
-# a leaked shingle cache is an executor OOM. A landing is a frame
-# stored behind a plan-truncating local checkpoint by land():
-# iterative rounds, pipeline stages. It has no lineage to fall back
-# on, so a frame read through it fails once it is freed.
+# The rule: a frame that two or more consumers read is stored with the
+# thread's current CacheOwner and, before any plan reads it through
+# two branches, filled by an action that reads it alone (land()'s
+# eager job, or the caller's count / aggregate right after the store);
+# a frame that one consumer reads is not stored. Unfilled, two
+# concurrent stages compute the same partitions ("Block rdd_N_M
+# already exists"). Two forms: persist() keeps lineage, so a freed
+# block recomputes; land() is a plan-truncating local checkpoint for
+# iterative rounds and pipeline stages, and a frame read through it
+# fails once freed. A bare .persist() elsewhere would leak across
+# queries of a long-lived session; tests/test_cache.py rejects one.
 #
-# Every block is recorded with the thread's current CacheOwner, and
-# only that owner frees it. Each thread has a base owner (the one
-# release_caches() empties); ``with owner:`` makes ``owner`` current
-# for the block, and cache_scope() is such a block that frees what it
-# holds on exit. At the base owner each top-level operator frees the
-# previous call's caches on entry (_entry_release), so a session of
-# sequential calls holds one call's caches at a time; inside any other
-# owner, that owner decides.
+# Only the owner that recorded a block frees it. Each thread has a
+# base owner (the one release_caches() empties); ``with owner:`` makes
+# ``owner`` current for the block, and cache_scope() is such a block
+# that frees what it holds on exit. At the base owner each top-level
+# operator frees the previous call's caches on entry (_entry_release),
+# so a session of sequential calls holds one call's caches at a time;
+# inside any other owner, that owner decides.
 # ------------------------------------------------------------------
 
 _CACHES = threading.local()  # per-thread: concurrent pipelines never
@@ -84,13 +86,16 @@ class CacheOwner:
         released landing can no longer be evaluated (Spark raises
         CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); cached frames just
         recompute."""
-        while self.dfs:
-            self.dfs.pop().unpersist()
+        self.release_persisted()
         kept = _landed_rdd(keep) if keep is not None else None
         for rdd in self.rdds:
             if rdd != kept:
                 _unpersist_rdd(rdd)
         self.rdds = [rdd for rdd in self.rdds if rdd == kept]
+
+    def release_persisted(self) -> None:
+        while self.dfs:
+            self.dfs.pop().unpersist()
 
 
 def _owners() -> list[CacheOwner]:
@@ -99,15 +104,12 @@ def _owners() -> list[CacheOwner]:
     return _CACHES.owners
 
 
-def _persist(df: DataFrame) -> DataFrame:
+def persist(df: DataFrame) -> DataFrame:
+    """Cache ``df`` (memory, spilling to disk) and record it with the
+    current owner. Lazy: the caller fills it (see the rule above)."""
     df = df.persist()
     _owners()[-1].dfs.append(df)
     return df
-
-
-# public alias for sibling operators (functions/similarity.py, the
-# quality gates) that want their inputs in the same owner registry
-register_cache = _persist
 
 
 def _landed_rdd(landed: DataFrame) -> tuple[SparkContext, int]:
@@ -132,7 +134,7 @@ def land(df: DataFrame, eager: bool = True) -> DataFrame:
     owner. The returned frame plans as a single leaf, so whatever
     builds on it never re-analyzes or re-runs ``df``'s plan.
     ``eager=False`` defers the store to the first action on the
-    returned frame.
+    returned frame, which must read it alone (the rule above).
 
     Trade-off: there is no lineage behind a landing — a block lost
     with its executor fails the job instead of recomputing, and so
@@ -154,33 +156,26 @@ def release_caches() -> None:
     """Free every cache and landing the thread's current owner holds:
     outside any :class:`CacheOwner` block, everything this thread's
     operators stored. Frames read through a landing (the
-    :func:`dup_clusters_star` labels, the ``bpe_train`` rules) cannot be evaluated after this call; cached
-    frames just recompute."""
+    :func:`dup_clusters_star` labels, the ``bpe_train`` rules) cannot
+    be evaluated after this call; cached frames just recompute."""
     _owners()[-1].release()
 
 
 @contextlib.contextmanager
 def cache_scope():
     """A :class:`CacheOwner` block that frees what it holds on exit,
-    for interleaved pipelines::
+    for interleaved pipelines and for scoped stores (a CDC change
+    slice, a micro-batch)::
 
         with cache_scope():
             pairs_a = minhash_lsh_pairs(corpus_a)
             pairs_b = ngram_jaccard_pairs(corpus_b)  # no entry-release
-            a = pairs_a.collect()   # cache still live
-            b = pairs_b.collect()
+            n_a, n_b = pairs_a.count(), pairs_b.count()  # both live
         # both calls' caches released here
 
-    (``collect()`` above is illustrative, for fixture-sized corpora in
-    tests; at scale, candidate pairs are a DISTRIBUTED dataset —
-    materialize with ``.count()``, write them out, or feed them to
-    dup_clusters_star, never pull them to the driver.)
-
-    Like any owner block it stops entry-release inside it, so an
-    earlier call's not-yet-materialized result keeps its cache. On
-    exit it frees its own caches and landings — never the enclosing
-    owner's — so collect a landed result (dup_clusters_star labels)
-    inside the block."""
+    Like any owner block it stops entry-release inside it. On exit it
+    frees its own caches and landings — never the enclosing owner's —
+    so read a landed result (dup_clusters_star labels) inside it."""
     owner = CacheOwner()
     try:
         with owner:
@@ -196,8 +191,7 @@ def _entry_release() -> None:
     Landings stay: a frame built on one may still be unevaluated."""
     owners = _owners()
     if len(owners) == 1:
-        while owners[0].dfs:
-            owners[0].dfs.pop().unpersist()
+        owners[0].release_persisted()
 
 
 def _cap_hot_shingles(sh: DataFrame, max_doc_freq: int | None) -> DataFrame:
@@ -350,9 +344,10 @@ def ngram_jaccard_pairs(
     informative (non-boilerplate) shingle space.
     """
     _entry_release()  # previous pair-generation caches die here
-    sh = _persist(  # reused by sizes + both join sides
+    sh = persist(
         _cap_hot_shingles(shingles(df, text_col, n), max_shingle_doc_freq)
     )
+    sh.count()  # fill: the sizes and both join sides read it
     return (
         _pairwise_jaccard(sh, "doc_id")
         .select(
@@ -434,9 +429,10 @@ def ngram_containment_pairs(
     window, no cross join, no driver collection.
     """
     _entry_release()  # previous pair-generation caches die here
-    sh = _persist(
+    sh = persist(
         _cap_hot_shingles(shingles(df, text_col, n), max_shingle_doc_freq)
     )
+    sh.count()  # fill: the sizes and both join sides read it
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -702,13 +698,12 @@ def ngram_jaccard_pairs_prefix(
     this runs.
     """
     _entry_release()
-    # ONE persisted frame serves the whole query: per-doc ordered
-    # shingle lists feed the prefix explode, the sizes, and both
-    # verify array sides (the raw shingle index has a single consumer
-    # now, so it no longer persists).
-    per_doc = _persist(
+    # the one store of the query (the raw shingle index has one
+    # consumer, so it is not stored)
+    per_doc = persist(
         _prefix_per_doc(shingles(df, text_col, n), max_shingle_doc_freq)
     )
+    per_doc.count()  # fill: the prefix self-join and both verify sides
     arrays = per_doc.select("doc_id", F.col("__ord.shingle").alias("__arr"))
     return _verify_jaccard(
         _prefix_pairs(per_doc, threshold), arrays, arrays, threshold,
@@ -852,7 +847,8 @@ def strip_shared_spans(
     fingerprints' spans — ~2k/(w+1) tokens of every shared window —
     not necessarily wall-to-wall; k/w tune coverage vs index size."""
     _entry_release()
-    fps = _persist(winnow_fingerprints_pos(df, text_col, k, w))
+    fps = persist(winnow_fingerprints_pos(df, text_col, k, w))
+    fps.count()  # fill: the shared-fp aggregate and the join read it
     shared = (
         fps.select("doc_id", "fp").distinct()
         .groupBy("fp")
@@ -967,7 +963,8 @@ def shared_span_stats(
     back, per-doc count. No pairwise anything: cost is linear in
     total fingerprints, ~2/(w+1) of the corpus token count."""
     _entry_release()
-    fps = _persist(winnow_fingerprints(df, text_col, k, w))
+    fps = persist(winnow_fingerprints(df, text_col, k, w))
+    fps.count()  # fill: the frequency aggregate and the join read it
     freq = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("__df"))
     per_doc = (
         fps.join(freq, "fp")
@@ -1117,11 +1114,12 @@ def minhash_calibration(
     is quadratic in hot-shingle fan-out like any exact baseline:
     sample-sized inputs, by design."""
     _entry_release()
-    sh = _persist(
+    sh = persist(
         _cap_hot_shingles(
             shingles(df, text_col, shingle_n), max_shingle_doc_freq
         )
     )
+    sh.count()  # fill: the band keys and the truth's three sides read it
     cand = lsh_candidates(_band_keys(sh, n_hashes, n_bands, hash_mode))
     truth = (
         _pairwise_jaccard(sh, "doc_id")
@@ -1231,11 +1229,9 @@ def minhash_lsh_pairs(
     ``max_shingle_doc_freq`` prunes boilerplate shingles before the
     verification join (:func:`_cap_hot_shingles`)."""
     _entry_release()  # previous pair-generation caches die here
-    # The shingle inverted index feeds three consumers (signatures,
-    # the candidate-doc prune, the verify arrays) — persist it once
-    # instead of recomputing the explode per consumer.
     sh, _ = _index_shingles(df, text_col, shingle_n, max_shingle_doc_freq)
-    sh = _persist(sh)
+    sh = persist(sh)
+    sh.count()  # fill: the band self-join and the candidate prune read it
     return _lsh_pairs(
         sh, _band_keys(sh, n_hashes, n_bands, hash_mode), jaccard_threshold
     )
@@ -1248,10 +1244,8 @@ def _lsh_pairs(
     index: ``sh`` (doc_id, shingle) and its ``buckets`` (doc_id, band,
     sig). The core of :func:`minhash_lsh_pairs`, which the streaming
     ingest runs over its landed batch index."""
-    # cand feeds the verification join AND the candidate-doc prune set
-    # below — persist the (small, LSH-bounded) pair list instead of
-    # replaying the band self-join per consumer
-    cand = _persist(lsh_candidates(buckets))
+    cand = persist(lsh_candidates(buckets))
+    cand.count()  # fill: the verify join and the candidate-doc set read it
     # verify arrays only for docs that appear in a candidate pair
     # (r11): a semi join prunes the index to candidate docs (the prune
     # set is |candidate docs| rows — AQE broadcasts it when small,
@@ -1412,14 +1406,9 @@ def embedding_near_dup_pairs(
     if mode not in ("portable", "fast"):
         raise ValueError(f"mode must be portable|fast, got {mode!r}")
     _entry_release()
-    # one cached input feeds the guard's size scan AND both join
-    # sides — without it the guard costs a third full read. The cache
-    # is filled before the pair join plans: its join sides (and a
-    # caller's own join back onto ``df``) run as concurrent stages,
-    # and reading a lazy cache from both computes the same partitions
-    # twice (Spark logs "Block rdd_N_0 already exists"). The guard's
-    # size aggregate scans every partition, so it fills the cache.
-    df = _persist(df)
+    # the guard, both join sides (or the BLAS pass) and a caller's join
+    # back onto ``df`` read it; the guard's size aggregate fills it
+    df = persist(df)
     if max_block_size is not None:
         df = guard_oversize_blocks(
             df, block_col, max_block_size, "embedding_near_dup_pairs"
@@ -1540,8 +1529,8 @@ def contamination_rates(
     reuses the same inverted shape.
     """
     _entry_release()  # previous pair-generation caches die here
-    # the corpus shingle index feeds two consumers (hit probe, totals)
-    c_sh = _persist(shingles(corpus, text_col, n))
+    c_sh = persist(shingles(corpus, text_col, n))
+    c_sh.count()  # fill: the hit probe and the totals read it
     e_sh = shingles(eval_df, text_col, n).select("shingle").distinct()
     hits = c_sh.join(F.broadcast(e_sh), "shingle", "left_semi")
     # totals start from the CORPUS doc list, not the shingle index:
@@ -1605,9 +1594,8 @@ def dup_ngram_coverage(
     ever pairwise.
     """
     _entry_release()  # previous pair-generation caches die here
-    # the shingle index feeds three consumers: doc-frequency, the
-    # probe's left side, and per-doc totals
-    c_sh = _persist(shingles(corpus, text_col, n))
+    c_sh = persist(shingles(corpus, text_col, n))
+    c_sh.count()  # fill: doc frequency, the probe and the totals read it
     dup_sh = (
         c_sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__df"))
@@ -1747,8 +1735,10 @@ def incremental_semantic_dedup(
         "vec_id", F.col("__cell").alias("cell"), vec_col
     )
     if max_cell_size is not None:
+        # the guard's size aggregate reads the cache alone and fills it
+        # before the cell join, its second consumer
         c_idx = guard_oversize_blocks(
-            _persist(c_idx), "cell", max_cell_size,
+            persist(c_idx), "cell", max_cell_size,
             "incremental_semantic_dedup",
         )
     if mode == "fast":
@@ -1920,7 +1910,7 @@ def _corpus_matches(
     (doc_id, band, sig) band keys. The core of
     :func:`incremental_minhash_dedup`, which the streaming ingest runs
     over its landed batch index."""
-    cand = _persist(
+    cand = persist(
         b_buckets.alias("b")
         .join(
             c_buckets.alias("c"),
@@ -1933,6 +1923,9 @@ def _corpus_matches(
         )
         .distinct()
     )
+    # fill: the verify join and the corpus prune read it; each side's
+    # band keys read its shingle cache alone, so this fills those too
+    cand.count()
     # prune the CORPUS shingle index to candidate docs before its
     # verify arrays are built — the batch is tiny, so the LSH-bounded
     # candidate set is too, while c_sh is the whole accepted corpus;
@@ -2001,10 +1994,12 @@ def incremental_minhash_dedup(
         )
         # signatures and the verify prune both read it; the cache
         # serves c_buckets too (lookup is by plan, at execution)
-        c_sh = _persist(c_sh)
+        c_sh = persist(c_sh)
     else:
         raise ValueError("pass either corpus or corpus_index")
-    b_sh = _persist(_drop_hot(shingles(batch, text_col, shingle_n), hot))
+    # the band keys and the verify arrays read it; _corpus_matches'
+    # candidate count fills both shingle caches
+    b_sh = persist(_drop_hot(shingles(batch, text_col, shingle_n), hot))
     scored = _corpus_matches(
         b_sh, _band_keys(b_sh, n_hashes, n_bands, hash_mode),
         c_sh, c_buckets, jaccard_threshold,
@@ -2056,9 +2051,12 @@ def dup_clusters_star(
     component minima; convergence is detected by the edge multiset
     hash going stable. A lazily-stored landing (:func:`land`) per round
     keeps the plan flat while the signature aggregate doubles as the
-    materializing action — ONE job per round. Each round frees the one
-    it superseded; the symmetrized input and the final round stay
-    registered (the labels read both) until the owner releases them.
+    materializing action — ONE job per round. The symmetrized input is
+    landed eagerly instead: round 0 reads it through two branches (the
+    neighborhood minima and their join back), which must not both fill
+    it. Each round frees the one it superseded; the symmetrized input
+    and the final round stay registered (the labels read both) until
+    the owner releases them.
 
     Round shape (r11 optimization, guide §2.4 — remove shuffles and
     jobs outright; round results equality-tested against the prior
@@ -2068,10 +2066,8 @@ def dup_clusters_star(
       a per-node MIN, the phase joins fan out only on exact ``src``
       matches, and the single end-of-round distinct canonicalizes the
       checkpointed set — three shuffles per round instead of six;
-    - checkpoints are marked LAZY and the signature aggregate is the
-      materializing action — one job per round instead of two (the
-      initial symmetrized set materializes inside round 0 the same
-      way);
+    - round checkpoints are marked LAZY and the signature aggregate
+      is the materializing action — one job per round instead of two;
     - a direct star test short-circuits the final detection round:
       when every child has exactly one parent (row count ==
       distinct-src count, free in the signature aggregate) and no
@@ -2116,8 +2112,7 @@ def dup_clusters_star(
 
     edges_sym = land(
         und(pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
     nodes = edges_sym.select("src").distinct()
 
@@ -2271,11 +2266,12 @@ def source_overlap(
     _entry_release()
     sh = shingles(df, text_col, n)
     sh = _cap_hot_shingles(sh, max_shingle_doc_freq)
-    gsh = _persist(
+    gsh = persist(
         sh.join(df.select("doc_id", group_col), "doc_id")
         .select(F.col(group_col).alias("src"), "shingle")
         .distinct()
     )
+    gsh.count()  # fill: the sizes and both join sides read it
     return _pairwise_jaccard(gsh, "src", broadcast_sizes=True).select(
         F.col("key_a").alias("src_a"),
         F.col("key_b").alias("src_b"),
@@ -2360,8 +2356,10 @@ def incremental_containment_dedup(
     c_sh, hot = _index_shingles(
         corpus, text_col, shingle_n, max_shingle_doc_freq
     )
-    c_sh = _persist(c_sh)
-    b_sh = _persist(_drop_hot(shingles(batch, text_col, shingle_n), hot))
+    c_sh = persist(c_sh)
+    b_sh = persist(_drop_hot(shingles(batch, text_col, shingle_n), hot))
+    c_sh.count()  # fill: the intersection join and the sizes read them
+    b_sh.count()
     inter = (
         b_sh.select(F.col("doc_id").alias("batch_id"), "shingle")
         .join(

@@ -118,23 +118,18 @@ def quality_quantile_gate(
 
 def _gate_frames(scored: DataFrame, by: str) -> tuple[DataFrame, DataFrame]:
     """(scored, hist) for the quantile gates. The narrow (doc_id, by,
-    score_bp) projection is persisted through the dedup cache
-    registry, so the corpus-scoring pipeline runs ONCE — the
-    histogram, the thresholds and the final join all read the cache.
-    The cache is filled here, before either reader plans: left lazy,
-    the broadcast threshold stage and the final join's scan run at
-    once and both compute the same partitions (Spark logs "Block
-    rdd_N_0 already exists"). Like the pair generators, a gate frees
-    the previous call's caches on entry, so standalone gates hold one
-    scored cache at a time; inside a CacheOwner (curate_documents)
-    the owner frees it when the gate stage lands. At scale the cached
-    projection is ~20 bytes/doc and persist() (MEMORY_AND_DISK)
-    spills gracefully."""
-    from sslr_spark.functions.dedup import _entry_release, register_cache
+    score_bp) projection is stored through the dedup cache registry,
+    so the corpus-scoring pipeline runs ONCE — the histogram, the
+    thresholds and the final join all read the cache, which the count
+    here fills first. Like the pair generators, a gate frees the
+    previous call's caches on entry; inside a CacheOwner
+    (curate_documents) the owner frees it when the gate stage lands.
+    At scale the projection is ~20 bytes/doc and spills to disk."""
+    from sslr_spark.functions.dedup import _entry_release, persist
 
     _entry_release()
-    scored = register_cache(scored)
-    scored.count()  # fill the cache once
+    scored = persist(scored)
+    scored.count()  # fill: the histogram and the final join read it
     hist = scored.groupBy(by, "score_bp").agg(
         F.count(F.lit(1)).alias("__c")
     )

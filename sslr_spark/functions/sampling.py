@@ -411,7 +411,7 @@ def leakage_safe_split(
         _asymmetric_jaccard,
         _cap_hot_shingles,
         _entry_release,
-        _persist,
+        persist,
         shingles,
     )
 
@@ -434,17 +434,17 @@ def leakage_safe_split(
             labels = labels.withColumnRenamed(key_col, "doc_id")
     _entry_release()
     if labels is not None:
-        # persist: the labels plan (often a whole prior repair pass)
-        # feeds the shingle join, the partner lookup, and the final
-        # output join — uncached it would recompute ~3x per pass
-        labeled = _persist(labels.select("doc_id", "split"))
+        # the labels plan (often a whole prior repair pass) feeds the
+        # shingle join, the partner lookup and the output join
+        labeled = persist(labels.select("doc_id", "split"))
     else:
         labeled = hash_split(df, "doc_id", weights, seed)
-    sh = _persist(
+    sh = persist(
         _cap_hot_shingles(
             shingles(df, text_col, shingle_n), max_shingle_doc_freq
         ).join(labeled.select("doc_id", "split"), "doc_id")
     )
+    sh.count()  # fill: both sides read it; it fills the labels too
     h = sh.filter(F.col("split") == holdout).select(
         F.col("doc_id").alias("key_a"), "shingle"
     )

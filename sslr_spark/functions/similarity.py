@@ -490,18 +490,20 @@ def all_pairs_topk_blocked(
     (sim desc, dst asc) lexsort — the production kNN-graph path."""
     from pyspark.sql import Window
 
-    from sslr_spark.functions.dedup import _entry_release, register_cache
+    from sslr_spark.functions.dedup import _entry_release, persist
 
     if mode not in ("portable", "fast"):
         raise ValueError(f"mode must be portable|fast, got {mode!r}")
     _entry_release()
-    # one cached input feeds the guard's size scan AND both join
-    # sides; held by the current owner (dedup.py cache registry)
-    df = register_cache(df)
+    # the guard and the pair join's two sides read df (the guard's
+    # aggregate fills it); unguarded BLAS reads it once, unstored
     if max_block_size is not None:
         df = guard_oversize_blocks(
-            df, block_col, max_block_size, "all_pairs_topk_blocked"
+            persist(df), block_col, max_block_size, "all_pairs_topk_blocked"
         )
+    elif mode == "portable":
+        df = persist(df)
+        df.count()  # fill
     if mode == "fast":
         return _topk_blocked_numpy(df, k, vec_col, id_col, block_col)
     # per-row norm once, not per pair — same IEEE value, n not n^2.
@@ -919,24 +921,24 @@ def ivf_recall(
         .select("query_id", "cell", "__qvec")
     )
 
-    def scored(base: DataFrame) -> DataFrame:
+    def top(base: DataFrame) -> DataFrame:
+        # the NULL (zero-norm) filter runs after the cut, as in
+        # _cosine_topk: NULLs sort last, so the kept rows are the same,
+        # and a filter before it is pushed into the join as a second
+        # cosine per candidate
+        scored = base.filter(F.col(id_col) != F.col("query_id")).withColumn(
+            "cos_sim", F.round(cosine_expr(vec_col, "__qvec"), 6)
+        )
         return (
-            base.filter(F.col(id_col) != F.col("query_id"))
-            .withColumn("cos_sim", F.round(cosine_expr(vec_col, "__qvec"), 6))
+            _topk_per_query_salted(scored, k, id_col, salt_partitions)
             .filter(F.col("cos_sim").isNotNull())
+            .select("query_id", id_col)
         )
 
-    approx = _topk_per_query_salted(
-        scored(
-            indexed.join(
-                F.broadcast(probes), F.col("__cell") == F.col("cell")
-            )
-        ),
-        k, id_col, salt_partitions,
-    ).select("query_id", id_col)
-    truth = _topk_per_query_salted(
-        scored(df.crossJoin(F.broadcast(qs))), k, id_col, salt_partitions
-    ).select("query_id", id_col)
+    approx = top(
+        indexed.join(F.broadcast(probes), F.col("__cell") == F.col("cell"))
+    )
+    truth = top(df.crossJoin(F.broadcast(qs)))
     hits = (
         approx.join(truth, ["query_id", id_col])
         .groupBy("query_id")
@@ -997,9 +999,12 @@ def hard_negatives(
             & (F.col(id_col) != F.col("query_id"))
         )
         .withColumn("cos_sim", F.round(cosine_expr(vec_col, "__qvec"), 6))
-        .filter(F.col("cos_sim").isNotNull())
     )
-    return _topk_per_query_salted(cand, k, id_col, salt_partitions).select(
+    # NULL (zero-norm) rows drop after the cut: they sort last, so the
+    # rows and ranks are the same, and a filter before it is pushed
+    # into the join as a second cosine per candidate
+    top = _topk_per_query_salted(cand, k, id_col, salt_partitions)
+    return top.filter(F.col("cos_sim").isNotNull()).select(
         "query_id",
         F.col(id_col).alias("neg_id"),
         F.col(label_col).alias("neg_label"),
@@ -1032,9 +1037,6 @@ def pq_train(
     with its own KMeans(ks) — m independent distributed fits over
     the (sampled) corpus. Returns codebooks[subspace][codeword][dim],
     codewords ordered by KMeans center index."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     dim = len(df.select(vec_col).first()[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -1062,13 +1064,27 @@ def pq_train(
             )
         )
         .alias("__u")
-    ).cache()
+    )
+    return _fit_subspace_books(unit, "__u", m, dsub, ks, seed)
+
+
+def _fit_subspace_books(
+    vecs: DataFrame, col: str, m: int, dsub: int, ks: int, seed: int
+) -> list[list[list[float]]]:
+    """One KMeans(ks) codebook per dsub-wide slice of ``col``. The m
+    fits read ``vecs``, stored for the call and filled by the first."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    from sslr_spark.functions.dedup import cache_scope, persist
+
     books: list[list[list[float]]] = []
-    try:
+    with cache_scope():
+        vecs = persist(vecs)
         for j in range(m):
-            sub = unit.select(
+            sub = vecs.select(
                 array_to_vector(
-                    F.slice(F.col("__u"), j * dsub + 1, dsub)
+                    F.slice(F.col(col), j * dsub + 1, dsub)
                 ).alias("__s")
             )
             model = KMeans(
@@ -1078,8 +1094,6 @@ def pq_train(
             books.append(
                 [[float(x) for x in c] for c in model.clusterCenters()]
             )
-    finally:
-        unit.unpersist()
     return books
 
 
@@ -1614,9 +1628,6 @@ def pq_train_residual(
     space mismatch the residual distribution and LOSE to the raw
     path at equal budget (measured in the calibration test). Same
     distributed m-independent-fits shape as :func:`pq_train`."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     dim = len(cent_units[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -1644,25 +1655,8 @@ def pq_train_residual(
     cu = F.element_at(F.lit(cent_units), F.col(cell_col) + 1)
     res_df = indexed.select(
         F.zip_with(unit, cu, lambda a, b: a - b).alias("__r")
-    ).cache()
-    books: list[list[list[float]]] = []
-    try:
-        for j in range(m):
-            sub = res_df.select(
-                array_to_vector(
-                    F.slice(F.col("__r"), j * dsub + 1, dsub)
-                ).alias("__s")
-            )
-            model = KMeans(
-                k=ks, seed=seed + j, featuresCol="__s",
-                predictionCol="__c",
-            ).fit(sub)
-            books.append(
-                [[float(x) for x in c] for c in model.clusterCenters()]
-            )
-    finally:
-        res_df.unpersist()
-    return books
+    )
+    return _fit_subspace_books(res_df, "__r", m, dsub, ks, seed)
 
 
 def ivfpq_topk_serve(

@@ -394,6 +394,7 @@ class Job:
         UPDATE or re-INSERT allocates a new transaction id) a
         re-appearing row's version is always >= any tombstone ever
         written for the key, so the verbatim append wins the overlay."""
+        from sslr_spark.functions.dedup import cache_scope, persist
         from sslr_spark.operators.copy import filtered_source
         from sslr_spark.operators.updates import (
             append_delete_log,
@@ -404,32 +405,27 @@ class Job:
         if not self.target.table_exists(table):
             return
         vcol = self.config.version_column
-        with throttle:
+        with throttle, cache_scope():
             merged = read_merged(self.target, table, pks, vcol)
             merged_keys = merged.select(*pks)
             src_f = filtered_source(src, where)
-            gone = merged_keys.join(
-                src_f.select(*pks), pks, "left_anti"
-            ).persist()
-            missing = src_f.join(merged_keys, pks, "left_anti").persist()
-            try:
-                n = gone.count()
-                if n:
-                    mark = self.state.get(table).last_seen_version
-                    append_delete_log(
-                        self.target, table, gone, pks, version=mark + 1,
-                        version_col=vcol,
-                    )
-                    result.deleted_rows += n
-                m = missing.count()
-                if m:
-                    append_upsert_log(
-                        self.target, table, missing, pks, vcol
-                    )
-                    result.repaired_rows += m
-            finally:
-                gone.unpersist()
-                missing.unpersist()
+            # each diff is read by its count (the fill) and its append
+            gone = persist(
+                merged_keys.join(src_f.select(*pks), pks, "left_anti")
+            )
+            missing = persist(src_f.join(merged_keys, pks, "left_anti"))
+            n = gone.count()
+            if n:
+                mark = self.state.get(table).last_seen_version
+                append_delete_log(
+                    self.target, table, gone, pks, version=mark + 1,
+                    version_col=vcol,
+                )
+                result.deleted_rows += n
+            m = missing.count()
+            if m:
+                append_upsert_log(self.target, table, missing, pks, vcol)
+                result.repaired_rows += m
 
     def plan(self) -> dict:
         """Dry run: per-table sync analysis with ZERO writes and ZERO

@@ -242,13 +242,16 @@ def merge_upsert(
     return kept.unionByName(updates.select(*target_df.columns))
 
 
+_FULL_REWRITE_FRACTION = 0.5  # see merge_upsert_partitioned's guard
+
+
 def merge_upsert_partitioned(
     target: ParquetDatabase,
     table: str,
     updates: DataFrame,
     pk_cols: list[str],
     n_buckets: int,
-    full_rewrite_fraction: float = 0.5,
+    affected: list[int] | None = None,
 ) -> None:
     """Partition-pruned merge against a bucket-partitioned target:
     only the partitions containing updated keys are read (pruned scan)
@@ -256,8 +259,13 @@ def merge_upsert_partitioned(
     equivalent of MERGE INTO with file pruning. Cost ∝ touched
     buckets, not table size.
 
+    Stores nothing of its own: :func:`upsert_batch` passes the slice
+    it stored, bucketed, with ``affected`` from the aggregate that
+    filled it. Without ``affected`` one job probes the buckets, and
+    the probe, key set and union each read ``updates``.
+
     Scattered-update guard: when the batch touches more than
-    ``full_rewrite_fraction`` of the buckets, pruning buys nothing —
+    ``_FULL_REWRITE_FRACTION`` of the buckets, pruning buys nothing —
     the merge would rewrite most of the table anyway, plus pay the
     dynamic-overwrite bookkeeping per partition. That case takes one
     shuffled anti-join and one clustered whole-table rewrite
@@ -271,6 +279,7 @@ def merge_upsert_partitioned(
     empty, so only such a change set probes the surviving buckets and
     drops the emptied ones after a pruned rewrite; the scattered
     rewrite replaces the whole table and needs no extra step."""
+    from sslr_spark.functions.dedup import cache_scope, persist
     from sslr_spark.operators.deletes import (
         BUCKET_COL,
         stored_bucket_hash,
@@ -281,47 +290,36 @@ def merge_upsert_partitioned(
     # mixing modes scatters a key's new row into a different partition
     # than its old row (same failure as mixing bucket counts)
     bmode = stored_bucket_hash(target, table)
-    # The slice feeds 3-4 consumers (affected-bucket probe, key set,
-    # write union); without a persist each one re-reads and re-filters
-    # the source (measured ~0.4 s/scan at sf0.1 — half the merge time
-    # for a scattered batch).
-    upd = with_bucket(updates, pk_cols, n_buckets, bmode).persist()
-    try:
+    upd = updates
+    if BUCKET_COL not in upd.columns:
+        upd = with_bucket(upd, pk_cols, n_buckets, bmode)
+    if affected is None:
         affected = [
             int(r[0]) for r in upd.select(BUCKET_COL).distinct().collect()
         ]
-        if not affected:
-            return
-        tgt = target.read(table, with_meta=True)
-        scattered = len(affected) > full_rewrite_fraction * n_buckets
-        if not scattered:
-            tgt = tgt.filter(F.col(BUCKET_COL).isin(affected))  # pruning
-        out = merge_upsert(
-            tgt.drop(BUCKET_COL), upd.drop(BUCKET_COL), pk_cols
-        )
-        if scattered:
-            _write_bucketed(target, table, out, pk_cols, n_buckets, bmode)
-            return
-        out = with_bucket(out, pk_cols, n_buckets, bmode)
+    if not affected:
+        return
+    tgt = target.read(table, with_meta=True)
+    scattered = len(affected) > _FULL_REWRITE_FRACTION * n_buckets
+    if not scattered:
+        tgt = tgt.filter(F.col(BUCKET_COL).isin(affected))  # pruning
+    out = merge_upsert(tgt.drop(BUCKET_COL), upd.drop(BUCKET_COL), pk_cols)
+    if scattered:
+        _write_bucketed(target, table, out, pk_cols, n_buckets, bmode)
+        return
+    out = with_bucket(out, pk_cols, n_buckets, bmode)
+    with cache_scope():
         emptied = []
         if TOMBSTONE_COL in updates.columns:
-            # persist: the emptied-bucket probe must run BEFORE the
-            # rewrite (it reads the files the rewrite replaces), and
-            # the cache hands the computed rows to the write
-            out = out.persist()
+            # the probe fills it before the rewrite replaces the files
+            # it reads; the write reads the stored rows
+            out = persist(out)
             left = {
                 int(r[0]) for r in out.select(BUCKET_COL).distinct().collect()
             }
             emptied = [b for b in affected if b not in left]
-        try:
-            target.replace_partitions(
-                table, out, BUCKET_COL, sort_cols=pk_cols
-            )
-            target.drop_partitions(table, BUCKET_COL, emptied)
-        finally:
-            out.unpersist()
-    finally:
-        upd.unpersist()
+        target.replace_partitions(table, out, BUCKET_COL, sort_cols=pk_cols)
+        target.drop_partitions(table, BUCKET_COL, emptied)
 
 
 def _write_bucketed(
@@ -365,34 +363,52 @@ def upsert_batch(
     The one upsert path of :func:`sync_updates`, of the streams
     (``stream_incremental_sync``, ``stream_mor_sync``'s first batch)
     and of :func:`compact_upsert_log`; a change set may carry
-    :data:`TOMBSTONE_COL` (deleted keys): collapse to the latest version per
-    key, persist once, count (under ``throttle``: the count scans the
-    source), then apply by the STORED layout (``effective_buckets``):
-    bucketed -> :func:`merge_upsert_partitioned`; in-place targets
-    (``apply_upsert``) -> DELETE+INSERT / MERGE without the version
-    column, which they never store (reference
+    :data:`TOMBSTONE_COL` (deleted keys). It collapses the slice to
+    the latest version per key and stores it once (bucketed when the
+    target merges by bucket); one aggregate fills the store and gives
+    the row count and the affected buckets (under ``throttle``: it
+    scans the source). It applies by the STORED layout
+    (``effective_buckets``): bucketed -> :func:`merge_upsert_partitioned`;
+    in-place targets (``apply_upsert``) -> DELETE+INSERT / MERGE
+    without the version column, which they never store (reference
     internal/updates.go:117-124); else :func:`merge_upsert` and an
-    atomic overwrite. A missing table is created from the slice's
-    live rows in the configured layout (``n_buckets`` /
-    ``bucket_hash``)."""
-    from sslr_spark.operators.deletes import effective_buckets
+    atomic overwrite. No apply stores the slice again. A missing table
+    is created from the slice's live rows in the configured layout
+    (``n_buckets`` / ``bucket_hash``)."""
+    from sslr_spark.functions.dedup import cache_scope, persist
+    from sslr_spark.operators.deletes import (
+        BUCKET_COL,
+        effective_buckets,
+        stored_bucket_hash,
+        with_bucket,
+    )
 
-    updates = dedup_latest_version(updates, pk_cols, version_col).persist()
-    try:
+    n_buckets = effective_buckets(target, table, n_buckets)
+    exists = target.table_exists(table)
+    by_bucket = bool(n_buckets and exists)
+    updates = dedup_latest_version(updates, pk_cols, version_col)
+    fill = [F.count(F.lit(1)).alias("n")]
+    if by_bucket:
+        updates = with_bucket(
+            updates, pk_cols, n_buckets, stored_bucket_hash(target, table)
+        )
+        fill.append(F.collect_set(BUCKET_COL).alias("buckets"))
+    with cache_scope():
+        updates = persist(updates)
         with throttle or contextlib.nullcontext():
-            n = updates.count()
+            filled = updates.agg(*fill).first()
+        n = filled["n"]
         if not n:
             return 0
-        n_buckets = effective_buckets(target, table, n_buckets)
-        exists = target.table_exists(table)
         rows = updates
         if not exists and TOMBSTONE_COL in updates.columns:
             # after the collapse, so a key upserted then deleted inside
             # the slice stays deleted; a new table holds no tombstone
             rows = updates.filter(~F.col(TOMBSTONE_COL)).drop(TOMBSTONE_COL)
-        if n_buckets and exists:
+        if by_bucket:
             merge_upsert_partitioned(
-                target, table, updates, pk_cols, n_buckets
+                target, table, updates, pk_cols, n_buckets,
+                affected=sorted(filled["buckets"]),
             )
         elif n_buckets:
             _write_bucketed(
@@ -409,8 +425,6 @@ def upsert_batch(
             )
         else:
             target.overwrite(table, rows)
-    finally:
-        updates.unpersist()
     return n
 
 

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sslr_spark.functions.dedup import CacheOwner, persist
+
 CORRUPT_COL = "_sslr_corrupt_record"
 
 _EXTS = {"jsonl": (".jsonl", ".json", ".ndjson"), "csv": (".csv",),
@@ -86,8 +88,8 @@ class FilesDatabase:
         self.fmt = fmt
         self.schemas = dict(schemas or {})
         self.options = dict(options or {})
-        # last cached parse per table (see read_with_quarantine)
-        self._cached: dict[str, DataFrame] = {}
+        # per table, the owner of its last parse (read_with_quarantine)
+        self._owners: dict[str, CacheOwner] = {}
 
     # -- catalog -------------------------------------------------------
     def path(self, table: str) -> str:
@@ -174,11 +176,13 @@ class FilesDatabase:
         for the table is unpersisted, so a long-running continuous
         sync holds at most one cached parse per table instead of one
         per pass. ``release_caches`` drops everything."""
-        prev = self._cached.pop(table, None)
+        prev = self._owners.pop(table, None)
         if prev is not None:
-            prev.unpersist()
-        df = self._parse(table).cache()
-        self._cached[table] = df
+            prev.release()
+        # the clean and the quarantine filters both read the parse
+        owner = self._owners[table] = CacheOwner()
+        with owner:
+            df = persist(self._parse(table))
         clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
         bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
             F.col(CORRUPT_COL).alias("raw_line")
@@ -187,9 +191,9 @@ class FilesDatabase:
 
     def release_caches(self) -> None:
         """Unpersist every cached parse this adapter holds."""
-        for df in self._cached.values():
-            df.unpersist()
-        self._cached.clear()
+        for owner in self._owners.values():
+            owner.release()
+        self._owners.clear()
 
     def read(self, table: str, with_meta: bool = False) -> DataFrame:
         clean, _ = self.read_with_quarantine(table)

@@ -414,13 +414,13 @@ class JdbcDatabase:
         reader can observe the deleted-not-yet-reinserted window.
         Point the target at a staging schema if readers need snapshot
         isolation (or use a lakehouse target, where the partitioned
-        merge path is atomic per partition swap)."""
-        updates = updates.persist()
-        try:
-            self.delete_keys(table, updates, pk_cols)
-            self.append(table, updates)
-        finally:
-            updates.unpersist()
+        merge path is atomic per partition swap).
+
+        The key delete and the insert each read ``updates``; this
+        method stores nothing, because ``upsert_batch`` hands it the
+        slice that it already stored."""
+        self.delete_keys(table, updates, pk_cols)
+        self.append(table, updates)
 
     # -- DDL / index mirroring (S6 / S8 / A5 / A6) ---------------------
     def extract_table_schema(self, table: str) -> str | None:

@@ -188,11 +188,12 @@ def stream_mor_sync(
     (``_sslr_stream_mor.json``) additionally makes the common replay
     a no-op, mirroring the batch engine's data-before-state commit
     order. Returns the StreamingQuery."""
+    from sslr_spark.functions.dedup import cache_scope, persist
+
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # stored once: the emptiness count and the bootstrap or log
-        # append read the batch's files a single time
-        batch_df = batch_df.persist()
-        try:
+        # filled by the emptiness count; the apply reads stored rows
+        with cache_scope():
+            batch_df = persist(batch_df)
             if not batch_df.count():
                 return
             meta = (
@@ -216,8 +217,6 @@ def stream_mor_sync(
                 target.write_table_meta(
                     table, "stream_mor", {"epoch": int(epoch_id)}
                 )
-        finally:
-            batch_df.unpersist()
 
     return _start_foreach_batch(
         spark, source_path, schema, apply_batch, checkpoint_dir,
@@ -346,9 +345,8 @@ def streaming_neardup_ingest(
         return False
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # cache_scope: the batch owns every block it stores — the
-        # batch itself, its index, the drop set, the pair generators'
-        # caches — and frees them when the batch ends
+        # the batch owns every block it stores (its landings, the pair
+        # generators' caches) and frees them when it ends
         with cache_scope():
             # every step below reads this landing, the emptiness probe
             # included, so the batch's files are read once

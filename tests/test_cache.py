@@ -149,3 +149,74 @@ def test_freed_landings_do_not_warn_root_stays_warn(spark):
     landing = log_manager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
     assert landing.getLevel().toString() == "ERROR"
     assert log_manager.getRootLogger().getLevel().toString() == "WARN"
+
+
+# the registry's own functions in functions/dedup.py: the only code in
+# sslr_spark that may call Spark's storage methods
+_REGISTRY = {
+    "CacheOwner", "persist", "land", "_unpersist_rdd", "_unland",
+    "release_caches", "cache_scope", "_entry_release",
+}
+_STORAGE_CALLS = {"persist", "cache", "unpersist", "localCheckpoint"}
+
+
+def _storage_calls_outside_registry(path, in_registry_module: bool):
+    import ast
+
+    found = []
+
+    def visit(node, registry_scope):
+        for child in ast.iter_child_nodes(node):
+            scope = registry_scope
+            if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and isinstance(node, ast.Module):
+                scope = in_registry_module and child.name in _REGISTRY
+            if (
+                not scope
+                and isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in _STORAGE_CALLS
+            ):
+                found.append(f"{path}:{child.lineno} .{child.func.attr}(")
+            visit(child, scope)
+
+    visit(ast.parse(path.read_text()), False)
+    return found
+
+
+def test_no_storage_call_outside_registry():
+    """Every frame sslr_spark stores goes through the dedup registry
+    (persist / land under a CacheOwner): no .persist(), .cache(),
+    .unpersist() or localCheckpoint() call anywhere else."""
+    from pathlib import Path
+
+    import sslr_spark
+
+    root = Path(sslr_spark.__file__).parent
+    registry = root / "functions" / "dedup.py"
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        found += _storage_calls_outside_registry(path, path == registry)
+    assert not found, found
+
+
+def test_two_forms_persist_keeps_lineage_land_truncates(spark):
+    """The registry's two physical forms: a persisted frame keeps its
+    lineage and recomputes once its owner frees it; a landed frame
+    plans as one leaf and cannot be evaluated after the owner frees
+    it."""
+    from sslr_spark.functions.dedup import CacheOwner, land, persist
+
+    owner = CacheOwner()
+    with owner:
+        kept = persist(spark.range(10).selectExpr("id * 2 AS v"))
+        assert kept.count() == 10
+        landed = land(spark.range(10).selectExpr("id * 3 AS v"))
+    assert len(owner.dfs) == 1 and len(owner.rdds) == 1
+    assert "LogicalRDD" in landed._jdf.queryExecution().analyzed().toString()
+    owner.release()
+    assert not kept.storageLevel.useMemory
+    assert kept.count() == 10
+    with pytest.raises(Exception):
+        landed.count()

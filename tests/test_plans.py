@@ -472,6 +472,24 @@ def test_hard_negatives_windows_are_salted(spark):
     assert "windowspecdefinition(query_id" in p
     # the query side is broadcast, the corpus side never is
     assert "BroadcastExchange" in p
+    # one cosine per candidate (a norm each for the row and the query):
+    # the zero-norm filter runs after the cut, so it is not pushed
+    # into the join condition as a second evaluation
+    assert p.count("SQRT(") == 2, p
+
+
+def test_ivf_recall_cosine_not_in_join_condition(spark):
+    """ivf_recall scores each candidate once: its zero-norm filter runs
+    after the salted cut, so neither the probe join nor the truth
+    cross join carries the cosine in its condition."""
+    from sslr_spark.functions.similarity import ivf_recall
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    p = plan_of(ivf_recall(emb, [1, 2, 3, 4, 5, 6, 7, 8], [0, 1, 2], k=5))
+    joins = [line for line in p.splitlines() if "Join" in line]
+    assert len(joins) >= 2, p
+    assert not [line for line in joins if "SQRT(" in line], p
+    assert "__salt" in p
 
 
 def test_residual_encode_is_pure_map_no_shuffle(spark):

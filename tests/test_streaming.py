@@ -10,9 +10,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from sslr_spark.operators.updates import read_merged, upsert_log_table
 from sslr_spark.sources.parquet import ParquetDatabase
 from sslr_spark.streaming.pipeline import stream_incremental_sync
 from tests.conftest import assert_df_equal, make_timestamps
+from tests.test_mor import _base, _db, _file_snapshot, _rows
 
 
 def test_stream_sync_merges_arriving_batches(spark, tmp_path):
@@ -863,3 +865,154 @@ def test_batch_pass_and_stream_apply_alike(spark, tmp_path, n_buckets):
     assert stream_t.layout_meta("t") == batch_t.layout_meta("t")
     if n_buckets:
         assert batch_t.layout_meta("t")["n_buckets"] == n_buckets
+
+# ------------------------------------------------------------------
+# streaming merge-on-read sync
+# ------------------------------------------------------------------
+
+def test_stream_mor_sync_append_overlay_and_compact(spark, tmp_path):
+    """Streaming CDC at MOR's native cadence: the first micro-batch
+    bootstraps the base, later batches land as log APPENDS (the base
+    files are untouched), flagged rows become per-row-version
+    tombstones, the overlay read resolves it all, and a tight
+    fraction folds the log inline."""
+    from pyspark.sql import types as T
+
+    from sslr_spark.streaming.pipeline import stream_mor_sync
+
+    src = str(tmp_path / "src")
+    db = _db(spark, tmp_path, "stream_mor")
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("payload", T.StringType()),
+            T.StructField("xmin", T.LongType()),
+            T.StructField("is_deleted", T.BooleanType()),
+        ]
+    )
+    ddl = "id long, payload string, xmin long, is_deleted boolean"
+
+    def drain(max_log_fraction=10.0):
+        q = stream_mor_sync(
+            spark, src, schema, db, "t", ["id"],
+            str(tmp_path / "ckpt"),
+            tombstone_flag="is_deleted",
+            max_files_per_trigger=1,
+            max_log_fraction=max_log_fraction,
+        )
+        q.awaitTermination()
+
+    # batch 1: bootstrap (one row pre-deleted upstream — never lands)
+    spark.createDataFrame(
+        [(i, f"v{i}", 100, False) for i in range(50)]
+        + [(999, "dead", 100, True)],
+        ddl,
+    ).coalesce(1).write.mode("append").parquet(src)
+    drain()
+    assert not db.table_exists(upsert_log_table("t"))
+    assert db.table_rows("t") == 50
+
+    base_snapshot = _file_snapshot(db.path("t"))
+
+    # batch 2: update 0/1, insert 100, delete 5 — all version 200
+    spark.createDataFrame(
+        [
+            (0, "U0", 200, False),
+            (1, "U1", 200, False),
+            (100, "new", 200, False),
+            (5, None, 200, True),
+        ],
+        ddl,
+    ).coalesce(1).write.mode("append").parquet(src)
+    drain()
+    snap_after = {
+        p: t for p, t in _file_snapshot(db.path("t")).items()
+        if "_sslr_stream_mor" not in p
+    }
+    base_only = {
+        p: t for p, t in base_snapshot.items()
+        if "_sslr_stream_mor" not in p
+    }
+    assert base_only == snap_after, "stream batch must not rewrite the base"
+    assert db.table_exists(upsert_log_table("t"))
+    assert db.table_rows(upsert_log_table("t")) == 4
+
+    got = _rows(read_merged(db, "t", ["id"]))
+    expect = {(i, f"v{i}", 100) for i in range(50) if i not in (0, 1, 5)}
+    expect |= {(0, "U0", 200), (1, "U1", 200), (100, "new", 200)}
+    assert got == expect
+
+    # batch 3 with a tight fraction: the stream compacts inline
+    spark.createDataFrame(
+        [(2, "U2", 300, False)], ddl
+    ).coalesce(1).write.mode("append").parquet(src)
+    drain(max_log_fraction=0.001)
+    assert not db.table_exists(upsert_log_table("t"))
+    expect = {r for r in expect if r[0] != 2} | {(2, "U2", 300)}
+    assert _rows(db.read("t")) == expect
+    # epoch sidecar recorded (replay guard)
+    assert db.read_table_meta("t", "stream_mor")["epoch"] >= 0
+
+
+def test_stream_mor_sync_bootstrap_drops_key_deleted_in_first_batch(
+    spark, tmp_path
+):
+    """The bootstrap collapses the first micro-batch before it drops
+    flagged rows: a key upserted and then deleted inside that batch
+    never reaches the base."""
+    from pyspark.sql import types as T
+
+    from sslr_spark.streaming.pipeline import stream_mor_sync
+
+    src = str(tmp_path / "src")
+    db = _db(spark, tmp_path, "stream_mor_boot")
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("payload", T.StringType()),
+            T.StructField("xmin", T.LongType()),
+            T.StructField("is_deleted", T.BooleanType()),
+        ]
+    )
+    spark.createDataFrame(
+        [(1, "a", 100, False), (5, "b", 100, False), (5, None, 101, True)],
+        schema,
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream_mor_sync(
+        spark, src, schema, db, "t", ["id"], str(tmp_path / "ckpt"),
+        tombstone_flag="is_deleted",
+    ).awaitTermination()
+    assert _rows(read_merged(db, "t", ["id"])) == {(1, "a", 100)}
+    assert db.read("t").columns == ["id", "payload", "xmin"]
+
+
+def test_stream_mor_sync_rejects_mistyped_flagged_batch(spark, tmp_path):
+    """Flagged (tombstone-carrying) stream batches go through the same
+    column-type guard as append_upsert_log: an int version against a
+    bigint base fails the batch and writes no log rows."""
+    from pyspark.sql import types as T
+
+    from sslr_spark.streaming.pipeline import stream_mor_sync
+
+    src = str(tmp_path / "src")
+    db = _db(spark, tmp_path, "stream_mor_typed")
+    db.overwrite("t", _base(spark))
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("payload", T.StringType()),
+            T.StructField("xmin", T.IntegerType()),
+            T.StructField("is_deleted", T.BooleanType()),
+        ]
+    )
+    spark.createDataFrame(
+        [(1, "U1", 200, False), (2, None, 200, True)], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    q = stream_mor_sync(
+        spark, src, schema, db, "t", ["id"], str(tmp_path / "ckpt"),
+        tombstone_flag="is_deleted",
+    )
+    with pytest.raises(Exception, match="column types"):
+        q.awaitTermination()
+    assert not db.table_exists(upsert_log_table("t"))
+    assert _rows(read_merged(db, "t", ["id"])) == _rows(_base(spark))

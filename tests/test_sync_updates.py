@@ -255,3 +255,83 @@ def test_missing_version_column_degrade_is_loud(
     from sslr_spark.sources.files import FilesDatabase
 
     assert getattr(FilesDatabase, "versionless", False) is True
+
+
+def _record_stores(monkeypatch, df_class) -> list[str]:
+    """Names of the DataFrame storage calls made from now on."""
+    calls: list[str] = []
+    for name in ("persist", "cache"):
+        def wrapped(self, *a, _name=name, _orig=getattr(df_class, name), **k):
+            calls.append(_name)
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(df_class, name, wrapped)
+    return calls
+
+
+def _change_slice(spark):
+    """29 keys, two of them with an older version the collapse drops."""
+    import datetime
+
+    ts = datetime.datetime(2030, 1, 1)
+    return spark.createDataFrame(
+        [(i, ts, 500) for i in range(0, 200, 7)] + [(0, ts, 400), (7, ts, 400)],
+        "id long, ts timestamp, xmin long",
+    )
+
+
+def test_cdc_batch_stores_its_slice_once_bucketed(spark, tmp_path, monkeypatch):
+    """A bucketed CDC batch stores its collapsed slice once: the
+    partitioned merge reads upsert_batch's store instead of storing a
+    bucketed copy, and the scope frees it when the batch ends."""
+    from sslr_spark.operators.deletes import BUCKET_COL, with_bucket
+    from sslr_spark.operators.updates import upsert_batch
+    from sslr_spark.sources.parquet import ParquetDatabase
+
+    src = make_timestamps(spark, 200)
+    db = ParquetDatabase(spark, str(tmp_path / "bucketed"))
+    db.overwrite_partitioned(
+        "t", with_bucket(src, ["id"], 8), BUCKET_COL, n_buckets=8
+    )
+    upd = _change_slice(spark)
+    stored = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    calls = _record_stores(monkeypatch, type(upd))
+    assert upsert_batch(db, "t", upd, ["id"], n_buckets=8) == 29
+    assert calls == ["persist"]
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == stored
+    got = {r.id: r.xmin for r in db.read("t").collect()}
+    assert len(got) == 200
+    assert all(got[i] == 500 for i in range(0, 200, 7))
+
+
+def test_cdc_batch_stores_its_slice_once_in_place(spark, monkeypatch):
+    """An in-place target's apply (the JDBC key delete + insert) reads
+    upsert_batch's stored slice and stores nothing of its own."""
+    from sslr_spark.operators.updates import upsert_batch
+    from sslr_spark.sources.jdbc import JdbcDatabase
+
+    class InPlaceTarget:
+        def __init__(self):
+            self.spark = spark
+            self.deleted, self.inserted = [], []
+
+        def table_exists(self, table):
+            return True
+
+        apply_upsert = JdbcDatabase.apply_upsert
+
+        def delete_keys(self, table, keys, pk_cols):
+            self.deleted = sorted(r.id for r in keys.select(*pk_cols).collect())
+
+        def append(self, table, df):
+            self.inserted = sorted(df.collect())
+
+    target = InPlaceTarget()
+    upd = _change_slice(spark)
+    calls = _record_stores(monkeypatch, type(upd))
+    assert upsert_batch(target, "t", upd, ["id"]) == 29
+    assert calls == ["persist"]
+    assert target.deleted == list(range(0, 200, 7))
+    assert [tuple(r) for r in target.inserted] == [
+        (r.id, r.ts) for r in sorted(upd.filter("xmin = 500").collect())
+    ]
